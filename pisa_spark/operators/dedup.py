@@ -496,6 +496,9 @@ def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
     The same closure is ANSI-SQL-expressible as a recursive CTE, which is
     the DuckDB oracle twin (driver entry `dedup_clusters`).
     """
+    int_types = {"bigint", "int", "smallint", "tinyint"}
+    dtypes = dict(pairs.select(left, right).dtypes)
+    int_ids = dtypes[left] in int_types and dtypes[right] in int_types
     if checkpoint_dir is None:
         # bounded driver union-find: dedup graphs are tiny relative to
         # their corpora (edges ~ near-dup pairs), and the distributed
@@ -506,9 +509,7 @@ def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
         # bounded-driver-work-with-distributed-fallback pattern as the
         # serve path. Above the bound or for non-integer ids the
         # label-propagation loop below remains the scale path.
-        int_types = {"bigint", "int", "smallint", "tinyint"}
-        dtypes = dict(pairs.select(left, right).dtypes)
-        if dtypes[left] in int_types and dtypes[right] in int_types:
+        if int_ids:
             edges_pdf = (pairs.select(left, right)
                          .limit(CLUSTERS_DRIVER_MAX_EDGES + 1).toPandas())
             if len(edges_pdf) <= CLUSTERS_DRIVER_MAX_EDGES:
@@ -531,7 +532,13 @@ def dedup_clusters(pairs, left: str = "doc_a", right: str = "doc_b",
         return (new_labels.alias("n").join(labels.alias("o"), "id")
                 .filter(F.col("n.lbl") < F.col("o.lbl")).count())
 
-    out_cols = (F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+    # integer ids leave every branch as the driver branch's long columns;
+    # other id types keep their own type
+    def out_col(c):
+        return F.col(c).cast("long") if int_ids else F.col(c)
+
+    out_cols = (out_col("id").alias("doc_id"),
+                out_col("lbl").alias("cluster_id"))
 
     if checkpoint_dir is not None:
         from pisa_spark.plans.checkpoint import BuildManifest

@@ -1,15 +1,25 @@
 """Top-k query executors: exhaustive (ranked_or), MaxScore, Block-Max-WAND.
 
-Dataflow (all algorithms share it):
+Dataflow of the list-query executors (topk_search's serve path and
+topk_search_batch):
 
-    queries --analyze--> (qid, term, weight)
-            --join lexicon-->  (qid, term_id, weight, df, cf, max_*)
-            --join postings--> one row per (qid, shard, term) posting run
-            --join shards-->   + per-shard doc-length array
-            --groupBy(qid, shard_id).applyInPandas(kernel)
-            --window top-k-->  (qid, doc_id, score, rank)
+    queries --analyze on the driver, against the cached lexicon-->
+            (term_id -> [(qid, weight)], per-query term counts)
+    postings --filter to the query vocabulary, co-locate by shard-->
+            --per task: whole shards in groups of at most
+              SERVE_COLLECT_MAX_POSTINGS postings-->
+            --per group: one merged run per query term, ONE kernel per
+              query over the broadcast global doc-length array-->
+            --k-merge (score desc, doc asc)-->  (qid, doc_id, score, rank)
 
-The per-shard kernel + global merge mirrors the reference's range_query
+The serve path runs the same group traversal (_traverse) on the driver over
+its resident posting cache. Without the driver state (index above the serve
+bounds, DataFrame query sets) posting rows carry their own shard's doc
+lengths and a group is one shard. topk_search's join plan (DataFrame query
+sets) and profile_queries instead run one kernel per
+groupBy(qid, shard_id).
+
+Per-group top-k + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
 k-merge — which is exactly Spark's partial/final TakeOrderedAndProject
 shape, here expressed as a row_number window per qid.
@@ -49,7 +59,7 @@ reference's unsafe mode.
 
 from __future__ import annotations
 
-import heapq
+import itertools
 
 import numpy as np
 import pandas as pd
@@ -77,11 +87,13 @@ _ALGORITHM_ALIASES = {
 
 
 class _TermRun:
-    """One (shard, term) posting run: lazy block decoding + bounds."""
+    """One (shard, term) posting run: lazy block decoding + bounds, and the
+    float32 score contribution of every posting, computed on first use."""
 
     __slots__ = ("term_id", "n", "base_doc", "last_doc", "blk_last",
                  "doc_offs", "tf_offs", "blk_ub", "ub", "docs_bin", "tfs_bin",
-                 "df", "cf", "idf", "weight", "_docs", "_tfs", "codec")
+                 "df", "cf", "idf", "weight", "_docs", "_tfs", "_contribs",
+                 "codec")
 
     def __init__(self, row, scorer, stats, weight: float, weighted: bool,
                  codec: str):
@@ -107,6 +119,7 @@ class _TermRun:
         self.ub = F32(self.blk_ub.max()) if self.blk_ub.size else F32(0.0)
         self._docs = None
         self._tfs = None
+        self._contribs = None
 
     @classmethod
     def merged(cls, shard_runs: list) -> "_TermRun":
@@ -130,6 +143,7 @@ class _TermRun:
         ds, ts = zip(*(r.decode_all() for r in runs))
         self._docs = np.concatenate(ds)
         self._tfs = np.concatenate(ts)
+        self._contribs = None
         self.blk_last = np.concatenate([r.blk_last for r in runs])
         self.blk_ub = np.concatenate([r.blk_ub for r in runs])
         self.ub = F32(self.blk_ub.max()) if self.blk_ub.size else F32(0.0)
@@ -247,24 +261,29 @@ class _TermRun:
 
     def contrib(self, doc_ids: np.ndarray, scorer, stats,
                 doc_lens: np.ndarray, shard_base: int) -> np.ndarray:
-        """Actual score contribution for given docs (0 when absent)."""
+        """Actual score contribution for given docs (0 when absent).
+
+        The run scores ALL its postings once, on first use, and every later
+        call (every query sharing the run) is a searchsorted + gather. The
+        scorers are element-wise float32, so each contribution is
+        bit-identical to scoring only the requested docs. doc_lens/shard_base
+        must be the same on every call, which holds for a run's lifetime."""
         docs, tfs = self.decode_all()
+        if self._contribs is None:
+            dl = doc_lens[docs - shard_base]
+            if scorer.separable:
+                self._contribs = self.idf * scorer.doc_part(
+                    tfs, dl, stats["avg_len"])
+            else:
+                self._contribs = self.weight * scorer.score(
+                    tfs, dl, df=self.df, cf=self.cf,
+                    num_docs=stats["num_docs"], avg_len=stats["avg_len"],
+                    collection_len=stats["collection_len"])
         idx = np.searchsorted(docs, doc_ids, "left")
         idx_c = np.minimum(idx, docs.size - 1)
         present = (docs.size > 0) & (docs[idx_c] == doc_ids) & (idx < docs.size)
         out = np.zeros(doc_ids.size, dtype=F32)
-        if not present.any():
-            return out
-        p_docs = doc_ids[present]
-        p_tfs = tfs[idx[present]]
-        dl = doc_lens[p_docs - shard_base]
-        if scorer.separable:
-            out[present] = self.idf * scorer.doc_part(p_tfs, dl, stats["avg_len"])
-        else:
-            out[present] = self.weight * scorer.score(
-                p_tfs, dl, df=self.df, cf=self.cf,
-                num_docs=stats["num_docs"], avg_len=stats["avg_len"],
-                collection_len=stats["collection_len"])
+        out[present] = self._contribs[idx[present]]
         return out
 
 
@@ -388,7 +407,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
         visit = np.argsort(-sum_ub, kind="stable")
         descending = True
         if algorithm in ("block_max_wand", "wand", "maxscore",
-                         "block_max_maxscore") and visit.size > 12:
+                         "block_max_maxscore") and visit.size > 4:
             # two-wave pruning for the disjunctive algorithms: a short
             # sequential head converges theta, then every remaining live
             # range is processed in ONE vectorized bulk pass below (per-doc
@@ -398,9 +417,12 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
             # so it scores a superset of the sequential candidates; exact
             # canonical scores decide the rest. Conjunctive algorithms keep
             # the per-range walk (their candidate SET depends on the
-            # intersection semantics, not just pruning).
-            bulk_tail = visit[8:]
-            visit = visit[:8]
+            # intersection semantics, not just pruning). The head is 4
+            # ranges: a batch task's shard group spans few ranges, and a
+            # longer head (8 of >12 before) left it all in the Python loop
+            # — 4 halved the batch kernel CPU at 8k docs, range_span 256.
+            bulk_tail = visit[4:]
+            visit = visit[:4]
         else:
             bulk_tail = None
     else:
@@ -547,10 +569,208 @@ def make_query_terms_df(spark, queries: list[str], cfg: IndexConfig):
 
 # driver-memory bounds for the serve caches: above these the serve path
 # declines and topk_search falls back to the fully distributed join plan
-SERVE_MAX_DOCS = 1 << 23            # doc_lens dict (~64 MB int64)
+SERVE_MAX_DOCS = 1 << 23            # global doc_lens array (~64 MB int64)
 SERVE_MAX_PARTIAL_ROWS = 1 << 21    # shards x queries x k merge bound
-SERVE_COLLECT_MAX_POSTINGS = 1 << 22  # per-call driver fetch bound
+# per-call driver fetch bound; also the postings one traversal group holds
+SERVE_COLLECT_MAX_POSTINGS = 1 << 22
 SERVE_CACHE_MAX_POSTINGS = 1 << 24    # resident posting-row cache budget
+
+
+class _QueryPlan:
+    """A query set analyzed on the driver, plus the kernel settings: all a
+    traversal needs, shipped to the executors with it."""
+
+    def __init__(self, index, algorithm: str, k: int, weighted: bool,
+                 range_span: int, thresholds: dict[str, float] | None):
+        cfg = index.cfg
+        self.algorithm = algorithm
+        self.k = k
+        self.weighted = weighted
+        self.range_span = range_span
+        self.thresholds = dict(thresholds or {})
+        self.scorer = make_scorer(cfg.scorer, cfg.scorer_params())
+        self.stats = dict(index.stats)
+        self.codec = cfg.codec
+        self.term_queries: dict[int, list] = {}  # term_id -> [(qid, weight)]
+        self.term_stats: dict[int, tuple] = {}   # term_id -> (df, cf)
+        self.n_terms: dict[str, int] = {}        # qid -> known query terms
+        self.tid_of_term: dict[str, int] = {}
+
+    def add(self, qid: str, term: str, tid: int, df: int, cf: int,
+            weight: float) -> None:
+        self.tid_of_term[term] = tid
+        self.term_queries.setdefault(tid, []).append((qid, float(weight)))
+        self.term_stats[tid] = (df, cf)
+        self.n_terms[qid] = self.n_terms.get(qid, 0) + 1
+
+    def analyze(self, queries: list[str], tmeta: dict,
+                cfg: IndexConfig) -> "_QueryPlan":
+        """Resolve query lines against the driver-cached lexicon, as the
+        reference's query tools do before evaluating anything
+        (evaluate_queries.cpp:79-101)."""
+        for qid, term, w in analyze_query_terms(queries, cfg):
+            self.n_terms.setdefault(qid, 0)
+            meta = tmeta.get(term)
+            if meta is not None:  # unknown terms drop (query_parser.cpp:33-38)
+                self.add(qid, term, *meta, w)
+        return self
+
+    def attach_meta(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        """term_id/df/cf columns for fetched posting rows."""
+        if "term" in pdf.columns:
+            pdf = pdf.assign(
+                term_id=pdf["term"].map(self.tid_of_term)).drop(columns=["term"])
+        ids = pdf["term_id"]
+        return pdf.assign(df=ids.map(lambda t: self.term_stats[int(t)][0]),
+                          cf=ids.map(lambda t: self.term_stats[int(t)][1]))
+
+
+def _partial_frame(qids: list, docs: list, scores: list) -> pd.DataFrame:
+    """(qid, doc_id, score) rows from per-query kernel outputs."""
+    if not qids:
+        return pd.DataFrame({"qid": pd.Series(dtype=object),
+                             "doc_id": pd.Series(dtype="int64"),
+                             "score": pd.Series(dtype="float32")})
+    return pd.DataFrame({"qid": np.concatenate(qids),
+                         "doc_id": np.concatenate(docs).astype(np.int64),
+                         "score": np.concatenate(scores).astype(np.float32)})
+
+
+def _traverse(term_rows: dict[int, list], plan: _QueryPlan,
+              doc_lens: np.ndarray, base: int,
+              run_cache: dict | None = None) -> pd.DataFrame:
+    """Answer every query of `plan` over one group of whole shards.
+
+    term_rows maps a term_id to its posting rows in the group. Each query
+    term's shard runs merge into ONE run over the group's docIDs, keyed
+    (term_id, weight): its block decode and float32 contributions happen
+    once, shared by every query using the term. Then ONE kernel per query
+    runs over doc_lens (indexed from docID `base`) — the reference's
+    single cursor walk per query (tools/queries.cpp:279-340), not one
+    kernel per (query, shard). run_cache, when given, keeps the merged
+    runs across calls (the serve cache)."""
+    runs = run_cache if run_cache is not None else {}
+    by_query: dict[str, list] = {}
+    for tid, rows in term_rows.items():
+        if not rows:
+            continue
+        for qid, w in plan.term_queries.get(tid, ()):
+            key = (tid, w if plan.weighted else 1.0)
+            run = runs.get(key)
+            if run is None:
+                shard_runs = [_TermRun(r, plan.scorer, plan.stats, key[1],
+                                       plan.weighted, plan.codec)
+                              for r in rows]
+                run = runs[key] = (shard_runs[0] if len(shard_runs) == 1
+                                   else _TermRun.merged(shard_runs))
+            by_query.setdefault(qid, []).append(run)
+    out_q, out_d, out_s = [], [], []
+    for qid, qruns in by_query.items():
+        docs, scores = _run_kernel(
+            plan.algorithm, qruns, plan.k, plan.scorer, plan.stats, doc_lens,
+            base, plan.range_span, float(plan.thresholds.get(qid, 0.0)),
+            n_query_terms=plan.n_terms.get(qid))
+        out_q.append(np.repeat(qid, docs.size))
+        out_d.append(docs)
+        out_s.append(scores)
+    return _partial_frame(out_q, out_d, out_s)
+
+
+def _shard_groups(batches, budget: int):
+    """Cut a shard-sorted stream of posting-row batches into groups of
+    WHOLE shards holding at most `budget` postings each; a shard above the
+    budget is a group of its own (budget 0: one shard per group)."""
+
+    def pieces():
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            sid = pdf["shard_id"].to_numpy()
+            starts = np.flatnonzero(
+                np.concatenate(([True], sid[1:] != sid[:-1])))
+            ends = np.append(starts[1:], sid.size)
+            sizes = np.add.reduceat(pdf["n"].to_numpy(), starts)
+            for s, e, n in zip(starts, ends, sizes):
+                yield int(sid[s]), pdf.iloc[s:e], int(n)
+
+    def concat(parts):
+        return parts[0] if len(parts) == 1 else pd.concat(parts,
+                                                          ignore_index=True)
+
+    group, group_n = [], 0
+    shard, shard_n, shard_id = [], 0, None
+    # a (None, None, 0) sentinel closes the stream's last shard
+    for sid, piece, n in itertools.chain(pieces(), [(None, None, 0)]):
+        if shard and sid == shard_id:  # the shard continues in this batch
+            shard.append(piece)
+            shard_n += n
+            continue
+        if shard:
+            if group and group_n + shard_n > budget:
+                yield concat(group)
+                group, group_n = [], 0
+            group += shard
+            group_n += shard_n
+        shard, shard_n, shard_id = [piece], n, sid
+    if group:
+        yield concat(group)
+
+
+def _traverse_partitions(plan: _QueryPlan, doc_lens_bc):
+    """mapInPandas body of the executor-side traversal (batch executor and
+    the serve path's distributed mode). Rows arrive co-located and sorted
+    by shard. Each task walks its shards in groups bounded by
+    SERVE_COLLECT_MAX_POSTINGS, one _traverse per group over the broadcast
+    global doc-length array. Without that array (doc_lens_bc None: the
+    join fallback, rows carry their own shard's doc_lens and shard_base)
+    a group is one shard."""
+    budget = SERVE_COLLECT_MAX_POSTINGS if doc_lens_bc is not None else 0
+
+    def run(batches):
+        gdl = doc_lens_bc.value if doc_lens_bc is not None else None
+        for pdf in _shard_groups(batches, budget):
+            pdf = plan.attach_meta(pdf)
+            if gdl is None:
+                doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
+                base = int(pdf["shard_base"].iat[0])
+            else:
+                doc_lens, base = gdl, 0
+            term_rows: dict[int, list] = {}
+            for row in pdf.itertuples(index=False):
+                term_rows.setdefault(int(row.term_id), []).append(row)
+            yield _traverse(term_rows, plan, doc_lens, base)
+
+    return run
+
+
+def _term_postings(index, plan: _QueryPlan, terms: list[str]):
+    """Posting rows of `terms`. Prefers the string-keyed rows: the id-keyed
+    postings view is a lazy broadcast join whose lexicon broadcast would be
+    rebuilt on EVERY query job (~350 ms/query measured at 60k docs)."""
+    from pyspark.sql import functions as F
+
+    enc_str = getattr(index, "postings_str", None)
+    if enc_str is not None:
+        return enc_str.filter(F.col("term").isin(terms))
+    return index.postings.filter(
+        F.col("term_id").isin([plan.tid_of_term[t] for t in terms]))
+
+
+def _global_doc_lens(shards: list) -> np.ndarray | None:
+    """One doc-length array indexed by docID from (base_doc, doc_lens)
+    shard rows, or None when shard ranges overlap. Span-aligned builds
+    leave docID gaps at bucket boundaries; gap slots stay 0 and never
+    appear in any posting list."""
+    shards = sorted(shards, key=lambda m: m[0])
+    prev_end = 0
+    for b, dl in shards:
+        if b < prev_end:
+            return None
+        prev_end = b + dl.size
+    g = np.zeros(prev_end, dtype=np.int64)
+    for b, dl in shards:
+        g[b:b + dl.size] = dl
+    return g
 
 
 class _ServeState:
@@ -563,46 +783,28 @@ class _ServeState:
     first-seen terms), bounded by SERVE_CACHE_MAX_POSTINGS with FIFO
     eviction."""
 
-    __slots__ = ("tmeta", "smeta", "bc_shards", "n_shards",
-                 "rows_by_term", "cached_postings", "complete", "term_runs",
-                 "global_doc_lens")
+    __slots__ = ("tmeta", "global_doc_lens", "bc_doc_lens", "n_shards",
+                 "rows_by_term", "cached_postings", "complete", "term_runs")
 
-    def __init__(self, tmeta, smeta, bc_shards):
+    def __init__(self, tmeta, global_doc_lens, bc_doc_lens, n_shards):
         self.tmeta = tmeta
-        self.smeta = smeta
-        self.bc_shards = bc_shards
-        self.n_shards = len(smeta)
-        # global doc-length array indexed by docID: lets unweighted
-        # queries traverse ONE virtual shard — one kernel invocation per
-        # query instead of one per shard. Span-aligned builds leave docID
-        # gaps at bucket boundaries; gap slots stay 0 and never appear in
-        # any posting list. Requires only non-overlapping shard ranges.
-        bases = sorted(smeta.values(), key=lambda m: m[0])
-        prev_end, ok = 0, True
-        for b, dl in bases:
-            if b < prev_end:
-                ok = False
-                break
-            prev_end = b + dl.size
-        if ok and bases:
-            g = np.zeros(prev_end, dtype=np.int64)
-            for b, dl in bases:
-                g[b:b + dl.size] = dl
-            self.global_doc_lens = g
-        else:
-            self.global_doc_lens = None
+        # doc lengths indexed by docID: every traversal walks the global
+        # doc space, so a kernel serves any group of shards
+        self.global_doc_lens = global_doc_lens
+        self.bc_doc_lens = bc_doc_lens
+        self.n_shards = n_shards
         self.rows_by_term: dict[str, dict] = {}
         self.cached_postings = 0
         # True when the ENTIRE index's posting rows are resident (small
         # indexes prefetch at state build, the reference's load-up-front
         # model) — per-query fetch jobs and eviction are then skipped.
         self.complete = False
-        # unweighted _TermRun reuse across queries, keyed (term_id,
-        # shard_id): a run is immutable except its lazily-decoded
-        # docs/tfs arrays, so repeat terms skip the block decode — the
-        # reference's cursors likewise read the same in-memory lists on
-        # every query. Evicted together with rows_by_term.
-        self.term_runs: dict[tuple[int, int], object] = {}
+        # merged _TermRun reuse across calls, keyed (term_id, weight): a
+        # run is immutable except its lazily-computed decode and
+        # contributions, so repeat terms skip both — the reference's
+        # cursors likewise read the same in-memory lists on every query.
+        # Evicted together with rows_by_term.
+        self.term_runs: dict[tuple[int, float], _TermRun] = {}
 
 
 def _serve_state(index, prefetch: bool = True):
@@ -610,9 +812,9 @@ def _serve_state(index, prefetch: bool = True):
     exceeds the driver-memory bounds (callers fall back to the
     distributed join plan).
 
-    prefetch=False builds/returns the METADATA-ONLY state (lexicon +
-    shard meta — two bounded collects, no posting bytes): the batch
-    executor needs tmeta/smeta for driver-side query analysis but runs
+    prefetch=False builds/returns the METADATA-ONLY state (lexicon + doc
+    lengths — two bounded collects, no posting bytes): the batch
+    executor needs the lexicon for driver-side query analysis but runs
     its kernels executor-side and never reads the driver row cache, so
     it must not pay the whole-index posting fetch. The prefetch runs
     lazily on the first interactive-serve use instead."""
@@ -635,12 +837,14 @@ def _serve_state(index, prefetch: bool = True):
         return None
     tmeta = {r["term"]: (int(r["term_id"]), int(r["df"]), int(r["cf"]))
              for r in rows}
-    smeta = {}
-    for r in index.shards.select("shard_id", "base_doc", "doc_lens").collect():
-        smeta[int(r["shard_id"])] = (
-            int(r["base_doc"]), np.asarray(r["doc_lens"], dtype=np.int64))
-    bc = spark.sparkContext.broadcast(smeta)
-    st = _ServeState(tmeta, smeta, bc)
+    shards = [(int(r["base_doc"]), np.asarray(r["doc_lens"], dtype=np.int64))
+              for r in index.shards.select("base_doc", "doc_lens").collect()]
+    gdl = _global_doc_lens(shards)
+    if gdl is None:
+        index._serve_state = False
+        return None
+    st = _ServeState(tmeta, gdl, spark.sparkContext.broadcast(gdl),
+                     len(shards))
     index._serve_state = st
     if prefetch:
         _serve_prefetch(index, st)
@@ -692,229 +896,78 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
     floor for milliseconds of work. Here query terms resolve against the
     driver-cached lexicon (no job), and the posting rows for the query
     vocabulary are fetched in ONE column-pruned job into the per-term
-    serve cache (repeat terms: zero jobs) — then the traversal kernels run
-    driver-side over the cached rows, exactly as the reference runs them
-    over its mmap'd index. Oversized term sets (fetch above
-    SERVE_COLLECT_MAX_POSTINGS) run the kernels executor-side instead, in
-    a single mapInPandas pass over the term-filtered postings. Both modes
-    produce the join plan's exact ranking ((score desc, doc asc), same
-    kernels, same float32 scores).
+    serve cache (repeat terms: zero jobs) — then one _traverse runs the
+    kernels driver-side over the cached rows, exactly as the reference
+    runs them over its mmap'd index. Oversized term sets (fetch above
+    SERVE_COLLECT_MAX_POSTINGS) run the same traversal executor-side
+    instead, in a single mapInPandas pass over the term-filtered postings.
+    Both modes produce the join plan's exact ranking ((score desc, doc
+    asc), same kernels, same float32 scores).
 
     Returns None when the index/meta exceeds the serve bounds."""
-    from pyspark.sql import functions as F
-
     st = _serve_state(index)
     if st is None:
         return None
-    cfg = index.cfg
     spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    codec = cfg.codec
-    thr = dict(thresholds or {})
-
-    term_queries: dict[int, list] = {}
-    term_stats: dict[int, tuple] = {}
-    n_terms: dict[str, int] = {}
-    tid_of_term: dict[str, int] = {}
-    for qid, term, w in analyze_query_terms(queries, cfg):
-        n_terms.setdefault(qid, 0)
-        meta = st.tmeta.get(term)
-        if meta is None:
-            continue  # unknown term dropped (reference query_parser.cpp:33-38)
-        tid, df_, cf_ = meta
-        tid_of_term[term] = tid
-        term_queries.setdefault(tid, []).append((qid, float(w)))
-        term_stats[tid] = (df_, cf_)
-        n_terms[qid] += 1
-    if st.n_shards * max(1, len(n_terms)) * k > SERVE_MAX_PARTIAL_ROWS:
+    plan = _QueryPlan(index, algorithm, k, weighted, range_span,
+                      thresholds).analyze(queries, st.tmeta, index.cfg)
+    if st.n_shards * max(1, len(plan.n_terms)) * k > SERVE_MAX_PARTIAL_ROWS:
         return None
 
     out_schema = "qid string, doc_id long, score float, rank int"
-    enc_str = getattr(index, "postings_str", None)
-
-    def _filtered_posts(terms: list[str]):
-        """Term-filtered posting rows with term_id/df/cf attached lazily.
-        Prefers the string-keyed rows: the id-keyed postings view is a
-        lazy broadcast join whose lexicon broadcast would be rebuilt on
-        EVERY query job (~350 ms/query measured at 60k docs)."""
-        if enc_str is not None:
-            return enc_str.filter(F.col("term").isin(terms))
-        return index.postings.filter(
-            F.col("term_id").isin([tid_of_term[t] for t in terms]))
-
-    def _attach_meta(pdf: pd.DataFrame) -> pd.DataFrame:
-        if "term" in pdf.columns:
-            pdf = pdf.assign(
-                term_id=pdf["term"].map(tid_of_term)).drop(columns=["term"])
-        return pdf.assign(
-            df=pdf["term_id"].map(lambda t: term_stats[int(t)][0]),
-            cf=pdf["term_id"].map(lambda t: term_stats[int(t)][1]))
-
-    def _kernel_over_shards(shard_rows, doc_lens_of, run_cache=None):
-        """Run the traversal kernels for every (shard, query); shard_rows:
-        iterable of (shard_id, [row, ...]). run_cache (driver mode only):
-        (term_id, shard_id) -> _TermRun memo so repeat terms skip block
-        decode across calls (runs are immutable; unweighted only)."""
-        out_q, out_d, out_s = [], [], []
-        for sid, rows in shard_rows:
-            shard_base, doc_lens = doc_lens_of(int(sid))
-            by_query: dict[str, list] = {}
-            for row in rows:
-                if weighted:
-                    shared = None
-                elif run_cache is not None:
-                    rkey = (int(row.term_id), int(sid))
-                    shared = run_cache.get(rkey)
-                    if shared is None:
-                        shared = _TermRun(row, scorer, stats, 1.0, False,
-                                          codec)
-                        run_cache[rkey] = shared
-                else:
-                    shared = _TermRun(row, scorer, stats, 1.0, False, codec)
-                for qid, w in term_queries.get(int(row.term_id), ()):
-                    r = shared if shared is not None else _TermRun(
-                        row, scorer, stats, w, weighted, codec)
-                    by_query.setdefault(qid, []).append(r)
-            for qid, runs in by_query.items():
-                docs_, scores_ = _run_kernel(
-                    algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-                    range_span, float(thr.get(qid, 0.0)),
-                    n_query_terms=n_terms.get(qid))
-                out_q.append(np.repeat(qid, docs_.size))
-                out_d.append(docs_)
-                out_s.append(scores_)
-        if not out_q:
-            return pd.DataFrame({"qid": pd.Series(dtype=object),
-                                 "doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float32")})
-        return pd.DataFrame({
-            "qid": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s).astype(np.float32)})
-
-    if not term_stats:
-        partial = pd.DataFrame({"qid": pd.Series(dtype=object),
-                                "doc_id": pd.Series(dtype="int64"),
-                                "score": pd.Series(dtype="float32")})
+    terms = list(plan.tid_of_term)
+    missing = ([] if st.complete else
+               [t for t in terms if t not in st.rows_by_term])
+    est_fetch = sum(st.tmeta[t][1] for t in missing)
+    if not terms:
+        partial = _partial_frame([], [], [])
+    elif est_fetch <= SERVE_COLLECT_MAX_POSTINGS:
+        # ---- driver mode: fetch first-seen terms' rows (one job, or zero
+        # if all cached), traverse locally
+        if missing:
+            fetched = plan.attach_meta(
+                _term_postings(index, plan, missing).toPandas())
+            id2term = {plan.tid_of_term[t]: t for t in missing}
+            for t in missing:
+                st.rows_by_term[t] = {}
+            for row in fetched.itertuples(index=False):
+                t = id2term[int(row.term_id)]
+                st.rows_by_term[t][int(row.shard_id)] = row
+            st.cached_postings += int(fetched["n"].sum()) if len(fetched) else 0
+            # FIFO eviction: drop oldest terms not in this query
+            current = set(terms)
+            while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
+                victim = next((t for t in st.rows_by_term
+                               if t not in current), None)
+                if victim is None:
+                    break
+                rows = st.rows_by_term.pop(victim)
+                st.cached_postings -= sum(int(r.n) for r in rows.values())
+                vtid = st.tmeta[victim][0]
+                for key in [key for key in st.term_runs if key[0] == vtid]:
+                    del st.term_runs[key]
+        partial = _traverse(
+            {tid: list(st.rows_by_term.get(t, {}).values())
+             for t, tid in plan.tid_of_term.items()},
+            plan, st.global_doc_lens, 0, run_cache=st.term_runs)
     else:
-        missing = ([] if st.complete else
-                   [t for t in tid_of_term if t not in st.rows_by_term])
-        est_fetch = sum(st.tmeta[t][1] for t in missing)
-        if est_fetch <= SERVE_COLLECT_MAX_POSTINGS:
-            # ---- driver mode: fetch first-seen terms' rows (one job, or
-            # zero if all cached), kernel locally
-            if missing:
-                fetched = _attach_meta(_filtered_posts(missing).toPandas())
-                id2term = {tid_of_term[t]: t for t in missing}
-                for t in missing:
-                    st.rows_by_term[t] = {}
-                for row in fetched.itertuples(index=False):
-                    t = id2term[int(row.term_id)]
-                    st.rows_by_term[t][int(row.shard_id)] = row
-                st.cached_postings += int(fetched["n"].sum()) if len(fetched) else 0
-                # FIFO eviction: drop oldest terms not in this query
-                current = set(tid_of_term)
-                while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
-                    victim = next((t for t in st.rows_by_term
-                                   if t not in current), None)
-                    if victim is None:
-                        break
-                    rows = st.rows_by_term.pop(victim)
-                    st.cached_postings -= sum(int(r.n) for r in rows.values())
-                    vtid = st.tmeta[victim][0]
-                    st.term_runs.pop((vtid, -1), None)
-                    for vsid in rows:
-                        st.term_runs.pop((vtid, int(vsid)), None)
-            if not weighted and st.global_doc_lens is not None:
-                # ---- whole-index traversal: every resident term's shard
-                # rows merge into ONE global run (memoized), and each query
-                # runs ONE kernel over the dense global doc space — the
-                # reference's single-cursor-set walk, vs one kernel per
-                # (shard, query). Identical ranking: same kernels, same
-                # float32 scores, docIDs/block metadata are absolute.
-                def _global_run(t: str):
-                    key = (tid_of_term[t], -1)
-                    g = st.term_runs.get(key)
-                    if g is None:
-                        rows = st.rows_by_term.get(t, {})
-                        sruns = [_TermRun(r, scorer, stats, 1.0, False,
-                                          codec) for r in rows.values()]
-                        if not sruns:
-                            return None
-                        g = (sruns[0] if len(sruns) == 1
-                             else _TermRun.merged(sruns))
-                        st.term_runs[key] = g
-                    return g
-
-                qid_terms: dict[str, list] = {}
-                for tid, qws in term_queries.items():
-                    for qid, _w in qws:
-                        qid_terms.setdefault(qid, []).append(tid)
-                term_of_tid = {tid_of_term[t]: t for t in tid_of_term}
-                gdl = st.global_doc_lens
-                out_q, out_d, out_s = [], [], []
-                for qid, tids in qid_terms.items():
-                    runs = [g for tid in tids
-                            if (g := _global_run(term_of_tid[tid]))]
-                    if not runs:
-                        continue
-                    docs_, scores_ = _run_kernel(
-                        algorithm, runs, k, scorer, stats, gdl, 0,
-                        range_span, float(thr.get(qid, 0.0)),
-                        n_query_terms=n_terms.get(qid))
-                    out_q.append(np.repeat(qid, docs_.size))
-                    out_d.append(docs_)
-                    out_s.append(scores_)
-                if out_q:
-                    partial = pd.DataFrame({
-                        "qid": np.concatenate(out_q),
-                        "doc_id": np.concatenate(out_d).astype(np.int64),
-                        "score": np.concatenate(out_s).astype(np.float32)})
-                else:
-                    partial = pd.DataFrame({
-                        "qid": pd.Series(dtype=object),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float32")})
-            else:
-                shard_rows: dict[int, list] = {}
-                for t in tid_of_term:
-                    for sid, row in st.rows_by_term.get(t, {}).items():
-                        shard_rows.setdefault(sid, []).append(row)
-                partial = _kernel_over_shards(shard_rows.items(),
-                                              lambda sid: st.smeta[sid],
-                                              run_cache=st.term_runs)
+        # ---- distributed mode: the traversal runs executor-side in one
+        # mapInPandas pass over the term-filtered postings (co-located
+        # by shard; coalesced so the python-worker round-trip count
+        # stays small for a latency-path job)
+        posts = _term_postings(index, plan, terms)
+        parts = spark.sparkContext.defaultParallelism
+        if not getattr(index, "postings_colocated", False):
+            posts = posts.repartition(min(parts, st.n_shards), "shard_id")
         else:
-            # ---- distributed mode: kernels run executor-side in one
-            # mapInPandas pass over the term-filtered postings (co-located
-            # by shard; coalesced so the python-worker round-trip count
-            # stays small for a latency-path job)
-            posts = _filtered_posts(list(tid_of_term))
-            parts = spark.sparkContext.defaultParallelism
-            if not getattr(index, "postings_colocated", False):
-                posts = posts.repartition(min(parts, st.n_shards),
-                                          "shard_id")
-            else:
-                posts = posts.coalesce(min(parts, 16))
-            bc_shards = st.bc_shards
-
-            def run(batches):
-                chunks = [c for c in batches if len(c)]
-                if not chunks:
-                    return
-                pdf = _attach_meta(chunks[0] if len(chunks) == 1
-                                   else pd.concat(chunks, ignore_index=True))
-                smeta = bc_shards.value
-                yield _kernel_over_shards(
-                    ((sid, list(grp.itertuples(index=False)))
-                     for sid, grp in pdf.groupby("shard_id", sort=False)),
-                    lambda sid: smeta[sid])
-
-            partial = posts.mapInPandas(
-                run, schema=TOPK_PARTIAL_SCHEMA).toPandas()
+            posts = posts.coalesce(min(parts, 16))
+        partial = (posts.sortWithinPartitions("shard_id")
+                   .mapInPandas(_traverse_partitions(plan, st.bc_doc_lens),
+                                schema=TOPK_PARTIAL_SCHEMA)
+                   .toPandas())
 
     if len(partial):
-        # driver-side k-merge of the per-shard partials — same
+        # driver-side k-merge of the per-group partials — same
         # (score desc, doc asc) total order as the join plan's window
         partial = partial.sort_values(["qid", "score", "doc_id"],
                                       ascending=[True, False, True],
@@ -1090,154 +1143,69 @@ def topk_search_batch(index, queries: list[str], k: int = 10,
 
     topk_search joins the query table into the postings, which duplicates a
     hot term's posting row once per query using it. Here the (small by
-    construction — reference query files are KBs) analyzed query set is
-    broadcast instead, the postings are filtered to the query vocabulary and
-    co-located by shard, and ONE kernel pass per shard answers every query —
-    the reference's evaluate_queries shape (parallel over queries, shared
-    mmap'd index, evaluate_queries.cpp:154-156) with shards as the unit of
-    parallelism. Results are identical to topk_search (same kernels).
+    construction — reference query files are KBs) analyzed query set ships
+    with the task instead, and the postings are filtered to the query
+    vocabulary and co-located by shard. Each task then traverses its
+    shards in groups of at most SERVE_COLLECT_MAX_POSTINGS postings: per
+    group, every query term's shard runs merge into one run, scored once
+    and shared by all queries using the term, and ONE kernel per query
+    walks the group over the broadcast global doc-length array — the
+    reference's evaluate_queries shape (parallel over queries, shared
+    mmap'd index, evaluate_queries.cpp:154-156). Without the driver serve
+    state (index above its bounds, DataFrame query sets) rows carry their
+    own shard's doc lengths and a group is one shard. Results are
+    identical to topk_search (same kernels, same float32 scores).
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-
-    # ---- query analysis: when the driver-resident serve state exists
-    # (lexicon + shard metadata cached, same bounds as the interactive
-    # path), analyze driver-side — zero Spark jobs before the main pass.
-    # The reference's evaluate_queries likewise resolves terms against the
-    # loaded lexicon before any evaluation (evaluate_queries.cpp:79-101).
-    st = (_serve_state(index, prefetch=False)
-          if isinstance(queries, list) else None)
-    term_queries: dict[int, list] = {}
-    term_stats: dict[int, tuple] = {}
-    n_terms: dict[str, int] = {}
-    tid_of_term: dict[str, int] = {}
-    if st is not None:
-        for qid, term, w in analyze_query_terms(queries, cfg):
-            n_terms.setdefault(qid, 0)
-            meta = st.tmeta.get(term)
-            if meta is None:
-                continue  # unknown term dropped (query_parser.cpp:33-38)
-            tid, df_, cf_ = meta
-            tid_of_term[term] = tid
-            term_queries.setdefault(tid, []).append((qid, float(w)))
-            term_stats[tid] = (df_, cf_)
-            n_terms[qid] += 1
-    else:
-        qterms = (make_query_terms_df(spark, queries, cfg)
-                  if isinstance(queries, list) else queries)
-        qrows = (qterms.join(
-            index.lexicon.select("term", "term_id", "df", "cf"), "term")
-            .select("qid", "term_id", "weight", "df", "cf").collect())
-        for r in qrows:
-            term_queries.setdefault(int(r["term_id"]), []).append(
-                (r["qid"], float(r["weight"])))
-            term_stats[int(r["term_id"])] = (int(r["df"]), int(r["cf"]))
-            n_terms[r["qid"]] = n_terms.get(r["qid"], 0) + 1
-    bc = spark.sparkContext.broadcast(
-        (term_queries, term_stats, n_terms, dict(thresholds or {})))
-
     from pisa_spark.operators.partitioning import (partition_values,
                                                    round_robin_expr)
 
-    parts = spark.sparkContext.defaultParallelism
-    wanted = list(term_stats)
-    enc_str = getattr(index, "postings_str", None)
-    smeta_bc = st.bc_shards if st is not None else None
-    if st is not None and enc_str is not None:
-        # string-keyed rows: the id-keyed postings view is a lazy broadcast
-        # join whose lexicon broadcast would be rebuilt on every batch job
-        posts = enc_str.filter(F.col("term").isin(list(tid_of_term)))
-    elif st is not None:
-        posts = index.postings.filter(F.col("term_id").isin(wanted))
+    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
+    spark = index.lexicon.sparkSession
+    plan = _QueryPlan(index, algorithm, k, weighted, range_span, thresholds)
+    # ---- query analysis: when the driver-resident serve state exists
+    # (lexicon + doc lengths cached, same bounds as the interactive
+    # path), analyze driver-side — zero Spark jobs before the main pass
+    st = (_serve_state(index, prefetch=False)
+          if isinstance(queries, list) else None)
+    if st is not None:
+        plan.analyze(queries, st.tmeta, index.cfg)
+        posts = _term_postings(index, plan, list(plan.tid_of_term))
+        doc_lens_bc = st.bc_doc_lens
     else:
-        posts = (index.postings.filter(F.col("term_id").isin(wanted))
-                 .join(index.shards.select(
-                     "shard_id", F.col("base_doc").alias("shard_base"),
-                     "doc_lens"), "shard_id"))
-    if getattr(index, "postings_colocated", False) and smeta_bc is not None:
+        qterms = (make_query_terms_df(spark, queries, index.cfg)
+                  if isinstance(queries, list) else queries)
+        for r in (qterms.join(
+                index.lexicon.select("term", "term_id", "df", "cf"), "term")
+                .select("qid", "term", "term_id", "weight", "df", "cf")
+                .collect()):
+            plan.add(r["qid"], r["term"], int(r["term_id"]), int(r["df"]),
+                     int(r["cf"]), r["weight"])
+        posts = (index.postings.filter(
+            F.col("term_id").isin(list(plan.term_stats)))
+            .join(index.shards.select(
+                "shard_id", F.col("base_doc").alias("shard_base"),
+                "doc_lens"), "shard_id"))
+        doc_lens_bc = None
+
+    parts = spark.sparkContext.defaultParallelism
+    if getattr(index, "postings_colocated", False) and st is not None:
         # docwise-encoded buckets already hold whole shards: coalesce
         # merges partitions without splitting them, so the shuffle the
         # repartition below pays is skipped entirely
-        posts = (posts.coalesce(parts)
-                 .sortWithinPartitions("shard_id"))
+        posts = posts.coalesce(parts)
     else:
         # shards -> partitions round-robin: shard ids are dense ints, and
         # raw hash placement would idle ~1/e of the executors when
         # shards ~ cores
         vals = partition_values(spark, parts)
-        posts = (posts.repartition(
+        posts = posts.repartition(
             parts, round_robin_expr(F.col("shard_id"), parts, vals))
-            .sortWithinPartitions("shard_id"))
-
-    codec = cfg.codec
-
-    def run_shard(pdf: pd.DataFrame):
-        tq, tstats, ntq, thr = bc.value
-        if smeta_bc is not None:
-            shard_base, doc_lens = smeta_bc.value[int(pdf["shard_id"].iat[0])]
-        else:
-            doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-            shard_base = int(pdf["shard_base"].iat[0])
-        if "term" in pdf.columns:
-            pdf = pdf.assign(
-                term_id=pdf["term"].map(tid_of_term)).drop(columns=["term"])
-        pdf = pdf.assign(
-            df=pdf["term_id"].map(lambda t: tstats[int(t)][0]),
-            cf=pdf["term_id"].map(lambda t: tstats[int(t)][1]),
-            weight=1.0)
-        by_query: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            shared = None if weighted else _TermRun(
-                row, scorer, stats, 1.0, False, codec)
-            for qid, w in tq.get(int(row.term_id), ()):
-                # unweighted runs share one object => one decode per row
-                # even when many queries use the term
-                run = shared if shared is not None else _TermRun(
-                    row, scorer, stats, w, weighted, codec)
-                by_query.setdefault(qid, []).append(run)
-        out_q, out_d, out_s = [], [], []
-        for qid, runs in by_query.items():
-            docs, scores = _run_kernel(
-                algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-                range_span, float(thr.get(qid, 0.0)),
-                n_query_terms=ntq.get(qid))
-            out_q.append(np.repeat(qid, docs.size))
-            out_d.append(docs)
-            out_s.append(scores)
-        if not out_q:
-            return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-        return pd.DataFrame({
-            "qid": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d).astype(np.int64),
-            "score": np.concatenate(out_s).astype(np.float32)})
-
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf["shard_id"].iat[-1]
-            tail = pdf["shard_id"].to_numpy() == last
-            if tail.all():
-                carry = pdf
-                continue
-            first_tail = int(np.flatnonzero(tail).min())
-            complete, carry = pdf.iloc[:first_tail], pdf.iloc[first_tail:]
-            for _, grp in complete.groupby("shard_id", sort=False):
-                yield run_shard(grp)
-        if carry is not None and len(carry):
-            for _, grp in carry.groupby("shard_id", sort=False):
-                yield run_shard(grp)
-
-    partial = posts.mapInPandas(run, schema=TOPK_PARTIAL_SCHEMA)
+    partial = (posts.sortWithinPartitions("shard_id")
+               .mapInPandas(_traverse_partitions(plan, doc_lens_bc),
+                            schema=TOPK_PARTIAL_SCHEMA))
     w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = (partial.withColumn("rank", F.row_number().over(w))
               .filter(F.col("rank") <= k))

@@ -203,6 +203,9 @@ def load_stream_index(spark, out_dir: str,
     """Assemble an InvertedIndex over all ingested segments, with per-segment
     block-bound rescaling to the CURRENT collection avg_len (see module
     docstring for the safety argument)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from pisa_spark.functions.scoring import make_scorer
@@ -216,10 +219,17 @@ def load_stream_index(spark, out_dir: str,
     stats = {"num_docs": num_docs, "collection_len": collection_len,
              "avg_len": _f32(collection_len / num_docs)}
 
+    # every table reads its segments' paths from the segment state, never
+    # the parent directory: a table an earlier load in this session cached
+    # (shards) has the same plan as a new read of that directory, so Spark
+    # would serve it without the segments ingested since
+    def segment(table: str, s: dict):
+        return spark.read.parquet(
+            os.path.join(out_dir, f"{table}/segment={s['segment']}"))
+
     post_parts = []
     for s in state["segments"]:
-        p = spark.read.parquet(
-            os.path.join(out_dir, f"postings/segment={s['segment']}"))
+        p = segment("postings", s)
         scale = max(1.0, float(stats["avg_len"]) / float(s["avg_len"]))
         if scale > 1.0:
             p = p.withColumn(
@@ -227,15 +237,13 @@ def load_stream_index(spark, out_dir: str,
                 F.transform("block_max_part",
                             lambda x: (x * F.lit(scale)).cast("float")))
         post_parts.append(p)
-    postings = post_parts[0]
-    for p in post_parts[1:]:
-        postings = postings.unionByName(p)
-    postings = postings.persist()
+    postings = reduce(DataFrame.unionByName, post_parts).persist()
 
-    docs = spark.read.option("basePath", os.path.join(out_dir, "docs")) \
-        .parquet(os.path.join(out_dir, "docs")).drop("segment") \
-        .withColumn("shard_id",
-                    (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long"))
+    docs = (reduce(DataFrame.unionByName,
+                   [segment("docs", s) for s in state["segments"]])
+            .withColumn("shard_id",
+                        (F.col("doc_id") / F.lit(cfg.shard_span))
+                        .cast("long")))
     shards = (docs.groupBy("shard_id")
               .agg(F.array_sort(
                   F.collect_list(F.struct("doc_id", "doc_len"))).alias("dl"))

@@ -10,27 +10,32 @@ methodology exactly).
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", help="scale-factor data directory")
+    ap.add_argument("entries", nargs="+", metavar="ENTRY",
+                    help="queries() entry names to time")
+    ap.add_argument("--repeats", type=int, default=3,
+                    help="timed runs per entry (default 3)")
+    ap.add_argument("--explain-dir", default=None,
+                    help="write each entry's formatted plan here")
+    ap.add_argument("--count", action="store_true",
+                    help="time .count() instead of the noop sink")
+    return ap.parse_args(argv)
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0]
-    entries = args[1:]
-    repeats = 3
-    explain_dir = None
-    use_count = "--count" in sys.argv
-    for i, a in enumerate(sys.argv):
-        if a == "--repeats":
-            repeats = int(sys.argv[i + 1])
-            entries = [e for e in entries if e != sys.argv[i + 1]]
-        if a == "--explain-dir":
-            explain_dir = sys.argv[i + 1]
-            entries = [e for e in entries if e != explain_dir]
+    args = parse_args()
+    sf_dir, entries = args.sf_dir, args.entries
+    repeats, explain_dir, use_count = args.repeats, args.explain_dir, args.count
 
     import __spark_entry__ as entry_mod
     from pisa_spark.session import get_spark

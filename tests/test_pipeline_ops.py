@@ -462,3 +462,18 @@ def test_dedup_clusters_driver_path_matches_distributed(spark, monkeypatch):
     assert fast == slow
     assert fast == {(1, 1), (5, 1), (9, 1), (20, 20), (21, 20), (40, 40),
                     (41, 40), (60, 2), (61, 2), (62, 2), (63, 2), (2, 2)}
+
+
+@pytest.mark.parametrize("id_type", ["int", "long"])
+def test_dedup_clusters_branches_share_schema(spark, monkeypatch, id_type):
+    """Both dedup_clusters branches (driver union-find, distributed label
+    propagation) return the same rows under one (doc_id long,
+    cluster_id long) schema, whatever integer type the pair ids have."""
+    rows = [(1, 5), (5, 9), (20, 21), (9, 1), (60, 61), (61, 2)]
+    pairs = spark.createDataFrame(rows, f"doc_a {id_type}, doc_b {id_type}")
+    fast = dedup.dedup_clusters(pairs)
+    monkeypatch.setattr(dedup, "CLUSTERS_DRIVER_MAX_EDGES", 0)
+    slow = dedup.dedup_clusters(pairs)
+    assert fast.schema == slow.schema
+    assert fast.dtypes == [("doc_id", "bigint"), ("cluster_id", "bigint")]
+    assert sorted(fast.collect()) == sorted(slow.collect())

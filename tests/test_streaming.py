@@ -164,3 +164,31 @@ def test_ingest_recovers_from_orphan_lexicon_append(spark, corpus):
         sidx = load_stream_index(spark, out, CFG)
         assert topk_search(sidx, webtext.synth_queries(5, seed=3),
                            k=5).count() > 0
+
+
+def test_ingest_load_interleaved_in_one_session(spark, corpus, tmp_path):
+    """ingest, load, ingest, load in one session: the second load must see
+    the second segment's docs (no stale listing of docs/), and a batch
+    query over the reloaded index must answer from both segments."""
+    from pisa_spark.operators.topk import topk_search_batch
+
+    out = str(tmp_path / "sidx")
+    pages = extract_pages(corpus, CFG).orderBy("url").limit(120).collect()
+    half = len(pages) // 2
+    queries = webtext.synth_queries(10, seed=5)
+    ingest_batch(spark.createDataFrame(pages[:half], "url string, text string"),
+                 out, CFG, html_col=None, batch_id=0)
+    first = load_stream_index(spark, out, CFG)
+    assert first.stats["num_docs"] == half
+    assert topk_search_batch(first, queries, k=5).count() > 0
+    ingest_batch(spark.createDataFrame(pages[half:], "url string, text string"),
+                 out, CFG, html_col=None, batch_id=1)
+    sidx = load_stream_index(spark, out, CFG)
+    assert sidx.stats["num_docs"] == len(pages)
+    assert sidx.docs.count() == len(pages)
+    # the shard table (doc lengths) covers both segments
+    assert sum(len(r.doc_lens) for r in sidx.shards.collect()) == len(pages)
+    rows = topk_search_batch(sidx, queries, k=5, with_urls=True).collect()
+    assert rows and all(r.url for r in rows)
+    second_base = -(-half // CFG.shard_span) * CFG.shard_span
+    assert any(r.doc_id >= second_base for r in rows)

@@ -340,10 +340,11 @@ def test_serve_prefetch_whole_index(index, queries):
     del index._serve_state
 
 
-def test_serve_global_run_identity(index, queries):
+def test_serve_global_run_identity(spark, index, queries):
     """The whole-index traversal (one merged run per term, one kernel per
     query over the global doc space) must rank identically to the
-    per-shard kernel loop, for every pruned algorithm."""
+    exhaustive oracle: ranked_or for the pruned disjunctive algorithms,
+    the join plan's per-shard ranked_and for the conjunctive one."""
     from pisa_spark.operators import topk as T
 
     if hasattr(index, "_serve_state"):
@@ -353,20 +354,17 @@ def test_serve_global_run_identity(index, queries):
         return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6))
                       for r in rows)
 
+    qdf = T.make_query_terms_df(spark, queries, index.cfg)
+    oracle = {alg: key(T.topk_search(index, qdf, k=K, algorithm=alg,
+                                     with_urls=False).collect())
+              for alg in ("ranked_or", "ranked_and")}
     for alg in ("block_max_wand", "maxscore", "block_max_maxscore",
                 "ranked_and"):
         g = key(T.topk_search(index, queries, k=K, algorithm=alg,
                               with_urls=False).collect())
-        st = index._serve_state
-        assert st.global_doc_lens is not None  # global path engaged
-        saved = st.global_doc_lens
-        st.global_doc_lens = None              # force per-shard loop
-        try:
-            p = key(T.topk_search(index, queries, k=K, algorithm=alg,
-                                  with_urls=False).collect())
-        finally:
-            st.global_doc_lens = saved
-        assert g == p, alg
+        assert index._serve_state.global_doc_lens is not None
+        assert g == oracle["ranked_and" if alg == "ranked_and"
+                           else "ranked_or"], alg
     del index._serve_state
 
 
@@ -391,3 +389,123 @@ def test_batch_executor_join_fallback_identity(index, queries, monkeypatch):
     monkeypatch.undo()
     if hasattr(index, "_serve_state"):
         del index._serve_state
+
+
+# ------------------------------------------- batch grouping rank identity
+
+def _exact(rows):
+    """(qid, rank, doc_id, float32 score) — ties and scores exact."""
+    return sorted((r.qid, int(r.rank), int(r.doc_id), np.float32(r.score))
+                  for r in rows)
+
+
+@pytest.fixture(scope="module")
+def small_shard_index(spark, corpus):
+    """Many more shards than tasks, so every batch task holds several."""
+    cfg = IndexConfig(shard_span=16)
+    idx = build_index(extract_pages(spark.createDataFrame(corpus), cfg), cfg)
+    assert idx.shards.count() > 2 * spark.sparkContext.defaultParallelism
+    return idx
+
+
+def _join_oracle(spark, index, queries, algorithm="ranked_or", **kw):
+    """Answers of topk_search's join plan (a DataFrame query set): one
+    kernel per (query, shard), no shard grouping."""
+    from pisa_spark.operators.topk import make_query_terms_df
+
+    qdf = make_query_terms_df(spark, queries, index.cfg)
+    return _exact(topk_search(index, qdf, k=K, algorithm=algorithm,
+                              with_urls=False, **kw).collect())
+
+
+@pytest.fixture(scope="module")
+def small_shard_oracle(spark, small_shard_index, queries):
+    """Exhaustive answers: ranked_or for the disjunctive algorithms,
+    ranked_and for the conjunctive ones."""
+    return {alg: _join_oracle(spark, small_shard_index, queries, alg)
+            for alg in ("ranked_or", "ranked_and")}
+
+
+def _batch(index, queries, alg, **kw):
+    from pisa_spark.operators.topk import topk_search_batch
+
+    return _exact(topk_search_batch(index, queries, k=K, algorithm=alg,
+                                    range_span=64, **kw).collect())
+
+
+def _fresh(index):
+    if hasattr(index, "_serve_state"):
+        del index._serve_state
+
+
+@pytest.mark.parametrize("setting", ["shards_per_task", "tiny_groups",
+                                     "mid_groups", "join_fallback"])
+def test_batch_grouping_identity(small_shard_index, small_shard_oracle,
+                                 queries, monkeypatch, setting):
+    """Every algorithm through topk_search_batch equals the exhaustive
+    oracle whether a task's shards traverse as one group, as several
+    groups (a small SERVE_COLLECT_MAX_POSTINGS budget), or one shard at a
+    time (the join fallback above the serve bounds)."""
+    from pisa_spark.operators import topk as T
+
+    if setting == "tiny_groups":
+        monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 1)
+    elif setting == "mid_groups":
+        monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 300)
+    elif setting == "join_fallback":
+        monkeypatch.setattr(T, "SERVE_MAX_DOCS", 0)
+    _fresh(small_shard_index)
+    try:
+        for alg in T.ALGORITHMS:
+            conj = alg in ("ranked_and", "block_max_ranked_and")
+            want = small_shard_oracle["ranked_and" if conj else "ranked_or"]
+            assert _batch(small_shard_index, queries, alg) == want, \
+                (setting, alg)
+        st = small_shard_index._serve_state
+        assert (st is False) == (setting == "join_fallback")
+    finally:
+        _fresh(small_shard_index)
+
+
+def test_batch_weighted_and_thresholds(spark, small_shard_index, queries,
+                                       small_shard_oracle):
+    """Weighted queries (merged runs keyed by (term_id, weight)) and
+    threshold seeding go through the batch traversal unchanged."""
+    # a repeated first term gives it weight 2 or more
+    wq = [f"W{i}:{q.split(':', 1)[1]} {q.split(':', 1)[1].split()[0]}"
+          for i, q in enumerate(queries)]
+    want = _join_oracle(spark, small_shard_index, wq, weighted=True)
+    _fresh(small_shard_index)
+    for alg in ("ranked_or", "maxscore", "block_max_wand"):
+        assert _batch(small_shard_index, wq, alg, weighted=True) == want, alg
+    # seed every query with its true k-th score (tools/thresholds.cpp)
+    oracle = small_shard_oracle["ranked_or"]
+    kth = {qid: float(score) for qid, rank, _doc, score in oracle
+           if rank == K}
+    assert kth
+    for alg in ("maxscore", "block_max_wand"):
+        assert _batch(small_shard_index, queries, alg,
+                      thresholds=kth) == oracle, alg
+    _fresh(small_shard_index)
+
+
+def test_serve_distributed_mode_identity(small_shard_index, small_shard_oracle,
+                                         queries, monkeypatch):
+    """Term sets above the driver fetch bound make the serve path run the
+    shared executor-side traversal (no rows fetched to the driver); its
+    answers equal the exhaustive oracle."""
+    from pisa_spark.operators import topk as T
+
+    monkeypatch.setattr(T, "SERVE_CACHE_MAX_POSTINGS", 1)  # no prefetch
+    monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 0)
+    _fresh(small_shard_index)
+    try:
+        for alg in ("block_max_wand", "maxscore", "ranked_or"):
+            got = _exact(T.topk_search(small_shard_index, queries, k=K,
+                                       algorithm=alg, range_span=64,
+                                       with_urls=False).collect())
+            assert got == small_shard_oracle["ranked_or"], alg
+        st = small_shard_index._serve_state
+        assert not st.rows_by_term and not st.term_runs  # nothing fetched
+    finally:
+        _fresh(small_shard_index)
