@@ -700,20 +700,6 @@ def pef_encode(values: np.ndarray, universe: int, quantum: int = 8,
             + b"".join(parts))
 
 
-def _read_varints(b: np.ndarray, pos: int, k: int) -> tuple[list[int], int]:
-    out = []
-    for _ in range(k):
-        val, shift = 0, 0
-        while True:
-            byte = int(b[pos]); pos += 1
-            val |= (byte & 0x7F) << shift
-            shift += 7
-            if not byte & 0x80:
-                break
-        out.append(val)
-    return out, pos
-
-
 def pef_decode(buf: bytes) -> tuple[np.ndarray, int]:
     """Decode pef_encode output -> (values, universe)."""
     b = np.frombuffer(buf, dtype=np.uint8)

@@ -12,12 +12,14 @@ topk_search_batch):
               query over the broadcast global doc-length array-->
             --k-merge (score desc, doc asc)-->  (qid, doc_id, score, rank)
 
-The serve path runs the same group traversal (_traverse) on the driver over
-its resident posting cache. Without the driver state (index above the serve
-bounds, DataFrame query sets) posting rows carry their own shard's doc
-lengths and a group is one shard. topk_search's join plan (DataFrame query
-sets) and profile_queries instead run one kernel per
-groupBy(qid, shard_id).
+Kernels run in exactly two places: the serve path runs the group traversal
+(_traverse) on the driver over its resident posting cache, and
+topk_search_batch runs it executor-side in one mapInPandas pass. Every call
+the serve path declines (DataFrame query sets, indexes above the serve
+bounds, oversized fetches or merges) goes to topk_search_batch. Without the
+driver state posting rows carry their own shard's doc lengths and a group is
+one shard. profile_queries walks the same shard-sorted rows one shard at a
+time, with fresh runs per query so its decode counters stay per query.
 
 Per-group top-k + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
@@ -565,10 +567,22 @@ def make_query_terms_df(spark, queries: list[str], cfg: IndexConfig):
     return spark.createDataFrame(rows, "qid string, term string, weight double")
 
 
+def _rank_per_query(scored, k: int):
+    """The k best (qid, doc_id, score) rows of each qid, ranked 1..k by
+    (score desc, doc asc)."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "doc_id", "score", "rank"))
+
+
 # ------------------------------------------------------------ serving path
 
 # driver-memory bounds for the serve caches: above these the serve path
-# declines and topk_search falls back to the fully distributed join plan
+# declines and topk_search runs the executor-side batch traversal instead
 SERVE_MAX_DOCS = 1 << 23            # global doc_lens array (~64 MB int64)
 SERVE_MAX_PARTIAL_ROWS = 1 << 21    # shards x queries x k merge bound
 # per-call driver fetch bound; also the postings one traversal group holds
@@ -717,13 +731,12 @@ def _shard_groups(batches, budget: int):
 
 
 def _traverse_partitions(plan: _QueryPlan, doc_lens_bc):
-    """mapInPandas body of the executor-side traversal (batch executor and
-    the serve path's distributed mode). Rows arrive co-located and sorted
-    by shard. Each task walks its shards in groups bounded by
-    SERVE_COLLECT_MAX_POSTINGS, one _traverse per group over the broadcast
-    global doc-length array. Without that array (doc_lens_bc None: the
-    join fallback, rows carry their own shard's doc_lens and shard_base)
-    a group is one shard."""
+    """mapInPandas body of the executor-side traversal (topk_search_batch).
+    Rows arrive co-located and sorted by shard. Each task walks its shards
+    in groups bounded by SERVE_COLLECT_MAX_POSTINGS, one _traverse per
+    group over the broadcast global doc-length array. Without that array
+    (doc_lens_bc None: rows carry their own shard's doc_lens and
+    shard_base) a group is one shard."""
     budget = SERVE_COLLECT_MAX_POSTINGS if doc_lens_bc is not None else 0
 
     def run(batches):
@@ -809,8 +822,8 @@ class _ServeState:
 
 def _serve_state(index, prefetch: bool = True):
     """Build (once) or fetch the index's _ServeState; None when the index
-    exceeds the driver-memory bounds (callers fall back to the
-    distributed join plan).
+    exceeds the driver-memory bounds (callers fall back to the batch
+    traversal over shard-joined rows).
 
     prefetch=False builds/returns the METADATA-ONLY state (lexicon + doc
     lengths — two bounded collects, no posting bytes): the batch
@@ -891,20 +904,20 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
     """Low-latency executor (the reference's interactive `queries` tool
     shape, tools/queries.cpp:279-462).
 
-    The join plan pays a lexicon-join job, a postings+shards join, a
-    groupBy shuffle and a window stage per call — seconds of scheduling
-    floor for milliseconds of work. Here query terms resolve against the
-    driver-cached lexicon (no job), and the posting rows for the query
-    vocabulary are fetched in ONE column-pruned job into the per-term
-    serve cache (repeat terms: zero jobs) — then one _traverse runs the
-    kernels driver-side over the cached rows, exactly as the reference
-    runs them over its mmap'd index. Oversized term sets (fetch above
-    SERVE_COLLECT_MAX_POSTINGS) run the same traversal executor-side
-    instead, in a single mapInPandas pass over the term-filtered postings.
-    Both modes produce the join plan's exact ranking ((score desc, doc
-    asc), same kernels, same float32 scores).
+    The batch executor pays a shuffle, a window stage and a result job per
+    call — seconds of scheduling floor for milliseconds of work. Here query
+    terms resolve against the driver-cached lexicon (no job), and the
+    posting rows for the query vocabulary are fetched in ONE column-pruned
+    job into the per-term serve cache (repeat terms: zero jobs) — then one
+    _traverse runs the kernels driver-side over the cached rows, exactly as
+    the reference runs them over its mmap'd index. Same kernels and float32
+    scores as topk_search_batch, so the ranking is identical.
 
-    Returns None when the index/meta exceeds the serve bounds."""
+    Returns None when the index/meta exceeds the serve bounds, when the
+    per-query merge would exceed SERVE_MAX_PARTIAL_ROWS, or when the
+    first-seen terms' fetch exceeds SERVE_COLLECT_MAX_POSTINGS; topk_search
+    then runs the batch executor, which reuses this state's lexicon and
+    broadcast doc lengths."""
     st = _serve_state(index)
     if st is None:
         return None
@@ -918,57 +931,39 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
     terms = list(plan.tid_of_term)
     missing = ([] if st.complete else
                [t for t in terms if t not in st.rows_by_term])
-    est_fetch = sum(st.tmeta[t][1] for t in missing)
-    if not terms:
-        partial = _partial_frame([], [], [])
-    elif est_fetch <= SERVE_COLLECT_MAX_POSTINGS:
-        # ---- driver mode: fetch first-seen terms' rows (one job, or zero
-        # if all cached), traverse locally
-        if missing:
-            fetched = plan.attach_meta(
-                _term_postings(index, plan, missing).toPandas())
-            id2term = {plan.tid_of_term[t]: t for t in missing}
-            for t in missing:
-                st.rows_by_term[t] = {}
-            for row in fetched.itertuples(index=False):
-                t = id2term[int(row.term_id)]
-                st.rows_by_term[t][int(row.shard_id)] = row
-            st.cached_postings += int(fetched["n"].sum()) if len(fetched) else 0
-            # FIFO eviction: drop oldest terms not in this query
-            current = set(terms)
-            while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
-                victim = next((t for t in st.rows_by_term
-                               if t not in current), None)
-                if victim is None:
-                    break
-                rows = st.rows_by_term.pop(victim)
-                st.cached_postings -= sum(int(r.n) for r in rows.values())
-                vtid = st.tmeta[victim][0]
-                for key in [key for key in st.term_runs if key[0] == vtid]:
-                    del st.term_runs[key]
-        partial = _traverse(
-            {tid: list(st.rows_by_term.get(t, {}).values())
-             for t, tid in plan.tid_of_term.items()},
-            plan, st.global_doc_lens, 0, run_cache=st.term_runs)
-    else:
-        # ---- distributed mode: the traversal runs executor-side in one
-        # mapInPandas pass over the term-filtered postings (co-located
-        # by shard; coalesced so the python-worker round-trip count
-        # stays small for a latency-path job)
-        posts = _term_postings(index, plan, terms)
-        parts = spark.sparkContext.defaultParallelism
-        if not getattr(index, "postings_colocated", False):
-            posts = posts.repartition(min(parts, st.n_shards), "shard_id")
-        else:
-            posts = posts.coalesce(min(parts, 16))
-        partial = (posts.sortWithinPartitions("shard_id")
-                   .mapInPandas(_traverse_partitions(plan, st.bc_doc_lens),
-                                schema=TOPK_PARTIAL_SCHEMA)
-                   .toPandas())
+    if sum(st.tmeta[t][1] for t in missing) > SERVE_COLLECT_MAX_POSTINGS:
+        return None
+    if missing:
+        # fetch first-seen terms' rows (one job; zero when all cached)
+        fetched = plan.attach_meta(
+            _term_postings(index, plan, missing).toPandas())
+        id2term = {plan.tid_of_term[t]: t for t in missing}
+        for t in missing:
+            st.rows_by_term[t] = {}
+        for row in fetched.itertuples(index=False):
+            t = id2term[int(row.term_id)]
+            st.rows_by_term[t][int(row.shard_id)] = row
+        st.cached_postings += int(fetched["n"].sum()) if len(fetched) else 0
+        # FIFO eviction: drop oldest terms not in this query
+        current = set(terms)
+        while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
+            victim = next((t for t in st.rows_by_term
+                           if t not in current), None)
+            if victim is None:
+                break
+            rows = st.rows_by_term.pop(victim)
+            st.cached_postings -= sum(int(r.n) for r in rows.values())
+            vtid = st.tmeta[victim][0]
+            for key in [key for key in st.term_runs if key[0] == vtid]:
+                del st.term_runs[key]
+    partial = _traverse(
+        {tid: list(st.rows_by_term.get(t, {}).values())
+         for t, tid in plan.tid_of_term.items()},
+        plan, st.global_doc_lens, 0, run_cache=st.term_runs)
 
     if len(partial):
-        # driver-side k-merge of the per-group partials — same
-        # (score desc, doc asc) total order as the join plan's window
+        # driver-side k-merge of the per-query partials — same
+        # (score desc, doc asc) total order as the batch executor's window
         partial = partial.sort_values(["qid", "score", "doc_id"],
                                       ascending=[True, False, True],
                                       kind="mergesort")
@@ -995,185 +990,45 @@ def topk_search(index, queries: list[str] | object, k: int = 10,
     Returns DataFrame (qid, doc_id, url, score, rank); with_urls=False skips
     the doclex join (one fewer join per query — latency path).
 
-    List queries route through the one-job serve plan (_topk_search_serve,
-    identical kernels and ranking) whenever the index fits the serve
-    bounds; the fully distributed join plan below is the fallback and the
-    path for DataFrame query sets.
+    List queries run driver-side through the serve path
+    (_topk_search_serve) whenever it accepts the call; every other call
+    (DataFrame query sets, indexes above the serve bounds, oversized
+    fetches or merges) runs the executor-side topk_search_batch. Both run
+    the same kernels, so the ranking does not depend on the route.
     """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     if isinstance(queries, list):
         served = _topk_search_serve(index, queries, k, algorithm, weighted,
                                     range_span, thresholds, with_urls)
         if served is not None:
             return served
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    if isinstance(queries, list):
-        qterms = make_query_terms_df(spark, queries, cfg)
-    else:
-        qterms = queries
-
-    # unknown terms are dropped by the inner join
-    # (reference query_parser.cpp:33-38)
-    q = qterms.join(index.lexicon.select("term", "term_id", "df", "cf"), "term")
-    # conjunction algorithms need the per-query term count to empty shards
-    # that lack one of the terms
-    q = q.withColumn(
-        "n_query_terms",
-        F.count("*").over(W.partitionBy("qid")).cast("int"))
-    # the query side is small by construction: broadcast it so the postings
-    # table is never shuffled (scan + broadcast-hash-join + partial prune)
-    joined = (
-        F.broadcast(q).join(index.postings, "term_id")
-        .join(index.shards.select("shard_id", "base_doc", "doc_lens")
-              .withColumnRenamed("base_doc", "shard_base"), "shard_id")
-    )
-
-    codec = cfg.codec
-    thr = dict(thresholds or {})
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard_id = key[0], int(key[1])
-        doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-        shard_base = int(pdf["shard_base"].iat[0])
-        runs = [
-            _TermRun(row, scorer, stats, float(row.weight), weighted, codec)
-            for row in pdf.itertuples(index=False)
-        ]
-        docs, scores = _run_kernel(
-            algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-            range_span, float(thr.get(qid, 0.0)),
-            n_query_terms=int(pdf["n_query_terms"].iat[0]))
-        return pd.DataFrame({
-            "qid": np.repeat(qid, docs.size),
-            "doc_id": docs,
-            "score": scores.astype(np.float32),
-        })
-
-    partial = joined.groupBy("qid", "shard_id").applyInPandas(
-        kernel, schema=TOPK_PARTIAL_SCHEMA)
-
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-    if not with_urls:
-        return ranked.select("qid", "doc_id", "score", "rank")
-    return (
-        ranked.join(index.docs.select("doc_id", "url"), "doc_id")
-        .select("qid", "doc_id", "url", "score", "rank")
-    )
+    return topk_search_batch(index, queries, k, algorithm, weighted,
+                             range_span, thresholds, with_urls)
 
 
-PROFILE_SCHEMA = ("qid string, shard_id long, postings_decoded long, "
-                  "blocks_decoded long, docs_scored long, ranges long, "
-                  "ranges_skipped long")
+def _shard_postings(index, queries, plan: _QueryPlan,
+                    per_shard: bool = False):
+    """Analyze `queries` into `plan`; return the posting rows of its
+    vocabulary co-located and sorted by shard, plus the broadcast global
+    doc-length array the rows are scored against.
 
-
-def profile_queries(index, queries: list[str] | object, k: int = 10,
-                    algorithm: str = "block_max_wand",
-                    range_span: int = 16384):
-    """Per-(query, shard) execution counters (reference
-    tools/profile_queries.cpp: its block_freq_index counts postings/blocks
-    touched per query; here the kernels count ranges visited/skipped and
-    docs fully scored, and posting/block decode counts are read off the
-    lazily-decoded runs after the kernel returns).
-
-    Returns (qid, shard_id, postings_decoded, blocks_decoded, docs_scored,
-    ranges, ranges_skipped) — aggregate over shard_id for per-query totals.
-    """
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    cfg = index.cfg
-    spark = index.lexicon.sparkSession
-    stats = dict(index.stats)
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    qterms = (make_query_terms_df(spark, queries, cfg)
-              if isinstance(queries, list) else queries)
-    q = qterms.join(index.lexicon.select("term", "term_id", "df", "cf"),
-                    "term")
-    q = q.withColumn("n_query_terms",
-                     F.count("*").over(W.partitionBy("qid")).cast("int"))
-    joined = (
-        F.broadcast(q).join(index.postings, "term_id")
-        .join(index.shards.select("shard_id", "base_doc", "doc_lens")
-              .withColumnRenamed("base_doc", "shard_base"), "shard_id")
-    )
-    codec = cfg.codec
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qid, shard_id = key[0], int(key[1])
-        doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-        shard_base = int(pdf["shard_base"].iat[0])
-        runs = [_TermRun(row, scorer, stats, float(row.weight), False, codec)
-                for row in pdf.itertuples(index=False)]
-        counters: dict = {}
-        _run_kernel(algorithm, runs, k, scorer, stats, doc_lens, shard_base,
-                    range_span, 0.0,
-                    n_query_terms=int(pdf["n_query_terms"].iat[0]),
-                    counters=counters)
-        decoded = [r for r in runs if r._docs is not None]
-        return pd.DataFrame({
-            "qid": [qid], "shard_id": [shard_id],
-            "postings_decoded": [sum(r.n for r in decoded)],
-            "blocks_decoded": [sum(int(r.blk_last.size) for r in decoded)],
-            "docs_scored": [counters["docs_scored"]],
-            "ranges": [counters["ranges"]],
-            "ranges_skipped": [counters["ranges_skipped"]],
-        })
-
-    return joined.groupBy("qid", "shard_id").applyInPandas(
-        kernel, schema=PROFILE_SCHEMA)
-
-
-def topk_search_batch(index, queries: list[str], k: int = 10,
-                      algorithm: str = "maxscore", weighted: bool = False,
-                      range_span: int = 16384,
-                      thresholds: dict[str, float] | None = None,
-                      with_urls: bool = False):
-    """Batch-query executor: the physical strategy for LARGE query sets.
-
-    topk_search joins the query table into the postings, which duplicates a
-    hot term's posting row once per query using it. Here the (small by
-    construction — reference query files are KBs) analyzed query set ships
-    with the task instead, and the postings are filtered to the query
-    vocabulary and co-located by shard. Each task then traverses its
-    shards in groups of at most SERVE_COLLECT_MAX_POSTINGS postings: per
-    group, every query term's shard runs merge into one run, scored once
-    and shared by all queries using the term, and ONE kernel per query
-    walks the group over the broadcast global doc-length array — the
-    reference's evaluate_queries shape (parallel over queries, shared
-    mmap'd index, evaluate_queries.cpp:154-156). Without the driver serve
-    state (index above its bounds, DataFrame query sets) rows carry their
-    own shard's doc lengths and a group is one shard. Results are
-    identical to topk_search (same kernels, same float32 scores).
-    """
-    from pyspark.sql import Window as W
+    With the driver-resident serve state (list queries, index within the
+    serve bounds) the analysis runs against the cached lexicon — zero
+    Spark jobs before the main pass. Otherwise one lexicon-join collect
+    analyzes the queries. The broadcast is None, and each row carries its
+    own shard's doc_lens and shard_base, when there is no serve state or
+    when per_shard asks for per-shard rows."""
     from pyspark.sql import functions as F
 
     from pisa_spark.operators.partitioning import (partition_values,
                                                    round_robin_expr)
 
-    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     spark = index.lexicon.sparkSession
-    plan = _QueryPlan(index, algorithm, k, weighted, range_span, thresholds)
-    # ---- query analysis: when the driver-resident serve state exists
-    # (lexicon + doc lengths cached, same bounds as the interactive
-    # path), analyze driver-side — zero Spark jobs before the main pass
     st = (_serve_state(index, prefetch=False)
           if isinstance(queries, list) else None)
     if st is not None:
         plan.analyze(queries, st.tmeta, index.cfg)
         posts = _term_postings(index, plan, list(plan.tid_of_term))
-        doc_lens_bc = st.bc_doc_lens
     else:
         qterms = (make_query_terms_df(spark, queries, index.cfg)
                   if isinstance(queries, list) else queries)
@@ -1183,15 +1038,16 @@ def topk_search_batch(index, queries: list[str], k: int = 10,
                 .collect()):
             plan.add(r["qid"], r["term"], int(r["term_id"]), int(r["df"]),
                      int(r["cf"]), r["weight"])
-        posts = (index.postings.filter(
+        posts = index.postings.filter(
             F.col("term_id").isin(list(plan.term_stats)))
-            .join(index.shards.select(
-                "shard_id", F.col("base_doc").alias("shard_base"),
-                "doc_lens"), "shard_id"))
-        doc_lens_bc = None
+    doc_lens_bc = st.bc_doc_lens if st is not None and not per_shard else None
+    if doc_lens_bc is None:
+        posts = posts.join(index.shards.select(
+            "shard_id", F.col("base_doc").alias("shard_base"), "doc_lens"),
+            "shard_id")
 
     parts = spark.sparkContext.defaultParallelism
-    if getattr(index, "postings_colocated", False) and st is not None:
+    if getattr(index, "postings_colocated", False) and doc_lens_bc is not None:
         # docwise-encoded buckets already hold whole shards: coalesce
         # merges partitions without splitting them, so the shuffle the
         # repartition below pays is skipped entirely
@@ -1203,16 +1059,106 @@ def topk_search_batch(index, queries: list[str], k: int = 10,
         vals = partition_values(spark, parts)
         posts = posts.repartition(
             parts, round_robin_expr(F.col("shard_id"), parts, vals))
-    partial = (posts.sortWithinPartitions("shard_id")
-               .mapInPandas(_traverse_partitions(plan, doc_lens_bc),
-                            schema=TOPK_PARTIAL_SCHEMA))
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = (partial.withColumn("rank", F.row_number().over(w))
-              .filter(F.col("rank") <= k))
+    return posts.sortWithinPartitions("shard_id"), doc_lens_bc
+
+
+def topk_search_batch(index, queries: list[str] | object, k: int = 10,
+                      algorithm: str = "maxscore", weighted: bool = False,
+                      range_span: int = 16384,
+                      thresholds: dict[str, float] | None = None,
+                      with_urls: bool = False):
+    """Batch-query executor: the physical strategy for LARGE query sets,
+    and topk_search's route whenever the driver serve path declines.
+
+    The (small by construction — reference query files are KBs) analyzed
+    query set ships with the task, and the postings are filtered to the
+    query vocabulary and co-located by shard, so a hot term's posting row
+    is read once, not once per query using it. Each task then traverses
+    its shards in groups of at most SERVE_COLLECT_MAX_POSTINGS postings:
+    per group, every query term's shard runs merge into one run, scored
+    once and shared by all queries using the term, and ONE kernel per
+    query walks the group over the broadcast global doc-length array — the
+    reference's evaluate_queries shape (parallel over queries, shared
+    mmap'd index, evaluate_queries.cpp:154-156). Without the driver serve
+    state (index above its bounds, DataFrame query sets) rows carry their
+    own shard's doc lengths and a group is one shard: one kernel per
+    (query, shard). Results are identical to the serve path (same
+    kernels, same float32 scores).
+    """
+    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
+    plan = _QueryPlan(index, algorithm, k, weighted, range_span, thresholds)
+    posts, doc_lens_bc = _shard_postings(index, queries, plan)
+    ranked = _rank_per_query(
+        posts.mapInPandas(_traverse_partitions(plan, doc_lens_bc),
+                          schema=TOPK_PARTIAL_SCHEMA), k)
     if not with_urls:
-        return ranked.select("qid", "doc_id", "score", "rank")
+        return ranked
     return (ranked.join(index.docs.select("doc_id", "url"), "doc_id")
             .select("qid", "doc_id", "url", "score", "rank"))
+
+
+PROFILE_SCHEMA = ("qid string, shard_id long, postings_decoded long, "
+                  "blocks_decoded long, docs_scored long, ranges long, "
+                  "ranges_skipped long")
+
+
+def _profile_partitions(plan: _QueryPlan):
+    """mapInPandas body of profile_queries over shard-joined rows: one
+    shard at a time, one counted kernel per query. Every (query, shard)
+    builds fresh runs, so the decode counts read off them belong to that
+    query alone — a run shared across queries stays decoded, and every
+    later query would count decodes it never did."""
+    columns = [f.split()[0] for f in PROFILE_SCHEMA.split(", ")]
+
+    def run(batches):
+        for pdf in _shard_groups(batches, 0):
+            pdf = plan.attach_meta(pdf)
+            shard_id = int(pdf["shard_id"].iat[0])
+            doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
+            base = int(pdf["shard_base"].iat[0])
+            by_query: dict[str, list] = {}
+            for row in pdf.itertuples(index=False):
+                for qid, w in plan.term_queries.get(int(row.term_id), ()):
+                    by_query.setdefault(qid, []).append(_TermRun(
+                        row, plan.scorer, plan.stats, w, plan.weighted,
+                        plan.codec))
+            out = []
+            for qid, runs in by_query.items():
+                c: dict = {}
+                _run_kernel(plan.algorithm, runs, plan.k, plan.scorer,
+                            plan.stats, doc_lens, base, plan.range_span, 0.0,
+                            n_query_terms=plan.n_terms.get(qid), counters=c)
+                decoded = [r for r in runs if r._docs is not None]
+                out.append((qid, shard_id, sum(r.n for r in decoded),
+                            sum(int(r.blk_last.size) for r in decoded),
+                            c["docs_scored"], c["ranges"],
+                            c["ranges_skipped"]))
+            if out:
+                yield pd.DataFrame(out, columns=columns)
+
+    return run
+
+
+def profile_queries(index, queries: list[str] | object, k: int = 10,
+                    algorithm: str = "block_max_wand",
+                    range_span: int = 16384):
+    """Per-(query, shard) execution counters (reference
+    tools/profile_queries.cpp: its block_freq_index counts postings/blocks
+    touched per query; here the kernels count ranges visited/skipped and
+    docs fully scored, and posting/block decode counts are read off the
+    lazily-decoded runs after the kernel returns).
+
+    Shares the batch executor's query analysis and posting preparation,
+    always over shard-joined rows: the counters are per shard and each
+    shard's ranges start at its own base_doc.
+
+    Returns (qid, shard_id, postings_decoded, blocks_decoded, docs_scored,
+    ranges, ranges_skipped) — aggregate over shard_id for per-query totals.
+    """
+    algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
+    plan = _QueryPlan(index, algorithm, k, False, range_span, None)
+    posts, _ = _shard_postings(index, queries, plan, per_shard=True)
+    return posts.mapInPandas(_profile_partitions(plan), schema=PROFILE_SCHEMA)
 
 
 def _corpus_tf(docs_df, id_col: str, text_col: str):
@@ -1287,9 +1233,7 @@ def bm25_topk_dataframe(docs_df, queries: list[str], k: int = 10,
     path; the float32 reference-faithful path is the index + kernel
     executors. Ranking is on round(score, 6) with doc-asc ties so both
     engines agree on near-equal sums."""
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-
 
     cfg = cfg or IndexConfig()
     spark = docs_df.sparkSession
@@ -1316,12 +1260,7 @@ def bm25_topk_dataframe(docs_df, queries: list[str], k: int = 10,
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum("partial"), 6).alias("score"))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "doc_id", "score", "rank")
-    )
+    return _rank_per_query(scored, k)
 
 
 def qld_topk_dataframe(docs_df, queries: list[str], k: int = 10,
@@ -1332,9 +1271,7 @@ def qld_topk_dataframe(docs_df, queries: list[str], k: int = 10,
     as built-in expressions. Double precision + round(6): the cross-engine
     oracle path (the float32-faithful path is IndexConfig(scorer='qld') +
     the kernel executors)."""
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-
 
     cfg = cfg or IndexConfig()
     spark = docs_df.sparkSession
@@ -1358,10 +1295,7 @@ def qld_topk_dataframe(docs_df, queries: list[str], k: int = 10,
         .agg(F.round(F.sum("partial"), 6).alias("score"))
         .filter(F.col("score") > 0)
     )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank"))
+    return _rank_per_query(scored, k)
 
 
 def pl2_topk_dataframe(docs_df, queries: list[str], k: int = 10,
@@ -1379,9 +1313,7 @@ def pl2_topk_dataframe(docs_df, queries: list[str], k: int = 10,
     the kernel executors)."""
     import math
 
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-
 
     cfg = cfg or IndexConfig()
     spark = docs_df.sparkSession
@@ -1410,10 +1342,7 @@ def pl2_topk_dataframe(docs_df, queries: list[str], k: int = 10,
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum("partial"), 6).alias("score"))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank"))
+    return _rank_per_query(scored, k)
 
 
 def dph_topk_dataframe(docs_df, queries: list[str], k: int = 10,
@@ -1429,9 +1358,7 @@ def dph_topk_dataframe(docs_df, queries: list[str], k: int = 10,
     the kernel executors)."""
     import math
 
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-
 
     cfg = cfg or IndexConfig()
     spark = docs_df.sparkSession
@@ -1458,10 +1385,7 @@ def dph_topk_dataframe(docs_df, queries: list[str], k: int = 10,
         .groupBy("qid", "doc_id")
         .agg(F.round(F.sum("partial"), 6).alias("score"))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "doc_id", "score", "rank"))
+    return _rank_per_query(scored, k)
 
 
 def trec_output(results_df, run_id: str = "pisa_spark"):

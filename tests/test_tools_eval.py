@@ -292,7 +292,7 @@ def test_evaluate_self_run_is_perfect(spark, index, queries):
 def test_profile_queries_counters(index, queries):
     """profile_queries (ref tools/profile_queries.cpp): pruned traversal
     must visit no more docs than the exhaustive one, and skip ranges only
-    when pruning is possible."""
+    when pruning is possible; the exhaustive counters are exact."""
     from pisa_spark.operators.topk import profile_queries
 
     prof_or = profile_queries(index, queries[:6], k=K,
@@ -307,6 +307,42 @@ def test_profile_queries_counters(index, queries):
     assert (prof_bmw.ranges >= prof_bmw.ranges_skipped).all()
     assert (prof_bmw.postings_decoded >= 0).all()
     assert (prof_bmw.blocks_decoded >= 0).all()
+
+    # ranked_or decodes and scores everything: per (qid, shard) its
+    # counters are exact sums over the query's known terms in that shard,
+    # computed here straight from the posting rows
+    from pisa_spark.functions.tokenize import analyze_query_terms
+    from pisa_spark.operators import codecs
+
+    assert index.cfg.codec == "varint"
+    tid = {r["term"]: int(r["term_id"])
+           for r in index.lexicon.select("term", "term_id").collect()}
+    qterms: dict = {}
+    for qid, term, _w in analyze_query_terms(queries[:6], index.cfg):
+        if term in tid:
+            qterms.setdefault(qid, set()).add(tid[term])
+    runs: dict = {}
+    for r in (index.postings.filter(index.postings.term_id.isin(
+            sorted(set().union(*qterms.values()))))
+            .select("term_id", "shard_id", "n", "base_doc",
+                    "block_last_docs", "docs_bin").collect()):
+        docs = codecs.decode_gap_stream(bytes(r["docs_bin"]), r["base_doc"],
+                                        "varint", r["n"])
+        runs.setdefault(int(r["shard_id"]), {})[int(r["term_id"])] = (
+            int(r["n"]), len(r["block_last_docs"]), set(docs.tolist()))
+    want = {}
+    for qid, tids in qterms.items():
+        for shard, by_term in runs.items():
+            hit = [by_term[t] for t in tids if t in by_term]
+            if hit:
+                ns, blocks, docs = zip(*hit)
+                want[(qid, shard)] = (sum(ns), sum(blocks),
+                                      len(set().union(*docs)))
+    got = {(r.qid, int(r.shard_id)): (int(r.postings_decoded),
+                                      int(r.blocks_decoded),
+                                      int(r.docs_scored))
+           for r in prof_or.itertuples()}
+    assert got == want
 
 
 def test_kstem_base_lexicon_probes():

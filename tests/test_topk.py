@@ -106,7 +106,13 @@ def test_pruned_matches_exhaustive_exactly(index, queries, oracle_results,
         assert got[q] == oracle_results[q], f"query {q}"
 
 
-def test_oracle_matches_pure_python(index, oracle_results, queries, pyref):
+def test_oracle_matches_pure_python(spark, index, oracle_results, queries,
+                                    pyref):
+    """Both routes of topk_search — the driver serve path (list queries)
+    and the executor-side per-shard traversal (a DataFrame query set) —
+    equal an engine-independent pure-Python float32 BM25."""
+    from pisa_spark.operators.topk import make_query_terms_df
+
     cfg = IndexConfig()
     qmap = collections.defaultdict(list)
     for qid, term, w in analyze_query_terms(queries, cfg):
@@ -116,15 +122,24 @@ def test_oracle_matches_pure_python(index, oracle_results, queries, pyref):
     ids = sorted(int(r["doc_id"])
                  for r in index.docs.select("doc_id").collect())
     rank_of = {d: i for i, d in enumerate(ids)}
-    answered = 0
-    for q, got in oracle_results.items():
-        got = [(rank_of[d], s) for d, s in got]
-        ref = pyref(qmap[q])
-        assert [d for d, _ in ref] == [d for d, _ in got], f"query {q}"
-        for (d1, s1), (d2, s2) in zip(ref, got):
-            assert abs(s1 - s2) <= 1e-6 * max(abs(s1), 1.0)
-        answered += 1
-    assert answered > N_QUERIES // 2
+    out = topk_search(index, make_query_terms_df(spark, queries, index.cfg),
+                      k=K, algorithm="ranked_or", range_span=128,
+                      with_urls=False).toPandas()
+    per_shard = {
+        q: [(r.doc_id, r.score) for r in g.sort_values("rank").itertuples()]
+        for q, g in out.groupby("qid")
+    }
+    assert set(per_shard) == set(oracle_results)
+    for results in (oracle_results, per_shard):
+        answered = 0
+        for q, got in results.items():
+            got = [(rank_of[d], s) for d, s in got]
+            ref = pyref(qmap[q])
+            assert [d for d, _ in ref] == [d for d, _ in got], f"query {q}"
+            for (d1, s1), (d2, s2) in zip(ref, got):
+                assert abs(s1 - s2) <= 1e-6 * max(abs(s1), 1.0)
+            answered += 1
+        assert answered > N_QUERIES // 2
 
 
 def test_unknown_only_query_returns_nothing(index):
@@ -172,7 +187,7 @@ def test_trec_output_format(index):
 
 def test_batch_executor_identity(index, queries):
     """topk_search_batch (shard-partitioned, queries broadcast) returns
-    exactly what the join executor returns, for every algorithm."""
+    exactly what the driver serve path returns, for every algorithm."""
     from pisa_spark.operators.topk import topk_search_batch
 
     def key(rows):
@@ -207,10 +222,10 @@ def test_batch_executor_skips_posting_prefetch(index, queries):
 
 
 def test_serve_path_decline_and_eviction(index, queries, monkeypatch):
-    """The serve plan must (a) decline and fall back to the distributed
-    join plan when the index exceeds its driver-memory bounds, and (b)
-    return identical rankings under a tiny posting-cache budget that
-    forces FIFO eviction between calls."""
+    """The serve plan must (a) decline and fall back to the batch
+    executor's per-shard traversal when the index exceeds its
+    driver-memory bounds, and (b) return identical rankings under a tiny
+    posting-cache budget that forces FIFO eviction between calls."""
     from pisa_spark.operators import topk as T
 
     def key(rows):
@@ -220,7 +235,7 @@ def test_serve_path_decline_and_eviction(index, queries, monkeypatch):
     baseline = key(T.topk_search(index, queries, k=K,
                                  algorithm="block_max_wand",
                                  with_urls=False).collect())
-    # (a) bounds exceeded -> serve declines, distributed plan answers
+    # (a) bounds exceeded -> serve declines, the batch executor answers
     monkeypatch.setattr(T, "SERVE_MAX_DOCS", 0)
     if hasattr(index, "_serve_state"):
         del index._serve_state
@@ -344,7 +359,8 @@ def test_serve_global_run_identity(spark, index, queries):
     """The whole-index traversal (one merged run per term, one kernel per
     query over the global doc space) must rank identically to the
     exhaustive oracle: ranked_or for the pruned disjunctive algorithms,
-    the join plan's per-shard ranked_and for the conjunctive one."""
+    ranked_and for the conjunctive one, both from a DataFrame query set
+    (the batch executor's one kernel per (query, shard))."""
     from pisa_spark.operators import topk as T
 
     if hasattr(index, "_serve_state"):
@@ -369,9 +385,9 @@ def test_serve_global_run_identity(spark, index, queries):
 
 
 def test_batch_executor_join_fallback_identity(index, queries, monkeypatch):
-    """topk_search_batch's join-based plan (used for DataFrame query sets
-    and indexes above the driver serve bounds) returns exactly what the
-    serve-state fast path returns."""
+    """topk_search_batch over shard-joined rows, one shard per group
+    (used for DataFrame query sets and indexes above the driver serve
+    bounds), returns exactly what the serve-state path returns."""
     from pisa_spark.operators import topk as T
 
     def key(rows):
@@ -409,8 +425,10 @@ def small_shard_index(spark, corpus):
 
 
 def _join_oracle(spark, index, queries, algorithm="ranked_or", **kw):
-    """Answers of topk_search's join plan (a DataFrame query set): one
-    kernel per (query, shard), no shard grouping."""
+    """Answers of topk_search for a DataFrame query set: the batch
+    executor over shard-joined rows, one kernel per (query, shard), no
+    shard grouping. Pinned to the pure-Python reference by
+    test_oracle_matches_pure_python."""
     from pisa_spark.operators.topk import make_query_terms_df
 
     qdf = make_query_terms_df(spark, queries, index.cfg)
@@ -491,21 +509,32 @@ def test_batch_weighted_and_thresholds(spark, small_shard_index, queries,
 
 def test_serve_distributed_mode_identity(small_shard_index, small_shard_oracle,
                                          queries, monkeypatch):
-    """Term sets above the driver fetch bound make the serve path run the
-    shared executor-side traversal (no rows fetched to the driver); its
-    answers equal the exhaustive oracle."""
+    """Term sets above the driver fetch bound, and merges above
+    SERVE_MAX_PARTIAL_ROWS, make the serve path decline to the batch
+    executor (no rows fetched to the driver); its answers equal the
+    exhaustive oracle, with the serve path's column names and types."""
     from pisa_spark.operators import topk as T
 
-    monkeypatch.setattr(T, "SERVE_CACHE_MAX_POSTINGS", 1)  # no prefetch
-    monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 0)
+    def columns(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
     _fresh(small_shard_index)
-    try:
-        for alg in ("block_max_wand", "maxscore", "ranked_or"):
-            got = _exact(T.topk_search(small_shard_index, queries, k=K,
-                                       algorithm=alg, range_span=64,
-                                       with_urls=False).collect())
-            assert got == small_shard_oracle["ranked_or"], alg
-        st = small_shard_index._serve_state
-        assert not st.rows_by_term and not st.term_runs  # nothing fetched
-    finally:
+    want_columns = columns(T.topk_search(small_shard_index, queries, k=K,
+                                         range_span=64, with_urls=False))
+    for bound in ("SERVE_COLLECT_MAX_POSTINGS", "SERVE_MAX_PARTIAL_ROWS"):
+        monkeypatch.setattr(T, "SERVE_CACHE_MAX_POSTINGS", 1)  # no prefetch
+        monkeypatch.setattr(T, bound, 0)
         _fresh(small_shard_index)
+        try:
+            for alg in ("block_max_wand", "maxscore", "ranked_or"):
+                df = T.topk_search(small_shard_index, queries, k=K,
+                                   algorithm=alg, range_span=64,
+                                   with_urls=False)
+                assert columns(df) == want_columns, (bound, alg)
+                assert _exact(df.collect()) == \
+                    small_shard_oracle["ranked_or"], (bound, alg)
+            st = small_shard_index._serve_state
+            assert not st.rows_by_term and not st.term_runs  # nothing fetched
+        finally:
+            monkeypatch.undo()
+            _fresh(small_shard_index)
