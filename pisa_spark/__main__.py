@@ -27,6 +27,8 @@ import statistics
 import sys
 import time
 
+from pisa_spark.operators.codecs import CODECS
+
 
 # --------------------------------------------------------------- helpers
 
@@ -486,7 +488,7 @@ def _add_index_flags(p, queries: bool = True, index_required: bool = True):
                         "with the embedded base lexicon")
     p.add_argument("--tokenizer", default=None,
                    choices=["english", "whitespace"])
-    p.add_argument("--encoding", default=None)
+    p.add_argument("--encoding", default=None, choices=CODECS)
     p.add_argument("--scorer", default=None)
 
 
@@ -505,8 +507,8 @@ def _add_build_flags(p):
                         "with the embedded base lexicon")
     p.add_argument("--tokenizer", default=None,
                    choices=["english", "whitespace"])
-    p.add_argument("-e", "--encoding", default=None,
-                   help="posting codec (varint/ef/bp128/opt/s8b/...)")
+    p.add_argument("-e", "--encoding", default=None, choices=CODECS,
+                   help="posting codec")
     p.add_argument("-b", "--block-size", type=int, default=None)
     p.add_argument("--variable-block", action="store_true",
                    help="VBMW score-optimal block partition")

@@ -39,7 +39,8 @@ class IndexConfig:
     # 128, codec/block_codecs.hpp); we also keep one block-max entry per
     # block (reference benchmark uses 64-posting WAND blocks — configurable).
     block_size: int = 128
-    codec: str = "varint"  # any of operators.codecs.CODECS; "bic" is cold-tier
+    codec: str = "varint"  # a name in operators.codecs.CODECS (build_index
+    # rejects any other on the driver); "bic" is cold-tier
 
     # Block partition strategy (reference wand_utils.hpp:10-20 FixedBlock /
     # VariableBlock): "fixed" cuts every block_size postings; "variable"

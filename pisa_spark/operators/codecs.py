@@ -16,9 +16,15 @@ encode/decode run inside Arrow-batched pandas UDFs on whole numpy arrays.
   next_geq by scanning at most ~2^log_quantum high bits. Index traversal
   additionally skips at block/shard granularity via block maxes.
 
-Posting docIDs are stored as continuous gap-1 streams (strictly increasing
-docs => gaps >= 1 => store gap-1, first value relative to base -1), mirroring
-src/block_inverted_index.cpp:88-130; tf values are stored as tf-1.
+Every codec is an entry of one registry (CODECS): its encoder, decoder and
+whether it stores gap-1 values (strictly increasing docs => gaps >= 1) or
+block-relative docIDs over a universe. This module alone owns the posting-row
+layout, mirroring src/block_inverted_index.cpp:88-130: a row's docs_bin is one
+chunk per block (encode_blocks / decode_blocks), each block relative to the
+previous block's last doc and the first to the row's base, with
+block_doc_offs holding each chunk's byte offset. For varint the joined chunks
+are byte-identical to one continuous gap-1 stream, which decode_blocks reads
+in a single call. tf values are stored as tf-1 varints (encode_tfs).
 """
 
 from __future__ import annotations
@@ -355,33 +361,11 @@ def ef_intersect(bufs: list[bytes]) -> np.ndarray:
 def ef_decode(buf: bytes) -> tuple[np.ndarray, int]:
     """Decode ef_encode output -> (values, universe)."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    # parse varint header manually (n, universe)
-    pos = 0
-    hdr = []
-    for _ in range(2):
-        val, shift = 0, 0
-        while True:
-            byte = int(b[pos]); pos += 1
-            val |= (byte & 0x7F) << shift
-            shift += 7
-            if not byte & 0x80:
-                break
-        hdr.append(val)
-    n, universe = hdr
+    (n, universe), pos = _read_varints(b, 0, 2)
     if n == 0:
         return np.zeros(0, dtype=np.uint64), universe
     l = int(b[pos]); pos += 1
-    sizes = []
-    for _ in range(2):
-        val, shift = 0, 0
-        while True:
-            byte = int(b[pos]); pos += 1
-            val |= (byte & 0x7F) << shift
-            shift += 7
-            if not byte & 0x80:
-                break
-        sizes.append(val)
-    low_size, high_size = sizes
+    (low_size, high_size), pos = _read_varints(b, pos, 2)
     low = b[pos:pos + low_size]; pos += low_size
     high = b[pos:pos + high_size]
     hi_bits = np.unpackbits(high, bitorder="little")
@@ -420,13 +404,7 @@ def bp_encode(values: np.ndarray) -> bytes:
 def bp_decode(buf: bytes) -> np.ndarray:
     """Decode bp_encode output -> uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    pos, n, shift = 0, 0, 0
-    while True:
-        byte = int(b[pos]); pos += 1
-        n |= (byte & 0x7F) << shift
-        shift += 7
-        if not byte & 0x80:
-            break
+    (n,), pos = _read_varints(b, 0, 1)
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
     width = int(b[pos]); pos += 1
@@ -894,8 +872,6 @@ def gamma_decode(buf: bytes) -> np.ndarray:
     return out
 
 
-# ------------------------------------------------------- posting-row codecs
-
 # ------------------------------------------------ OptPFD (patched FOR)
 
 def optpfd_encode(values: np.ndarray) -> bytes:
@@ -1029,6 +1005,7 @@ def svb_decode(buf: bytes) -> np.ndarray:
 _S8B_MODES = ((240, 0), (120, 0), (60, 1), (30, 2), (20, 3), (15, 4),
               (12, 5), (10, 6), (8, 7), (7, 8), (6, 10), (5, 12),
               (4, 15), (3, 20), (2, 30), (1, 60))
+_S8B_COUNTS = np.array([m[0] for m in _S8B_MODES], dtype=np.int64)
 
 
 def _best_selectors(nbits: np.ndarray, modes) -> np.ndarray:
@@ -1100,8 +1077,7 @@ def s8b_encode(values: np.ndarray) -> bytes:
     if int(nbits.max()) > 60:
         raise ValueError("simple8b encodes values of <= 60 bits")
     best = _best_selectors(nbits, _S8B_MODES)
-    s8b_counts = np.array([m[0] for m in _S8B_MODES], dtype=np.int64)
-    starts = _word_starts(best, s8b_counts[best])
+    starts = _word_starts(best, _S8B_COUNTS[best])
     sel = best[starts]
     words = sel.astype(np.uint64) << np.uint64(60)
     vpad = np.concatenate([v, np.zeros(240, dtype=np.uint64)])
@@ -1128,7 +1104,7 @@ def s8b_decode(buf: bytes) -> np.ndarray:
         return np.zeros(0, dtype=np.uint64)
     words = b[pos:].view("<u8").astype(np.uint64)
     sel = (words >> np.uint64(60)).astype(np.int64)
-    counts = np.array([m[0] for m in _S8B_MODES], dtype=np.int64)[sel]
+    counts = _S8B_COUNTS[sel]
     offs = np.concatenate(([0], np.cumsum(counts)[:-1]))
     out = np.zeros(int(offs[-1]) + int(counts[-1]), dtype=np.uint64)
     for s in np.unique(sel):
@@ -1316,105 +1292,117 @@ def qmx_decode(buf: bytes) -> np.ndarray:
     return out[:n]
 
 
-CODECS = ("varint", "ef", "bp128", "opt", "pef", "pefu", "bic", "optpfd",
-          "svb", "s8b", "s16", "qmx")
+# The codec registry: name -> (encode, decode, relative). A relative codec
+# stores docs - base - 1, a monotone sequence over the universe rel[-1]
+# (encode(rel, universe), decode(buf) -> rel); the others store the gap-1
+# stream (encode(gaps), decode(buf) -> gaps). "opt" has no entry of its
+# own: it is the tagged wrapper in encode_gap_stream / decode_gap_stream.
+_REGISTRY = {
+    "varint": (varint_encode, varint_decode, False),
+    "ef": (ef_encode, lambda buf: ef_decode(buf)[0], True),
+    "bp128": (bp_encode, bp_decode, False),
+    "opt": None,
+    "pef": (pef_encode, lambda buf: pef_decode(buf)[0], True),
+    "pefu": (lambda rel, universe: pef_encode(rel, universe, uniform=64),
+             lambda buf: pef_decode(buf)[0], True),
+    "bic": (bic_encode, lambda buf: bic_decode(buf)[0], True),
+    "optpfd": (optpfd_encode, optpfd_decode, False),
+    "svb": (svb_encode, svb_decode, False),
+    "s8b": (s8b_encode, s8b_decode, False),
+    "s16": (s16_encode, s16_decode, False),
+    "qmx": (qmx_encode, qmx_decode, False),
+}
+CODECS = tuple(_REGISTRY)
 
 # per-block optimal dispatch: each block is encoded with whichever base
 # codec is smallest and tagged with one byte — the role the reference
 # fills with per-block codec choice, re-expressed as a dispatch over this
 # engine's base codecs: true OptPFD (patched FOR), partitioned EF (which
 # itself sub-partitions the block optimally), plain bitpack, EF, varint.
+# The tag is the index into this tuple and is stored in the index: append
+# only.
 _OPT_CODECS = ("varint", "ef", "bp128", "pef", "optpfd")
+
+
+def codec_entry(codec: str):
+    """Registry entry of `codec`; ValueError for a name not in CODECS."""
+    try:
+        return _REGISTRY[codec]
+    except KeyError:
+        raise ValueError(f"unknown codec {codec!r}; expected one of "
+                         f"{', '.join(CODECS)}") from None
 
 
 def encode_gap_stream(docs: np.ndarray, base: int, codec: str) -> bytes:
     """Encode strictly-increasing docIDs relative to `base` (exclusive)."""
     d = np.asarray(docs, dtype=np.int64)
-    if codec == "varint":
-        gaps = np.diff(d, prepend=np.int64(base)) - 1
-        return varint_encode(gaps.astype(np.uint64))
-    if codec == "ef":
-        rel = (d - base - 1).astype(np.uint64)
-        return ef_encode(rel, int(rel[-1]) if rel.size else 0)
-    if codec == "bp128":
-        gaps = (np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64)
-        return bp_encode(gaps)
-    if codec == "pef":
-        rel = (d - base - 1).astype(np.uint64)
-        return pef_encode(rel, int(rel[-1]) if rel.size else 0)
-    if codec == "pefu":
-        rel = (d - base - 1).astype(np.uint64)
-        return pef_encode(rel, int(rel[-1]) if rel.size else 0, uniform=64)
-    if codec == "bic":
-        rel = (d - base - 1).astype(np.uint64)
-        return bic_encode(rel, int(rel[-1]) if rel.size else 0)
-    if codec == "optpfd":
-        gaps = (np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64)
-        return optpfd_encode(gaps)
-    if codec == "svb":
-        gaps = (np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64)
-        return svb_encode(gaps)
-    if codec == "s8b":
-        gaps = (np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64)
-        return s8b_encode(gaps)
-    if codec == "s16":
-        gaps = (np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64)
-        return s16_encode(gaps)
-    if codec == "qmx":
-        gaps = (np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64)
-        return qmx_encode(gaps)
     if codec == "opt":
         best_i, best = min(
             ((i, encode_gap_stream(d, base, c))
              for i, c in enumerate(_OPT_CODECS)),
             key=lambda t: len(t[1]))
         return bytes([best_i]) + best
-    raise ValueError(f"unknown codec {codec!r}")
+    encode, _, relative = codec_entry(codec)
+    if relative:
+        rel = (d - base - 1).astype(np.uint64)
+        return encode(rel, int(rel[-1]) if rel.size else 0)
+    return encode((np.diff(d, prepend=np.int64(base)) - 1).astype(np.uint64))
 
 
-def decode_gap_stream(buf: bytes, base: int, codec: str, count: int | None = None) -> np.ndarray:
-    if codec == "varint":
-        gaps = varint_decode(buf, count).astype(np.int64)
-        return np.cumsum(gaps + 1) + base
-    if codec == "ef":
-        rel, _ = ef_decode(buf)
-        if count is not None and rel.size != count:
-            raise ValueError("ef stream count mismatch")
-        return rel.astype(np.int64) + base + 1
-    if codec == "bp128":
-        gaps = bp_decode(buf).astype(np.int64)
-        if count is not None and gaps.size != count:
-            raise ValueError("bp128 stream count mismatch")
-        return np.cumsum(gaps + 1) + base
-    if codec in ("pef", "pefu"):  # shared layout/decoder
-        rel, _ = pef_decode(buf)
-        if count is not None and rel.size != count:
-            raise ValueError("pef stream count mismatch")
-        return rel.astype(np.int64) + base + 1
-    if codec == "bic":
-        rel, _ = bic_decode(buf)
-        if count is not None and rel.size != count:
-            raise ValueError("bic stream count mismatch")
-        return rel.astype(np.int64) + base + 1
-    if codec == "optpfd":
-        gaps = optpfd_decode(buf).astype(np.int64)
-        if count is not None and gaps.size != count:
-            raise ValueError("optpfd stream count mismatch")
-        return np.cumsum(gaps + 1) + base
-    if codec == "svb":
-        gaps = svb_decode(buf).astype(np.int64)
-        if count is not None and gaps.size != count:
-            raise ValueError("svb stream count mismatch")
-        return np.cumsum(gaps + 1) + base
-    if codec in ("s8b", "s16", "qmx"):
-        dec = {"s8b": s8b_decode, "s16": s16_decode, "qmx": qmx_decode}[codec]
-        gaps = dec(buf).astype(np.int64)
-        if count is not None and gaps.size != count:
-            raise ValueError(f"{codec} stream count mismatch")
-        return np.cumsum(gaps + 1) + base
+def decode_gap_stream(buf: bytes, base: int, codec: str,
+                      count: int | None = None) -> np.ndarray:
+    """Inverse of encode_gap_stream; with `count` given, a stream holding
+    a different number of docs raises ValueError."""
     if codec == "opt":
         return decode_gap_stream(buf[1:], base, _OPT_CODECS[buf[0]], count)
-    raise ValueError(f"unknown codec {codec!r}")
+    _, decode, relative = codec_entry(codec)
+    vals = decode(buf).astype(np.int64)
+    if count is not None and vals.size != count:
+        raise ValueError(
+            f"{codec} stream held {vals.size} values, expected {count}")
+    return vals + (base + 1) if relative else np.cumsum(vals + 1) + base
+
+
+def encode_blocks(codec: str, docs: np.ndarray, gaps: np.ndarray,
+                  starts: np.ndarray, ends: np.ndarray, prev: np.ndarray
+                  ) -> tuple[bytes, np.ndarray]:
+    """Encode every block docs[starts[i]:ends[i]] relative to prev[i]
+    (exclusive) -> (stream, per-block byte lengths).
+
+    The blocks tile `docs`, and gaps[j] = docs[j] - (docs[j-1], or
+    prev[i] at a block start) - 1. The stream is byte-identical to
+    joining encode_gap_stream(docs[s:e], p, codec) over the blocks."""
+    if codec == "varint":
+        stream, lens = varint_encode_with_lengths(gaps)
+        return stream, np.add.reduceat(lens, starts)
+    if codec == "ef":
+        return ef_encode_blocks(docs, starts, ends, prev)
+    if codec == "bp128":
+        return bp_encode_blocks(gaps, starts, ends)
+    chunks = [encode_gap_stream(docs[s:e], p, codec)
+              for s, e, p in zip(starts.tolist(), ends.tolist(),
+                                 prev.tolist())]
+    return b"".join(chunks), np.array([len(c) for c in chunks],
+                                      dtype=np.int64)
+
+
+def decode_blocks(codec: str, buf: bytes, block_offs, base: int,
+                  n: int) -> np.ndarray:
+    """Decode one posting row's docIDs: the encode_blocks chunks of `buf`
+    starting at byte offsets block_offs, the first relative to `base`.
+    A row that does not hold exactly `n` docs raises ValueError."""
+    if codec == "varint":
+        return decode_gap_stream(buf, base, codec, n)
+    offs = [int(o) for o in block_offs] + [len(buf)]
+    parts, prev = [], base
+    for s, e in zip(offs[:-1], offs[1:]):
+        d = decode_gap_stream(buf[s:e], prev, codec)
+        prev = int(d[-1])
+        parts.append(d)
+    docs = np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
+    if docs.size != n:
+        raise ValueError(f"{codec} row held {docs.size} docs, expected {n}")
+    return docs
 
 
 def encode_tfs(tfs: np.ndarray) -> bytes:

@@ -16,8 +16,9 @@ Scale design (the part the reference, a single-node engine, never needed):
   on (shard_id, term_id) and sorted on (shard_id, term_id, doc_id): groups
   are contiguous; a carry buffer stitches groups split across Arrow batches.
   No collect_list ever materializes a full posting list as one JVM object.
-- Per row: docIDs as a continuous gap-1 varint/EF stream with per-block
-  (cfg.block_size postings) byte offsets, last-docIDs and block-max scores
+- Per row: docIDs as one codec chunk per block (cfg.block_size postings,
+  the layout codecs.encode_blocks owns) with per-block byte offsets,
+  last-docIDs and block-max scores
   — the WAND data of reference include/pisa/wand_data.hpp:86-112 and block
   layout of src/block_inverted_index.cpp:88-130 re-expressed columnar.
 - For bm25 the stored block max is the doc-dependent factor
@@ -170,9 +171,9 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
     offsets are computed with batch-wide numpy ops, and the output
     RecordBatch wraps the varint streams ZERO-COPY (each row's docs_bin /
     tfs_bin is an offset slice of one shared buffer — no per-group bytes()
-    materialization, no per-row Python). The per-group Python loop survives
-    only for VBMW boundary DP and per-block codecs (ef/bp128/opt), which
-    are inherently per-list.
+    materialization, no per-row Python). A per-group Python loop survives
+    only for the VBMW boundary DP; codecs.encode_blocks encodes varint, ef
+    and bp128 over all blocks at once and loops over blocks for the rest.
 
     With term_dict set, `term` holds batch-local dictionary codes and the
     output carries the term STRING column (take from the dictionary)
@@ -255,50 +256,16 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
     tf_offs_vals = (tf_byte_off[abs_start]
                     - tf_byte_off[grp_start_of_blk]).astype(np.int32)
 
-    # ---- docID streams + per-block byte offsets
-    if cfg.codec == "varint":
-        doc_bytes, doc_lens_b = codecs.varint_encode_with_lengths(
-            gaps_signed)
-        doc_byte_off = np.concatenate(([0], np.cumsum(doc_lens_b)))
-        d_offs_vals = (doc_byte_off[abs_start]
-                       - doc_byte_off[grp_start_of_blk]).astype(np.int32)
-        grp_doc_bytes = doc_byte_off[np.append(starts, n_rows)]
-    elif cfg.codec in ("ef", "bp128"):
-        # batch per-block encode: widths, headers, bit positions and the
-        # final packbits all computed across EVERY block at once
-        # (codecs.ef_encode_blocks / bp_encode_blocks — byte-identical to
-        # the per-block encoders, no per-block Python)
-        if cfg.codec == "ef":
-            block_prev = np.where(abs_start > grp_start_of_blk,
-                                  docs[abs_start - 1],
-                                  base_g[grp_of_blk])
-            doc_bytes, chunk_lens = codecs.ef_encode_blocks(
-                docs, abs_start, abs_end, block_prev)
-        else:
-            doc_bytes, chunk_lens = codecs.bp_encode_blocks(
-                gaps_signed.astype(np.uint64), abs_start, abs_end)
-        cum_chunk = np.concatenate(([0], np.cumsum(chunk_lens)))
-        d_offs_vals = (cum_chunk[:-1]
-                       - cum_chunk[cum_nblk[grp_of_blk]]).astype(np.int32)
-        grp_doc_bytes = cum_chunk[cum_nblk]
-    else:
-        # per-block encode over block-relative monotone values (dispatch /
-        # DP codecs: opt, pef, pefu, bic — inherently per-list)
-        chunks: list[bytes] = []
-        chunk_lens = np.empty(total, dtype=np.int64)
-        for b in range(total):
-            bs, be = int(abs_start[b]), int(abs_end[b])
-            gs = int(grp_start_of_blk[b])
-            prev_last = (int(docs[bs - 1]) if bs > gs
-                         else int(base_g[grp_of_blk[b]]))
-            buf = codecs.encode_gap_stream(docs[bs:be], prev_last, cfg.codec)
-            chunks.append(buf)
-            chunk_lens[b] = len(buf)
-        doc_bytes = b"".join(chunks)
-        cum_chunk = np.concatenate(([0], np.cumsum(chunk_lens)))
-        d_offs_vals = (cum_chunk[:-1]
-                       - cum_chunk[cum_nblk[grp_of_blk]]).astype(np.int32)
-        grp_doc_bytes = cum_chunk[cum_nblk]
+    # ---- docID streams: one chunk per block, each relative to the previous
+    # block's last doc (the row base for a row's first block)
+    block_prev = np.where(abs_start > grp_start_of_blk, docs[abs_start - 1],
+                          base_g[grp_of_blk])
+    doc_bytes, chunk_lens = codecs.encode_blocks(
+        cfg.codec, docs, gaps_signed, abs_start, abs_end, block_prev)
+    cum_chunk = np.concatenate(([0], np.cumsum(chunk_lens)))
+    d_offs_vals = (cum_chunk[:-1]
+                   - cum_chunk[cum_nblk[grp_of_blk]]).astype(np.int32)
+    grp_doc_bytes = cum_chunk[cum_nblk]
 
     # ---- assemble the Arrow batch (zero-copy where the layout allows)
     # The Arrow binary/list columns carry int32 offsets; a batch whose
@@ -793,19 +760,8 @@ def decode_rows(pdf: pd.DataFrame, cfg: IndexConfig) -> pd.DataFrame:
     for row in pdf.itertuples(index=False):
         n = int(row.n)
         tfs = codecs.decode_tfs(bytes(row.tfs_bin), n)
-        if cfg.codec == "varint":
-            docs = codecs.decode_gap_stream(
-                bytes(row.docs_bin), int(row.base_doc), "varint", n)
-        else:  # per-block codecs (ef, bp128)
-            docs_parts = []
-            offs = list(row.block_doc_offs) + [len(row.docs_bin)]
-            prev_last = int(row.base_doc)
-            for bi in range(len(offs) - 1):
-                chunk = bytes(row.docs_bin[offs[bi]:offs[bi + 1]])
-                d = codecs.decode_gap_stream(chunk, prev_last, cfg.codec)
-                prev_last = int(d[-1])
-                docs_parts.append(d)
-            docs = np.concatenate(docs_parts)
+        docs = codecs.decode_blocks(cfg.codec, bytes(row.docs_bin),
+                                    row.block_doc_offs, int(row.base_doc), n)
         out_term.append(np.full(n, row.term_id, dtype=np.int64))
         out_doc.append(docs.astype(np.int64))
         out_tf.append(tfs.astype(np.int64))

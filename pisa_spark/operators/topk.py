@@ -157,18 +157,9 @@ class _TermRun:
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         if self._docs is None:
-            if self.codec == "varint":
-                self._docs = codecs.decode_gap_stream(
-                    self.docs_bin, self.base_doc, "varint", self.n)
-            else:  # per-block codecs (ef, bp128)
-                parts, prev = [], self.base_doc
-                offs = list(self.doc_offs) + [len(self.docs_bin)]
-                for i in range(len(offs) - 1):
-                    d = codecs.decode_gap_stream(
-                        self.docs_bin[offs[i]:offs[i + 1]], prev, self.codec)
-                    prev = int(d[-1])
-                    parts.append(d)
-                self._docs = np.concatenate(parts)
+            self._docs = codecs.decode_blocks(
+                self.codec, self.docs_bin, self.doc_offs, self.base_doc,
+                self.n)
             self._tfs = codecs.decode_tfs(self.tfs_bin, self.n)
         return self._docs, self._tfs
 

@@ -43,6 +43,7 @@ from pisa_spark.config import DEFAULT_CONFIG, IndexConfig
 from pisa_spark.functions.scoring import make_scorer
 from pisa_spark.functions.text import extract_text_batch
 from pisa_spark.functions.tokenize import make_analyzer
+from pisa_spark.operators import codecs
 from pisa_spark.operators.postings import (encode_postings,
                                            encode_postings_docwise)
 from pisa_spark.plans.checkpoint import BuildManifest
@@ -641,6 +642,7 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
+    codecs.codec_entry(cfg.codec)  # unknown codec: fail before any Spark job
     spark = docs_df.sparkSession
     manifest = BuildManifest(out_dir) if out_dir else None
     t_start = time.time()

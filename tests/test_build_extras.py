@@ -189,6 +189,22 @@ def test_encode_batch_block_layout():
     assert (blk1 == docs[4:8]).all()
 
 
+def test_build_rejects_unknown_codec_before_any_job(spark):
+    """An unknown IndexConfig.codec fails on the driver with ValueError,
+    not inside an executor encode task after extraction and the tokenize
+    shuffle have run."""
+    docs = spark.createDataFrame([("u1", "hello world")],
+                                 "url string, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-codec", "build with an unknown codec")
+    try:
+        with pytest.raises(ValueError, match="unknown codec"):
+            build_index(docs, IndexConfig(codec="nope"))
+        assert list(sc.statusTracker().getJobIdsForGroup("unknown-codec")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_recursive_graph_bisection_mapping(spark, small_index):
     """BP reordering (recursive_graph_bisection.hpp): the mapping is a
     valid permutation, ranked output is unchanged, and the BP order

@@ -95,6 +95,17 @@ def test_lookup_table_requires_file():
         main(["lookup_table"])
 
 
+def test_unknown_encoding_rejected(tmp_path):
+    """Both --encoding flags take only a name in codecs.CODECS, so a typo
+    fails in argument parsing, before any Spark session or job."""
+    with pytest.raises(SystemExit):
+        main(["parse_collection", "-i", str(tmp_path / "c.jsonl"),
+              "-o", str(tmp_path / "idx"), "-e", "nope"])
+    with pytest.raises(SystemExit):
+        main(["queries", "-i", str(tmp_path / "idx"),
+              "-q", str(tmp_path / "q.txt"), "--encoding", "nope"])
+
+
 def test_lexicon_lookup_table_interop(capsys, corpus_jsonl, index_dir,
                                       tmp_path):
     """lexicon build --export writes the v1 binary lookup table; lookup /

@@ -2,6 +2,7 @@
 and test_compact_elias_fano.cpp strategy: random sequences round-trip)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -366,12 +367,12 @@ def test_gamma_roundtrip(values):
 
 
 def test_batch_block_encoders_byte_identical():
-    """ef_encode_blocks / bp_encode_blocks (the vectorized all-blocks-at-
-    once kernels used by _encode_arrays) must be BYTE-identical to
-    concatenating the per-block encoders they replace."""
-    from pisa_spark.operators.codecs import (bp_encode, bp_encode_blocks,
-                                             ef_encode_blocks,
-                                             encode_gap_stream)
+    """encode_blocks (the row layout _encode_arrays writes; varint, ef and
+    bp128 encode all blocks in one vectorized pass) must be BYTE-identical
+    to joining the per-block encode_gap_stream chunks, for every codec,
+    and decode_blocks must invert it."""
+    from pisa_spark.operators.codecs import (CODECS, decode_blocks,
+                                             encode_blocks)
 
     rng = np.random.default_rng(7)
     for trial in range(40):
@@ -393,18 +394,76 @@ def test_batch_block_encoders_byte_identical():
         starts = np.array(starts)
         ends = np.array(ends)
         prevs = np.array(prevs)
-        stream, lens = ef_encode_blocks(docs, starts, ends, prevs)
-        parts = [encode_gap_stream(docs[s:e], int(p), "ef")
-                 for s, e, p in zip(starts, ends, prevs)]
-        assert stream == b"".join(parts)
-        assert list(lens) == [len(p) for p in parts]
         gaps_all = np.diff(docs, prepend=np.int64(0)).astype(np.int64)
         gaps_all[starts] = docs[starts] - prevs
-        gaps_all = (gaps_all - 1).astype(np.uint64)
-        stream2, lens2 = bp_encode_blocks(gaps_all, starts, ends)
-        parts2 = [bp_encode(gaps_all[s:e]) for s, e in zip(starts, ends)]
-        assert stream2 == b"".join(parts2)
-        assert list(lens2) == [len(p) for p in parts2]
+        gaps_all -= 1
+        for codec in CODECS:
+            stream, lens = encode_blocks(codec, docs, gaps_all, starts, ends,
+                                         prevs)
+            parts = [encode_gap_stream(docs[s:e], int(p), codec)
+                     for s, e, p in zip(starts, ends, prevs)]
+            assert stream == b"".join(parts), (codec, trial)
+            assert list(lens) == [len(p) for p in parts], (codec, trial)
+            offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            out = decode_blocks(codec, stream, offs, int(prevs[0]), docs.size)
+            assert (out == docs).all(), (codec, trial)
+
+
+@pytest.mark.parametrize("partition", ["fixed", "variable"])
+def test_encoded_rows_roundtrip_every_codec(partition):
+    """Every codec's posting rows, as _encode_arrays writes them over a
+    multi-shard, multi-block batch, decode back to the input docs and tfs
+    through both readers of the row layout (postings.decode_rows and the
+    query side's _TermRun.decode_all); a row cut at a block boundary
+    raises instead of returning short."""
+    from pisa_spark.config import IndexConfig
+    from pisa_spark.functions.scoring import make_scorer
+    from pisa_spark.operators.codecs import CODECS
+    from pisa_spark.operators.postings import _encode_batch, decode_rows
+    from pisa_spark.operators.topk import _TermRun
+
+    rng = np.random.default_rng(5)
+    span = 2048
+    frames = []
+    for shard in range(3):
+        for term in range(6):
+            n = int(rng.integers(1, 300))
+            docs = np.sort(rng.choice(span, size=n, replace=False))
+            frames.append(pd.DataFrame({
+                "shard_id": shard, "term_id": term,
+                "doc_id": docs + shard * span,
+                "tf": rng.integers(1, 9, size=n),
+                "doc_len": rng.integers(5, 400, size=n)}))
+    pdf = pd.concat(frames, ignore_index=True)
+    stats = {"num_docs": 3 * span, "avg_len": 150.0,
+             "collection_len": 450 * span}
+    scorer = make_scorer("bm25")
+    for codec in CODECS:
+        cfg = IndexConfig(shard_span=span, block_size=32, codec=codec,
+                          block_partition=partition)
+        enc = _encode_batch(pdf, cfg, stats, scorer)
+        assert len(enc) == 18
+        assert max(len(offs) for offs in enc["block_doc_offs"]) > 2
+        flat = decode_rows(enc, cfg)
+        assert (flat["term_id"].to_numpy() == pdf["term_id"].to_numpy()).all()
+        assert (flat["doc_id"].to_numpy() == pdf["doc_id"].to_numpy()).all()
+        assert (flat["tf"].to_numpy() == pdf["tf"].to_numpy()).all()
+        rows = enc.assign(df=enc["n"], cf=enc["sum_tf"])
+        for row, (_, want) in zip(rows.itertuples(index=False),
+                                  pdf.groupby(["shard_id", "term_id"])):
+            docs, tfs = _TermRun(row, scorer, stats, 1.0, False,
+                                 codec).decode_all()
+            assert (docs == want["doc_id"].to_numpy()).all(), codec
+            assert (tfs == want["tf"].to_numpy()).all(), codec
+        row = max(rows.itertuples(index=False),
+                  key=lambda r: len(r.block_doc_offs))
+        cut = int(row.block_doc_offs[-1])
+        short = row._replace(docs_bin=bytes(row.docs_bin)[:cut],
+                             block_doc_offs=row.block_doc_offs[:-1])
+        with pytest.raises(ValueError):
+            _TermRun(short, scorer, stats, 1.0, False, codec).decode_all()
+        with pytest.raises(ValueError):
+            decode_rows(pd.DataFrame([short._asdict()]), cfg)
 
 
 # ------------------------------------------------- EF skip pointers

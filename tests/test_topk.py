@@ -279,7 +279,8 @@ def test_layout_variants_rank_identity(spark, corpus, queries,
                                        oracle_results, variant):
     """Physical-layout variants (bitpacked blocks, VBMW variable blocks)
     must be result-invariant — the reference's encodings.sh property
-    (all 14 codecs produce identical rankings)."""
+    (every encoding produces identical rankings). Five codecs besides the
+    default varint run here; test_codecs round-trips every codec's rows."""
     cfg = IndexConfig(shard_span=64, **variant)
     idx = build_index(extract_pages(spark.createDataFrame(corpus), cfg), cfg)
     out = topk_search(idx, queries, k=K, algorithm="block_max_wand",
