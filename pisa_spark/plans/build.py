@@ -19,18 +19,31 @@ parse_collection -> invert -> create_wand_data -> compress_inverted_index
    doc_id = bucket offset + (monotonic id - bucket's min monotonic id).
    No global window, no wide-payload range shuffle,
 3. collection stats fused into the same per-bucket aggregation job,
-4. lexicon = distinct terms, dense term_ids (sorted, like fwd.terms),
-5. postings = encode_postings (doc-sharded, block-encoded, block-max'd),
-6. per-term stats (df, cf, max score) aggregated from the ENCODED posting
-   rows (one row per shard x term) rather than the 100x larger flat
-   postings — the WAND data of wand_data.hpp:36-115.
 
-All stages optionally checkpoint through a BuildManifest for resume.
+then one of two flows:
+
+- lexicon-LAST (no quantize_bits, scorer bm25 or quantized — the default):
+  4. postings = string-keyed encoded rows (doc-sharded, block-encoded,
+     block-max'd), docwise or exploded (_encode_str),
+  5. lexicon = ONE per-term aggregation of the ENCODED rows (one row per
+     shard x term, ~100x fewer than the flat postings) giving both the
+     vocabulary (dense term_ids in sorted order, like fwd.terms) and the
+     WAND term stats (_lexicon_of; wand_data.hpp:36-115),
+  6. term_ids joined back onto the encoded rows (join_term_ids);
+- lexicon-FIRST (quantize_bits set, or a non-separable scorer — both need
+  per-term stats BEFORE encoding):
+  4. lexicon = distinct terms of the flat postings, dense term_ids,
+  5. postings = encode_postings over the term_id-keyed flat postings
+     (scored and quantized first under quantize_bits),
+  6. per-term stats (df, cf, max score) aggregated from the encoded rows.
+
+In-memory and checkpointed builds run the same flow and differ only in
+where a stage's output goes: a persisted cache, or a BuildManifest
+artifact that a rerun resumes from.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -44,8 +57,7 @@ from pisa_spark.functions.scoring import make_scorer
 from pisa_spark.functions.text import extract_text_batch
 from pisa_spark.functions.tokenize import make_analyzer
 from pisa_spark.operators import codecs
-from pisa_spark.operators.postings import (encode_postings,
-                                           encode_postings_docwise)
+from pisa_spark.operators.postings import encode_postings
 from pisa_spark.plans.checkpoint import BuildManifest
 
 
@@ -387,8 +399,7 @@ def _bucket_expr(col: str, cuts: list):
 
 
 def assign_rank_ids(df, order_col: str, id_col: str, cuts: list, parts: int,
-                    extra_aggs: list | None = None, persist: bool = True,
-                    align: int = 1):
+                    extra_aggs: list | None = None, align: int = 1):
     """Assign dense 0..N-1 ids in global `order_col` order without a global
     window and without range-sampling `df`'s (possibly expensive) lineage:
     bucket by the precomputed cut points, one hash shuffle on the bucket id,
@@ -458,6 +469,106 @@ def _f32(x: float) -> float:
     return float(np.float32(x))
 
 
+def _in_background(fn):
+    """Run fn() on a driver thread — Spark schedules jobs from separate
+    driver threads side by side, so independent DAG branches overlap
+    instead of each adding a fixed job latency to the build. Returns
+    join(), which waits for fn and re-raises its error."""
+    import threading
+
+    errs: list = []
+
+    def run():
+        try:
+            fn()
+        except BaseException as ex:  # re-raised at join()
+            errs.append(ex)
+
+    t = threading.Thread(target=run)
+    t.start()
+
+    def join() -> None:
+        t.join()
+        if errs:
+            raise errs[0]
+
+    return join
+
+
+def _explode_terms(doc_terms):
+    """Flat forward index (doc_id, doc_len, term, tf long): JVM-side
+    explode of the compact per-doc (terms, tfs) arrays (map_to_postings,
+    invert.cpp:43-53)."""
+    from pyspark.sql import functions as F
+
+    return doc_terms.select(
+        "doc_id", "doc_len",
+        F.explode(F.arrays_zip("terms", "tfs")).alias("z")
+    ).select("doc_id", "doc_len",
+             F.col("z.terms").alias("term"),
+             F.col("z.tfs").cast("long").alias("tf"))
+
+
+def shards_of(docs, shard_span: int):
+    """Per-shard doc length arrays (shard_id, base_doc, doc_lens) — the
+    wand_data doc_lens — from a (doc_id, doc_len, shard_id) docmap."""
+    from pyspark.sql import functions as F
+
+    return (
+        docs.groupBy("shard_id")
+        .agg(F.array_sort(
+            F.collect_list(F.struct("doc_id", "doc_len"))).alias("dl"))
+        .select(
+            "shard_id",
+            (F.col("shard_id") * shard_span).alias("base_doc"),
+            F.transform("dl", lambda x: x["doc_len"]).alias("doc_lens"),
+        )
+    )
+
+
+def _encode_str(doc_terms, cfg: IndexConfig, stats: dict, stride: int = 1,
+                bucket_starts: list[int] | None = None):
+    """String-keyed encoded posting rows of the lexicon-last flows; returns
+    (rows, docwise). Doc-wise encode while a shard's token mass fits the
+    docwise working-set bound (bucket_starts, from the rank-assignment
+    meta, makes it SHUFFLE-FREE — the rank shuffle's bucket partitioning
+    is reused); above it the exploded (shard, term)-shuffled encode, whose
+    groups are bounded by shard_span postings regardless of document
+    length. The encoders are looked up on their module per call, so a
+    patched module attribute takes effect."""
+    from pisa_spark.operators import postings as P
+
+    if cfg.shard_span * max(stats["avg_len"], 1.0) <= cfg.docwise_max_tokens:
+        return P.encode_postings_docwise_str(
+            doc_terms, cfg, stats, shard_stride=stride,
+            bucket_starts=bucket_starts), True
+    return P.encode_postings_str(_explode_terms(doc_terms), cfg, stats), False
+
+
+def _run_buckets(spark, manifest: BuildManifest, n_buckets: int, build_one):
+    """Run build_one(b) for every unfinished postings bucket, then return
+    all buckets read back from parquet.
+
+    Unfinished buckets run as CONCURRENT Spark jobs from driver threads:
+    each bucket's real work is a fraction of a second of cluster time, so
+    serial execution is dominated by per-job scheduling overhead —
+    concurrent jobs share the task slots and overlap that overhead (the
+    manifest serializes its own updates; a crash still resumes at the
+    per-bucket granularity)."""
+    import concurrent.futures as futures
+
+    todo = [b for b in range(n_buckets)
+            if not manifest.done(f"postings/bucket={b}")]
+    if todo:
+        with futures.ThreadPoolExecutor(max_workers=len(todo)) as pool:
+            for _ in pool.map(build_one, todo):  # re-raises worker errors
+                pass
+    paths = [manifest.artifact_path(f"postings/bucket={b}")
+             for b in range(n_buckets)]
+    for p in paths:
+        spark.catalog.refreshByPath(p)
+    return spark.read.parquet(*paths)
+
 
 def _vocab_probe(terms_distinct, cap: int):
     """One job that BOTH decides small-vs-web-scale vocabulary and fetches
@@ -483,25 +594,22 @@ _LEXICON_SCHEMA = ("term string, term_id long, df long, cf long, "
                    "max_part float, max_score float")
 
 
-def _max_score_np(df_arr: np.ndarray, max_part: np.ndarray, scorer,
+def _max_score_np(df_arr: np.ndarray, max_part: np.ndarray,
                   cfg: IndexConfig, stats: dict) -> np.ndarray:
-    """max_score column, numpy — mirrors the distributed lexicon stage's
-    expressions bit-for-bit (bm25: double idf * double(max_part) cast
-    float32, like the SQL; other separable: scorer.idf f32 * f32)."""
+    """max_score column, numpy — mirrors _with_max_score bit-for-bit
+    (bm25: double idf * double(max_part) cast float32, like the SQL)."""
     mp = max_part.astype(np.float32)
-    if scorer.separable and cfg.scorer == "bm25":
-        dfv = df_arr.astype(np.float64)
-        idf = np.maximum(1e-6, np.log(
-            (float(stats["num_docs"]) - dfv + 0.5) / (dfv + 0.5))
-        ) * (1.0 + cfg.bm25_k1)
-        return (idf * mp.astype(np.float64)).astype(np.float32)
-    if scorer.separable:
-        return scorer.idf(df_arr, stats["num_docs"]) * mp
-    return mp
+    if cfg.scorer != "bm25":
+        return mp
+    dfv = df_arr.astype(np.float64)
+    idf = np.maximum(1e-6, np.log(
+        (float(stats["num_docs"]) - dfv + 0.5) / (dfv + 0.5))
+    ) * (1.0 + cfg.bm25_k1)
+    return (idf * mp.astype(np.float64)).astype(np.float32)
 
 
-def _lexicon_from_term_agg(spark, agg_pdf: pd.DataFrame, scorer,
-                           cfg: IndexConfig, stats: dict):
+def _lexicon_from_term_agg(spark, agg_pdf: pd.DataFrame, cfg: IndexConfig,
+                           stats: dict):
     """Full lexicon (term, term_id, df, cf, max_part, max_score) built
     DRIVER-side from the one-scan per-term aggregation of the encoded
     rows (broadcastable vocabularies only), shipped via Arrow. Fusing the
@@ -511,19 +619,18 @@ def _lexicon_from_term_agg(spark, agg_pdf: pd.DataFrame, scorer,
         drop=True)
     agg_pdf["term_id"] = np.arange(len(agg_pdf), dtype=np.int64)
     agg_pdf["max_score"] = _max_score_np(
-        agg_pdf["df"].to_numpy(), agg_pdf["max_part"].to_numpy(),
-        scorer, cfg, stats)
+        agg_pdf["df"].to_numpy(), agg_pdf["max_part"].to_numpy(), cfg, stats)
     out = agg_pdf[["term", "term_id", "df", "cf", "max_part", "max_score"]]
     return spark.createDataFrame(out, _LEXICON_SCHEMA)
 
 
-def _lexicon_driver_ids(spark, aggd, scorer, cfg: IndexConfig, stats: dict):
+def _lexicon_driver_ids(spark, aggd, cfg: IndexConfig, stats: dict):
     """Dense sorted-term ids for a BROADCAST-size vocabulary, assigned
     driver-side from one slim Arrow transfer of the term column and
     joined back onto the cached term-agg rows (stats stay distributed).
 
     Rationale: when n_vocab <= lexicon_broadcast_max the term_id join
-    below broadcasts the lexicon anyway, so a driver round-trip of the
+    broadcasts the lexicon anyway, so a driver round-trip of the
     vocabulary is already in the plan — assigning ids there adds nothing
     serial that wasn't. The distributed alternative (range-sample +
     rank shuffle, kept for larger vocabularies) costs ~3 s of fixed
@@ -560,68 +667,94 @@ def _lexicon_driver_ids(spark, aggd, scorer, cfg: IndexConfig, stats: dict):
             yield rb.append_column("term_id", ids)
 
     lex_ids = aggd.mapInArrow(attach, schema=out_schema)
-    return _with_max_score(lex_ids, scorer, cfg, stats).select(
+    return _with_max_score(lex_ids, cfg, stats).select(
         "term", "term_id", "df", "cf", "max_part", "max_score")
 
 
-def _term_agg_of(enc_str):
-    """Per-term WAND stats straight off the string-keyed encoded rows."""
+def _term_agg_of(rows, key: str = "term"):
+    """Per-term WAND stats (df, cf, max_part) straight off the encoded
+    rows (one per shard x term) — ~100x fewer rows than the flat postings
+    the reference streams twice (wand_data.hpp:64-115)."""
     from pyspark.sql import functions as F
 
-    return enc_str.groupBy("term").agg(
+    return rows.groupBy(key).agg(
         F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"),
         F.max(F.array_max("block_max_part")).alias("max_part"))
 
 
-def join_term_ids(enc_str_df, lexicon_df, broadcast_max: int):
-    """Attach dense term_ids to string-keyed encoded posting rows (the
-    lexicon-last join-back, shared by the resumable build and load_index).
+def _lexicon_of(spark, aggd, n_vocab: int, cfg: IndexConfig, stats: dict,
+                parts: int):
+    """Full lexicon of the lexicon-last flows from the cached per-term
+    aggregation `aggd` (n_vocab rows, sorted distinct terms -> dense
+    term_ids, fwd.terms semantics). Returns (lexicon, caches): the lexicon
+    is NOT materialized — the caller stores it (persist + count, or a
+    manifest write + read) and only then unpersists `caches`, which its
+    lineage still reads."""
+    if n_vocab <= cfg.lexicon_driver_max:
+        # small vocabulary: the driver round-trip (collect + pandas
+        # assemble + ship back) is the fastest path
+        return _lexicon_from_term_agg(spark, aggd.toPandas(), cfg,
+                                      stats), [aggd]
+    if n_vocab <= cfg.lexicon_broadcast_max:
+        # broadcast-size vocabulary: driver id-assignment over a slim
+        # term-only Arrow transfer, stats joined distributed (see
+        # _lexicon_driver_ids) — one job, replacing the range-sample job
+        # and the rank shuffle whose ~3 s fixed small-job cost billed
+        # identically at every cluster size.
+        return _lexicon_driver_ids(spark, aggd, cfg, stats), [aggd]
+    # web-scale vocabulary: distributed dense-id assignment over the
+    # cached term-agg rows. The driver path's cost is linear in vocabulary
+    # size and SERIAL (measured 4 s of a 31 s 8-core build at 596k terms —
+    # a fixed tax every cluster size pays equally); this one is a
+    # parallel ~1 s floor.
+    term_cuts = _sample_cuts(aggd, "term", parts * 4)
+    lex_ids, rank_cache, _ = assign_rank_ids(
+        aggd, "term", "term_id", term_cuts, parts)
+    lexicon = _with_max_score(lex_ids, cfg, stats).select(
+        "term", "term_id", "df", "cf", "max_part", "max_score")
+    return lexicon, [rank_cache, aggd]
 
-    Broadcasts the lexicon when it fits the broadcast bound — a hash probe
-    per encoded row on the scan, the index itself never shuffles; above
-    the bound it is a sort-merge join. The caller's parquet artifacts are
-    the backing store, so the view stays lazy either way."""
+
+def _fits_broadcast(lexicon, cfg: IndexConfig) -> bool:
+    """Broadcast decision for a parquet-backed lexicon: the row count
+    comes from the parquet footers (no Spark job) when the plan is a bare
+    scan, else from a count."""
+    n = _footer_count(lexicon)
+    return (lexicon.count() if n is None else n) <= cfg.lexicon_broadcast_max
+
+
+def join_term_ids(enc_str_df, lexicon_df, broadcast: bool):
+    """Attach dense term_ids to string-keyed encoded posting rows (the
+    lexicon-last join-back, shared by both build flows and load_index).
+
+    broadcast=True (the lexicon fits the broadcast bound): a hash probe
+    per encoded row on the scan, the index itself never shuffles — and
+    the view stays lazy, its backing store being the caller's cache or
+    parquet artifacts. Otherwise a sort-merge join."""
     from pyspark.sql import functions as F
 
     from pisa_spark.operators.postings import _ENCODED_COLUMNS
 
     lex = lexicon_df.select("term", "term_id")
-    n = _footer_count(lex)
-    if n is None:
-        n = lex.count()
-    if n <= broadcast_max:
-        joined = enc_str_df.join(F.broadcast(lex), "term")
-    else:
-        joined = enc_str_df.join(lex, "term")
+    joined = enc_str_df.join(F.broadcast(lex) if broadcast else lex, "term")
     return joined.drop("term").select(*_ENCODED_COLUMNS)
 
 
-
-def _with_max_score(lex, scorer, cfg: IndexConfig, stats: dict):
+def _with_max_score(lex, cfg: IndexConfig, stats: dict):
     """Append the max_score column to a (.., df, cf, max_part) lexicon DF —
     the WAND term upper bound (wand_data.hpp:64-115); SQL doubles for bm25
-    (kernels recompute idf in float32 themselves), scorer.idf pandas UDF
-    for other separable scorers, pass-through otherwise."""
+    (kernels recompute idf in float32 themselves), pass-through for every
+    other scorer (bm25 is the only separable one)."""
     from pyspark.sql import functions as F
 
-    if scorer.separable and cfg.scorer == "bm25":
-        n_docs, k1 = stats["num_docs"], cfg.bm25_k1
-        idf = F.greatest(
-            F.lit(1e-6),
-            F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5))) * F.lit(1.0 + k1)
-        return lex.withColumn(
-            "max_score", (idf * F.col("max_part")).cast("float"))
-    if scorer.separable:
-        n_docs = stats["num_docs"]
-
-        @F.pandas_udf("float")
-        def _max_score(df_col: pd.Series, mp: pd.Series) -> pd.Series:
-            idf = scorer.idf(df_col.to_numpy(), n_docs)
-            return pd.Series(idf * mp.to_numpy(dtype=np.float32))
-
-        return lex.withColumn("max_score", _max_score("df", "max_part"))
-    return lex.withColumn("max_score", F.col("max_part").cast("float"))
+    if cfg.scorer != "bm25":
+        return lex.withColumn("max_score", F.col("max_part").cast("float"))
+    idf = F.greatest(
+        F.lit(1e-6),
+        F.log((F.lit(float(stats["num_docs"])) - F.col("df") + 0.5)
+              / (F.col("df") + 0.5))) * F.lit(1.0 + cfg.bm25_k1)
+    return lex.withColumn("max_score",
+                          (idf * F.col("max_part")).cast("float"))
 
 
 def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
@@ -639,12 +772,15 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     materialized inside this call and per-phase wall seconds are recorded
     in stats["phase_seconds"] (build metrics, north-rule requirement).
     """
+    from functools import partial
+
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     codecs.codec_entry(cfg.codec)  # unknown codec: fail before any Spark job
     spark = docs_df.sparkSession
     manifest = BuildManifest(out_dir) if out_dir else None
+    deser = StorageLevel.MEMORY_AND_DISK_DESER
     t_start = time.time()
     phase_t = [time.time()]
     phases: dict = {}
@@ -669,9 +805,9 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     # docs is a projection — rebuilt from the artifact if missing, never by
     # re-running the tokenize stage (a re-run could assign different ids
     # and silently orphan already-marked postings buckets).
-    _mark_gate = None
-    _join_writes = None
-    _tok_cache = None
+    join_root = None  # waits for the root doc_terms write (manifest)
+    join_writes = None  # waits for the doc_terms and docs writes (manifest)
+    tok_cache = None
     bucket_starts = None  # per-bucket doc_id starts; enables the
     # shuffle-free docwise encode (lost on parquet resume, where
     # doc_terms' physical partitioning is file splits, not buckets)
@@ -697,7 +833,7 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
         # align=shard_span: bucket doc_id offsets pad to span multiples, so
         # no shard straddles a bucket seam and the docwise encode runs with
         # zero shuffle at ANY bucket count (see assign_rank_ids)
-        doc_terms, _tok_cache, meta = assign_rank_ids(
+        doc_terms, tok_cache, meta = assign_rank_ids(
             tokenized, "url", "doc_id", cuts, parts,
             extra_aggs=[F.sum("doc_len").alias("_dl")],
             align=cfg.shard_span)
@@ -721,81 +857,50 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
             (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long"))
         docs = doc_terms.select("doc_id", "url", "doc_len", "shard_id")
         if manifest:
-            import threading
-
             manifest.set_stats(stats)
-
             # Durability writes run CONCURRENTLY with the encode stage's
             # bucket jobs (they scan the same tokenize cache): serializing
             # them added their full wall time to every checkpointed build.
             # Consistency rule: nothing downstream is MARKED complete until
             # the doc_terms artifact (the stable source a resume re-reads)
-            # is durable — bucket workers join this thread before marking.
-            _write_errs: list = []
-
-            def _writer(name, df, partition_by=None):
-                def run():
-                    try:
-                        manifest.write_df(name, df, partition_by=partition_by)
-                    except BaseException as ex:  # re-raised at join
-                        _write_errs.append(ex)
-                t = threading.Thread(target=run)
-                t.start()
-                return t
-
-            # the artifact is partitioned by the postings bucket key (shard
+            # is durable — bucket workers join this write before marking.
+            # The artifact is partitioned by the postings bucket key (shard
             # mod n_buckets) so a RESUMED build's bucket jobs partition-
-            # prune their scans to 1/n_buckets of the corpus
-            _doc_terms_thread = _writer(
-                "doc_terms",
+            # prune their scans to 1/n_buckets of the corpus.
+            join_root = _in_background(partial(
+                manifest.write_df, "doc_terms",
                 doc_terms.withColumn(
                     "_bucket", F.pmod("shard_id", F.lit(n_buckets))),
-                partition_by=["_bucket"])
-            _docs_thread = _writer("docs", docs)
+                partition_by=["_bucket"]))
+            join_docs = _in_background(partial(manifest.write_df, "docs",
+                                               docs))
 
-            def _mark_gate():
-                _doc_terms_thread.join()
-                if _write_errs:
-                    raise _write_errs[0]
-
-            def _join_writes():
-                _doc_terms_thread.join()
-                _docs_thread.join()
-                if _write_errs:
-                    raise _write_errs[0]
+            def join_writes() -> None:
+                join_root()
+                join_docs()
 
     scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    colocated = False  # set True by the shard-keyed docwise encode paths
-    enc_str_handle = None  # lexicon-last string-keyed rows (serve path)
-    lexicon = None  # set early by the fused lexicon-last small-vocab paths
-    plain_scoring = (cfg.quantize_bits is None
-                     and (scorer.separable
-                          or getattr(scorer, "stats_free", False)))
-    # lexicon-LAST flow (the default/bm25 path): encode string-keyed posting
-    # rows first, then derive the lexicon from the ENCODED rows (~avg_len x
-    # fewer than flat postings) and join term_ids back. This removes the
-    # vocabulary probe/distinct job over the flat token stream, the vocab
-    # broadcast, and the flat-postings/lexicon join — the three pieces that
-    # do not shrink with executors. Quantized and non-separable-scorer
-    # builds need per-term stats BEFORE encoding, so they keep the
-    # lexicon-first flow. Manifest (resumable) builds run lexicon-last too:
-    # their postings buckets are keyed on DOC SHARDS (shard_id mod
+    # Two flows. lexicon-LAST (the default/bm25 path, and the stats-free
+    # quantized scorer): encode string-keyed posting rows first, then
+    # derive the lexicon from the ENCODED rows (~avg_len x fewer than flat
+    # postings) and join term_ids back. This removes the vocabulary
+    # probe/distinct job over the flat token stream, the vocab broadcast,
+    # and the flat-postings/lexicon join — the three pieces that do not
+    # shrink with executors. Quantizing and non-separable-scorer builds
+    # need per-term stats BEFORE encoding, so they run lexicon-FIRST.
+    # Manifest (resumable) builds run the same two flows; their
+    # lexicon-last postings buckets are keyed on DOC SHARDS (shard_id mod
     # n_buckets — stable across resumes because doc_ids come from the
     # checkpointed docs artifact), not on term_ids.
-    lexicon_last = plain_scoring
-    vocab_map = None
+    lexicon_last = (cfg.quantize_bits is None
+                    and (scorer.separable
+                         or getattr(scorer, "stats_free", False)))
+    colocated = False  # set by the in-memory docwise encode
+    enc_str = None  # lexicon-last string-keyed rows (serve path)
+    release: list = []  # lexicon-first intermediate caches
     true_term_stats = None
     if not lexicon_last:
-        # flat forward index: (doc_id, doc_len, term, tf) — JVM-side explode
-        # of the compact per-doc arrays (map_to_postings, invert.cpp:43-53)
-        flat_terms = doc_terms.select(
-            "doc_id", "doc_len",
-            F.explode(F.arrays_zip("terms", "tfs")).alias("z")
-        ).select(
-            "doc_id", "doc_len",
-            F.col("z.terms").alias("term"),
-            F.col("z.tfs").cast("long").alias("tf"))
-
+        flat_terms = _explode_terms(doc_terms)
         # ---- stage: lexicon (sorted distinct terms -> dense term_ids, like
         # fwd.terms; reference src/forward_index_builder.cpp:168-177)
         if manifest and manifest.done("lexicon_base"):
@@ -804,20 +909,19 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
             terms_distinct = flat_terms.select("term").distinct()
             vocab = _vocab_probe(terms_distinct, cfg.lexicon_broadcast_max)
             if vocab is not None:
-                vocab_map = {t: i for i, t in enumerate(vocab)}
-                lex_with_ids = _lexicon_from_vocab(spark, vocab)
+                lexicon_base = _lexicon_from_vocab(spark, vocab)
             else:
-                terms_distinct = terms_distinct.persist(
-                    StorageLevel.MEMORY_AND_DISK_DESER)
+                terms_distinct = terms_distinct.persist(deser)
                 term_cuts = _sample_cuts(terms_distinct, "term", parts * 4)
-                lex_with_ids, _lex_cache, _ = assign_rank_ids(
+                lexicon_base, rank_cache, _ = assign_rank_ids(
                     terms_distinct, "term", "term_id", term_cuts, parts)
+                release = [rank_cache, terms_distinct]
             if manifest:
-                manifest.write_df("lexicon_base", lex_with_ids)
+                manifest.write_df("lexicon_base", lexicon_base)
                 lexicon_base = manifest.read_df(spark, "lexicon_base")
-                terms_distinct.unpersist()
-            else:
-                lexicon_base = lex_with_ids
+                for c in release:
+                    c.unpersist()
+                release = []
         _phase("lexicon_base")
 
         # ---- stage: tf table (term remap, reference :176-194)
@@ -843,124 +947,33 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
                 .agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
             tf_full = tf_full.join(term_stats_pre, "term_id")
 
-    # ---- stage: per-shard doc length arrays (wand_data doc_lens).
-    # Defined here so eager mode can materialize it CONCURRENTLY with the
-    # posting encode (independent DAG branches; Spark schedules jobs from
-    # separate driver threads side by side) — serializing them just adds
-    # a fixed job latency to every build.
-    shards = None
-    shards_thread = None
+    # ---- stage: per-shard doc length arrays (wand_data doc_lens), started
+    # here so it runs CONCURRENTLY with the posting encode (independent DAG
+    # branches) — serializing them just adds a fixed job latency to every
+    # build. The manifest write's mark gates on the root doc_terms
+    # artifact like every docID-dependent artifact.
+    join_shards = None
     if manifest and manifest.done("shards"):
         shards = manifest.read_df(spark, "shards")
+    elif manifest:
+        shards = None  # read back once the write joins
+        join_shards = _in_background(partial(
+            manifest.write_df, "shards", shards_of(docs, cfg.shard_span),
+            pre_mark=join_root))
     else:
-        shards_raw = (
-            docs.groupBy("shard_id")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("doc_id", "doc_len"))).alias("dl"))
-            .select(
-                "shard_id",
-                (F.col("shard_id") * cfg.shard_span).alias("base_doc"),
-                F.transform("dl", lambda x: x["doc_len"]).alias("doc_lens"),
-            )
-        )
-        if not manifest:
-            shards = shards_raw.persist()
-            if eager:
-                import threading
+        shards = shards_of(docs, cfg.shard_span).persist()
+        if eager:
+            join_shards = _in_background(shards.count)
 
-                shards_err: list = []
-
-                def _materialize_shards():
-                    try:
-                        shards.count()
-                    except BaseException as ex:  # re-raised at join()
-                        shards_err.append(ex)
-
-                shards_thread = threading.Thread(target=_materialize_shards)
-                shards_thread.start()
-        else:
-            # manifest: write the shards artifact CONCURRENTLY with the
-            # encode stage (independent DAG branch, same overlap as the
-            # eager in-memory path); the mark gates on the root doc_terms
-            # artifact like every docID-dependent artifact
-            import threading
-
-            shards_err = []
-
-            def _write_shards():
-                try:
-                    manifest.write_df("shards", shards_raw,
-                                      pre_mark=_mark_gate)
-                except BaseException as ex:  # re-raised at join()
-                    shards_err.append(ex)
-
-            shards_thread = threading.Thread(target=_write_shards)
-            shards_thread.start()
-
-    # ---- stage: encoded postings (bucketed for per-partition resume).
-    # Unfinished buckets run as CONCURRENT Spark jobs from driver threads:
-    # each bucket's real work is a fraction of a second of cluster time, so
-    # serial execution is dominated by per-job scheduling overhead —
-    # concurrent jobs share the task slots and overlap that overhead
-    # (the manifest serializes its own updates; a crash still resumes at
-    # the per-bucket granularity).
-    def _run_buckets(build_one) -> None:
-        import concurrent.futures as futures
-
-        todo = [b for b in range(n_buckets)
-                if not manifest.done(f"postings/bucket={b}")]
-        if not todo:
-            return
-        with futures.ThreadPoolExecutor(max_workers=len(todo)) as pool:
-            for _ in pool.map(build_one, todo):  # re-raises worker errors
-                pass
-
-    if manifest and not lexicon_last:
-        if _join_writes is not None:
-            _join_writes()  # lexicon-first flow: serialize after the root writes
-        tf_bucketed = tf_full.withColumn(
-            "_bucket", F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)))
-
-        def _build_bucket_tid(b: int) -> None:
-            enc = encode_postings(
-                tf_bucketed.filter(F.col("_bucket") == b).drop("_bucket"),
-                cfg, stats)
-            manifest.write_df(f"postings/bucket={b}", enc)
-
-        _run_buckets(_build_bucket_tid)
-        bucket_paths = [manifest.artifact_path(f"postings/bucket={b}")
-                        for b in range(n_buckets)]
-        for p in bucket_paths:
-            spark.catalog.refreshByPath(p)
-        postings = spark.read.parquet(*bucket_paths)
-        _phase("encode_postings")
-    elif manifest and lexicon_last:
-        # lexicon-last RESUMABLE flow: string-keyed encode in n_buckets
-        # independent jobs keyed on doc shards (bucket b = shards with
-        # shard_id % n_buckets == b) — each bucket writes its own artifact
-        # and a killed build resumes at the first unfinished bucket. Doc
-        # shards are the stable resume key the term_id bucketing could not
+    # ---- stage: encoded postings
+    if lexicon_last and manifest:
+        # RESUMABLE flow: string-keyed encode in n_buckets independent
+        # jobs keyed on doc shards (bucket b = shards with shard_id %
+        # n_buckets == b) — each bucket writes its own artifact and a
+        # killed build resumes at the first unfinished bucket. Doc shards
+        # are the stable resume key the term_id bucketing could not
         # provide here (term_ids do not exist until the lexicon is derived
         # from these very rows).
-        from pisa_spark.operators.postings import (encode_postings_docwise_str,
-                                                   encode_postings_str)
-
-        docwise = (cfg.shard_span * max(stats["avg_len"], 1.0)
-                   <= cfg.docwise_max_tokens)
-        shard_of = (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long")
-
-        def _encode_str(src_docs, stride: int = 1):
-            if docwise:
-                return encode_postings_docwise_str(
-                    src_docs, cfg, stats, shard_stride=stride)
-            flat = src_docs.select(
-                "doc_id", "doc_len",
-                F.explode(F.arrays_zip("terms", "tfs")).alias("z")
-            ).select("doc_id", "doc_len",
-                     F.col("z.terms").alias("term"),
-                     F.col("z.tfs").cast("long").alias("tf"))
-            return encode_postings_str(flat, cfg, stats)
-
         # Resume granularity adapts to the work size (a pure function of
         # the manifest-recorded corpus stats, so resumes always agree with
         # the original run's choice): below bucket_min_tokens per bucket,
@@ -969,201 +982,53 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
         # small build re-encodes in seconds) overlapped with the root
         # artifact writes. Above the bound, n_buckets independent jobs each
         # partition-prune the doc_terms artifact to their own bucket (the
-        # corpus is still read only once across all jobs) and a killed
-        # build resumes at the first unfinished bucket.
-        single_job = (stats["collection_len"] / max(1, n_buckets)
-                      < bucket_min_tokens)
-        if single_job:
+        # corpus is still read only once across all jobs).
+        if stats["collection_len"] / max(1, n_buckets) < bucket_min_tokens:
             if not manifest.done("postings"):
-                manifest.write_df("postings", _encode_str(doc_terms),
-                                  pre_mark=_mark_gate)
-            if _join_writes is not None:
-                _join_writes()
+                manifest.write_df("postings",
+                                  _encode_str(doc_terms, cfg, stats)[0],
+                                  pre_mark=join_root)
             enc_str = manifest.read_df(spark, "postings")
         else:
-            if _mark_gate is not None:
+            if join_root is not None:
                 # wait for the root doc_terms artifact, then source every
                 # bucket job from its partition-pruned scan
-                _mark_gate()
+                join_root()
                 doc_terms = manifest.read_df(spark, "doc_terms")
+            shard_of = (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long")
 
-            def _build_bucket_str(b: int) -> None:
+            def build_bucket(b: int) -> None:
                 if "_bucket" in doc_terms.columns:
                     part_docs = doc_terms.filter(F.col("_bucket") == b)
                 else:
                     part_docs = doc_terms.filter(
                         F.pmod(shard_of, F.lit(n_buckets)) == b)
-                manifest.write_df(f"postings/bucket={b}",
-                                  _encode_str(part_docs, stride=n_buckets),
-                                  pre_mark=_mark_gate)
+                manifest.write_df(
+                    f"postings/bucket={b}",
+                    _encode_str(part_docs, cfg, stats, stride=n_buckets)[0],
+                    pre_mark=join_root)
 
-            _run_buckets(_build_bucket_str)
-            if _join_writes is not None:
-                _join_writes()
-            bucket_paths = [manifest.artifact_path(f"postings/bucket={b}")
-                            for b in range(n_buckets)]
-            for p in bucket_paths:
-                spark.catalog.refreshByPath(p)
-            enc_str = spark.read.parquet(*bucket_paths)
-        enc_str_handle = enc_str
+            enc_str = _run_buckets(spark, manifest, n_buckets, build_bucket)
+        if join_writes is not None:
+            join_writes()
         _phase("encode_postings")
-        # ---- stage: lexicon from the ENCODED rows, then term_ids joined
-        # back onto the parquet-backed string-keyed rows (the postings
-        # artifact keeps TERM STRINGS so a bucket never has to be rewritten
-        # when the vocabulary changes resume-to-resume — load_index
-        # re-joins ids the same way). Vocabulary probe and WAND term stats
-        # are ONE fused aggregation scan; for broadcastable vocabularies
-        # the whole lexicon is then assembled driver-side (Arrow).
-        if manifest.done("lexicon"):
-            lexicon = manifest.read_df(spark, "lexicon")
-        else:
-            aggd = _term_agg_of(enc_str).persist(
-                StorageLevel.MEMORY_AND_DISK_DESER)
-            n_vocab = aggd.count()
-            if n_vocab <= cfg.lexicon_driver_max:
-                lex_full = _lexicon_from_term_agg(
-                    spark, aggd.toPandas(), scorer, cfg, stats)
-            elif n_vocab <= cfg.lexicon_broadcast_max:
-                # broadcast-size vocabulary: driver id-assignment over a
-                # slim term-only transfer (see _lexicon_driver_ids)
-                lex_full = _lexicon_driver_ids(spark, aggd, scorer, cfg,
-                                               stats)
-            else:
-                # web-scale vocabulary: distributed dense-id
-                # assignment over the cached term-agg rows (driver
-                # round-trip cost is linear in vocab size and serial)
-                term_cuts = _sample_cuts(aggd, "term", parts * 4)
-                lex_ids, _lex_cache, _ = assign_rank_ids(
-                    aggd, "term", "term_id", term_cuts, parts)
-                lex_full = _with_max_score(lex_ids, scorer, cfg,
-                                           stats).select(
-                    "term", "term_id", "df", "cf", "max_part", "max_score")
-            manifest.write_df("lexicon", lex_full)
-            aggd.unpersist()
-            lexicon = manifest.read_df(spark, "lexicon")
-        postings = join_term_ids(enc_str, lexicon,
-                                 cfg.lexicon_broadcast_max)
-        _phase("lexicon_base")
     elif lexicon_last:
-        from pisa_spark.operators.postings import (encode_postings_docwise_str,
-                                                   encode_postings_str)
+        enc_str, colocated = _encode_str(doc_terms, cfg, stats,
+                                         bucket_starts=bucket_starts)
+        enc_str = enc_str.persist(deser)
+    elif manifest:
+        if join_writes is not None:
+            join_writes()  # lexicon-first flow: serialize after the root writes
+        tf_bucketed = tf_full.withColumn(
+            "_bucket", F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)))
 
-        if cfg.shard_span * max(stats["avg_len"], 1.0) <= cfg.docwise_max_tokens:
-            # doc-wise on the in-memory lineage: bucket_starts (from the
-            # rank-assignment meta) makes this encode SHUFFLE-FREE — the
-            # rank shuffle's bucket partitioning is reused, and only
-            # bucket-boundary-straddling shards take the shuffled path
-            enc_str = encode_postings_docwise_str(
-                doc_terms, cfg, stats, bucket_starts=bucket_starts)
-            colocated = True
-        else:
-            # shard token mass exceeds the docwise working-set bound:
-            # exploded (shard, term)-shuffled encode, groups bounded by
-            # shard_span postings regardless of document length
-            flat = doc_terms.select(
-                "doc_id", "doc_len",
-                F.explode(F.arrays_zip("terms", "tfs")).alias("z")
-            ).select("doc_id", "doc_len",
-                     F.col("z.terms").alias("term"),
-                     F.col("z.tfs").cast("long").alias("tf"))
-            enc_str = encode_postings_str(flat, cfg, stats)
-        enc_str = enc_str.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        enc_str_handle = enc_str
-        # ---- stage: lexicon from the ENCODED rows (sorted distinct terms
-        # -> dense term_ids, fwd.terms semantics) + term_id join-back.
-        # The per-term aggregation is ONE fused job that (a) materializes
-        # the encode cache (cache-on-first-scan), (b) decides small-vs-
-        # web-scale vocabulary, (c) fetches the vocabulary AND its WAND
-        # term stats when small — the lexicon is then assembled driver-side
-        # (Arrow), removing the separate lexicon_meta scan over the cache.
-        # the vocabulary probe is ONE fused job (materializes the encode
-        # cache AND the per-term agg cache, returns only a count — no
-        # driver data transfer at any vocabulary size)
-        aggd = _term_agg_of(enc_str).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        if os.environ.get("PISA_PROFILE_ENCODE"):
-            # diagnostic split of the fused job (scaling-ladder forensics):
-            # materialize the cache alone, then agg the cached rows alone
-            bd = stats.setdefault("encode_breakdown", {})
-            _t = time.time()
-            bd["enc_rows"] = enc_str.count()
-            bd["materialize_s"] = round(time.time() - _t, 3)
-            bd["enc_parts"] = enc_str.rdd.getNumPartitions()
-            _t = time.time()
-            n_vocab = aggd.count()
-            bd["term_agg_s"] = round(time.time() - _t, 3)
-        else:
-            n_vocab = aggd.count()
-        _phase("encode_postings")
-        _t_lex = time.time()
-        if n_vocab <= cfg.lexicon_driver_max:
-            # small vocabulary: the driver round-trip (collect + pandas
-            # assemble + ship back) is the fastest path. persist +
-            # materialize: left as a LocalRelation, every downstream job
-            # re-materializes the local rows into its plan — measured
-            # ~1-2 s per 200-query batch at 300k docs
-            agg_pdf = aggd.toPandas()
-            aggd.unpersist()
-            lexicon = _lexicon_from_term_agg(spark, agg_pdf, scorer,
-                                             cfg, stats).persist()
-            lexicon.count()
-        elif n_vocab <= cfg.lexicon_broadcast_max:
-            # broadcast-size vocabulary: driver id-assignment over a slim
-            # term-only Arrow transfer, stats joined distributed (see
-            # _lexicon_driver_ids) — one job + the count below, replacing
-            # the range-sample job and the rank shuffle whose ~3 s fixed
-            # small-job cost billed identically at every cluster size.
-            lexicon = _lexicon_driver_ids(spark, aggd, scorer, cfg,
-                                          stats).persist()
-            lexicon.count()
-            aggd.unpersist()
-        else:
-            # web-scale vocabulary: distributed dense-id assignment
-            # over the cached term-agg rows. The driver path's cost is
-            # linear in vocabulary size and SERIAL (measured 4 s of a
-            # 31 s 8-core build at 596k terms — a fixed tax every cluster
-            # size pays equally); this one is a parallel ~1 s floor.
-            term_cuts = _sample_cuts(aggd, "term", parts * 4)
-            lex_ids, _lex_cache, _ = assign_rank_ids(
-                aggd, "term", "term_id", term_cuts, parts)
-            lexicon = _with_max_score(lex_ids, scorer, cfg, stats).select(
-                "term", "term_id", "df", "cf", "max_part",
-                "max_score").persist()
-            lexicon.count()
-            _lex_cache.unpersist()
-            aggd.unpersist()
-        if os.environ.get("PISA_PROFILE_ENCODE"):
-            stats.setdefault("lexicon_breakdown", {})[
-                "lexicon_s"] = round(time.time() - _t_lex, 3)
-        lexicon_base = lexicon.select("term", "term_id")
-        if n_vocab <= cfg.lexicon_broadcast_max:
-            postings = (enc_str.join(F.broadcast(lexicon_base), "term")
-                        .drop("term"))
-        else:
-            # non-broadcast vocabulary: the id join is a sort-merge SHUFFLE
-            # of the whole index — unlike the broadcast case, every
-            # downstream action would re-pay it, so persist the join result
-            # (the one extra cache copy is cheaper than re-shuffling the
-            # index per query batch)
-            postings = (enc_str.join(lexicon_base, "term").drop("term")
-                        .persist(StorageLevel.MEMORY_AND_DISK_DESER))
-        from pisa_spark.operators.postings import _ENCODED_COLUMNS
+        def build_bucket(b: int) -> None:
+            enc = encode_postings(
+                tf_bucketed.filter(F.col("_bucket") == b).drop("_bucket"),
+                cfg, stats)
+            manifest.write_df(f"postings/bucket={b}", enc)
 
-        # broadcast-vocabulary case: postings stays a LAZY broadcast-join
-        # view over the cached encoded rows — materializing it into a
-        # second cache would re-copy the whole index through memory
-        # (measured 3-15 s per build, pure bandwidth) for a join that costs
-        # microseconds per probe at query time. enc_str (already
-        # materialized by the vocab probe) is the single backing cache.
-        postings = postings.select(*_ENCODED_COLUMNS)
-        _phase("lexicon_base")
-    elif vocab_map is not None and plain_scoring:
-        # broadcastable vocabulary: doc-wise encode skips the exploded
-        # (term, doc, tf) shuffle entirely (operators/postings.py)
-        postings = encode_postings_docwise(
-            doc_terms, vocab_map, cfg, stats).persist()
-        colocated = True
-        if eager:
-            postings.count()
+        postings = _run_buckets(spark, manifest, n_buckets, build_bucket)
         _phase("encode_postings")
     else:
         postings = encode_postings(tf_full, cfg, stats).persist()
@@ -1171,32 +1036,71 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
             postings.count()
         _phase("encode_postings")
 
-    # ---- stage: per-shard doc length arrays — defined above; join the
-    # concurrent materialization (or write through the manifest)
-    if shards is None:  # manifest build path: join the concurrent write
-        shards_thread.join()
-        if shards_err:
-            raise shards_err[0]
+    if lexicon_last:
+        # ---- stage: lexicon from the ENCODED rows, then term_ids joined
+        # back onto the string-keyed rows (the postings artifact keeps TERM
+        # STRINGS so a bucket never has to be rewritten when the
+        # vocabulary changes resume-to-resume — load_index re-joins ids
+        # the same way). Vocabulary probe and WAND term stats are ONE
+        # fused aggregation job, which in memory also materializes the
+        # encode cache (cache-on-first-scan) and returns only a count — no
+        # driver data transfer at any vocabulary size; for small
+        # vocabularies the whole lexicon is then assembled driver-side
+        # (Arrow).
+        if manifest and manifest.done("lexicon"):
+            lexicon = manifest.read_df(spark, "lexicon")
+        else:
+            aggd = _term_agg_of(enc_str).persist(deser)
+            n_vocab = aggd.count()
+            if manifest is None:
+                _phase("encode_postings")
+            lexicon, caches = _lexicon_of(spark, aggd, n_vocab, cfg, stats,
+                                          parts)
+            if manifest:
+                manifest.write_df("lexicon", lexicon)
+                lexicon = manifest.read_df(spark, "lexicon")
+            else:
+                # persist + materialize: left as a LocalRelation, every
+                # downstream job re-materializes the local rows into its
+                # plan — measured ~1-2 s per 200-query batch at 300k docs
+                lexicon = lexicon.persist()
+                lexicon.count()
+            for c in caches:
+                c.unpersist()
+        if manifest:
+            postings = join_term_ids(enc_str, lexicon,
+                                     _fits_broadcast(lexicon, cfg))
+        elif n_vocab <= cfg.lexicon_broadcast_max:
+            # broadcast vocabulary: postings stays a LAZY broadcast-join
+            # view over the cached encoded rows — materializing it into a
+            # second cache would re-copy the whole index through memory
+            # (measured 3-15 s per build, pure bandwidth) for a join that
+            # costs microseconds per probe at query time. enc_str (already
+            # materialized by the vocab probe) is the single backing cache.
+            postings = join_term_ids(enc_str, lexicon, True)
+        else:
+            # non-broadcast vocabulary: the id join is a sort-merge SHUFFLE
+            # of the whole index — unlike the broadcast case, every
+            # downstream action would re-pay it, so persist the join result
+            # (the one extra cache copy is cheaper than re-shuffling the
+            # index per query batch)
+            postings = join_term_ids(enc_str, lexicon, False).persist(deser)
+        _phase("lexicon_base")
+
+    if join_shards is not None:
+        join_shards()
+    if shards is None:
         shards = manifest.read_df(spark, "shards")
-    elif shards_thread is not None:
-        shards_thread.join()
-        if shards_err:
-            raise shards_err[0]
     _phase("shards")
 
-    # ---- stage: lexicon with term stats + max scores (WAND term metadata),
-    # aggregated from the encoded rows (one per shard x term) — ~100x fewer
-    # rows than the flat postings the reference streams twice
-    # (wand_data.hpp:64-115). The fused lexicon-last paths above already
-    # built it in the same scan as the vocabulary probe (lexicon set).
-    if lexicon is not None:
-        pass
+    # ---- stage (lexicon-first): lexicon with term stats + max scores (WAND
+    # term metadata), aggregated from the encoded rows.
+    if lexicon_last:
+        pass  # built above, in the same scan as the vocabulary probe
     elif manifest and manifest.done("lexicon"):
         lexicon = manifest.read_df(spark, "lexicon")
     else:
-        term_meta = postings.groupBy("term_id").agg(
-            F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"),
-            F.max(F.array_max("block_max_part")).alias("max_part"))
+        term_meta = _term_agg_of(postings, "term_id")
         if true_term_stats is not None:
             # quantized path: sum_tf aggregates quantized scores, not term
             # collection frequency — carry the pre-quantization df/cf
@@ -1204,7 +1108,7 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
             term_meta = (term_meta.drop("df", "cf")
                          .join(true_term_stats, "term_id"))
         lex = _with_max_score(lexicon_base.join(term_meta, "term_id"),
-                              scorer, cfg, stats)
+                              cfg, stats)
         if manifest:
             manifest.write_df("lexicon", lex)
             lexicon = manifest.read_df(spark, "lexicon")
@@ -1224,25 +1128,31 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
         # restores it without the caller re-stating build flags
         manifest.record_metric("index_config", cfg.to_json_dict())
 
-    # ---- release the forward index (eager in-memory builds): every
-    # downstream artifact (encoded postings, lexicon, shards) now lives in
-    # its own materialized cache, but `docs` is still a lazy projection
-    # over the tokenize cache — whose full (terms, tfs) arrays are ~20x
-    # the slim docmap and would otherwise stay resident in executor
-    # storage for the index's whole serving life (measured 1.9 GB vs the
-    # 2.9 GB total at 1.2M docs). Re-persist the slim projection, then
-    # drop the fat cache. A query service keeps the inverted index hot,
-    # not the forward index (the reference serves from the inv/wand mmaps
-    # alone; fwd is a build-time artifact).
-    if eager and manifest is None and _tok_cache is not None:
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        docs.count()
-        _tok_cache.unpersist()
+    # ---- release the build's intermediate caches once every index table
+    # lives in its own materialized cache (eager in-memory builds) or is
+    # read back from parquet (checkpointed builds, whose background writes
+    # have all joined). The tokenize cache is the forward index: its full
+    # (terms, tfs) arrays are ~20x the slim docmap and would otherwise stay
+    # resident in executor storage for the index's whole serving life
+    # (measured 1.9 GB vs the 2.9 GB total at 1.2M docs). In memory the
+    # slim docs projection is re-persisted first. A query service keeps
+    # the inverted index hot, not the forward index (the reference serves
+    # from the inv/wand mmaps alone; fwd is a build-time artifact).
+    if eager and manifest is None:
+        for c in release:
+            c.unpersist()
+    if tok_cache is not None and (eager or manifest):
+        if manifest:
+            docs = manifest.read_df(spark, "docs")
+        else:
+            docs = docs.persist(deser)
+            docs.count()
+        tok_cache.unpersist()
 
     return InvertedIndex(docs=docs, lexicon=lexicon, postings=postings,
                          shards=shards, stats=stats, cfg=cfg,
                          postings_colocated=colocated,
-                         postings_str=enc_str_handle)
+                         postings_str=enc_str)
 
 
 def load_index(spark, out_dir: str,
@@ -1266,7 +1176,7 @@ def load_index(spark, out_dir: str,
         # from the lexicon the same way the build did
         enc_str_handle = postings
         postings = join_term_ids(postings, lexicon,
-                                 cfg.lexicon_broadcast_max)
+                                 _fits_broadcast(lexicon, cfg))
     return InvertedIndex(
         docs=manifest.read_df(spark, "docs"),
         lexicon=lexicon,

@@ -62,8 +62,8 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
     from pyspark.sql import functions as F
 
     from pisa_spark.operators.postings import encode_postings_docwise
-    from pisa_spark.plans.build import (_sample_cuts, assign_rank_ids,
-                                        doc_term_counts)
+    from pisa_spark.plans.build import (_explode_terms, _sample_cuts,
+                                        assign_rank_ids, doc_term_counts)
 
     spark = batch_df.sparkSession
     state = _load_segments(out_dir)
@@ -151,12 +151,7 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
         # join (same shape as the batch build's non-broadcast path)
         from pisa_spark.operators.postings import encode_postings
 
-        flat = doc_terms.select(
-            "doc_id", "doc_len",
-            F.explode(F.arrays_zip("terms", "tfs")).alias("z")
-        ).select("doc_id", "doc_len", F.col("z.terms").alias("term"),
-                 F.col("z.tfs").cast("long").alias("tf"))
-        tf_full = (flat.join(lex_df, "term")
+        tf_full = (_explode_terms(doc_terms).join(lex_df, "term")
                    .select("term_id", "doc_id", "tf", "doc_len"))
         enc = encode_postings(tf_full, cfg, stats, num_partitions=parts)
     enc.write.mode("overwrite").parquet(
@@ -208,8 +203,8 @@ def load_stream_index(spark, out_dir: str,
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from pisa_spark.functions.scoring import make_scorer
-    from pisa_spark.plans.build import InvertedIndex, _f32
+    from pisa_spark.plans.build import (InvertedIndex, _f32, _term_agg_of,
+                                        _with_max_score, shards_of)
 
     state = _load_segments(out_dir)
     if not state["segments"]:
@@ -244,28 +239,11 @@ def load_stream_index(spark, out_dir: str,
             .withColumn("shard_id",
                         (F.col("doc_id") / F.lit(cfg.shard_span))
                         .cast("long")))
-    shards = (docs.groupBy("shard_id")
-              .agg(F.array_sort(
-                  F.collect_list(F.struct("doc_id", "doc_len"))).alias("dl"))
-              .select("shard_id",
-                      (F.col("shard_id") * cfg.shard_span).alias("base_doc"),
-                      F.transform("dl", lambda x: x["doc_len"])
-                      .alias("doc_lens"))).persist()
+    shards = shards_of(docs, cfg.shard_span).persist()
 
     lexicon_base = spark.read.parquet(os.path.join(out_dir, "lexicon_terms"))
-    term_meta = postings.groupBy("term_id").agg(
-        F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"),
-        F.max(F.array_max("block_max_part")).alias("max_part"))
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    lex = lexicon_base.join(term_meta, "term_id")
-    if scorer.separable and cfg.scorer == "bm25":
-        idf = F.greatest(
-            F.lit(1e-6),
-            F.log((F.lit(float(num_docs)) - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5))) * F.lit(1.0 + cfg.bm25_k1)
-        lex = lex.withColumn("max_score",
-                             (idf * F.col("max_part")).cast("float"))
-    else:
-        lex = lex.withColumn("max_score", F.col("max_part").cast("float"))
+    lex = _with_max_score(
+        lexicon_base.join(_term_agg_of(postings, "term_id"), "term_id"),
+        cfg, stats)
     return InvertedIndex(docs=docs, lexicon=lex.persist(), postings=postings,
                          shards=shards, stats=stats, cfg=cfg)

@@ -156,7 +156,6 @@ def worker(cores: int, n_docs: int) -> None:
         "build_seconds": round(build_s, 2),
         "build_docs_per_sec": round(idx.stats["num_docs"] / build_s, 1),
         "build_phases": idx.stats.get("phase_seconds", {}),
-        "encode_breakdown": idx.stats.get("encode_breakdown", {}),
         f"batch_{N_QUERIES}q_seconds": round(query_s, 2),
         "batch_runs_seconds": [round(t, 2) for t in q_times],
         "queries_per_sec": round(N_QUERIES / query_s, 2),

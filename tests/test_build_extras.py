@@ -438,3 +438,99 @@ def test_build_on_parquet_matches_inmemory(spark, tmp_path):
     qb = sorted(map(tuple, topk_search(
         idx_pq, qs, k=10, algorithm="block_max_wand").collect()))
     assert qa == qb and qa
+
+
+def _index_rows(spark, idx):
+    """Sorted rows of every index table plus a block_max_wand top-10."""
+    from pisa_spark.sources import webtext
+
+    qs = webtext.synth_queries(8, seed=31)
+    return {
+        "lexicon": sorted(map(tuple, idx.lexicon.collect())),
+        "postings": sorted(map(tuple, idx.postings.collect())),
+        "shards": sorted(map(tuple, idx.shards.collect())),
+        "docs": sorted(map(tuple, idx.docs.select(
+            "doc_id", "url", "doc_len", "shard_id").collect())),
+        "top10": sorted(map(tuple, topk_search(
+            idx, qs, k=10, algorithm="block_max_wand").collect())),
+    }
+
+
+def test_build_flows_build_the_same_index(spark):
+    """In-memory and checkpointed builds, and every stage branch inside
+    them (broadcast vs sort-merge term-id join, docwise vs exploded
+    encode, single-job vs bucketed checkpoint, driver vs distributed
+    lexicon), build the same index for one scorer family."""
+    docs = webtext.generate(spark, 300, seed=19)
+
+    def build(out=None, bucketed=False, **cfg_kw):
+        cfg = IndexConfig(shard_span=64, **cfg_kw)
+        kw = {}
+        if out is not None:
+            path = f"{CACHE}/flows_{out}"
+            shutil.rmtree(path, ignore_errors=True)
+            kw = {"out_dir": path, "n_buckets": 4}
+            if bucketed:
+                kw["bucket_min_tokens"] = 0
+        return _index_rows(spark, build_index(
+            docs, cfg, html_col="html", eager=True, **kw))
+
+    want = build()
+    assert all(want.values())
+    variants = {
+        "bcast0": build(lexicon_broadcast_max=0),
+        "exploded": build(docwise_max_tokens=0),
+        "m_single": build(out="single"),
+        "m_bucketed": build(out="bucketed", bucketed=True),
+        "m_bcast0": build(out="bcast0", lexicon_broadcast_max=0),
+        "m_driver_ids": build(out="driver_ids", lexicon_driver_max=0),
+        "m_exploded": build(out="exploded", bucketed=True,
+                            docwise_max_tokens=0),
+    }
+    for name, got in variants.items():
+        for table in want:
+            assert got[table] == want[table], (name, table)
+
+    for family in ({"quantize_bits": 8}, {"scorer": "qld"}):
+        want = build(**family)
+        assert all(want.values())
+        for name, got in {
+                "manifest": build(out="first", **family),
+                "bcast0": build(lexicon_broadcast_max=0, **family)}.items():
+            for table in want:
+                assert got[table] == want[table], (family, name, table)
+
+
+def test_build_leaves_only_index_caches(spark):
+    """A build's intermediate caches (tokenize forward index, distinct
+    terms, term rank shuffle, per-term aggregation) are released once
+    the index tables no longer read them: an eager in-memory build keeps
+    at most the four index caches (docs, shards, postings, lexicon) and a
+    checkpointed build, whose tables are read back from parquet, keeps
+    none."""
+    docs = webtext.generate(spark, 200, seed=17)
+    jsc = spark.sparkContext._jsc
+
+    def new_caches(out=None, bucketed=False, **cfg_kw):
+        cfg = IndexConfig(shard_span=64, **cfg_kw)
+        kw = {}
+        if out is not None:
+            path = f"{CACHE}/caches_{out}"
+            shutil.rmtree(path, ignore_errors=True)
+            kw = {"out_dir": path, "n_buckets": 4}
+            if bucketed:
+                kw["bucket_min_tokens"] = 0
+        before = set(jsc.getPersistentRDDs().keys())
+        idx = build_index(docs, cfg, html_col="html", eager=True, **kw)
+        added = set(jsc.getPersistentRDDs().keys()) - before
+        for table in (idx.docs, idx.shards, idx.postings, idx.lexicon,
+                      idx.postings_str):
+            if table is not None:
+                table.unpersist()
+        return len(added)
+
+    for cfg_kw in ({}, {"quantize_bits": 8, "lexicon_broadcast_max": 0},
+                   {"scorer": "qld", "lexicon_broadcast_max": 0}):
+        assert new_caches(**cfg_kw) <= 4, cfg_kw
+    assert new_caches(out="single") == 0
+    assert new_caches(out="bucketed", bucketed=True) == 0
