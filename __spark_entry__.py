@@ -992,7 +992,7 @@ def _bm25_f32_rank_sql(qv: str, weighted: bool = False,
 
     weighted=True: qv must carry a per-(qid, term) weight column w (term
     multiplicity, query.cpp:45-82); each contribution is (idf_f32 * w_f32)
-    * part_f32 with the kernels' exact grouping (_TermRun.__init__
+    * part_f32 with the kernels' exact grouping (topk._group_runs
     folds w into idf in f32 BEFORE the doc part multiply).
     conjunctive=True: ranked_and semantics — a doc qualifies only when it
     contains EVERY query term present in the collection vocabulary

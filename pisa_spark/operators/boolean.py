@@ -27,7 +27,7 @@ def _query_postings(index, queries):
     lexicon (the reference loads the lexicon into memory before query
     eval, tools/queries.cpp:279-340): the distributed plan then needs no
     lexicon join, no per-qid window, and no distinct exchange — the
-    postings restriction is an isin() filter pushed into the cached scan
+    postings restriction is one IN filter pushed into the cached scan
     and the tiny query table is broadcast. Falls back to the fully
     distributed join plan for DataFrame query sets or indexes whose
     lexicon exceeds the driver bound."""
@@ -35,7 +35,7 @@ def _query_postings(index, queries):
     from pyspark.sql import functions as F
 
     from pisa_spark.functions.tokenize import analyze_query_terms
-    from pisa_spark.operators.topk import _serve_state
+    from pisa_spark.operators.topk import _in_values, _serve_state
 
     spark = index.lexicon.sparkSession
     if isinstance(queries, list):
@@ -52,7 +52,7 @@ def _query_postings(index, queries):
                 rows, "qid string, term_id long, n_query_terms int")
             tids = sorted({tid for _, tid, _ in rows})
             flat = decode_postings(
-                index.postings.filter(F.col("term_id").isin(tids)),
+                index.postings.filter(_in_values("term_id", tids)),
                 index.cfg)
             return F.broadcast(q).join(flat, "term_id")
         qterms = make_query_terms_df(spark, queries, index.cfg)

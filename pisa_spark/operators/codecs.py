@@ -24,7 +24,9 @@ chunk per block (encode_blocks / decode_blocks), each block relative to the
 previous block's last doc and the first to the row's base, with
 block_doc_offs holding each chunk's byte offset. For varint the joined chunks
 are byte-identical to one continuous gap-1 stream, which decode_blocks reads
-in a single call. tf values are stored as tf-1 varints (encode_tfs).
+in a single call. decode_many decodes many rows held in one buffer (an Arrow
+binary column's data): all varint rows in one pass. tf values are stored as
+tf-1 varints (encode_tfs).
 """
 
 from __future__ import annotations
@@ -86,21 +88,49 @@ def varint_encode(values: np.ndarray) -> bytes:
     return varint_encode_with_lengths(values)[0]
 
 
-def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
-    """Decode a varint byte stream to uint64 (vectorized)."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
+def _varint_values(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """The varints of the uint8 array `b` that end at byte indices `ends`
+    (its bytes with the MSB clear), as uint64."""
+    if ends.size == 0:
         return np.zeros(0, dtype=np.uint64)
-    ends = np.flatnonzero((b & 0x80) == 0)
     starts = np.concatenate(([0], ends[:-1] + 1))
     lengths = ends - starts + 1
     vals = np.zeros(ends.size, dtype=np.uint64)
     for i in range(int(lengths.max())):
         mask = lengths > i
         vals[mask] |= (b[starts[mask] + i] & np.uint8(0x7F)).astype(np.uint64) << np.uint64(7 * i)
+    return vals
+
+
+def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:
+    """Decode a varint byte stream to uint64 (vectorized)."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    vals = _varint_values(b, np.flatnonzero(b < 0x80))
     if count is not None and vals.size != count:
         raise ValueError(f"varint stream held {vals.size} values, expected {count}")
     return vals
+
+
+def varint_decode_rows(data: np.ndarray, row_offs: np.ndarray,
+                       n: np.ndarray) -> np.ndarray:
+    """Decode many varint rows in one pass: row i is the bytes
+    data[row_offs[i]:row_offs[i+1]] and must hold exactly n[i] values,
+    the last ending on the row's last byte; otherwise ValueError. Returns
+    the rows' values concatenated, as uint64."""
+    row_offs = np.asarray(row_offs, dtype=np.int64)
+    b = data[row_offs[0]:row_offs[-1]]
+    rel = row_offs - row_offs[0]
+    ends = np.flatnonzero(b < 0x80)
+    counts = np.diff(np.searchsorted(ends, rel))
+    bad = counts != n
+    filled = rel[1:] > rel[:-1]
+    bad[filled] |= b[rel[1:][filled] - 1] >= 0x80
+    if bad.any():
+        i = int(np.flatnonzero(bad)[0])
+        raise ValueError(f"varint row {i} held {int(counts[i])} complete "
+                         f"values in {int(rel[i + 1] - rel[i])} bytes, "
+                         f"expected {int(n[i])}")
+    return _varint_values(b, ends)
 
 
 # --------------------------------------------------------------- Elias-Fano
@@ -1405,9 +1435,50 @@ def decode_blocks(codec: str, buf: bytes, block_offs, base: int,
     return docs
 
 
+def decode_many(codec: str, data: np.ndarray, row_offs: np.ndarray,
+                block_offs: tuple[np.ndarray, np.ndarray], bases: np.ndarray,
+                n: np.ndarray) -> np.ndarray:
+    """decode_blocks over many posting rows held in one buffer: row i is
+    data[row_offs[i]:row_offs[i+1]] (uint8), with base bases[i], n[i]
+    docs, and block byte offsets block_offs[0][block_offs[1][i]:
+    block_offs[1][i+1]] (values, per-row offsets). Returns every row's
+    docIDs concatenated. varint rows decode in one vectorized pass plus a
+    cumulative sum restarted at each row's base; other codecs decode row
+    by row. A row that does not hold exactly n[i] docs raises ValueError."""
+    n = np.asarray(n, dtype=np.int64)
+    bases = np.asarray(bases, dtype=np.int64)
+    if codec == "varint":
+        c = np.cumsum(varint_decode_rows(data, row_offs, n).astype(np.int64)
+                      + 1)
+        before = np.concatenate(([0], c))[np.cumsum(n) - n]
+        return c + np.repeat(bases - before, n)
+    values, offs = block_offs
+    docs = [decode_blocks(codec, data[s:e].tobytes(), values[o0:o1], b, k)
+            for s, e, o0, o1, b, k in zip(
+                row_offs[:-1].tolist(), row_offs[1:].tolist(),
+                offs[:-1].tolist(), offs[1:].tolist(), bases.tolist(),
+                n.tolist())]
+    return np.concatenate(docs) if docs else np.zeros(0, dtype=np.int64)
+
+
+def join_rows(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """(data, row_offs) of byte strings joined into one buffer, the form
+    decode_many and decode_tfs_many read."""
+    bufs = list(bufs)
+    offs = np.zeros(len(bufs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in bufs], out=offs[1:])
+    return np.frombuffer(b"".join(bufs), dtype=np.uint8), offs
+
+
 def encode_tfs(tfs: np.ndarray) -> bytes:
     return varint_encode((np.asarray(tfs, dtype=np.uint64) - np.uint64(1)))
 
 
 def decode_tfs(buf: bytes, count: int | None = None) -> np.ndarray:
     return varint_decode(buf, count).astype(np.int64) + 1
+
+
+def decode_tfs_many(data: np.ndarray, row_offs: np.ndarray,
+                    n: np.ndarray) -> np.ndarray:
+    """decode_tfs over many rows held in one buffer (see decode_many)."""
+    return varint_decode_rows(data, row_offs, n).astype(np.int64) + 1

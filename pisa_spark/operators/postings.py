@@ -756,21 +756,17 @@ def encode_postings_str(flat_df, cfg: IndexConfig, stats: dict,
 
 def decode_rows(pdf: pd.DataFrame, cfg: IndexConfig) -> pd.DataFrame:
     """Decode encoded posting rows back to flat (term_id, doc_id, tf)."""
-    out_term, out_doc, out_tf = [], [], []
-    for row in pdf.itertuples(index=False):
-        n = int(row.n)
-        tfs = codecs.decode_tfs(bytes(row.tfs_bin), n)
-        docs = codecs.decode_blocks(cfg.codec, bytes(row.docs_bin),
-                                    row.block_doc_offs, int(row.base_doc), n)
-        out_term.append(np.full(n, row.term_id, dtype=np.int64))
-        out_doc.append(docs.astype(np.int64))
-        out_tf.append(tfs.astype(np.int64))
-    if not out_term:
-        return pd.DataFrame({"term_id": [], "doc_id": [], "tf": []}).astype("int64")
+    n = pdf["n"].to_numpy(dtype=np.int64)
+    blocks = [np.asarray(o, dtype=np.int64) for o in pdf["block_doc_offs"]]
+    block_offs = (np.concatenate(blocks + [np.zeros(0, dtype=np.int64)]),
+                  np.cumsum([0] + [b.size for b in blocks]))
+    docs = codecs.decode_many(cfg.codec, *codecs.join_rows(pdf["docs_bin"]),
+                              block_offs, pdf["base_doc"].to_numpy(), n)
+    tfs = codecs.decode_tfs_many(*codecs.join_rows(pdf["tfs_bin"]), n)
     return pd.DataFrame({
-        "term_id": np.concatenate(out_term),
-        "doc_id": np.concatenate(out_doc),
-        "tf": np.concatenate(out_tf),
+        "term_id": np.repeat(pdf["term_id"].to_numpy(dtype=np.int64), n),
+        "doc_id": docs,
+        "tf": tfs,
     })
 
 

@@ -5,21 +5,27 @@ topk_search_batch):
 
     queries --analyze on the driver, against the cached lexicon-->
             (term_id -> [(qid, weight)], per-query term counts)
-    postings --filter to the query vocabulary, co-locate by shard-->
+    postings --filter to the query vocabulary (one IN expression),
+              co-locate by shard-->
             --per task: whole shards in groups of at most
-              SERVE_COLLECT_MAX_POSTINGS postings-->
-            --per group: one merged run per query term, ONE kernel per
-              query over the broadcast global doc-length array-->
+              SERVE_COLLECT_MAX_POSTINGS postings, as Arrow tables-->
+            --per group, ONE columnar pass: decode every row's docs_bin /
+              tfs_bin from the contiguous column buffers, score every
+              posting, slice one run per (query term, weight)-->
+            --ONE kernel per query over the broadcast global
+              doc-length array-->
             --k-merge (score desc, doc asc)-->  (qid, doc_id, score, rank)
 
 Kernels run in exactly two places: the serve path runs the group traversal
-(_traverse) on the driver over its resident posting cache, and
-topk_search_batch runs it executor-side in one mapInPandas pass. Every call
-the serve path declines (DataFrame query sets, indexes above the serve
-bounds, oversized fetches or merges) goes to topk_search_batch. Without the
-driver state posting rows carry their own shard's doc lengths and a group is
-one shard. profile_queries walks the same shard-sorted rows one shard at a
-time, with fresh runs per query so its decode counters stay per query.
+(_traverse) on the driver over runs built from its resident Arrow posting
+cache, and topk_search_batch runs it executor-side in one mapInArrow pass.
+Both build runs with the same group builder (_group_runs). Every call the
+serve path declines (DataFrame query sets, indexes above the serve bounds,
+oversized fetches or merges) goes to topk_search_batch. Without the driver
+state posting rows carry their own shard's doc lengths and a group is one
+shard. profile_queries walks the same shard-sorted rows one shard at a
+time, with fresh copies of the shard's runs per query so its decode
+counters stay per query.
 
 Per-group top-k + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
@@ -61,10 +67,14 @@ reference's unsafe mode.
 
 from __future__ import annotations
 
+import copy
 import itertools
+import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pisa_spark.config import IndexConfig
 from pisa_spark.functions.scoring import make_scorer
@@ -89,78 +99,32 @@ _ALGORITHM_ALIASES = {
 
 
 class _TermRun:
-    """One (shard, term) posting run: lazy block decoding + bounds, and the
-    float32 score contribution of every posting, computed on first use."""
+    """One query term's postings over a group of whole shards, in ascending
+    docIDs: a slice of the group's columnar decode (_group_runs) with the
+    float32 score contribution of every posting and the block bounds.
+    `decoded` records whether a kernel read the postings (decode_all),
+    which is what profile_queries counts as decoded."""
 
     __slots__ = ("term_id", "n", "base_doc", "last_doc", "blk_last",
-                 "doc_offs", "tf_offs", "blk_ub", "ub", "docs_bin", "tfs_bin",
-                 "df", "cf", "idf", "weight", "_docs", "_tfs", "_contribs",
-                 "codec")
+                 "blk_ub", "ub", "_docs", "_tfs", "_contribs", "decoded")
 
-    def __init__(self, row, scorer, stats, weight: float, weighted: bool,
-                 codec: str):
-        self.term_id = int(row.term_id)
-        self.n = int(row.n)
-        self.base_doc = int(row.base_doc)
-        self.last_doc = int(row.last_doc)
-        self.blk_last = np.asarray(row.block_last_docs, dtype=np.int64)
-        self.doc_offs = np.asarray(row.block_doc_offs, dtype=np.int64)
-        self.tf_offs = np.asarray(row.block_tf_offs, dtype=np.int64)
-        self.docs_bin = bytes(row.docs_bin)
-        self.tfs_bin = bytes(row.tfs_bin)
-        self.df = int(row.df)
-        self.cf = int(row.cf)
-        self.codec = codec
-        w = F32(weight) if weighted else F32(1.0)
-        self.weight = w
-        if scorer.separable:
-            self.idf = F32(scorer.idf(np.array([self.df]), stats["num_docs"])[0]) * w
-        else:
-            self.idf = w
-        self.blk_ub = (np.asarray(row.block_max_part, dtype=F32) * self.idf)
-        self.ub = F32(self.blk_ub.max()) if self.blk_ub.size else F32(0.0)
-        self._docs = None
-        self._tfs = None
-        self._contribs = None
-
-    @classmethod
-    def merged(cls, shard_runs: list) -> "_TermRun":
-        """One run over the term's postings across ALL shards (ascending
-        global docIDs): the serve path's whole-index traversal — the
-        reference's cursors walk one in-memory index, not one per shard
-        (tools/queries.cpp:279-340). Decodes each shard run once; block
-        metadata concatenates because blk_last/doc ids are absolute."""
-        runs = sorted(shard_runs, key=lambda r: r.base_doc)
-        r0 = runs[0]
-        self = cls.__new__(cls)
-        self.term_id = r0.term_id
-        self.codec = r0.codec
-        self.weight = r0.weight
-        self.df = r0.df
-        self.cf = r0.cf
-        self.idf = r0.idf
-        self.n = sum(r.n for r in runs)
-        self.base_doc = r0.base_doc
-        self.last_doc = runs[-1].last_doc
-        ds, ts = zip(*(r.decode_all() for r in runs))
-        self._docs = np.concatenate(ds)
-        self._tfs = np.concatenate(ts)
-        self._contribs = None
-        self.blk_last = np.concatenate([r.blk_last for r in runs])
-        self.blk_ub = np.concatenate([r.blk_ub for r in runs])
-        self.ub = F32(self.blk_ub.max()) if self.blk_ub.size else F32(0.0)
-        self.doc_offs = None
-        self.tf_offs = None
-        self.docs_bin = b""
-        self.tfs_bin = b""
-        return self
+    def __init__(self, term_id: int, base_doc: int, last_doc: int,
+                 docs: np.ndarray, tfs: np.ndarray, contribs: np.ndarray,
+                 blk_last: np.ndarray, blk_ub: np.ndarray):
+        self.term_id = term_id
+        self.n = int(docs.size)
+        self.base_doc = base_doc
+        self.last_doc = last_doc
+        self._docs = docs
+        self._tfs = tfs
+        self._contribs = contribs
+        self.blk_last = blk_last
+        self.blk_ub = blk_ub
+        self.ub = F32(blk_ub.max()) if blk_ub.size else F32(0.0)
+        self.decoded = False
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        if self._docs is None:
-            self._docs = codecs.decode_blocks(
-                self.codec, self.docs_bin, self.doc_offs, self.base_doc,
-                self.n)
-            self._tfs = codecs.decode_tfs(self.tfs_bin, self.n)
+        self.decoded = True
         return self._docs, self._tfs
 
     def blocks_overlapping(self, lo: int, hi: int) -> tuple[int, int]:
@@ -252,26 +216,10 @@ class _TermRun:
         out[mask] = self.blk_ub[idx[mask]]
         return out
 
-    def contrib(self, doc_ids: np.ndarray, scorer, stats,
-                doc_lens: np.ndarray, shard_base: int) -> np.ndarray:
-        """Actual score contribution for given docs (0 when absent).
-
-        The run scores ALL its postings once, on first use, and every later
-        call (every query sharing the run) is a searchsorted + gather. The
-        scorers are element-wise float32, so each contribution is
-        bit-identical to scoring only the requested docs. doc_lens/shard_base
-        must be the same on every call, which holds for a run's lifetime."""
-        docs, tfs = self.decode_all()
-        if self._contribs is None:
-            dl = doc_lens[docs - shard_base]
-            if scorer.separable:
-                self._contribs = self.idf * scorer.doc_part(
-                    tfs, dl, stats["avg_len"])
-            else:
-                self._contribs = self.weight * scorer.score(
-                    tfs, dl, df=self.df, cf=self.cf,
-                    num_docs=stats["num_docs"], avg_len=stats["avg_len"],
-                    collection_len=stats["collection_len"])
+    def contrib(self, doc_ids: np.ndarray) -> np.ndarray:
+        """Score contribution of the given docs (0 when absent): a gather
+        from the contributions scored once when the group was built."""
+        docs, _ = self.decode_all()
         idx = np.searchsorted(docs, doc_ids, "left")
         idx_c = np.minimum(idx, docs.size - 1)
         present = (docs.size > 0) & (docs[idx_c] == doc_ids) & (idx < docs.size)
@@ -280,13 +228,12 @@ class _TermRun:
         return out
 
 
-def _canonical_scores(doc_ids: np.ndarray, runs: list[_TermRun], scorer,
-                      stats, doc_lens: np.ndarray, shard_base: int) -> np.ndarray:
+def _canonical_scores(doc_ids: np.ndarray, runs: list[_TermRun]) -> np.ndarray:
     """Sum contributions in fixed ascending term_id order (float32) so every
     algorithm produces bit-identical scores for the same doc."""
     total = np.zeros(doc_ids.size, dtype=F32)
     for run in sorted(runs, key=lambda r: r.term_id):
-        total = total + run.contrib(doc_ids, scorer, stats, doc_lens, shard_base)
+        total = total + run.contrib(doc_ids)
     return total
 
 
@@ -347,7 +294,7 @@ def _conjunction_docs(runs: list[_TermRun], lo: int, hi: int) -> np.ndarray:
     return cand
 
 
-def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
+def _run_kernel(algorithm: str, runs: list[_TermRun], k: int,
                 doc_lens: np.ndarray, shard_base: int, range_span: int,
                 theta0: float, n_query_terms: int | None = None,
                 counters: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
@@ -367,8 +314,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
     if algorithm == "ranked_or":
         # exhaustive disjunction: one pass, no pruning
         all_docs = np.unique(np.concatenate([r.decode_all()[0] for r in runs]))
-        scores = _canonical_scores(all_docs, runs, scorer, stats, doc_lens,
-                                   shard_base)
+        scores = _canonical_scores(all_docs, runs)
         c["docs_scored"] += int(all_docs.size)
         pos = scores > 0  # reference finalize() drops <= 0 (topk_queue.hpp:77)
         topk.merge(all_docs[pos], scores[pos])
@@ -479,7 +425,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                 continue
             partial = np.zeros(cand.size, dtype=F32)
             for run in ess:
-                partial += run.contrib(cand, scorer, stats, doc_lens, shard_base)
+                partial += run.contrib(cand)
             noness_sorted = sorted(noness, key=lambda p: -p[1])
             if algorithm == "block_max_maxscore":
                 # per-doc refinement: bound each candidate's remaining
@@ -497,8 +443,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                 for i, (run, _) in enumerate(noness_sorted):
                     if cand.size == 0:
                         break
-                    partial += run.contrib(cand, scorer, stats, doc_lens,
-                                           shard_base)
+                    partial += run.contrib(cand)
                     rem = rem - nb[i]
                     keep = partial + rem >= prune
                     cand, partial, rem = cand[keep], partial[keep], rem[keep]
@@ -510,8 +455,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                 for run, ub in noness_sorted:
                     if cand.size == 0:
                         break
-                    partial += run.contrib(cand, scorer, stats, doc_lens,
-                                           shard_base)
+                    partial += run.contrib(cand)
                     remaining = F32(remaining - ub)
                     keep = partial + remaining >= prune
                     cand, partial = cand[keep], partial[keep]
@@ -520,8 +464,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
 
         if cand.size == 0:
             continue
-        scores = _canonical_scores(cand, runs, scorer, stats, doc_lens,
-                                   shard_base)
+        scores = _canonical_scores(cand, runs)
         c["docs_scored"] += int(cand.size)
         keep = (scores >= topk.theta) & (scores > 0)
         topk.merge(cand[keep], scores[keep])
@@ -545,8 +488,7 @@ def _run_kernel(algorithm: str, runs: list[_TermRun], k: int, scorer, stats,
                               else run.doc_term_ub(cand))
                 cand = cand[bound >= prune]
             if cand.size:
-                scores = _canonical_scores(cand, runs, scorer, stats,
-                                           doc_lens, shard_base)
+                scores = _canonical_scores(cand, runs)
                 c["docs_scored"] += int(cand.size)
                 keep = (scores >= topk.theta) & (scores > 0)
                 topk.merge(cand[keep], scores[keep])
@@ -620,87 +562,146 @@ class _QueryPlan:
                 self.add(qid, term, *meta, w)
         return self
 
-    def attach_meta(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        """term_id/df/cf columns for fetched posting rows."""
-        if "term" in pdf.columns:
-            pdf = pdf.assign(
-                term_id=pdf["term"].map(self.tid_of_term)).drop(columns=["term"])
-        ids = pdf["term_id"]
-        return pdf.assign(df=ids.map(lambda t: self.term_stats[int(t)][0]),
-                          cf=ids.map(lambda t: self.term_stats[int(t)][1]))
+
+def _binary_rows(col) -> tuple[np.ndarray, np.ndarray]:
+    """(data, row byte offsets) of a one-chunk Arrow binary column: the
+    column's own contiguous buffer, read without a copy."""
+    arr = col.chunk(0)
+    _, offs, data = arr.buffers()
+    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    row_offs = np.frombuffer(offs, dtype=width,
+                             count=arr.offset + len(arr) + 1)[arr.offset:]
+    return np.frombuffer(data, dtype=np.uint8), row_offs
 
 
-def _partial_frame(qids: list, docs: list, scores: list) -> pd.DataFrame:
-    """(qid, doc_id, score) rows from per-query kernel outputs."""
-    if not qids:
-        return pd.DataFrame({"qid": pd.Series(dtype=object),
-                             "doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float32")})
-    return pd.DataFrame({"qid": np.concatenate(qids),
-                         "doc_id": np.concatenate(docs).astype(np.int64),
-                         "score": np.concatenate(scores).astype(np.float32)})
+def _list_rows(col) -> tuple[np.ndarray, np.ndarray]:
+    """(values, per-row offsets into values) of a one-chunk Arrow list
+    column."""
+    arr = col.chunk(0)
+    offs = arr.offsets.to_numpy()
+    return arr.flatten().to_numpy(), offs - offs[0]
 
 
-def _traverse(term_rows: dict[int, list], plan: _QueryPlan,
-              doc_lens: np.ndarray, base: int,
-              run_cache: dict | None = None) -> pd.DataFrame:
+def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
+                base: int) -> dict[tuple[int, float], _TermRun]:
+    """Decode and score one group of posting rows in one columnar pass,
+    then slice it into one run per (term_id, weight) key of `plan`: the
+    term's rows over the group's shards, in ascending shard order.
+
+    docs_bin and tfs_bin are read as one contiguous buffer each
+    (codecs.decode_many), and every posting's bm25 doc part is ONE scorer
+    call over the group. A key's contributions are its float32
+    idf * weight, computed per term, times that doc part: the grouping
+    the kernels have always scored with, so the scores are bit-identical
+    to scoring each row alone. Non-separable scorers make one
+    scorer.score call per key. doc_lens is indexed from docID `base`.
+    Keys come in the order their terms first appear in `table`."""
+    if not table.num_rows:
+        return {}
+    if "term" in table.column_names:
+        vocab = pa.array(list(plan.tid_of_term), pa.string())
+        tid_at = np.fromiter(plan.tid_of_term.values(), dtype=np.int64,
+                             count=len(vocab))
+        tids = tid_at[pc.index_in(table["term"], value_set=vocab).to_numpy()]
+    else:
+        tids = table["term_id"].to_numpy()
+    uniq, first = np.unique(tids, return_index=True)
+    order = np.lexsort((table["base_doc"].to_numpy(), tids))
+    table = table.take(order).combine_chunks()
+    tids = tids[order]
+    n = table["n"].to_numpy()
+    bases = table["base_doc"].to_numpy()
+    lasts = table["last_doc"].to_numpy()
+    docs = codecs.decode_many(plan.codec, *_binary_rows(table["docs_bin"]),
+                              _list_rows(table["block_doc_offs"]), bases, n)
+    tfs = codecs.decode_tfs_many(*_binary_rows(table["tfs_bin"]), n)
+    blk_last, b_off = _list_rows(table["block_last_docs"])
+    blk_part, _ = _list_rows(table["block_max_part"])
+    p_off = np.concatenate(([0], np.cumsum(n)))
+    dl = doc_lens[docs - base]
+    scorer, stats = plan.scorer, plan.stats
+    if scorer.separable:
+        part = scorer.doc_part(tfs, dl, stats["avg_len"])
+    row_lo = np.searchsorted(tids, uniq)  # each term's rows: [lo, hi)
+    row_hi = np.append(row_lo[1:], tids.size)
+    runs: dict[tuple[int, float], _TermRun] = {}
+    for i in np.argsort(first).tolist():
+        tid, r0, r1 = int(uniq[i]), row_lo[i], row_hi[i]
+        p0, p1, b0, b1 = p_off[r0], p_off[r1], b_off[r0], b_off[r1]
+        df, cf = plan.term_stats[tid]
+        if scorer.separable:
+            idf = F32(scorer.idf(np.array([df]), stats["num_docs"])[0])
+        for _, w in plan.term_queries.get(tid, ()):
+            key = (tid, w if plan.weighted else 1.0)
+            if key in runs:
+                continue
+            wf = F32(key[1])
+            if scorer.separable:
+                scale = idf * wf
+                contribs = scale * part[p0:p1]
+            else:
+                scale = wf
+                contribs = wf * scorer.score(
+                    tfs[p0:p1], dl[p0:p1], df=df, cf=cf,
+                    num_docs=stats["num_docs"], avg_len=stats["avg_len"],
+                    collection_len=stats["collection_len"])
+            runs[key] = _TermRun(tid, int(bases[r0]), int(lasts[r1 - 1]),
+                                 docs[p0:p1], tfs[p0:p1], contribs,
+                                 blk_last[b0:b1], blk_part[b0:b1] * scale)
+    return runs
+
+
+def _traverse(runs: dict[tuple[int, float], _TermRun], plan: _QueryPlan,
+              doc_lens: np.ndarray, base: int
+              ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Answer every query of `plan` over one group of whole shards.
 
-    term_rows maps a term_id to its posting rows in the group. Each query
-    term's shard runs merge into ONE run over the group's docIDs, keyed
-    (term_id, weight): its block decode and float32 contributions happen
-    once, shared by every query using the term. Then ONE kernel per query
-    runs over doc_lens (indexed from docID `base`) — the reference's
-    single cursor walk per query (tools/queries.cpp:279-340), not one
-    kernel per (query, shard). run_cache, when given, keeps the merged
-    runs across calls (the serve cache)."""
-    runs = run_cache if run_cache is not None else {}
+    runs holds one run per (term_id, weight) key over the group's docIDs
+    (_group_runs): its decode and float32 contributions happened once,
+    shared by every query using the term. ONE kernel per query runs over
+    doc_lens (indexed from docID `base`) — the reference's single cursor
+    walk per query (tools/queries.cpp:279-340), not one kernel per
+    (query, shard). Returns the (qid, doc_id, score) columns of every
+    query's partial top-k."""
     by_query: dict[str, list] = {}
-    for tid, rows in term_rows.items():
-        if not rows:
-            continue
+    for tid in dict.fromkeys(tid for tid, _ in runs):
         for qid, w in plan.term_queries.get(tid, ()):
-            key = (tid, w if plan.weighted else 1.0)
-            run = runs.get(key)
-            if run is None:
-                shard_runs = [_TermRun(r, plan.scorer, plan.stats, key[1],
-                                       plan.weighted, plan.codec)
-                              for r in rows]
-                run = runs[key] = (shard_runs[0] if len(shard_runs) == 1
-                                   else _TermRun.merged(shard_runs))
-            by_query.setdefault(qid, []).append(run)
+            by_query.setdefault(qid, []).append(
+                runs[(tid, w if plan.weighted else 1.0)])
     out_q, out_d, out_s = [], [], []
     for qid, qruns in by_query.items():
         docs, scores = _run_kernel(
-            plan.algorithm, qruns, plan.k, plan.scorer, plan.stats, doc_lens,
-            base, plan.range_span, float(plan.thresholds.get(qid, 0.0)),
+            plan.algorithm, qruns, plan.k, doc_lens, base, plan.range_span,
+            float(plan.thresholds.get(qid, 0.0)),
             n_query_terms=plan.n_terms.get(qid))
         out_q.append(np.repeat(qid, docs.size))
         out_d.append(docs)
         out_s.append(scores)
-    return _partial_frame(out_q, out_d, out_s)
+    if not out_q:
+        return (np.zeros(0, dtype=object), np.zeros(0, dtype=np.int64),
+                np.zeros(0, dtype=F32))
+    return (np.concatenate(out_q), np.concatenate(out_d).astype(np.int64),
+            np.concatenate(out_s).astype(F32))
 
 
 def _shard_groups(batches, budget: int):
-    """Cut a shard-sorted stream of posting-row batches into groups of
-    WHOLE shards holding at most `budget` postings each; a shard above the
-    budget is a group of its own (budget 0: one shard per group)."""
+    """Cut a shard-sorted stream of posting-row record batches into groups
+    (pyarrow Tables) of WHOLE shards holding at most `budget` postings
+    each; a shard above the budget is a group of its own (budget 0: one
+    shard per group)."""
 
     def pieces():
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            sid = pdf["shard_id"].to_numpy()
+            sid = rb.column("shard_id").to_numpy()
             starts = np.flatnonzero(
                 np.concatenate(([True], sid[1:] != sid[:-1])))
             ends = np.append(starts[1:], sid.size)
-            sizes = np.add.reduceat(pdf["n"].to_numpy(), starts)
-            for s, e, n in zip(starts, ends, sizes):
-                yield int(sid[s]), pdf.iloc[s:e], int(n)
-
-    def concat(parts):
-        return parts[0] if len(parts) == 1 else pd.concat(parts,
-                                                          ignore_index=True)
+            sizes = np.add.reduceat(rb.column("n").to_numpy(), starts)
+            for s, e, n in zip(starts.tolist(), ends.tolist(),
+                               sizes.tolist()):
+                yield int(sid[s]), rb.slice(s, e - s), n
 
     group, group_n = [], 0
     shard, shard_n, shard_id = [], 0, None
@@ -712,52 +713,72 @@ def _shard_groups(batches, budget: int):
             continue
         if shard:
             if group and group_n + shard_n > budget:
-                yield concat(group)
+                yield pa.Table.from_batches(group)
                 group, group_n = [], 0
             group += shard
             group_n += shard_n
         shard, shard_n, shard_id = [piece], n, sid
     if group:
-        yield concat(group)
+        yield pa.Table.from_batches(group)
+
+
+def _group_doc_lens(table: pa.Table) -> tuple[np.ndarray, int]:
+    """(doc_lens, base) carried by a one-shard group of shard-joined rows."""
+    return (table["doc_lens"][0].values.to_numpy(),
+            table["shard_base"][0].as_py())
 
 
 def _traverse_partitions(plan: _QueryPlan, doc_lens_bc):
-    """mapInPandas body of the executor-side traversal (topk_search_batch).
+    """mapInArrow body of the executor-side traversal (topk_search_batch).
     Rows arrive co-located and sorted by shard. Each task walks its shards
-    in groups bounded by SERVE_COLLECT_MAX_POSTINGS, one _traverse per
-    group over the broadcast global doc-length array. Without that array
-    (doc_lens_bc None: rows carry their own shard's doc_lens and
-    shard_base) a group is one shard."""
+    in groups bounded by SERVE_COLLECT_MAX_POSTINGS, decodes each group in
+    one columnar pass (_group_runs) and traverses it over the broadcast
+    global doc-length array. Without that array (doc_lens_bc None: rows
+    carry their own shard's doc_lens and shard_base) a group is one
+    shard."""
     budget = SERVE_COLLECT_MAX_POSTINGS if doc_lens_bc is not None else 0
 
     def run(batches):
         gdl = doc_lens_bc.value if doc_lens_bc is not None else None
-        for pdf in _shard_groups(batches, budget):
-            pdf = plan.attach_meta(pdf)
-            if gdl is None:
-                doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-                base = int(pdf["shard_base"].iat[0])
-            else:
-                doc_lens, base = gdl, 0
-            term_rows: dict[int, list] = {}
-            for row in pdf.itertuples(index=False):
-                term_rows.setdefault(int(row.term_id), []).append(row)
-            yield _traverse(term_rows, plan, doc_lens, base)
+        for table in _shard_groups(batches, budget):
+            doc_lens, base = ((gdl, 0) if gdl is not None
+                              else _group_doc_lens(table))
+            qids, docs, scores = _traverse(
+                _group_runs(table, plan, doc_lens, base), plan, doc_lens, base)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(qids, pa.string()), pa.array(docs),
+                 pa.array(scores)], names=["qid", "doc_id", "score"])
 
     return run
+
+
+def _in_values(column: str, values: list):
+    """The predicate `column IN (values)` as ONE SQL expression string.
+    Column.isin makes a py4j round trip per value; one expression is one
+    call and plans the same In/InSet filter. Strings are quoted with their
+    backslashes and single quotes escaped; integers are bigint literals."""
+    from pyspark.sql import functions as F
+
+    if not values:
+        return F.lit(False)
+
+    def literal(v):
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return f"{int(v)}L"
+
+    return F.expr(f"{column} IN ({', '.join(map(literal, values))})")
 
 
 def _term_postings(index, plan: _QueryPlan, terms: list[str]):
     """Posting rows of `terms`. Prefers the string-keyed rows: the id-keyed
     postings view is a lazy broadcast join whose lexicon broadcast would be
     rebuilt on EVERY query job (~350 ms/query measured at 60k docs)."""
-    from pyspark.sql import functions as F
-
     enc_str = getattr(index, "postings_str", None)
     if enc_str is not None:
-        return enc_str.filter(F.col("term").isin(terms))
+        return enc_str.filter(_in_values("term", terms))
     return index.postings.filter(
-        F.col("term_id").isin([plan.tid_of_term[t] for t in terms]))
+        _in_values("term_id", [plan.tid_of_term[t] for t in terms]))
 
 
 def _global_doc_lens(shards: list) -> np.ndarray | None:
@@ -783,12 +804,18 @@ class _ServeState:
     evaluating anything: load the term lexicon and document sizes into
     memory and mmap the index (tools/queries.cpp:279-340). Here the
     "mmap" is a lazily-populated per-term cache of encoded posting rows
+    (rows_by_term: term -> that term's Arrow rows over every shard)
     fetched from the distributed index (one column-pruned job per group of
     first-seen terms), bounded by SERVE_CACHE_MAX_POSTINGS with FIFO
-    eviction."""
+    eviction.
+
+    One lock guards the cache: the prefetch, every fetch, eviction and
+    run building hold it, so concurrent callers share one state. Kernels
+    run outside it, over the runs a call took from term_runs."""
 
     __slots__ = ("tmeta", "global_doc_lens", "bc_doc_lens", "n_shards",
-                 "rows_by_term", "cached_postings", "complete", "term_runs")
+                 "rows_by_term", "cached_postings", "complete", "term_runs",
+                 "lock")
 
     def __init__(self, tmeta, global_doc_lens, bc_doc_lens, n_shards):
         self.tmeta = tmeta
@@ -797,18 +824,23 @@ class _ServeState:
         self.global_doc_lens = global_doc_lens
         self.bc_doc_lens = bc_doc_lens
         self.n_shards = n_shards
-        self.rows_by_term: dict[str, dict] = {}
+        self.rows_by_term: dict[str, pa.Table] = {}
         self.cached_postings = 0
         # True when the ENTIRE index's posting rows are resident (small
         # indexes prefetch at state build, the reference's load-up-front
         # model) — per-query fetch jobs and eviction are then skipped.
         self.complete = False
-        # merged _TermRun reuse across calls, keyed (term_id, weight): a
-        # run is immutable except its lazily-computed decode and
-        # contributions, so repeat terms skip both — the reference's
-        # cursors likewise read the same in-memory lists on every query.
-        # Evicted together with rows_by_term.
+        # _TermRun reuse across calls, keyed (term_id, weight): a run is
+        # immutable once built, so repeat terms skip the decode and the
+        # scoring — the reference's cursors likewise read the same
+        # in-memory lists on every query. Evicted together with
+        # rows_by_term.
         self.term_runs: dict[tuple[int, float], _TermRun] = {}
+        self.lock = threading.Lock()
+
+
+# builds each index's _ServeState once under concurrent first calls
+_SERVE_STATE_LOCK = threading.Lock()
 
 
 def _serve_state(index, prefetch: bool = True):
@@ -822,22 +854,26 @@ def _serve_state(index, prefetch: bool = True):
     its kernels executor-side and never reads the driver row cache, so
     it must not pay the whole-index posting fetch. The prefetch runs
     lazily on the first interactive-serve use instead."""
-    cached = getattr(index, "_serve_state", None)
-    if cached is not None:
-        if cached is False:
-            return None
-        if prefetch:
-            _serve_prefetch(index, cached)
-        return cached
+    with _SERVE_STATE_LOCK:
+        st = getattr(index, "_serve_state", None)
+        if st is None:
+            st = index._serve_state = _build_serve_state(index) or False
+    if st is False:
+        return None
+    if prefetch:
+        with st.lock:
+            _serve_prefetch(index, st)
+    return st
+
+
+def _build_serve_state(index) -> _ServeState | None:
     spark = index.lexicon.sparkSession
     if index.stats.get("num_docs", 1 << 62) > SERVE_MAX_DOCS:
-        index._serve_state = False
         return None
     cap = index.cfg.lexicon_broadcast_max
     rows = (index.lexicon.select("term", "term_id", "df", "cf")
             .limit(cap + 1).collect())
     if len(rows) > cap:
-        index._serve_state = False
         return None
     tmeta = {r["term"]: (int(r["term_id"]), int(r["df"]), int(r["cf"]))
              for r in rows}
@@ -845,14 +881,31 @@ def _serve_state(index, prefetch: bool = True):
               for r in index.shards.select("base_doc", "doc_lens").collect()]
     gdl = _global_doc_lens(shards)
     if gdl is None:
-        index._serve_state = False
         return None
-    st = _ServeState(tmeta, gdl, spark.sparkContext.broadcast(gdl),
-                     len(shards))
-    index._serve_state = st
-    if prefetch:
-        _serve_prefetch(index, st)
-    return st
+    return _ServeState(tmeta, gdl, spark.sparkContext.broadcast(gdl),
+                       len(shards))
+
+
+def _rows_by_term(table: pa.Table, term_of_id: dict[int, str]
+                  ) -> dict[str, pa.Table]:
+    """Posting rows split into one table per term: zero-copy slices of
+    one term-sorted copy. Rows keyed by term_id name their term through
+    term_of_id."""
+    if not table.num_rows:
+        return {}
+    key = "term" if "term" in table.column_names else "term_id"
+    table = table.sort_by(key)
+    keys = table[key].to_numpy()
+    starts = np.flatnonzero(np.concatenate(([True], keys[1:] != keys[:-1])))
+    names = keys[starts].tolist()
+    if key == "term_id":
+        names = [term_of_id[i] for i in names]
+    return {t: table.slice(s, e - s) for t, s, e in zip(
+        names, starts.tolist(), np.append(starts[1:], keys.size).tolist())}
+
+
+def _postings_in(table: pa.Table) -> int:
+    return int(pc.sum(table["n"]).as_py() or 0)
 
 
 def _serve_prefetch(index, st) -> None:
@@ -862,31 +915,60 @@ def _serve_prefetch(index, st) -> None:
     query (tools/queries.cpp:279-340). Per-query serve latency then never
     pays a Spark job: first-seen terms are already resident. No-op when
     already complete or when the index exceeds the budget (the lazy
-    bounded per-term cache handles those)."""
+    bounded per-term cache handles those). The caller holds st.lock."""
     if st.complete:
         return
-    tmeta = st.tmeta
-    total_postings = sum(m[1] for m in tmeta.values())
+    total_postings = sum(m[1] for m in st.tmeta.values())
     if total_postings > SERVE_CACHE_MAX_POSTINGS:
         return
     src = getattr(index, "postings_str", None)
-    pdf = (src if src is not None else index.postings).toPandas()
-    if "term" in pdf.columns:
-        pdf = pdf.assign(
-            term_id=pdf["term"].map(lambda t: tmeta[t][0]))
-    else:
-        id2term = {m[0]: t for t, m in tmeta.items()}
-        pdf = pdf.assign(term=pdf["term_id"].map(id2term))
-    id2meta = {m[0]: (m[1], m[2]) for m in tmeta.values()}
-    pdf = pdf.assign(
-        df=pdf["term_id"].map(lambda t: id2meta[int(t)][0]),
-        cf=pdf["term_id"].map(lambda t: id2meta[int(t)][1]))
-    terms_np = pdf["term"].to_numpy()
-    pdf = pdf.drop(columns=["term"])
-    for t, row in zip(terms_np, pdf.itertuples(index=False)):
-        st.rows_by_term.setdefault(t, {})[int(row.shard_id)] = row
+    st.rows_by_term = _rows_by_term(
+        (src if src is not None else index.postings).toArrow(),
+        {m[0]: t for t, m in st.tmeta.items()})
     st.cached_postings = total_postings
     st.complete = True
+
+
+def _serve_fetch(index, st, plan: _QueryPlan, missing: list[str]) -> None:
+    """Fetch the rows of first-seen terms (one job) into the cache, then
+    evict the oldest terms not in this query (FIFO) until the cache fits
+    SERVE_CACHE_MAX_POSTINGS. The caller holds st.lock."""
+    fetched = _term_postings(index, plan, missing).toArrow()
+    by_term = _rows_by_term(fetched,
+                            {plan.tid_of_term[t]: t for t in missing})
+    for t in missing:
+        # a copy: a slice would keep the whole fetched table resident
+        # until every term of this fetch is evicted
+        rows = by_term.get(t, fetched.slice(0, 0))
+        rows = st.rows_by_term[t] = rows.take(np.arange(rows.num_rows))
+        st.cached_postings += _postings_in(rows)
+    current = set(plan.tid_of_term)
+    while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
+        victim = next((t for t in st.rows_by_term if t not in current), None)
+        if victim is None:
+            break
+        st.cached_postings -= _postings_in(st.rows_by_term.pop(victim))
+        vtid = st.tmeta[victim][0]
+        for key in [key for key in st.term_runs if key[0] == vtid]:
+            del st.term_runs[key]
+
+
+def _serve_runs(st, plan: _QueryPlan) -> dict[tuple[int, float], _TermRun]:
+    """The runs of every query term of `plan` over the whole index: the
+    ones not yet in st.term_runs are built from the cached rows as one
+    group. The caller holds st.lock."""
+    keys = {tid: [(tid, w if plan.weighted else 1.0)
+                  for _, w in plan.term_queries[tid]]
+            for tid in plan.tid_of_term.values()}
+    build = [t for t, tid in plan.tid_of_term.items()
+             if any(key not in st.term_runs for key in keys[tid])]
+    if build:
+        st.term_runs.update(_group_runs(
+            pa.concat_tables([st.rows_by_term[t] for t in build],
+                             promote_options="default"),
+            plan, st.global_doc_lens, 0))
+    return {key: st.term_runs[key] for ks in keys.values() for key in ks
+            if key in st.term_runs}
 
 
 def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
@@ -900,9 +982,10 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
     terms resolve against the driver-cached lexicon (no job), and the
     posting rows for the query vocabulary are fetched in ONE column-pruned
     job into the per-term serve cache (repeat terms: zero jobs) — then one
-    _traverse runs the kernels driver-side over the cached rows, exactly as
-    the reference runs them over its mmap'd index. Same kernels and float32
-    scores as topk_search_batch, so the ranking is identical.
+    _traverse runs the kernels driver-side over the cached runs, exactly
+    as the reference runs them over its mmap'd index. Same run builder,
+    kernels and float32 scores as topk_search_batch, so the ranking is
+    identical.
 
     Returns None when the index/meta exceeds the serve bounds, when the
     per-query merge would exceed SERVE_MAX_PARTIAL_ROWS, or when the
@@ -919,38 +1002,16 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
         return None
 
     out_schema = "qid string, doc_id long, score float, rank int"
-    terms = list(plan.tid_of_term)
-    missing = ([] if st.complete else
-               [t for t in terms if t not in st.rows_by_term])
-    if sum(st.tmeta[t][1] for t in missing) > SERVE_COLLECT_MAX_POSTINGS:
-        return None
-    if missing:
-        # fetch first-seen terms' rows (one job; zero when all cached)
-        fetched = plan.attach_meta(
-            _term_postings(index, plan, missing).toPandas())
-        id2term = {plan.tid_of_term[t]: t for t in missing}
-        for t in missing:
-            st.rows_by_term[t] = {}
-        for row in fetched.itertuples(index=False):
-            t = id2term[int(row.term_id)]
-            st.rows_by_term[t][int(row.shard_id)] = row
-        st.cached_postings += int(fetched["n"].sum()) if len(fetched) else 0
-        # FIFO eviction: drop oldest terms not in this query
-        current = set(terms)
-        while st.cached_postings > SERVE_CACHE_MAX_POSTINGS:
-            victim = next((t for t in st.rows_by_term
-                           if t not in current), None)
-            if victim is None:
-                break
-            rows = st.rows_by_term.pop(victim)
-            st.cached_postings -= sum(int(r.n) for r in rows.values())
-            vtid = st.tmeta[victim][0]
-            for key in [key for key in st.term_runs if key[0] == vtid]:
-                del st.term_runs[key]
-    partial = _traverse(
-        {tid: list(st.rows_by_term.get(t, {}).values())
-         for t, tid in plan.tid_of_term.items()},
-        plan, st.global_doc_lens, 0, run_cache=st.term_runs)
+    with st.lock:
+        missing = ([] if st.complete else
+                   [t for t in plan.tid_of_term if t not in st.rows_by_term])
+        if sum(st.tmeta[t][1] for t in missing) > SERVE_COLLECT_MAX_POSTINGS:
+            return None
+        if missing:
+            _serve_fetch(index, st, plan, missing)
+        runs = _serve_runs(st, plan)
+    partial = pd.DataFrame(dict(zip(("qid", "doc_id", "score"), _traverse(
+        runs, plan, st.global_doc_lens, 0))))
 
     if len(partial):
         # driver-side k-merge of the per-query partials — same
@@ -1030,7 +1091,7 @@ def _shard_postings(index, queries, plan: _QueryPlan,
             plan.add(r["qid"], r["term"], int(r["term_id"]), int(r["df"]),
                      int(r["cf"]), r["weight"])
         posts = index.postings.filter(
-            F.col("term_id").isin(list(plan.term_stats)))
+            _in_values("term_id", list(plan.term_stats)))
     doc_lens_bc = st.bc_doc_lens if st is not None and not per_shard else None
     if doc_lens_bc is None:
         posts = posts.join(index.shards.select(
@@ -1065,23 +1126,25 @@ def topk_search_batch(index, queries: list[str] | object, k: int = 10,
     query set ships with the task, and the postings are filtered to the
     query vocabulary and co-located by shard, so a hot term's posting row
     is read once, not once per query using it. Each task then traverses
-    its shards in groups of at most SERVE_COLLECT_MAX_POSTINGS postings:
-    per group, every query term's shard runs merge into one run, scored
-    once and shared by all queries using the term, and ONE kernel per
-    query walks the group over the broadcast global doc-length array — the
-    reference's evaluate_queries shape (parallel over queries, shared
-    mmap'd index, evaluate_queries.cpp:154-156). Without the driver serve
-    state (index above its bounds, DataFrame query sets) rows carry their
-    own shard's doc lengths and a group is one shard: one kernel per
-    (query, shard). Results are identical to the serve path (same
-    kernels, same float32 scores).
+    its shards in mapInArrow, in groups of at most
+    SERVE_COLLECT_MAX_POSTINGS postings: per group, one columnar pass
+    decodes every posting row from the contiguous Arrow buffers and scores
+    every posting, each query term's rows become one run shared by all
+    queries using the term, and ONE kernel per query walks the group over
+    the broadcast global doc-length array — the reference's
+    evaluate_queries shape (parallel over queries, shared mmap'd index,
+    evaluate_queries.cpp:154-156). Without the driver serve state (index
+    above its bounds, DataFrame query sets) rows carry their own shard's
+    doc lengths and a group is one shard: one kernel per (query, shard).
+    Results are identical to the serve path (same run builder, kernels
+    and float32 scores).
     """
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     plan = _QueryPlan(index, algorithm, k, weighted, range_span, thresholds)
     posts, doc_lens_bc = _shard_postings(index, queries, plan)
     ranked = _rank_per_query(
-        posts.mapInPandas(_traverse_partitions(plan, doc_lens_bc),
-                          schema=TOPK_PARTIAL_SCHEMA), k)
+        posts.mapInArrow(_traverse_partitions(plan, doc_lens_bc),
+                         schema=TOPK_PARTIAL_SCHEMA), k)
     if not with_urls:
         return ranked
     return (ranked.join(index.docs.select("doc_id", "url"), "doc_id")
@@ -1094,38 +1157,39 @@ PROFILE_SCHEMA = ("qid string, shard_id long, postings_decoded long, "
 
 
 def _profile_partitions(plan: _QueryPlan):
-    """mapInPandas body of profile_queries over shard-joined rows: one
-    shard at a time, one counted kernel per query. Every (query, shard)
-    builds fresh runs, so the decode counts read off them belong to that
-    query alone — a run shared across queries stays decoded, and every
-    later query would count decodes it never did."""
+    """mapInArrow body of profile_queries over shard-joined rows: one
+    shard at a time, decoded once (_group_runs), one counted kernel per
+    query. Every (query, shard) gets fresh copies of the shard's runs, so
+    the decode counts read off them belong to that query alone — a run
+    shared across queries stays read, and every later query would count
+    decodes it never did."""
     columns = [f.split()[0] for f in PROFILE_SCHEMA.split(", ")]
 
     def run(batches):
-        for pdf in _shard_groups(batches, 0):
-            pdf = plan.attach_meta(pdf)
-            shard_id = int(pdf["shard_id"].iat[0])
-            doc_lens = np.asarray(pdf["doc_lens"].iat[0], dtype=np.int64)
-            base = int(pdf["shard_base"].iat[0])
+        for table in _shard_groups(batches, 0):
+            shard_id = table["shard_id"][0].as_py()
+            doc_lens, base = _group_doc_lens(table)
             by_query: dict[str, list] = {}
-            for row in pdf.itertuples(index=False):
-                for qid, w in plan.term_queries.get(int(row.term_id), ()):
-                    by_query.setdefault(qid, []).append(_TermRun(
-                        row, plan.scorer, plan.stats, w, plan.weighted,
-                        plan.codec))
+            for (tid, _), shared in _group_runs(table, plan, doc_lens,
+                                                base).items():
+                for qid, _ in plan.term_queries.get(tid, ()):
+                    fresh = copy.copy(shared)
+                    fresh.decoded = False
+                    by_query.setdefault(qid, []).append(fresh)
             out = []
             for qid, runs in by_query.items():
                 c: dict = {}
-                _run_kernel(plan.algorithm, runs, plan.k, plan.scorer,
-                            plan.stats, doc_lens, base, plan.range_span, 0.0,
+                _run_kernel(plan.algorithm, runs, plan.k, doc_lens, base,
+                            plan.range_span, 0.0,
                             n_query_terms=plan.n_terms.get(qid), counters=c)
-                decoded = [r for r in runs if r._docs is not None]
+                decoded = [r for r in runs if r.decoded]
                 out.append((qid, shard_id, sum(r.n for r in decoded),
                             sum(int(r.blk_last.size) for r in decoded),
                             c["docs_scored"], c["ranges"],
                             c["ranges_skipped"]))
             if out:
-                yield pd.DataFrame(out, columns=columns)
+                yield pa.RecordBatch.from_pandas(
+                    pd.DataFrame(out, columns=columns), preserve_index=False)
 
     return run
 
@@ -1149,7 +1213,7 @@ def profile_queries(index, queries: list[str] | object, k: int = 10,
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     plan = _QueryPlan(index, algorithm, k, False, range_span, None)
     posts, _ = _shard_postings(index, queries, plan, per_shard=True)
-    return posts.mapInPandas(_profile_partitions(plan), schema=PROFILE_SCHEMA)
+    return posts.mapInArrow(_profile_partitions(plan), schema=PROFILE_SCHEMA)
 
 
 def _corpus_tf(docs_df, id_col: str, text_col: str):

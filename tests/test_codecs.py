@@ -250,6 +250,53 @@ def test_varint_count_mismatch_raises():
         varint_decode(varint_encode(np.array([1, 2], dtype=np.uint64)), 3)
 
 
+@given(st.lists(st.lists(st.integers(1, 2**40), min_size=0, max_size=40),
+                min_size=0, max_size=12))
+@settings(max_examples=60, deadline=None)
+def test_decode_many_varint_rows(rows):
+    """decode_many / decode_tfs_many over many joined varint rows equal
+    decoding each row alone (docs restart at each row's base)."""
+    from pisa_spark.operators.codecs import (decode_many, decode_tfs_many,
+                                             join_rows)
+
+    rng = np.random.default_rng(len(rows))
+    bases = rng.integers(-1, 1000, size=len(rows))
+    docs = [b + np.cumsum(np.array(r, dtype=np.int64))
+            for r, b in zip(rows, bases)]
+    n = np.array([d.size for d in docs], dtype=np.int64)
+    data, offs = join_rows([encode_gap_stream(d, int(b), "varint")
+                            for d, b in zip(docs, bases)])
+    empty = (np.zeros(0, dtype=np.int64), np.zeros(len(rows) + 1, np.int64))
+    got = decode_many("varint", data, offs, empty, bases, n)
+    want = np.concatenate(docs + [np.zeros(0, dtype=np.int64)])
+    assert got.dtype == np.int64 and (got == want).all()
+    tf_data, tf_offs = join_rows([encode_tfs(np.array(r, dtype=np.int64))
+                                  for r in rows])
+    tfs = decode_tfs_many(tf_data, tf_offs, n)
+    assert (tfs == np.concatenate(
+        [np.array(r, dtype=np.int64) for r in rows] + [want[:0]])).all()
+
+
+def test_decode_many_rejects_rows_off_value_boundary():
+    """Each varint row must hold exactly n values and end on a value
+    boundary: a value that runs into the next row raises even when every
+    row's count of complete values looks right."""
+    from pisa_spark.operators.codecs import decode_many, decode_tfs_many
+
+    data = np.frombuffer(bytes([0x01, 0xAC, 0x02, 0x05]), dtype=np.uint8)
+    empty = (np.zeros(0, dtype=np.int64), np.zeros(3, dtype=np.int64))
+    whole = np.array([0, 3, 4])
+    assert (decode_many("varint", data, whole, empty, [0, 0], [2, 1])
+            == [2, 303, 6]).all()
+    for offs, n in (([0, 2, 4], [1, 2]),   # 0xAC 0x02 straddles rows
+                    ([0, 3, 4], [1, 1]),   # row 0 holds 2 values, not 1
+                    ([0, 3, 3], [2, 1])):  # row 1 is cut
+        with pytest.raises(ValueError, match="expected"):
+            decode_many("varint", data, np.array(offs), empty, [0, 0], n)
+        with pytest.raises(ValueError, match="expected"):
+            decode_tfs_many(data, np.array(offs), np.array(n))
+
+
 # ------------------------------------------------- fixed-width bitpack (bp)
 
 @given(st.lists(st.integers(0, 2**40), min_size=0, max_size=300))
@@ -413,14 +460,19 @@ def test_batch_block_encoders_byte_identical():
 def test_encoded_rows_roundtrip_every_codec(partition):
     """Every codec's posting rows, as _encode_arrays writes them over a
     multi-shard, multi-block batch, decode back to the input docs and tfs
-    through both readers of the row layout (postings.decode_rows and the
-    query side's _TermRun.decode_all); a row cut at a block boundary
-    raises instead of returning short."""
+    through both multi-row readers of the row layout (postings.decode_rows
+    and the query side's columnar group builder, both over
+    codecs.decode_many); a row cut at a block boundary raises instead of
+    returning short."""
+    import types
+
+    import pyarrow as pa
+
     from pisa_spark.config import IndexConfig
     from pisa_spark.functions.scoring import make_scorer
     from pisa_spark.operators.codecs import CODECS
     from pisa_spark.operators.postings import _encode_batch, decode_rows
-    from pisa_spark.operators.topk import _TermRun
+    from pisa_spark.operators.topk import _group_runs, _QueryPlan
 
     rng = np.random.default_rng(5)
     span = 2048
@@ -438,6 +490,8 @@ def test_encoded_rows_roundtrip_every_codec(partition):
     stats = {"num_docs": 3 * span, "avg_len": 150.0,
              "collection_len": 450 * span}
     scorer = make_scorer("bm25")
+    doc_lens = np.full(3 * span, 150, dtype=np.int64)
+    by_term = pdf.sort_values(["term_id", "doc_id"]).groupby("term_id")
     for codec in CODECS:
         cfg = IndexConfig(shard_span=span, block_size=32, codec=codec,
                           block_partition=partition)
@@ -448,22 +502,28 @@ def test_encoded_rows_roundtrip_every_codec(partition):
         assert (flat["term_id"].to_numpy() == pdf["term_id"].to_numpy()).all()
         assert (flat["doc_id"].to_numpy() == pdf["doc_id"].to_numpy()).all()
         assert (flat["tf"].to_numpy() == pdf["tf"].to_numpy()).all()
-        rows = enc.assign(df=enc["n"], cf=enc["sum_tf"])
-        for row, (_, want) in zip(rows.itertuples(index=False),
-                                  pdf.groupby(["shard_id", "term_id"])):
-            docs, tfs = _TermRun(row, scorer, stats, 1.0, False,
-                                 codec).decode_all()
+        plan = _QueryPlan(types.SimpleNamespace(cfg=cfg, stats=stats),
+                          "ranked_or", 10, False, 64, None)
+        for term in range(6):
+            plan.add("q", f"t{term}", term, 1, 1, 1.0)
+        table = pa.Table.from_pandas(enc, preserve_index=False)
+        runs = _group_runs(table, plan, doc_lens, 0)
+        assert len(runs) == 6
+        for term, want in by_term:
+            docs, tfs = runs[(term, 1.0)].decode_all()
             assert (docs == want["doc_id"].to_numpy()).all(), codec
             assert (tfs == want["tf"].to_numpy()).all(), codec
-        row = max(rows.itertuples(index=False),
-                  key=lambda r: len(r.block_doc_offs))
-        cut = int(row.block_doc_offs[-1])
-        short = row._replace(docs_bin=bytes(row.docs_bin)[:cut],
-                             block_doc_offs=row.block_doc_offs[:-1])
-        with pytest.raises(ValueError):
-            _TermRun(short, scorer, stats, 1.0, False, codec).decode_all()
-        with pytest.raises(ValueError):
-            decode_rows(pd.DataFrame([short._asdict()]), cfg)
+        i = max(range(len(enc)), key=lambda j: len(enc["block_doc_offs"][j]))
+        cut = int(enc["block_doc_offs"][i][-1])
+        short = enc.copy()
+        short.at[i, "docs_bin"] = bytes(enc["docs_bin"][i])[:cut]
+        short.at[i, "block_doc_offs"] = enc["block_doc_offs"][i][:-1]
+        # "expected": the row-count check raises, not a shape mismatch later
+        with pytest.raises(ValueError, match="expected"):
+            _group_runs(pa.Table.from_pandas(short, preserve_index=False),
+                        plan, doc_lens, 0)
+        with pytest.raises(ValueError, match="expected"):
+            decode_rows(short, cfg)
 
 
 # ------------------------------------------------- EF skip pointers

@@ -458,21 +458,27 @@ def _fresh(index):
 
 
 @pytest.mark.parametrize("setting", ["shards_per_task", "tiny_groups",
-                                     "mid_groups", "join_fallback"])
-def test_batch_grouping_identity(small_shard_index, small_shard_oracle,
+                                     "mid_groups", "join_fallback",
+                                     "small_arrow_batches"])
+def test_batch_grouping_identity(spark, small_shard_index, small_shard_oracle,
                                  queries, monkeypatch, setting):
     """Every algorithm through topk_search_batch equals the exhaustive
     oracle whether a task's shards traverse as one group, as several
-    groups (a small SERVE_COLLECT_MAX_POSTINGS budget), or one shard at a
-    time (the join fallback above the serve bounds)."""
+    groups (a small SERVE_COLLECT_MAX_POSTINGS budget), one shard at a
+    time (the join fallback above the serve bounds), or as groups whose
+    shards span many 3-row Arrow batches."""
     from pisa_spark.operators import topk as T
 
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    restore = spark.conf.get(batch_conf)
     if setting == "tiny_groups":
         monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 1)
     elif setting == "mid_groups":
         monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 300)
     elif setting == "join_fallback":
         monkeypatch.setattr(T, "SERVE_MAX_DOCS", 0)
+    elif setting == "small_arrow_batches":
+        spark.conf.set(batch_conf, "3")
     _fresh(small_shard_index)
     try:
         for alg in T.ALGORITHMS:
@@ -483,6 +489,7 @@ def test_batch_grouping_identity(small_shard_index, small_shard_oracle,
         st = small_shard_index._serve_state
         assert (st is False) == (setting == "join_fallback")
     finally:
+        spark.conf.set(batch_conf, restore)
         _fresh(small_shard_index)
 
 
@@ -539,3 +546,90 @@ def test_serve_distributed_mode_identity(small_shard_index, small_shard_oracle,
         finally:
             monkeypatch.undo()
             _fresh(small_shard_index)
+
+
+@pytest.mark.parametrize("key", ["term", "term_id"])
+def test_vocabulary_filter_escapes_terms(spark, key):
+    """The vocabulary filter keeps exactly the posting rows of the query
+    terms — quotes, backslashes, % and non-ASCII included — on both
+    posting key types, and plans the same predicate as Column.isin."""
+    import types
+
+    from pyspark.sql import functions as F
+
+    from pisa_spark.operators import topk as T
+
+    vocab = ["it's", "it", "s", "back\\slash", "back", "\\'", "''",
+             "100%", "100", "%", "naïve", "naive", "日本語", "a\\nb", "x"]
+    wanted = ["it's", "back\\slash", "\\'", "''", "100%", "%", "naïve",
+              "日本語", "a\\nb"]
+    rows = [(t, i, n) for i, t in enumerate(vocab) for n in range(1, 3)]
+    df = spark.createDataFrame(rows, "term string, term_id long, n long")
+    plan = types.SimpleNamespace(
+        tid_of_term={t: i for i, t in enumerate(vocab)})
+    index = (types.SimpleNamespace(postings_str=df.drop("term_id"))
+             if key == "term" else types.SimpleNamespace(postings=df))
+    got = T._term_postings(index, plan, wanted).collect()
+    values = wanted if key == "term" else [vocab.index(t) for t in wanted]
+    assert sorted((r[key], r["n"]) for r in got) == sorted(
+        (v, n) for v in values for n in (1, 2))
+
+    def optimized(col):
+        return df.filter(col)._jdf.queryExecution().optimizedPlan().toString()
+
+    assert optimized(T._in_values(key, values)) == \
+        optimized(F.col(key).isin(values))
+    assert not df.filter(T._in_values(key, [])).collect()
+
+
+def test_serve_state_concurrent_callers(index, queries, monkeypatch):
+    """8 threads issuing mixed queries against one index through the serve
+    path (fetches, FIFO eviction and run building under a cache budget
+    far below the index) rank exactly as a serial run, and the cache's
+    posting count matches the rows it holds."""
+    import threading
+
+    from pisa_spark.operators import topk as T
+
+    def key(rows):
+        return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6))
+                      for r in rows)
+
+    algs = ("block_max_wand", "maxscore", "ranked_or", "ranked_and")
+    calls = [(queries[(7 * i) % len(queries):][:6], algs[i % len(algs)],
+              i % 3 == 0) for i in range(24)]
+
+    def answer(call):
+        qs, alg, weighted = call
+        return key(T.topk_search(index, qs, k=K, algorithm=alg,
+                                 weighted=weighted, with_urls=False)
+                   .collect())
+
+    _fresh(index)
+    serial = [answer(c) for c in calls]
+    total = sum(m[1] for m in index._serve_state.tmeta.values())
+    monkeypatch.setattr(T, "SERVE_CACHE_MAX_POSTINGS", total // 8)
+    _fresh(index)
+    got, errors = [None] * len(calls), []
+
+    def worker(t):
+        try:
+            for i in range(t, len(calls), 8):
+                got[i] = answer(calls[i])
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert got == serial
+    st = index._serve_state
+    assert not st.complete and st.rows_by_term
+    assert st.cached_postings == sum(T._postings_in(rows)
+                                     for rows in st.rows_by_term.values())
+    cached_tids = {st.tmeta[t][0] for t in st.rows_by_term}
+    assert {tid for tid, _ in st.term_runs} <= cached_tids
+    _fresh(index)
