@@ -966,8 +966,9 @@ where bit_count(xor(a.simhash, b.simhash)) <= 3
 
 def _bm25_f32_rank_sql(qv: str, weighted: bool = False,
                        conjunctive: bool = False) -> str:
-    """DuckDB oracle reproducing the INDEX kernels' float32 BM25 bit-for-bit
-    (functions/scoring.py Bm25 + topk._canonical_scores), compared on the
+    """DuckDB oracle reproducing the INDEX traversal's float32 BM25
+    bit-for-bit (functions/scoring.py Bm25 + topk._traverse's
+    ascending-term_id float32 accumulation), compared on the
     (qid, doc_id, rank) surface.
 
     Why not the rounded-double oracle: on this synthetic corpus every

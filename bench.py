@@ -89,8 +89,8 @@ def query_bench(spark, idx) -> dict:
     from pisa_spark.operators.topk import topk_search_batch
 
     queries = webtext.synth_queries(100, seed=29)
-    # range_span < shard_span so the kernels' range-skip + threshold
-    # pruning engage within each shard (8 ranges per 2048-doc shard)
+    # range_span < shard_span so the pruned algorithms' (query, range)
+    # cell masks act within each shard (8 ranges per 2048-doc shard)
     rspan = 256
     # batch: all 100 queries in one job (the cluster-shaped workload),
     # shard-partitioned batch executor

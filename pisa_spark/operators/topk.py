@@ -1,10 +1,12 @@
-"""Top-k query executors: exhaustive (ranked_or), MaxScore, Block-Max-WAND.
+"""Top-k query executors: one dense multi-query traversal for every
+algorithm (ranked_or, wand, maxscore, block_max_wand, block_max_maxscore,
+ranked_and, block_max_ranked_and).
 
 Dataflow of the list-query executors (topk_search's serve path and
 topk_search_batch):
 
     queries --analyze on the driver, against the cached lexicon-->
-            (term_id -> [(qid, weight)], per-query term counts)
+            (term_id -> {qid: weight}, per-query term counts)
     postings --filter to the query vocabulary (one IN expression),
               co-locate by shard-->
             --per task: whole shards in groups of at most
@@ -12,62 +14,78 @@ topk_search_batch):
             --per group, ONE columnar pass: decode every row's docs_bin /
               tfs_bin from the contiguous column buffers, score every
               posting, slice one run per (query term, weight)-->
-            --ONE kernel per query over the broadcast global
-              doc-length array-->
+            --ONE dense traversal scores every query of the group at
+              once (_traverse)-->
             --k-merge (score desc, doc asc)-->  (qid, doc_id, score, rank)
 
-Kernels run in exactly two places: the serve path runs the group traversal
-(_traverse) on the driver over runs built from its resident Arrow posting
-cache, and topk_search_batch runs it executor-side in one mapInArrow pass.
-Both build runs with the same group builder (_group_runs). Every call the
-serve path declines (DataFrame query sets, indexes above the serve bounds,
-oversized fetches or merges) goes to topk_search_batch. Without the driver
-state posting rows carry their own shard's doc lengths and a group is one
-shard. profile_queries walks the same shard-sorted rows one shard at a
-time, with fresh copies of the shard's runs per query so its decode
-counters stay per query.
+The traversal runs in exactly two places: the serve path runs it on the
+driver over runs built from its resident Arrow posting cache, and
+topk_search_batch runs it executor-side in one mapInArrow pass. Both
+build runs with the same group builder (_group_runs). Every call the
+serve path declines (DataFrame query sets, indexes above the serve
+bounds, oversized fetches or merges) goes to topk_search_batch. Without
+the driver state posting rows carry their own shard's doc lengths and a
+group is one shard. profile_queries runs the same traversal with
+counters over the same shard-sorted rows, one shard at a time.
 
 Per-group top-k + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
 k-merge — which is exactly Spark's partial/final TakeOrderedAndProject
 shape, here expressed as a row_number window per qid.
 
-Kernels are numpy-vectorized adaptations of the reference traversal
-algorithms (cursor loops don't vectorize; doc-range batching does):
+The traversal is the reference's term-at-a-time accumulator
+(ranked_or_taat_query.hpp:9-37 over accumulator/simple_accumulator.hpp:
+32-51, cut into doc ranges as in range_taat_query.hpp:9-41), widened to
+every query of a group at once — cursor loops don't vectorize, scatters
+over a (queries x docs) array do:
 
-- exhaustive: score every doc in the union (ranked_or_query.hpp:16-56);
-  float32 canonical accumulation -> the rank-identity oracle.
-- maxscore  (maxscore_query.hpp:14-147): per doc-range, split lists into
-  essential/non-essential by the suffix-upper-bound rule against the
-  running threshold; candidates come only from essential lists;
-  non-essential lists are probed by searchsorted lookup with bound
-  re-filtering in descending-max-score order.
-- block_max_maxscore (block_max_maxscore_query.hpp:10-101): maxscore with
-  the remaining non-essential mass bounded PER DOC by the max of the block
-  that would contain the doc in each unprobed list (the reference's
-  block_max_score at the cursor, batched per doc-range) — tighter pruning,
-  identical ranking.
-- block_max_wand (block_max_wand_query.hpp:10-169): per doc-range, skip
-  the whole range when the sum of per-term block maxima is below the
-  threshold; then filter candidates by their per-doc sum of block maxima
-  before any scoring (the deep skip + partial-break of the reference,
-  batched).
-
-Safety: all pruning uses strict `bound < theta` skips and survivors are
-re-scored in canonical term order, so every algorithm returns exactly the
-exhaustive top-k including ties (ties broken score desc, doc asc — the
-reference's finalize() sorts by score only, topk_queue.hpp:73-83, so we pin
-the doc-asc rule as documented in SURVEY §7).
-
-Threshold seeding (reference topk_queue.hpp:23-31, tools/queries.cpp): pass
-`thresholds={qid: theta0}` to start kernels above zero; with an exact k-th
-score this stays rank-safe (ties kept); overestimates prune like the
-reference's unsafe mode.
+- Layout. A group's query rows are the queries that use at least one of
+  its runs. Its docIDs are cut into range_span-doc ranges; only ranges
+  holding a posting become accumulator columns, and tiles are whole
+  ranges. A block (a chunk of rows x one tile) is a float32 accumulator
+  of at most TRAVERSE_BLOCK_CELLS cells: row chunks shrink first, and a
+  tile is at least one range.
+- Scores. Runs are visited in ascending (term_id, weight) order and each
+  makes ONE scatter per block, `acc[rows, cols] += contribs`, over the
+  rows of the queries using it (pruning, below, may split it in an
+  unmasked and a restricted part). Every cell thus receives its query's
+  float32 contributions in ascending term_id, starting from 0.0 — the
+  canonical order every algorithm shares, so all of them return
+  bit-identical scores (an absent term adds nothing, as +0.0 would).
+- Top-k. Each row keeps a threshold theta. It starts at thresholds[qid]
+  (reference topk_queue.hpp:23-31, tools/queries.cpp): an exact k-th
+  score stays rank-safe, ties kept; overestimates prune like the
+  reference's unsafe mode. theta is raised to the k-th largest cell of
+  every scored block, a lower bound on the row's true k-th score. Every
+  scored cell >= theta and > 0 (finalize() drops <= 0, topk_queue.hpp:77)
+  is emitted, ties included; the downstream cut ranks score desc, doc
+  asc — the reference's finalize() sorts by score only
+  (topk_queue.hpp:73-83), so the doc-asc rule is pinned as in SURVEY §7.
+- Pruned algorithms are bound masks on the same layout. UB[q, range] is
+  the sum, over q's runs with a posting in the range, of that run's bound
+  there, in one of two families:
+    term bound, the run's max contribution: wand (wand_query.hpp:38-89),
+      maxscore (maxscore_query.hpp:14-147);
+    presence-aware block bound, the max block bound of the run's posting
+      blocks with a posting in the range: block_max_wand
+      (block_max_wand_query.hpp:10-169), block_max_maxscore
+      (block_max_maxscore_query.hpp:10-101), block_max_ranked_and.
+  Seed rule: every pruned algorithm first scores each query's range with
+  the highest term-bound sum, which seeds theta. A block bound never
+  exceeds its term bound, so the block family's live cells are a subset
+  of the term family's. After the seed only cells with
+  UB >= theta*(1-1e-6) are scattered: a run's scatter is unmasked over
+  its query rows with no dead cell in the block, and restricted to the
+  live cells over the others. Exact scores still decide the result, so
+  every algorithm returns the exhaustive top-k, ties included.
+- Conjunctive algorithms (ranked_and, block_max_ranked_and;
+  and_query.hpp:18-65) use the same scatter plus an integer hit count per
+  cell: a doc qualifies when its count equals the query's number of known
+  terms, and a (query, range) with no posting for one of them is dead.
 """
 
 from __future__ import annotations
 
-import copy
 import itertools
 import threading
 
@@ -88,10 +106,9 @@ TOPK_PARTIAL_SCHEMA = "qid string, doc_id long, score float"
 ALGORITHMS = ("ranked_or", "maxscore", "block_max_maxscore", "wand",
               "block_max_wand", "ranked_and", "block_max_ranked_and")
 
-# TaaT variants share the exhaustive kernel: scoring every candidate in a
-# doc-range batch IS term-at-a-time accumulation over that range
-# (ranked_or_taat_query.hpp:9-37; the lazy accumulator is a single-node
-# memory trick with no distributed analogue).
+# TaaT variants are the traversal itself: it accumulates term at a time
+# over dense doc ranges (ranked_or_taat_query.hpp:9-37; the lazy
+# accumulator is a single-node memory trick with no distributed analogue).
 _ALGORITHM_ALIASES = {
     "ranked_or_taat": "ranked_or",
     "ranked_or_taat_lazy": "ranked_or",
@@ -101,398 +118,276 @@ _ALGORITHM_ALIASES = {
 class _TermRun:
     """One query term's postings over a group of whole shards, in ascending
     docIDs: a slice of the group's columnar decode (_group_runs) with the
-    float32 score contribution of every posting and the block bounds.
-    `decoded` records whether a kernel read the postings (decode_all),
-    which is what profile_queries counts as decoded."""
+    float32 score contribution of every posting, the block bounds and the
+    term bound ub."""
 
-    __slots__ = ("term_id", "n", "base_doc", "last_doc", "blk_last",
-                 "blk_ub", "ub", "_docs", "_tfs", "_contribs", "decoded")
+    __slots__ = ("term_id", "n", "docs", "tfs", "contribs", "blk_last",
+                 "blk_ub", "ub")
 
-    def __init__(self, term_id: int, base_doc: int, last_doc: int,
-                 docs: np.ndarray, tfs: np.ndarray, contribs: np.ndarray,
-                 blk_last: np.ndarray, blk_ub: np.ndarray):
+    def __init__(self, term_id: int, docs: np.ndarray, tfs: np.ndarray,
+                 contribs: np.ndarray, blk_last: np.ndarray,
+                 blk_ub: np.ndarray):
         self.term_id = term_id
         self.n = int(docs.size)
-        self.base_doc = base_doc
-        self.last_doc = last_doc
-        self._docs = docs
-        self._tfs = tfs
-        self._contribs = contribs
+        self.docs = docs
+        self.tfs = tfs
+        self.contribs = contribs
         self.blk_last = blk_last
         self.blk_ub = blk_ub
         self.ub = F32(blk_ub.max()) if blk_ub.size else F32(0.0)
-        self.decoded = False
-
-    def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        self.decoded = True
-        return self._docs, self._tfs
-
-    def blocks_overlapping(self, lo: int, hi: int) -> tuple[int, int]:
-        """Inclusive block index span intersecting doc range [lo, hi)."""
-        nblk = self.blk_last.size
-        b0 = int(np.searchsorted(self.blk_last, lo, "left"))
-        if b0 >= nblk:
-            return 1, 0  # empty span
-        b1 = int(np.searchsorted(self.blk_last, hi - 1, "left"))
-        b1 = min(b1, nblk - 1)
-        return b0, b1
-
-    def range_ub(self, lo: int, hi: int) -> np.float32:
-        b0, b1 = self.blocks_overlapping(lo, hi)
-        if b0 > b1:
-            return F32(0.0)
-        return F32(self.blk_ub[b0:b1 + 1].max())
-
-    def _range_block_spans(self, los: np.ndarray,
-                           his: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """blocks_overlapping vectorized over ascending [lo, hi) ranges."""
-        nblk = self.blk_last.size
-        b0 = np.searchsorted(self.blk_last, los, "left")
-        b1 = np.minimum(np.searchsorted(self.blk_last, his - 1, "left"),
-                        nblk - 1)
-        return b0, b1
-
-    def spans_nonempty(self, los: np.ndarray, his: np.ndarray) -> np.ndarray:
-        nblk = self.blk_last.size
-        if nblk == 0:
-            return np.zeros(los.size, dtype=bool)
-        b0, b1 = self._range_block_spans(los, his)
-        return (b0 < nblk) & (b0 <= b1)
-
-    def range_ubs_batch(self, los: np.ndarray, his: np.ndarray) -> np.ndarray:
-        """range_ub vectorized over many ranges: per-range interval max of
-        blk_ub via one padded maximum.reduceat (bit-identical to the scalar
-        slice-max — f32 max is order-independent)."""
-        nblk = self.blk_last.size
-        if nblk == 0:
-            return np.zeros(los.size, dtype=F32)
-        b0, b1 = self._range_block_spans(los, his)
-        empty = (b0 >= nblk) | (b0 > b1)
-        padded = np.concatenate((self.blk_ub, np.zeros(1, dtype=F32)))
-        ind = np.empty(2 * los.size, dtype=np.intp)
-        ind[0::2] = np.minimum(b0, nblk)
-        ind[1::2] = b1 + 1
-        # even slots reduce over [b0, b1+1) == the block span; odd slots are
-        # inter-range garbage and are discarded
-        out = np.maximum.reduceat(padded, ind)[0::2]
-        out[empty] = F32(0.0)
-        return out.astype(F32, copy=False)
-
-    def docs_in(self, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
-        docs, tfs = self.decode_all()
-        i0 = np.searchsorted(docs, lo, "left")
-        i1 = np.searchsorted(docs, hi, "left")
-        return docs[i0:i1], tfs[i0:i1]
-
-    def docs_in_batch(self, los: np.ndarray, his: np.ndarray) -> np.ndarray:
-        """Docs present in ANY of the disjoint [lo, hi) ranges, in one pass
-        (batched searchsorted + interval difference-mask)."""
-        docs, _ = self.decode_all()
-        i0 = np.searchsorted(docs, los, "left")
-        i1 = np.searchsorted(docs, his, "left")
-        mark = np.zeros(docs.size + 1, dtype=np.int32)
-        np.add.at(mark, i0, 1)
-        np.add.at(mark, i1, -1)
-        return docs[np.cumsum(mark[:-1]) > 0]
-
-    def doc_term_ub(self, doc_ids: np.ndarray) -> np.ndarray:
-        """Per-doc upper bound using the TERM max score for docs present in
-        this run (plain WAND semantics, wand_query.hpp:38-89: bounds come
-        from per-term max scores only, no block refinement)."""
-        docs, _ = self.decode_all()
-        idx = np.searchsorted(docs, doc_ids, "left")
-        idx_c = np.minimum(idx, max(docs.size - 1, 0))
-        present = (docs.size > 0) & (idx < docs.size) & (docs[idx_c] == doc_ids)
-        out = np.zeros(doc_ids.size, dtype=F32)
-        out[present] = self.ub
-        return out
-
-    def doc_block_ub(self, doc_ids: np.ndarray) -> np.ndarray:
-        """Per-doc upper bound from the block that would contain each doc
-        (block_max_scored_cursor.hpp block_max_score semantics)."""
-        idx = np.searchsorted(self.blk_last, doc_ids, "left")
-        out = np.zeros(doc_ids.size, dtype=F32)
-        mask = (idx < self.blk_last.size) & (doc_ids > self.base_doc)
-        out[mask] = self.blk_ub[idx[mask]]
-        return out
-
-    def contrib(self, doc_ids: np.ndarray) -> np.ndarray:
-        """Score contribution of the given docs (0 when absent): a gather
-        from the contributions scored once when the group was built."""
-        docs, _ = self.decode_all()
-        idx = np.searchsorted(docs, doc_ids, "left")
-        idx_c = np.minimum(idx, docs.size - 1)
-        present = (docs.size > 0) & (docs[idx_c] == doc_ids) & (idx < docs.size)
-        out = np.zeros(doc_ids.size, dtype=F32)
-        out[present] = self._contribs[idx[present]]
-        return out
 
 
-def _canonical_scores(doc_ids: np.ndarray, runs: list[_TermRun]) -> np.ndarray:
-    """Sum contributions in fixed ascending term_id order (float32) so every
-    algorithm produces bit-identical scores for the same doc."""
-    total = np.zeros(doc_ids.size, dtype=F32)
-    for run in sorted(runs, key=lambda r: r.term_id):
-        total = total + run.contrib(doc_ids)
-    return total
+def _firsts(sorted_keys: np.ndarray) -> np.ndarray:
+    """Start offsets of the runs of equal values in a sorted array."""
+    return np.flatnonzero(np.concatenate(
+        ([True], sorted_keys[1:] != sorted_keys[:-1])))
 
 
-class _TopK:
-    """Running top-k with tie-keeping threshold (topk_queue.hpp analogue;
-    ties at the k-th score are kept so the global doc-asc tie-break stays
-    exact)."""
-
-    def __init__(self, k: int, theta0: float = 0.0):
-        self.k = k
-        self.docs: np.ndarray = np.zeros(0, dtype=np.int64)
-        self.scores: np.ndarray = np.zeros(0, dtype=F32)
-        self.theta = F32(theta0)
-        self.seeded = theta0 > 0.0
-
-    def merge(self, docs: np.ndarray, scores: np.ndarray) -> None:
-        if docs.size == 0:
-            return
-        self.docs = np.concatenate((self.docs, docs))
-        self.scores = np.concatenate((self.scores, scores))
-        if self.docs.size > self.k:
-            kth = np.partition(self.scores, self.scores.size - self.k)[
-                self.scores.size - self.k]
-            keep = self.scores >= kth
-            self.docs, self.scores = self.docs[keep], self.scores[keep]
-            self.theta = max(self.theta, F32(kth))
-        elif self.docs.size == self.k and not self.seeded:
-            self.theta = max(self.theta, F32(self.scores.min()))
+def _block(n_rows: int, n_cols: int, dtype=F32) -> np.ndarray:
+    """A zeroed traversal array. Every block accumulator, hit count and
+    seed array is one of these, at most TRAVERSE_BLOCK_CELLS cells unless
+    a single range alone is wider."""
+    return np.zeros((n_rows, n_cols), dtype=dtype)
 
 
-def _active_ranges(runs: list[_TermRun], shard_base: int, shard_end: int,
-                   range_span: int) -> np.ndarray:
-    """Doc ranges (indices) that intersect at least one posting block."""
-    n_ranges = (shard_end - shard_base + range_span - 1) // range_span
-    diff = np.zeros(n_ranges + 1, dtype=np.int64)
-    for run in runs:
-        firsts = np.concatenate(([run.base_doc + 1], run.blk_last[:-1] + 1))
-        starts = np.clip((firsts - shard_base) // range_span, 0, n_ranges - 1)
-        ends = np.clip((run.blk_last - shard_base) // range_span, 0, n_ranges - 1)
-        np.add.at(diff, starts, 1)
-        np.add.at(diff, ends + 1, -1)
-    return np.flatnonzero(np.cumsum(diff[:-1]) > 0)
+def _raise_theta(acc: np.ndarray, theta: np.ndarray, k: int) -> None:
+    """Raise each row's theta (in place) to the row's k-th largest cell
+    where that is larger: only rows with k cells above theta are
+    partitioned."""
+    rows = np.flatnonzero(np.count_nonzero(acc > theta[:, None], axis=1)
+                          >= k)
+    if k > 0 and rows.size:
+        theta[rows] = np.partition(acc[rows], -k, axis=1)[:, -k]
 
 
-def _conjunction_docs(runs: list[_TermRun], lo: int, hi: int) -> np.ndarray:
-    """Docs present in every run within [lo, hi): candidate-probe from the
-    shortest list (and_query.hpp:18-65 semantics, batched via searchsorted
-    — the sort-merge skip loop vectorized)."""
-    runs_sorted = sorted(runs, key=lambda r: r.n)
-    cand = runs_sorted[0].docs_in(lo, hi)[0]
-    for run in runs_sorted[1:]:
-        if cand.size == 0:
-            return cand
-        docs, _ = run.decode_all()
-        idx = np.searchsorted(docs, cand, "left")
-        idx_c = np.minimum(idx, docs.size - 1)
-        cand = cand[(docs[idx_c] == cand) & (idx < docs.size)]
-    return cand
+def _sum_in_order(cells: np.ndarray, values: np.ndarray,
+                  shape: tuple[int, int]) -> np.ndarray:
+    """float32 sums of `values` per flat cell index, added one by one in
+    the given order (np.add.at is unbuffered and sequential)."""
+    out = np.zeros(shape[0] * shape[1], dtype=F32)
+    np.add.at(out, cells, values)
+    return out.reshape(shape)
 
 
-def _run_kernel(algorithm: str, runs: list[_TermRun], k: int,
-                doc_lens: np.ndarray, shard_base: int, range_span: int,
-                theta0: float, n_query_terms: int | None = None,
-                counters: dict | None = None) -> tuple[np.ndarray, np.ndarray]:
-    """counters (optional dict) accumulates the reference profile_queries
-    metrics: ranges visited/skipped, docs actually scored; posting/block
-    decode counts are read off the runs afterwards (see profile_queries)."""
-    c = counters if counters is not None else {}
-    c.setdefault("ranges", 0)
-    c.setdefault("ranges_skipped", 0)
-    c.setdefault("docs_scored", 0)
-    shard_end = shard_base + doc_lens.size
-    topk = _TopK(k, theta0)
-    if algorithm in ("ranked_and", "block_max_ranked_and"):
-        # conjunction: a term absent from this shard empties the whole shard
-        if n_query_terms is not None and len(runs) < n_query_terms:
-            return topk.docs, topk.scores
-    if algorithm == "ranked_or":
-        # exhaustive disjunction: one pass, no pruning
-        all_docs = np.unique(np.concatenate([r.decode_all()[0] for r in runs]))
-        scores = _canonical_scores(all_docs, runs)
-        c["docs_scored"] += int(all_docs.size)
-        pos = scores > 0  # reference finalize() drops <= 0 (topk_queue.hpp:77)
-        topk.merge(all_docs[pos], scores[pos])
-        return topk.docs, topk.scores
+class _Traversal:
+    """The dense traversal of one group (see the module docstring).
 
-    ridx = _active_ranges(runs, shard_base, shard_end, range_span)
-    if ridx.size == 0:
-        return topk.docs, topk.scores
-    los = shard_base + ridx * range_span
-    his = np.minimum(los + range_span, shard_end)
-    # per-(run, range) upper bounds, vectorized across ALL ranges up front
-    # (one searchsorted pair + one reduceat per run instead of four numpy
-    # calls per run per range)
-    if algorithm == "wand":
-        # plain WAND: per-term bounds only (no block-max refinement)
-        ub_mat = np.stack([
-            np.where(run.spans_nonempty(los, his), run.ub, F32(0.0))
-            for run in runs]).astype(F32, copy=False)
-    else:
-        ub_mat = np.stack([run.range_ubs_batch(los, his) for run in runs])
-    sum_ub = ub_mat.sum(axis=0, dtype=F32)
-    if counters is None:
-        # hot path: visit ranges in DESCENDING bound order so theta converges
-        # in the first few ranges and the rest bulk-prune via early exit.
-        # Result-identical to docID order: a doc whose exact score reaches the
-        # true k-th score is never discarded (theta <= true k-th throughout,
-        # final filtering is exact canonical scores), and the caller's
-        # (score desc, doc asc) rank cut is order-independent.
-        visit = np.argsort(-sum_ub, kind="stable")
-        descending = True
-        if algorithm in ("block_max_wand", "wand", "maxscore",
-                         "block_max_maxscore") and visit.size > 4:
-            # two-wave pruning for the disjunctive algorithms: a short
-            # sequential head converges theta, then every remaining live
-            # range is processed in ONE vectorized bulk pass below (per-doc
-            # bounds + one canonical scoring) — removes the per-range Python
-            # loop from the hot serve path. Safe: the bulk prune uses the
-            # head's theta, which can only be <= the fully-sequential theta,
-            # so it scores a superset of the sequential candidates; exact
-            # canonical scores decide the rest. Conjunctive algorithms keep
-            # the per-range walk (their candidate SET depends on the
-            # intersection semantics, not just pruning). The head is 4
-            # ranges: a batch task's shard group spans few ranges, and a
-            # longer head (8 of >12 before) left it all in the Python loop
-            # — 4 halved the batch kernel CPU at 8k docs, range_span 256.
-            bulk_tail = visit[4:]
-            visit = visit[:4]
-        else:
-            bulk_tail = None
-    else:
-        bulk_tail = None
-        # profile mode keeps the reference's docID-order walk so the
-        # visited/skipped counters keep their published semantics
-        # (tools/profile_queries.cpp range loop)
-        visit = np.arange(ridx.size)
-        descending = False
-    for j in visit:
-        lo = int(los[j])
-        hi = int(his[j])
-        # pruning threshold with a few float32 ulps of slack: upper-bound
-        # sums accumulate in a different order than canonical scores, so an
-        # exactly-tied doc's bound can round 1 ulp below theta. Final
-        # filtering uses exact canonical scores, so results stay exact.
-        prune = topk.theta * F32(1.0 - 1e-6)
-        ubs = ub_mat[:, j]
-        c["ranges"] += 1
-        if sum_ub[j] < prune or not (ubs > 0).any():
-            c["ranges_skipped"] += 1
-            if descending:
-                break  # every remaining range has an equal-or-smaller bound
-            continue  # whole range cannot beat theta (block-max range skip)
-        order = np.argsort(ubs, kind="stable")
+    The runs' postings lie back to back in ascending (term_id, weight)
+    order, each as its accumulator column (`cols`) and contribution. A
+    segment is one run's postings in one range; a pair is one (query row,
+    segment): the (query, range) cell it feeds and the run it comes from,
+    in run order. `present` counts, per (query, range) cell, the query's
+    runs with a posting there; it and the bound matrices are (query,
+    range) arrays, range_span times smaller than the blocks' (query,
+    doc) area, so they are not cut into blocks."""
 
-        if algorithm in ("block_max_wand", "wand"):
-            cand = np.unique(np.concatenate(
-                [run.docs_in(lo, hi)[0] for run in runs]))
-            if cand.size == 0:
-                continue
-            bound = np.zeros(cand.size, dtype=F32)
-            for run in runs:
-                bound += (run.doc_block_ub(cand)
-                          if algorithm == "block_max_wand"
-                          else run.doc_term_ub(cand))
-            cand = cand[bound >= prune]
-        elif algorithm in ("ranked_and", "block_max_ranked_and"):
-            cand = _conjunction_docs(runs, lo, hi)
-            if cand.size == 0:
-                continue
-            if algorithm == "block_max_ranked_and":
-                # block-level bound before scoring
-                # (block_max_ranked_and_query.hpp semantics)
-                bound = np.zeros(cand.size, dtype=F32)
-                for run in runs:
-                    bound += run.doc_block_ub(cand)
-                cand = cand[bound >= prune]
-        elif algorithm in ("maxscore", "block_max_maxscore"):
-            # non-essential prefix (ascending ub) with cum-ub strictly below
-            # theta can never alone lift a doc past the threshold
-            cum = np.cumsum(ubs[order], dtype=F32)
-            n_noness = int(np.searchsorted(cum, prune, "left"))
-            noness = [(runs[i], ubs[i]) for i in order[:n_noness]]
-            ess = [runs[i] for i in order[n_noness:]]
-            if not ess:
-                continue
-            cand = np.unique(np.concatenate(
-                [run.docs_in(lo, hi)[0] for run in ess]))
-            if cand.size == 0:
-                continue
-            partial = np.zeros(cand.size, dtype=F32)
-            for run in ess:
-                partial += run.contrib(cand)
-            noness_sorted = sorted(noness, key=lambda p: -p[1])
-            if algorithm == "block_max_maxscore":
-                # per-doc refinement: bound each candidate's remaining
-                # non-essential mass by the max of the BLOCK that would
-                # contain it in each unprobed list, not the list's range
-                # max (reference block_max_maxscore_query.hpp:10-101's
-                # block_max_score at the cursor, batched per doc-range).
-                # Still a safe upper bound per doc, so pruning stays exact.
-                nb = [run.doc_block_ub(cand) for run, _ in noness_sorted]
-                rem = (np.sum(nb, axis=0, dtype=F32) if nb
-                       else np.zeros(cand.size, dtype=F32))
-                keep = partial + rem >= prune
-                cand, partial, rem = cand[keep], partial[keep], rem[keep]
-                nb = [b[keep] for b in nb]
-                for i, (run, _) in enumerate(noness_sorted):
-                    if cand.size == 0:
-                        break
-                    partial += run.contrib(cand)
-                    rem = rem - nb[i]
-                    keep = partial + rem >= prune
-                    cand, partial, rem = cand[keep], partial[keep], rem[keep]
-                    nb = [b[keep] for b in nb]
-            else:
-                remaining = F32(sum(ub for _, ub in noness))
-                keep = partial + remaining >= prune
-                cand, partial = cand[keep], partial[keep]
-                for run, ub in noness_sorted:
-                    if cand.size == 0:
-                        break
-                    partial += run.contrib(cand)
-                    remaining = F32(remaining - ub)
-                    keep = partial + remaining >= prune
-                    cand, partial = cand[keep], partial[keep]
-        else:
-            raise ValueError(f"unknown algorithm {algorithm!r}")
+    def __init__(self, runs: dict[tuple[int, float], _TermRun],
+                 plan: "_QueryPlan", profile: bool):
+        alg = self.alg = plan.algorithm
+        self.span, self.k, self.profile = plan.range_span, plan.k, profile
+        self.pruned = alg not in ("ranked_or", "ranked_and")
+        keys = sorted(runs)  # ascending (term_id, weight): canonical order
+        qrow: dict[str, int] = {}
+        self.rows = [np.sort(np.array(
+            [qrow.setdefault(q, len(qrow))
+             for q, qw in plan.term_queries[tid].items()
+             if (qw if plan.weighted else 1.0) == w], dtype=np.intp))
+            for tid, w in keys]
+        self.qids = np.array(list(qrow), dtype=object)
+        self.runs = [runs[key] for key in keys]
+        self.theta = np.array([plan.thresholds.get(q, 0.0) for q in qrow],
+                              dtype=F32)
+        self.need = (np.array([plan.n_terms[q] for q in qrow])
+                     if alg in ("ranked_and", "block_max_ranked_and")
+                     else None)
+        span, n_q = self.span, self.qids.size
+        n = np.array([run.n for run in self.runs])
+        self.off = np.concatenate(([0], np.cumsum(n)))
+        self.run_of = np.repeat(np.arange(n.size), n)
+        docs = np.concatenate([run.docs for run in self.runs])
+        self.contribs = np.concatenate([run.contribs for run in self.runs])
+        ranges = docs // span
+        # columns: only the ranges holding a posting, range_span wide each
+        self.active = np.unique(ranges)
+        n_act = self.active.size
+        a = np.searchsorted(self.active, ranges)
+        self.cols = a * span + docs % span
+        seg = _firsts(self.run_of * n_act + a)
+        self.seg_off = np.searchsorted(seg, self.off)  # run i's segments
+        self.seg_range = a[seg]
+        seg_run = self.run_of[seg]
+        m = np.array([rows.size for rows in self.rows])
+        self.rows_cat = np.concatenate(self.rows)
+        self.rows_run = np.repeat(np.arange(m.size), m)
+        rows_off = np.concatenate(([0], np.cumsum(m)))
+        seg_m = m[seg_run]
+        pair_seg = np.repeat(np.arange(seg.size), seg_m)
+        first = np.repeat(rows_off[seg_run] - np.cumsum(seg_m) + seg_m, seg_m)
+        self.pair_row = self.rows_cat[first + np.arange(pair_seg.size)]
+        self.pair_run = seg_run[pair_seg]
+        self.pair_cell = self.pair_row * n_act + self.seg_range[pair_seg]
+        shape = (n_q, n_act)
+        self.present = np.bincount(self.pair_cell,
+                                   minlength=n_q * n_act).reshape(shape)
+        if self.pruned:
+            # bounds summed in run order, as the scores are
+            ub = np.array([run.ub for run in self.runs], dtype=F32)
+            self.ub_term = self.ub = _sum_in_order(
+                self.pair_cell, ub[self.pair_run], shape)
+            if alg.startswith("block_max"):
+                # presence-aware: the max bound of the blocks holding the
+                # segment's postings
+                nb = [run.blk_last.size for run in self.runs]
+                big = int(docs.max()) + 1
+                ends = np.searchsorted(
+                    self.run_of * big + docs,
+                    np.repeat(np.arange(n.size), nb) * big
+                    + np.concatenate([run.blk_last for run in self.runs]),
+                    "right")
+                post_ub = np.repeat(
+                    np.concatenate([run.blk_ub for run in self.runs]),
+                    np.diff(ends, prepend=0))
+                self.ub = _sum_in_order(
+                    self.pair_cell,
+                    np.maximum.reduceat(post_ub, seg)[pair_seg], shape)
 
-        if cand.size == 0:
-            continue
-        scores = _canonical_scores(cand, runs)
-        c["docs_scored"] += int(cand.size)
-        keep = (scores >= topk.theta) & (scores > 0)
-        topk.merge(cand[keep], scores[keep])
+    def _live(self, r0: int, r1: int, g0: int, g1: int) -> np.ndarray | None:
+        """The live (query, range) cells of rows [r0, r1) x ranges
+        [g0, g1); None when every cell is live (ranked_or)."""
+        if self.alg == "ranked_or":
+            return None
+        p = self.present[r0:r1, g0:g1]
+        live = (p == self.need[r0:r1, None] if self.need is not None
+                else p > 0)
+        if self.pruned:
+            live &= self.ub[r0:r1, g0:g1] >= (
+                self.theta[r0:r1] * F32(1.0 - 1e-6))[:, None]
+        return live
 
-    if bulk_tail is not None and bulk_tail.size:
-        prune = topk.theta * F32(1.0 - 1e-6)
-        live = bulk_tail[(sum_ub[bulk_tail] >= prune)
-                         & (sum_ub[bulk_tail] > 0)]
-        if live.size:
-            blos, bhis = los[live], his[live]
-            cand = np.unique(np.concatenate(
-                [run.docs_in_batch(blos, bhis) for run in runs]))
-            if cand.size:
-                # per-doc bound at each algorithm's own granularity: block
-                # max for the block-max family, term max for wand/maxscore
-                block_refined = algorithm in ("block_max_wand",
-                                              "block_max_maxscore")
-                bound = np.zeros(cand.size, dtype=F32)
-                for run in runs:
-                    bound += (run.doc_block_ub(cand) if block_refined
-                              else run.doc_term_ub(cand))
-                cand = cand[bound >= prune]
-            if cand.size:
-                scores = _canonical_scores(cand, runs)
-                c["docs_scored"] += int(cand.size)
-                keep = (scores >= topk.theta) & (scores > 0)
-                topk.merge(cand[keep], scores[keep])
-    return topk.docs, topk.scores
+    def seed(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """Score each query's range with the highest term-bound sum (for
+        a conjunctive query: among the ranges holding all its terms) and
+        raise theta from it. Returns (seeded rows, their seed range, the
+        cells of it that received a contribution)."""
+        span, n_q = self.span, self.qids.size
+        bound = self.ub_term
+        if self.need is not None:
+            bound = np.where(self.present == self.need[:, None], bound,
+                             F32(0.0))
+        seed = bound.argmax(axis=1)
+        rows = np.flatnonzero(bound[np.arange(n_q), seed] > 0)
+        # every (row, posting) of the seed ranges, in run order
+        keep = np.isin(self.rows_cat, rows)
+        row, run = self.rows_cat[keep], self.rows_run[keep]
+        lo = seed[row] * span
+        width = self.active.size * span
+        key = self.run_of * width + self.cols
+        i0 = np.searchsorted(key, run * width + lo)
+        cnt = np.searchsorted(key, run * width + lo + span) - i0
+        p = np.arange(cnt.sum()) + np.repeat(i0 - np.cumsum(cnt) + cnt, cnt)
+        slot = np.zeros(n_q, dtype=np.intp)
+        slot[rows] = np.arange(rows.size)
+        slot = np.repeat(slot[row], cnt)
+        col = self.cols[p] - np.repeat(lo, cnt)
+        touched = np.zeros(n_q, dtype=np.int64)
+        per = max(1, TRAVERSE_BLOCK_CELLS // span)
+        for c0 in range(0, rows.size, per):
+            chunk = rows[c0:c0 + per]
+            mine = (slot >= c0) & (slot < c0 + per)
+            cell = (slot[mine] - c0) * span + col[mine]
+            acc = _block(chunk.size, span)
+            np.add.at(acc.reshape(-1), cell, self.contribs[p[mine]])
+            hits = np.bincount(cell, minlength=acc.size).reshape(acc.shape)
+            if self.need is not None:
+                acc[hits != self.need[chunk, None]] = 0
+            theta = self.theta[chunk]
+            _raise_theta(acc, theta, self.k)
+            self.theta[chunk] = theta
+            touched[chunk] = (hits > 0).sum(axis=1)
+        return rows, seed[rows], touched[rows]
+
+    def blocks(self, scattered: np.ndarray | None, touched: np.ndarray):
+        """Score every block, tiles in ascending docID order; yields the
+        (row, column, score) cells each block emits. In profile mode marks
+        the scattered (query, range) cells and counts the cells that
+        received a contribution per row."""
+        span, n_q, n_act = self.span, self.qids.size, self.active.size
+        tile = min(n_act, max(1, TRAVERSE_BLOCK_CELLS // span))  # ranges
+        per = min(n_q, max(1, TRAVERSE_BLOCK_CELLS // (tile * span)))
+        todo: dict[tuple[int, int], list[int]] = {}
+        for i, rows in enumerate(self.rows):
+            u = self.seg_range[self.seg_off[i]:self.seg_off[i + 1]]
+            for t in (np.unique(u // tile).tolist() if tile < n_act
+                      else [0]):
+                for c in (np.unique(rows // per).tolist() if per < n_q
+                          else [0]):
+                    todo.setdefault((t, c), []).append(i)
+        count = self.need is not None or self.profile
+        for t, c in sorted(todo):
+            r0, r1 = c * per, min(n_q, (c + 1) * per)
+            g0, g1 = t * tile, min(n_act, (t + 1) * tile)
+            held = self.present[r0:r1, g0:g1] > 0
+            live = self._live(r0, r1, g0, g1)
+            if live is not None:
+                if not live.any():
+                    continue
+                live &= held
+                dirty = (held & ~live).any(axis=1)  # rows with a dead cell
+            acc = _block(r1 - r0, (g1 - g0) * span)
+            hits = (_block(r1 - r0, (g1 - g0) * span, np.int32)
+                    if count else None)
+            lo_col = g0 * span
+            for i in todo[(t, c)]:
+                rows = self.rows[i]
+                if per < n_q:
+                    rows = rows[np.searchsorted(rows, r0):
+                                np.searchsorted(rows, r1)] - r0
+                p0, p1 = self.off[i], self.off[i + 1]
+                if tile < n_act:
+                    p0, p1 = p0 + np.searchsorted(self.cols[p0:p1],
+                                                  (lo_col, g1 * span))
+                cc = self.cols[p0:p1] - lo_col
+                vals = self.contribs[p0:p1]
+                if live is not None and dirty[rows].any():
+                    # rows with a dead cell: restricted to the live cells
+                    d = rows[dirty[rows]]
+                    a, b = np.nonzero(live[d][:, cc // span])
+                    acc[d[a], cc[b]] += vals[b]
+                    if hits is not None:
+                        hits[d[a], cc[b]] += 1
+                    rows = rows[~dirty[rows]]
+                acc[rows[:, None], cc] += vals
+                if hits is not None:
+                    hits[rows[:, None], cc] += 1
+            if self.need is not None:
+                acc[hits != self.need[r0:r1, None]] = 0
+            if self.profile:
+                scattered[r0:r1, g0:g1] |= held if live is None else live
+                touched[r0:r1] += (hits > 0).sum(axis=1)
+            theta = self.theta[r0:r1]  # a view: raised in place
+            _raise_theta(acc, theta, self.k)
+            a, b = np.nonzero((acc >= theta[:, None]) & (acc > 0))
+            yield a + r0, b + lo_col, acc[a, b]
+
+    def counters(self, seeded, scattered: np.ndarray,
+                 touched: np.ndarray) -> dict[str, tuple]:
+        """Per-query profile counters (see _traverse) once every block
+        ran: a seed cell no block scattered adds the docs the seed
+        scored."""
+        if seeded is not None:
+            rows, seed, seed_touched = seeded
+            fresh = ~scattered[rows, seed]
+            touched[rows[fresh]] += seed_touched[fresh]
+            scattered[rows, seed] = True
+        hit = scattered.reshape(-1)[self.pair_cell]
+        used = np.zeros((len(self.runs), self.qids.size), dtype=bool)
+        used[self.pair_run[hit], self.pair_row[hit]] = True
+        postings = np.array([run.n for run in self.runs]) @ used
+        blocks = np.array([run.blk_last.size for run in self.runs]) @ used
+        held = self.present > 0
+        return {qid: tuple(map(int, c)) for qid, *c in zip(
+            self.qids.tolist(), postings, blocks, touched, held.sum(axis=1),
+            (held & ~scattered).sum(axis=1))}
 
 
 def make_query_terms_df(spark, queries: list[str], cfg: IndexConfig):
@@ -521,14 +416,19 @@ SERVE_MAX_PARTIAL_ROWS = 1 << 21    # shards x queries x k merge bound
 # per-call driver fetch bound; also the postings one traversal group holds
 SERVE_COLLECT_MAX_POSTINGS = 1 << 22
 SERVE_CACHE_MAX_POSTINGS = 1 << 24    # resident posting-row cache budget
+# (query rows x docs) cells of one traversal block: 8 MB of float32
+# scores, plus as many int32 hit counts for the conjunctive algorithms
+TRAVERSE_BLOCK_CELLS = 1 << 21
 
 
 class _QueryPlan:
-    """A query set analyzed on the driver, plus the kernel settings: all a
-    traversal needs, shipped to the executors with it."""
+    """A query set analyzed on the driver, plus the traversal settings:
+    all a traversal needs, shipped to the executors with it."""
 
     def __init__(self, index, algorithm: str, k: int, weighted: bool,
                  range_span: int, thresholds: dict[str, float] | None):
+        if algorithm not in ALGORITHMS:
+            raise ValueError(f"unknown algorithm {algorithm!r}")
         cfg = index.cfg
         self.algorithm = algorithm
         self.k = k
@@ -538,17 +438,23 @@ class _QueryPlan:
         self.scorer = make_scorer(cfg.scorer, cfg.scorer_params())
         self.stats = dict(index.stats)
         self.codec = cfg.codec
-        self.term_queries: dict[int, list] = {}  # term_id -> [(qid, weight)]
+        self.term_queries: dict[int, dict] = {}  # term_id -> {qid: weight}
         self.term_stats: dict[int, tuple] = {}   # term_id -> (df, cf)
         self.n_terms: dict[str, int] = {}        # qid -> known query terms
         self.tid_of_term: dict[str, int] = {}
 
     def add(self, qid: str, term: str, tid: int, df: int, cf: int,
             weight: float) -> None:
+        """One (query, term) of the set. A repeated one merges into the
+        first and their weights sum, as analyze_query_terms merges
+        repeated query-line terms (reference query.cpp:45-82): a term
+        counts once per query, whatever route the query set took."""
         self.tid_of_term[term] = tid
-        self.term_queries.setdefault(tid, []).append((qid, float(weight)))
         self.term_stats[tid] = (df, cf)
-        self.n_terms[qid] = self.n_terms.get(qid, 0) + 1
+        weights = self.term_queries.setdefault(tid, {})
+        if qid not in weights:
+            self.n_terms[qid] = self.n_terms.get(qid, 0) + 1
+        weights[qid] = weights.get(qid, 0.0) + float(weight)
 
     def analyze(self, queries: list[str], tmeta: dict,
                 cfg: IndexConfig) -> "_QueryPlan":
@@ -592,7 +498,7 @@ def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
     (codecs.decode_many), and every posting's bm25 doc part is ONE scorer
     call over the group. A key's contributions are its float32
     idf * weight, computed per term, times that doc part: the grouping
-    the kernels have always scored with, so the scores are bit-identical
+    the traversal has always scored with, so the scores are bit-identical
     to scoring each row alone. Non-separable scorers make one
     scorer.score call per key. doc_lens is indexed from docID `base`.
     Keys come in the order their terms first appear in `table`."""
@@ -611,7 +517,6 @@ def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
     tids = tids[order]
     n = table["n"].to_numpy()
     bases = table["base_doc"].to_numpy()
-    lasts = table["last_doc"].to_numpy()
     docs = codecs.decode_many(plan.codec, *_binary_rows(table["docs_bin"]),
                               _list_rows(table["block_doc_offs"]), bases, n)
     tfs = codecs.decode_tfs_many(*_binary_rows(table["tfs_bin"]), n)
@@ -631,7 +536,7 @@ def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
         df, cf = plan.term_stats[tid]
         if scorer.separable:
             idf = F32(scorer.idf(np.array([df]), stats["num_docs"])[0])
-        for _, w in plan.term_queries.get(tid, ()):
+        for w in plan.term_queries.get(tid, {}).values():
             key = (tid, w if plan.weighted else 1.0)
             if key in runs:
                 continue
@@ -645,43 +550,45 @@ def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
                     tfs[p0:p1], dl[p0:p1], df=df, cf=cf,
                     num_docs=stats["num_docs"], avg_len=stats["avg_len"],
                     collection_len=stats["collection_len"])
-            runs[key] = _TermRun(tid, int(bases[r0]), int(lasts[r1 - 1]),
-                                 docs[p0:p1], tfs[p0:p1], contribs,
+            runs[key] = _TermRun(tid, docs[p0:p1], tfs[p0:p1], contribs,
                                  blk_last[b0:b1], blk_part[b0:b1] * scale)
     return runs
 
 
 def _traverse(runs: dict[tuple[int, float], _TermRun], plan: _QueryPlan,
-              doc_lens: np.ndarray, base: int
+              counters: dict | None = None
               ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Answer every query of `plan` over one group of whole shards.
+    """Answer every query of `plan` over one group of whole shards, all
+    queries at once on one dense accumulator (module docstring).
 
     runs holds one run per (term_id, weight) key over the group's docIDs
     (_group_runs): its decode and float32 contributions happened once,
-    shared by every query using the term. ONE kernel per query runs over
-    doc_lens (indexed from docID `base`) — the reference's single cursor
-    walk per query (tools/queries.cpp:279-340), not one kernel per
-    (query, shard). Returns the (qid, doc_id, score) columns of every
-    query's partial top-k."""
-    by_query: dict[str, list] = {}
-    for tid in dict.fromkeys(tid for tid, _ in runs):
-        for qid, w in plan.term_queries.get(tid, ()):
-            by_query.setdefault(qid, []).append(
-                runs[(tid, w if plan.weighted else 1.0)])
-    out_q, out_d, out_s = [], [], []
-    for qid, qruns in by_query.items():
-        docs, scores = _run_kernel(
-            plan.algorithm, qruns, plan.k, doc_lens, base, plan.range_span,
-            float(plan.thresholds.get(qid, 0.0)),
-            n_query_terms=plan.n_terms.get(qid))
-        out_q.append(np.repeat(qid, docs.size))
-        out_d.append(docs)
-        out_s.append(scores)
-    if not out_q:
+    shared by every query using the term, and each run makes one scatter
+    per block over the rows of those queries. Returns the (qid, doc_id,
+    score) columns of every cell a block emitted: each query's partial
+    top-k of the group, ties included.
+
+    With `counters` (a dict) the traversal also fills counters[qid] with
+    (postings_decoded, blocks_decoded, docs_scored, ranges,
+    ranges_skipped): the postings and blocks of the query's runs with at
+    least one scattered cell, the (query, doc) cells that received a
+    contribution, the (query, range) cells holding one of the query's
+    postings, and those among them never scattered."""
+    if not runs:
         return (np.zeros(0, dtype=object), np.zeros(0, dtype=np.int64),
                 np.zeros(0, dtype=F32))
-    return (np.concatenate(out_q), np.concatenate(out_d).astype(np.int64),
-            np.concatenate(out_s).astype(F32))
+    tr = _Traversal(runs, plan, counters is not None)
+    scattered = (np.zeros(tr.present.shape, dtype=bool)
+                 if counters is not None else None)
+    touched = np.zeros(tr.qids.size, dtype=np.int64)
+    seeded = tr.seed() if tr.pruned else None
+    out = list(tr.blocks(scattered, touched))
+    rows, cols, scores = (np.concatenate(c) for c in zip(*out)) if out else (
+        np.zeros(0, np.intp), np.zeros(0, np.intp), np.zeros(0, F32))
+    if counters is not None:
+        counters.update(tr.counters(seeded, scattered, touched))
+    docs = tr.active[cols // tr.span] * tr.span + cols % tr.span
+    return tr.qids[rows], docs.astype(np.int64), scores
 
 
 def _shard_groups(batches, budget: int):
@@ -695,8 +602,7 @@ def _shard_groups(batches, budget: int):
             if not rb.num_rows:
                 continue
             sid = rb.column("shard_id").to_numpy()
-            starts = np.flatnonzero(
-                np.concatenate(([True], sid[1:] != sid[:-1])))
+            starts = _firsts(sid)
             ends = np.append(starts[1:], sid.size)
             sizes = np.add.reduceat(rb.column("n").to_numpy(), starts)
             for s, e, n in zip(starts.tolist(), ends.tolist(),
@@ -731,10 +637,11 @@ def _group_doc_lens(table: pa.Table) -> tuple[np.ndarray, int]:
 def _traverse_partitions(plan: _QueryPlan, doc_lens_bc):
     """mapInArrow body of the executor-side traversal (topk_search_batch).
     Rows arrive co-located and sorted by shard. Each task walks its shards
-    in groups bounded by SERVE_COLLECT_MAX_POSTINGS, decodes each group in
-    one columnar pass (_group_runs) and traverses it over the broadcast
-    global doc-length array. Without that array (doc_lens_bc None: rows
-    carry their own shard's doc_lens and shard_base) a group is one
+    in groups bounded by SERVE_COLLECT_MAX_POSTINGS, decodes and scores
+    each group in one columnar pass (_group_runs) against the broadcast
+    global doc-length array, and answers every query of the group in one
+    dense traversal (_traverse). Without that array (doc_lens_bc None:
+    rows carry their own shard's doc_lens and shard_base) a group is one
     shard."""
     budget = SERVE_COLLECT_MAX_POSTINGS if doc_lens_bc is not None else 0
 
@@ -744,7 +651,7 @@ def _traverse_partitions(plan: _QueryPlan, doc_lens_bc):
             doc_lens, base = ((gdl, 0) if gdl is not None
                               else _group_doc_lens(table))
             qids, docs, scores = _traverse(
-                _group_runs(table, plan, doc_lens, base), plan, doc_lens, base)
+                _group_runs(table, plan, doc_lens, base), plan)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(qids, pa.string()), pa.array(docs),
                  pa.array(scores)], names=["qid", "doc_id", "score"])
@@ -820,7 +727,7 @@ class _ServeState:
     def __init__(self, tmeta, global_doc_lens, bc_doc_lens, n_shards):
         self.tmeta = tmeta
         # doc lengths indexed by docID: every traversal walks the global
-        # doc space, so a kernel serves any group of shards
+        # doc space, so a traversal serves any group of shards
         self.global_doc_lens = global_doc_lens
         self.bc_doc_lens = bc_doc_lens
         self.n_shards = n_shards
@@ -851,7 +758,7 @@ def _serve_state(index, prefetch: bool = True):
     prefetch=False builds/returns the METADATA-ONLY state (lexicon + doc
     lengths — two bounded collects, no posting bytes): the batch
     executor needs the lexicon for driver-side query analysis but runs
-    its kernels executor-side and never reads the driver row cache, so
+    its traversal executor-side and never reads the driver row cache, so
     it must not pay the whole-index posting fetch. The prefetch runs
     lazily on the first interactive-serve use instead."""
     with _SERVE_STATE_LOCK:
@@ -896,7 +803,7 @@ def _rows_by_term(table: pa.Table, term_of_id: dict[int, str]
     key = "term" if "term" in table.column_names else "term_id"
     table = table.sort_by(key)
     keys = table[key].to_numpy()
-    starts = np.flatnonzero(np.concatenate(([True], keys[1:] != keys[:-1])))
+    starts = _firsts(keys)
     names = keys[starts].tolist()
     if key == "term_id":
         names = [term_of_id[i] for i in names]
@@ -958,7 +865,7 @@ def _serve_runs(st, plan: _QueryPlan) -> dict[tuple[int, float], _TermRun]:
     ones not yet in st.term_runs are built from the cached rows as one
     group. The caller holds st.lock."""
     keys = {tid: [(tid, w if plan.weighted else 1.0)
-                  for _, w in plan.term_queries[tid]]
+                  for w in plan.term_queries[tid].values()]
             for tid in plan.tid_of_term.values()}
     build = [t for t, tid in plan.tid_of_term.items()
              if any(key not in st.term_runs for key in keys[tid])]
@@ -982,10 +889,10 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
     terms resolve against the driver-cached lexicon (no job), and the
     posting rows for the query vocabulary are fetched in ONE column-pruned
     job into the per-term serve cache (repeat terms: zero jobs) — then one
-    _traverse runs the kernels driver-side over the cached runs, exactly
-    as the reference runs them over its mmap'd index. Same run builder,
-    kernels and float32 scores as topk_search_batch, so the ranking is
-    identical.
+    dense _traverse answers every query of the call driver-side over the
+    cached runs, the whole index as one group, as the reference runs its
+    queries over its mmap'd index. Same run builder, traversal and
+    float32 scores as topk_search_batch, so the ranking is identical.
 
     Returns None when the index/meta exceeds the serve bounds, when the
     per-query merge would exceed SERVE_MAX_PARTIAL_ROWS, or when the
@@ -1010,8 +917,8 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
         if missing:
             _serve_fetch(index, st, plan, missing)
         runs = _serve_runs(st, plan)
-    partial = pd.DataFrame(dict(zip(("qid", "doc_id", "score"), _traverse(
-        runs, plan, st.global_doc_lens, 0))))
+    partial = pd.DataFrame(dict(zip(("qid", "doc_id", "score"),
+                                    _traverse(runs, plan))))
 
     if len(partial):
         # driver-side k-merge of the per-query partials — same
@@ -1046,7 +953,17 @@ def topk_search(index, queries: list[str] | object, k: int = 10,
     (_topk_search_serve) whenever it accepts the call; every other call
     (DataFrame query sets, indexes above the serve bounds, oversized
     fetches or merges) runs the executor-side topk_search_batch. Both run
-    the same kernels, so the ranking does not depend on the route.
+    the same dense traversal (_traverse: every query of a group of shards
+    scored at once, every algorithm's float32 scores summed in ascending
+    term_id), so the ranking does not depend on the route; each query's
+    (qid, term) pairs count once, a repeated one's weights summed.
+
+    thresholds ({qid: theta0}) start each query's threshold above zero
+    (reference tools/thresholds.cpp): an exact k-th score stays
+    rank-safe, ties kept; an overestimate drops answers below it.
+    range_span is the pruning granularity: the pruned algorithms skip
+    (query, range_span-doc range) cells whose score bound cannot reach
+    the threshold.
     """
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     if isinstance(queries, list):
@@ -1129,15 +1046,16 @@ def topk_search_batch(index, queries: list[str] | object, k: int = 10,
     its shards in mapInArrow, in groups of at most
     SERVE_COLLECT_MAX_POSTINGS postings: per group, one columnar pass
     decodes every posting row from the contiguous Arrow buffers and scores
-    every posting, each query term's rows become one run shared by all
-    queries using the term, and ONE kernel per query walks the group over
-    the broadcast global doc-length array — the reference's
-    evaluate_queries shape (parallel over queries, shared mmap'd index,
-    evaluate_queries.cpp:154-156). Without the driver serve state (index
-    above its bounds, DataFrame query sets) rows carry their own shard's
-    doc lengths and a group is one shard: one kernel per (query, shard).
-    Results are identical to the serve path (same run builder, kernels
-    and float32 scores).
+    every posting against the broadcast global doc-length array, each
+    query term's rows become one run shared by all queries using the
+    term, and ONE dense traversal (_traverse) scores every query of the
+    group at once — the reference's evaluate_queries shape (every query
+    over one shared mmap'd index, evaluate_queries.cpp:154-156) with the
+    per-query loop turned into one scatter per (run, block). Without the
+    driver serve state (index above its bounds, DataFrame query sets) rows
+    carry their own shard's doc lengths and a group is one shard. Results
+    are identical to the serve path (same run builder, traversal and
+    float32 scores).
     """
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     plan = _QueryPlan(index, algorithm, k, weighted, range_span, thresholds)
@@ -1158,38 +1076,20 @@ PROFILE_SCHEMA = ("qid string, shard_id long, postings_decoded long, "
 
 def _profile_partitions(plan: _QueryPlan):
     """mapInArrow body of profile_queries over shard-joined rows: one
-    shard at a time, decoded once (_group_runs), one counted kernel per
-    query. Every (query, shard) gets fresh copies of the shard's runs, so
-    the decode counts read off them belong to that query alone — a run
-    shared across queries stays read, and every later query would count
-    decodes it never did."""
+    shard at a time, decoded once (_group_runs) and traversed once with
+    counters (_traverse), one row per (query, shard)."""
     columns = [f.split()[0] for f in PROFILE_SCHEMA.split(", ")]
 
     def run(batches):
         for table in _shard_groups(batches, 0):
             shard_id = table["shard_id"][0].as_py()
-            doc_lens, base = _group_doc_lens(table)
-            by_query: dict[str, list] = {}
-            for (tid, _), shared in _group_runs(table, plan, doc_lens,
-                                                base).items():
-                for qid, _ in plan.term_queries.get(tid, ()):
-                    fresh = copy.copy(shared)
-                    fresh.decoded = False
-                    by_query.setdefault(qid, []).append(fresh)
-            out = []
-            for qid, runs in by_query.items():
-                c: dict = {}
-                _run_kernel(plan.algorithm, runs, plan.k, doc_lens, base,
-                            plan.range_span, 0.0,
-                            n_query_terms=plan.n_terms.get(qid), counters=c)
-                decoded = [r for r in runs if r.decoded]
-                out.append((qid, shard_id, sum(r.n for r in decoded),
-                            sum(int(r.blk_last.size) for r in decoded),
-                            c["docs_scored"], c["ranges"],
-                            c["ranges_skipped"]))
-            if out:
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame(out, columns=columns), preserve_index=False)
+            counters: dict = {}
+            _traverse(_group_runs(table, plan, *_group_doc_lens(table)),
+                      plan, counters)
+            if counters:
+                yield pa.RecordBatch.from_pandas(pd.DataFrame(
+                    [(qid, shard_id, *c) for qid, c in counters.items()],
+                    columns=columns), preserve_index=False)
 
     return run
 
@@ -1199,13 +1099,21 @@ def profile_queries(index, queries: list[str] | object, k: int = 10,
                     range_span: int = 16384):
     """Per-(query, shard) execution counters (reference
     tools/profile_queries.cpp: its block_freq_index counts postings/blocks
-    touched per query; here the kernels count ranges visited/skipped and
-    docs fully scored, and posting/block decode counts are read off the
-    lazily-decoded runs after the kernel returns).
+    touched per query), from the same dense traversal the executors run
+    (_traverse), with each shard as its own group:
+
+    - ranges: the (query, range) cells holding one of the query's
+      postings (ranges are range_span-doc cuts of the docID space);
+    - ranges_skipped: those cells never scattered — the pruned
+      algorithms' bound masks and a conjunctive query's incomplete
+      ranges skip them;
+    - docs_scored: the (query, doc) cells that received a contribution
+      (for ranked_or, the union of the query's postings);
+    - postings_decoded / blocks_decoded: the postings and blocks of the
+      query's runs with at least one scattered cell.
 
     Shares the batch executor's query analysis and posting preparation,
-    always over shard-joined rows: the counters are per shard and each
-    shard's ranges start at its own base_doc.
+    always over shard-joined rows: the counters are per shard.
 
     Returns (qid, shard_id, postings_decoded, blocks_decoded, docs_scored,
     ranges, ranges_skipped) — aggregate over shard_id for per-query totals.

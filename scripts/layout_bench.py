@@ -137,8 +137,8 @@ def main() -> None:
             F.sum(F.length("tfs_bin")).alias("tf_bytes"),
             F.sum(F.size("block_last_docs")).alias("blocks"),
             F.sum("n").alias("postings")).collect()[0]
-        # range_span < shard_span so the kernels' range skip + threshold
-        # pruning actually engage (16 ranges per 16k-doc shard)
+        # range_span < shard_span so the pruned algorithms' (query, range)
+        # cell masks act within each shard (16 ranges per 16k-doc shard)
         res = topk_search(idx, queries, k=10, algorithm="block_max_wand",
                           range_span=1024, with_urls=False)
         key = sorted((r.qid, r.rank, r.doc_id) for r in res.collect())

@@ -137,7 +137,8 @@ def worker(cores: int, n_docs: int) -> None:
     from pisa_spark.operators.topk import topk_search_batch
 
     queries = webtext.synth_queries(N_QUERIES, seed=29)
-    # range_span < shard_span so range-skip/threshold pruning engage
+    # range_span < shard_span so the (query, range) cell pruning acts
+    # within each shard
     topk_search_batch(idx, queries[:4], k=10, range_span=1024,
                       algorithm="block_max_wand").count()  # warm-up
     # median-of-3 INSIDE the JVM: the query batch is a seconds-scale

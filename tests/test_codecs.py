@@ -510,7 +510,7 @@ def test_encoded_rows_roundtrip_every_codec(partition):
         runs = _group_runs(table, plan, doc_lens, 0)
         assert len(runs) == 6
         for term, want in by_term:
-            docs, tfs = runs[(term, 1.0)].decode_all()
+            docs, tfs = runs[(term, 1.0)].docs, runs[(term, 1.0)].tfs
             assert (docs == want["doc_id"].to_numpy()).all(), codec
             assert (tfs == want["tf"].to_numpy()).all(), codec
         i = max(range(len(enc)), key=lambda j: len(enc["block_doc_offs"][j]))

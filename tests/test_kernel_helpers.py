@@ -1,15 +1,15 @@
-"""Pure-numpy property tests for the vectorized traversal-kernel helpers.
+"""Pure-numpy property tests for the query traversal, no Spark session
+needed.
 
-The round-5 kernel computes per-range bounds and candidate extraction in
-batch (`range_ubs_batch`, `spans_nonempty`, `docs_in_batch`); these pin
-them bit-identical to the scalar methods they replaced (`range_ub`,
-`blocks_overlapping`, `docs_in`) over randomized posting shapes — no
-Spark session needed. Also pins the columnar group builder (`_group_runs`)
-against decoding and scoring each posting row alone, the scored-once
-contributions, and the batch executor's shard grouping over Arrow
-batches."""
+Pins the dense multi-query traversal (`_traverse`) for every algorithm
+against a brute-force per-query float32 reference that sums each doc's
+contributions in ascending term_id (`_canonical_scores`), over random
+multi-shard groups and a patched-down block budget; the columnar group
+builder (`_group_runs`) against decoding and scoring each posting row
+alone; and the batch executor's shard grouping over Arrow batches."""
 
 import types
+from unittest import mock
 
 import numpy as np
 import pyarrow as pa
@@ -20,23 +20,207 @@ from hypothesis import strategies as st
 from pisa_spark.config import IndexConfig
 from pisa_spark.functions.scoring import make_scorer
 from pisa_spark.operators import codecs
+from pisa_spark.operators import topk as T
 from pisa_spark.operators.postings import _encode_arrays
 from pisa_spark.operators.topk import (F32, _group_runs, _QueryPlan,
                                        _shard_groups, _TermRun)
 
 
-def _make_run(rng: np.random.Generator, n_docs: int, n_postings: int,
-              block: int) -> _TermRun:
-    docs = np.sort(rng.choice(n_docs, size=n_postings, replace=False)
-                   ).astype(np.int64)
-    tfs = rng.integers(1, 5, size=n_postings).astype(np.int64)
-    blk_bounds = list(range(block - 1, n_postings, block))
-    if not blk_bounds or blk_bounds[-1] != n_postings - 1:
-        blk_bounds.append(n_postings - 1)
-    return _TermRun(0, int(docs[0]) - 1, int(docs[-1]), docs, tfs,
-                    np.ones(n_postings, dtype=F32),
-                    docs[np.asarray(blk_bounds)],
-                    rng.random(len(blk_bounds)).astype(F32))
+def _gather(run: _TermRun, doc_ids: np.ndarray) -> np.ndarray:
+    """The run's contribution to each of doc_ids (0 where absent)."""
+    idx = np.searchsorted(run.docs, doc_ids)
+    idx_c = np.minimum(idx, run.n - 1)
+    hit = (idx < run.n) & (run.docs[idx_c] == doc_ids)
+    out = np.zeros(doc_ids.size, dtype=F32)
+    out[hit] = run.contribs[idx[hit]]
+    return out
+
+
+def _canonical_scores(doc_ids: np.ndarray, runs: list) -> np.ndarray:
+    """Brute-force float32 scores: each doc's contributions summed one
+    term at a time in ascending term_id, from 0.0."""
+    total = np.zeros(doc_ids.size, dtype=F32)
+    for run in sorted(runs, key=lambda r: r.term_id):
+        total = total + _gather(run, doc_ids)
+    return total
+
+
+def _make_run(rng: np.random.Generator, tid: int, docs: np.ndarray,
+              contribs: np.ndarray) -> _TermRun:
+    """A run over `docs` in random-size posting blocks whose bound is the
+    block's max contribution."""
+    ends = np.unique(np.r_[np.cumsum(rng.integers(1, 9, size=docs.size)),
+                           docs.size])
+    ends = ends[ends <= docs.size]
+    blk_ub = np.maximum.reduceat(contribs, np.r_[0, ends[:-1]])
+    return _TermRun(tid, docs, np.ones(docs.size, np.int64), contribs,
+                    docs[ends - 1], blk_ub.astype(F32))
+
+
+def _random_group(rng: np.random.Generator, n_queries: int,
+                  weighted: bool, algorithm: str, k: int, span: int):
+    """A plan and its runs over random shards with docID gaps between
+    them. Contributions come from a few values per term, so equal scores
+    (ties) are common and sums depend on their float32 order; some are
+    0. A query may name a term with no posting in
+    the group."""
+    bases = np.cumsum(rng.integers(0, 3 * span, size=int(rng.integers(1, 5))))
+    sizes = rng.integers(1, 4 * span, size=bases.size)
+    space = np.concatenate([np.arange(b, b + n) + i * 4 * span
+                            for i, (b, n) in enumerate(zip(bases, sizes))])
+    tids = rng.choice(1000, size=int(rng.integers(1, 7)), replace=False)
+    plan = _QueryPlan(types.SimpleNamespace(cfg=IndexConfig(), stats={}),
+                      algorithm, k, weighted, span, None)
+    for q in range(n_queries):
+        for tid in rng.choice(tids, size=int(rng.integers(1, tids.size + 1)),
+                              replace=False).tolist():
+            plan.add(f"q{q}", f"t{tid}", tid, 1, 1,
+                     float(rng.integers(1, 4)))
+    runs = {}
+    for tid in tids[1:].tolist():  # tids[0] has no posting here
+        n = int(rng.integers(1, space.size + 1))
+        docs = np.sort(rng.choice(space, size=n, replace=False))
+        base = F32(rng.uniform(0.5, 2.0)) * rng.choice(
+            np.array([0.0, 0.1, 0.7, 1 / 3, 1.3, 2.9], F32), size=n)
+        for w in dict.fromkeys(w if weighted else 1.0 for w in
+                               plan.term_queries.get(tid, {}).values()):
+            runs[(tid, w)] = _make_run(rng, tid, docs, F32(w) * base)
+    return plan, runs
+
+
+def _reference(runs: dict, plan: _QueryPlan) -> dict:
+    """Every query's exhaustive top-k: (doc, score bits), score desc,
+    doc asc, from _canonical_scores; conjunctive algorithms keep the docs
+    holding every known term of the query."""
+    conj = plan.algorithm in ("ranked_and", "block_max_ranked_and")
+    out = {}
+    for qid, n_terms in plan.n_terms.items():
+        qruns = [runs[(tid, w if plan.weighted else 1.0)]
+                 for tid, ws in plan.term_queries.items()
+                 for q, w in ws.items()
+                 if q == qid and (tid, w if plan.weighted else 1.0) in runs]
+        if not qruns or (conj and len(qruns) < n_terms):
+            continue
+        docs = np.unique(np.concatenate([r.docs for r in qruns]))
+        if conj:
+            for r in qruns:
+                docs = docs[np.isin(docs, r.docs)]
+        scores = _canonical_scores(docs, qruns)
+        pos = scores > 0
+        order = np.lexsort((docs[pos], -scores[pos]))[:plan.k]
+        if order.size:
+            out[qid] = list(zip(docs[pos][order].tolist(),
+                                scores[pos][order].view(np.int32).tolist()))
+    return out
+
+
+def _cut(qids, docs, scores, k: int) -> dict:
+    """The traversal's partial rows cut to (score desc, doc asc) top-k."""
+    out = {}
+    for qid in dict.fromkeys(qids.tolist()):
+        mine = qids == qid
+        d, s = docs[mine], scores[mine]
+        assert s.dtype == np.dtype(F32) and np.unique(d).size == d.size
+        order = np.lexsort((d, -s))[:k]
+        out[qid] = list(zip(d[order].tolist(),
+                            s[order].view(np.int32).tolist()))
+    return out
+
+
+@settings(max_examples=150, deadline=None)
+@given(seed=st.integers(0, 2**31 - 1),
+       algorithm=st.sampled_from(T.ALGORITHMS + tuple(T._ALGORITHM_ALIASES)),
+       weighted=st.booleans(), exact_threshold=st.booleans(),
+       k=st.sampled_from([1, 10, 100_000]),
+       span=st.sampled_from([1, 3, 16, 64]),
+       budget_ranges=st.sampled_from([1, 2, 5, None]))
+def test_dense_traversal_matches_reference(seed, algorithm, weighted,
+                                           exact_threshold, k, span,
+                                           budget_ranges):
+    """Every algorithm (and the ranked_or_taat aliases) over a random
+    multi-shard group — docID gaps, posting blocks crossing range and
+    tile edges, tied scores, blocks split by a patched-down cell budget,
+    thresholds 0 or the exact k-th score, k of 1, 10 or above the group's
+    docs — returns, after the (score desc, doc asc) cut, exactly the
+    brute-force float32 reference's rows."""
+    rng = np.random.default_rng(seed)
+    plan, runs = _random_group(rng, int(rng.integers(1, 12)), weighted,
+                               T._ALGORITHM_ALIASES.get(algorithm, algorithm),
+                               k, span)
+    want = _reference(runs, plan)
+    if exact_threshold:
+        plan.thresholds = {q: float(np.array(rows[-1][1], np.int32).view(F32))
+                           for q, rows in want.items() if len(rows) == k}
+    budget = (T.TRAVERSE_BLOCK_CELLS if budget_ranges is None
+              else budget_ranges * span)
+    with mock.patch.object(T, "TRAVERSE_BLOCK_CELLS", budget):
+        got = _cut(*T._traverse(runs, plan), k)
+    assert {q: r for q, r in got.items() if r} == want
+
+
+@settings(max_examples=60, deadline=None)
+@given(seed=st.integers(0, 2**31 - 1), span=st.sampled_from([1, 3, 16]),
+       budget_ranges=st.sampled_from([1, 3, None]))
+def test_traversal_counters(seed, span, budget_ranges):
+    """profile_queries' counters on one random group: ranked_or scores
+    each query's posting union and skips nothing; the block-bound family
+    scores no more cells than the term-bound family, which scores no more
+    than ranked_or; counting changes no answer."""
+    rng = np.random.default_rng(seed)
+    plan, runs = _random_group(rng, int(rng.integers(1, 12)), False,
+                               "ranked_or", int(rng.choice([1, 10])), span)
+    budget = (T.TRAVERSE_BLOCK_CELLS if budget_ranges is None
+              else budget_ranges * span)
+    got = {}
+    with mock.patch.object(T, "TRAVERSE_BLOCK_CELLS", budget):
+        for alg in ("ranked_or", "maxscore", "wand", "block_max_maxscore",
+                    "block_max_wand", "ranked_and"):
+            plan.algorithm = alg
+            got[alg] = {}
+            assert _cut(*T._traverse(runs, plan, got[alg]), plan.k) == \
+                _cut(*T._traverse(runs, plan), plan.k)
+    for qid, (post, blocks, scored, ranges, skipped) in \
+            got["ranked_or"].items():
+        qruns = [runs[(tid, 1.0)] for tid, ws in plan.term_queries.items()
+                 if qid in ws and (tid, 1.0) in runs]
+        docs = np.concatenate([r.docs for r in qruns])
+        assert (post, blocks) == (sum(r.n for r in qruns),
+                                  sum(r.blk_last.size for r in qruns))
+        assert scored == np.unique(docs).size
+        assert (ranges, skipped) == (np.unique(docs // span).size, 0)
+    for alg, counts in got.items():
+        assert counts.keys() == got["ranked_or"].keys()
+        for qid, c in counts.items():
+            assert c[3] == got["ranked_or"][qid][3] and c[4] <= c[3]
+            assert c[0] <= got["ranked_or"][qid][0]
+    scored = {alg: sum(c[2] for c in counts.values())
+              for alg, counts in got.items()}
+    assert scored["block_max_maxscore"] == scored["block_max_wand"] <= \
+        scored["maxscore"] == scored["wand"] <= scored["ranked_or"]
+
+
+def test_traversal_blocks_stay_under_cell_budget():
+    """2,000 queries over one group under a small cell budget: no
+    accumulator the traversal allocates exceeds the budget, and the rows
+    still equal the reference for an exhaustive, a pruned and a
+    conjunctive algorithm."""
+    rng = np.random.default_rng(7)
+    budget, biggest = 4096, []
+    real_block = T._block
+
+    def spy(n_rows, n_cols, dtype=F32):
+        biggest.append(n_rows * n_cols)
+        return real_block(n_rows, n_cols, dtype)
+
+    for algorithm in ("ranked_or", "block_max_wand", "ranked_and"):
+        plan, runs = _random_group(rng, 2000, True, algorithm, 10, 64)
+        assert len(plan.n_terms) == 2000
+        with mock.patch.object(T, "TRAVERSE_BLOCK_CELLS", budget), \
+                mock.patch.object(T, "_block", spy):
+            got = _cut(*T._traverse(runs, plan), 10)
+        assert {q: r for q, r in got.items() if r} == \
+            _reference(runs, plan), algorithm
+    assert biggest and max(biggest) <= budget
 
 
 TERMS = ["it's", "back\\slash", "100%", "naïve", "日本", "plain"]
@@ -115,7 +299,7 @@ def _row_runs(rows: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
                       key=lambda r: r["shard_id"])
         if not mine:
             continue
-        for _, w in qs:
+        for w in qs.values():
             key = (tid, w if plan.weighted else 1.0)
             wf = F32(key[1])
             scale = (F32(scorer.idf(np.array([df]), stats["num_docs"])[0]) * wf
@@ -170,12 +354,11 @@ def test_group_runs_match_per_row_decode(seed, codec, scorer_name, weighted,
                 want.items():
             run = runs[key]
             assert (run.term_id, run.n) == (key[0], docs.size)
-            assert (run.base_doc, run.last_doc) == (base, last)
-            got_docs, got_tfs = run.decode_all()
-            np.testing.assert_array_equal(got_docs, docs)
-            np.testing.assert_array_equal(got_tfs, tfs)
-            assert run._contribs.dtype == np.dtype(F32)
-            assert (bits(run._contribs) == bits(contribs)).all()
+            assert run.docs[0] > base and run.docs[-1] == last
+            np.testing.assert_array_equal(run.docs, docs)
+            np.testing.assert_array_equal(run.tfs, tfs)
+            assert run.contribs.dtype == np.dtype(F32)
+            assert (bits(run.contribs) == bits(contribs)).all()
             np.testing.assert_array_equal(run.blk_last, blk_last)
             assert run.blk_ub.dtype == np.dtype(F32)
             assert (bits(run.blk_ub) == bits(blk_ub)).all()
@@ -183,72 +366,16 @@ def test_group_runs_match_per_row_decode(seed, codec, scorer_name, weighted,
             postings[key] = postings.get(key, 0) + run.n
     assert postings == {(tid, w if weighted else 1.0): meta[tid][0]
                         for tid, qs in plan.term_queries.items()
-                        for _, w in qs}
-
-
-@settings(max_examples=40, deadline=None)
-@given(seed=st.integers(0, 2**31 - 1),
-       n_docs=st.integers(50, 3000),
-       span=st.sampled_from([16, 64, 128, 256]))
-def test_range_ubs_batch_matches_scalar(seed, n_docs, span):
-    rng = np.random.default_rng(seed)
-    n_postings = int(rng.integers(5, max(6, n_docs // 2)))
-    run = _make_run(rng, n_docs, n_postings, block=int(rng.integers(4, 64)))
-    los = np.arange(0, n_docs, span, dtype=np.int64)
-    his = np.minimum(los + span, n_docs)
-    batch = run.range_ubs_batch(los, his)
-    scalar = np.array([run.range_ub(int(lo), int(hi))
-                       for lo, hi in zip(los, his)], dtype=F32)
-    assert batch.dtype == np.dtype(F32)
-    np.testing.assert_array_equal(batch, scalar)
-    nonempty = run.spans_nonempty(los, his)
-    scalar_ne = np.array(
-        [run.blocks_overlapping(int(lo), int(hi))[0]
-         <= run.blocks_overlapping(int(lo), int(hi))[1]
-         for lo, hi in zip(los, his)])
-    np.testing.assert_array_equal(nonempty, scalar_ne)
-
-
-@settings(max_examples=40, deadline=None)
-@given(seed=st.integers(0, 2**31 - 1),
-       n_docs=st.integers(50, 3000),
-       span=st.sampled_from([16, 64, 256]))
-def test_docs_in_batch_matches_scalar_union(seed, n_docs, span):
-    rng = np.random.default_rng(seed)
-    n_postings = int(rng.integers(5, max(6, n_docs // 2)))
-    run = _make_run(rng, n_docs, n_postings, block=32)
-    all_los = np.arange(0, n_docs, span, dtype=np.int64)
-    pick = rng.random(all_los.size) < 0.5  # disjoint subset, gaps included
-    los = all_los[pick]
-    his = np.minimum(los + span, n_docs)
-    if los.size == 0:
-        return
-    batch = run.docs_in_batch(los, his)
-    scalar = np.concatenate(
-        [run.docs_in(int(lo), int(hi))[0] for lo, hi in zip(los, his)])
-    np.testing.assert_array_equal(batch, scalar)
-
-
-@settings(max_examples=20, deadline=None)
-@given(seed=st.integers(0, 2**31 - 1))
-def test_range_ubs_batch_empty_and_edge_ranges(seed):
-    rng = np.random.default_rng(seed)
-    run = _make_run(rng, 1000, 20, block=8)
-    # ranges entirely before, inside gaps, and after the posting span
-    los = np.array([0, run.last_doc + 1, 990], dtype=np.int64)
-    his = np.array([1, run.last_doc + 5, 1000], dtype=np.int64)
-    batch = run.range_ubs_batch(los, his)
-    scalar = np.array([run.range_ub(int(lo), int(hi))
-                       for lo, hi in zip(los, his)], dtype=F32)
-    np.testing.assert_array_equal(batch, scalar)
+                        for w in qs.values()}
 
 
 @settings(max_examples=30, deadline=None)
 @given(seed=st.integers(0, 2**31 - 1),
        scorer_name=st.sampled_from(["bm25", "qld", "dph"]))
 def test_contrib_scored_once_bit_identical(seed, scorer_name):
-    """contrib gathers from contributions computed once over the whole
-    group; each must equal scoring just the requested docs, bit for bit."""
+    """The traversal reads contributions computed once over the whole
+    group; gathered for any docs, each must equal scoring just those
+    docs, bit for bit."""
     rng = np.random.default_rng(seed)
     rb, doc_lens, stats, meta, cfg = _encoded_group(
         rng, "varint", scorer_name, False)
@@ -260,8 +387,8 @@ def test_contrib_scored_once_bit_identical(seed, scorer_name):
         df, cf = plan.term_stats[tid]
         for _ in range(3):  # repeat calls gather from the same scores
             ask = np.unique(rng.integers(0, doc_lens.size, size=200))
-            got = run.contrib(ask)
-            docs, tfs = run.decode_all()
+            got = _gather(run, ask)
+            docs, tfs = run.docs, run.tfs
             idx = np.searchsorted(docs, ask)
             hit = (idx < docs.size) & (docs[np.minimum(idx, docs.size - 1)]
                                        == ask)

@@ -309,22 +309,76 @@ def test_reference_algorithm_names_resolve(index, queries, oracle_results):
             assert got[q] == oracle_results[q], (name, q)
 
 
-def test_block_max_maxscore_prunes_at_least_as_tight(index, queries):
-    """The per-doc block-refined non-essential bound (reference
-    block_max_maxscore_query.hpp:10-101) must never score MORE docs than
-    plain maxscore's range-granular bound, and ranking stays identical
-    (the previous test). Counters via profile_queries."""
+def _docs_scored(index, queries, algorithm, **kw):
     from pyspark.sql import functions as F
 
     from pisa_spark.operators.topk import profile_queries
 
-    per_alg = {}
-    for name in ("maxscore", "block_max_maxscore"):
-        prof = (profile_queries(index, queries[:8], k=K, algorithm=name,
-                                range_span=128)
-                .agg(F.sum("docs_scored")).collect()[0][0])
-        per_alg[name] = int(prof)
-    assert per_alg["block_max_maxscore"] <= per_alg["maxscore"]
+    return int(profile_queries(index, queries, algorithm=algorithm, **kw)
+               .agg(F.sum("docs_scored")).collect()[0][0])
+
+
+def test_block_max_maxscore_prunes_at_least_as_tight(spark, index, queries):
+    """Counters via profile_queries. The presence-aware block bound
+    (reference block_max_maxscore_query.hpp:10-101) never exceeds the term
+    bound, and every pruned algorithm seeds theta the same way, so the
+    block family scores no more (query, doc) cells than the term family,
+    which scores no more than exhaustive ranked_or; ranking stays
+    identical (the previous test). On an index built to prune — k=1, a
+    few dominant docs, one-doc ranges — every pruned algorithm scores
+    strictly fewer cells than ranked_or."""
+    got = {name: _docs_scored(index, queries[:8], name, k=K, range_span=128)
+           for name in ("ranked_or", "maxscore", "block_max_maxscore",
+                        "wand", "block_max_wand")}
+    assert got["block_max_maxscore"] <= got["maxscore"] <= got["ranked_or"]
+    assert got["block_max_wand"] <= got["wand"] <= got["ranked_or"]
+
+    # "alpha" in every doc, "zeta" in every 8th, six times in doc 200:
+    # at k=1 the zeta docs dominate, so in every shard the seed (each
+    # shard is its own group here) lifts theta above the bound of every
+    # alpha-only doc's range (range_span=1)
+    texts = [" ".join(["alpha"] + ["zeta"] * ((i % 8 == 0) + 5 * (i == 200))
+                      + [f"w{(7 * i + j) % 40}" for j in range(12)])
+             for i in range(256)]
+    skewed = build_index(spark.createDataFrame(
+        [(f"https://e.org/{i:04d}", t) for i, t in enumerate(texts)],
+        "url string, text string"), IndexConfig(shard_span=64))
+    q = ["P1:alpha zeta"]
+    full = _docs_scored(skewed, q, "ranked_or", k=1, range_span=1)
+    assert full == 256
+    for name in ("maxscore", "block_max_maxscore", "wand",
+                 "block_max_wand"):
+        assert _docs_scored(skewed, q, name, k=1, range_span=1) < full, \
+            name
+        top = topk_search(skewed, q, k=1, algorithm=name, range_span=1,
+                          with_urls=True).collect()
+        assert [r.url for r in top] == ["https://e.org/0200"], name
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_dataframe_repeated_terms_merge(spark, index, queries, weighted):
+    """A (qid, term) row repeated in a DataFrame query set counts once,
+    with the weights summed — the merge analyze_query_terms applies to a
+    term repeated in a query line (reference query.cpp:45-82) — so the
+    duplicated set answers exactly like the deduplicated one."""
+    rows = analyze_query_terms(queries, IndexConfig())
+    first = {}
+    for qid, term, w in rows:
+        first.setdefault(qid, (term, w))
+    dup = rows + [(qid, term, 1.0) for qid, (term, _) in first.items()]
+    dedup = [(qid, term, w + 1.0 if first[qid][0] == term else w)
+             for qid, term, w in rows]
+    schema = "qid string, term string, weight double"
+
+    def answer(qrows, alg):
+        return _exact(topk_search(
+            index, spark.createDataFrame(qrows, schema), k=K, algorithm=alg,
+            weighted=weighted, range_span=128, with_urls=False).collect())
+
+    for alg in ("ranked_or", "block_max_wand", "ranked_and"):
+        assert answer(dup, alg) == answer(dedup, alg), alg
+    if not weighted:
+        assert answer(dup, "ranked_or") == answer(rows, "ranked_or")
 
 
 def test_serve_prefetch_whole_index(index, queries):
