@@ -12,10 +12,16 @@ Scale design (the part the reference, a single-node engine, never needed):
   merges doc-sorted batch runs (src/invert.cpp:163-236). Doc-sharding is
   also the reference's own distribution story (range_query over docID
   ranges, include/pisa/range_query.hpp:8-37).
-- Rows are encoded by a mapInArrow kernel over partitions hash-partitioned
-  on (shard_id, term_id) and sorted on (shard_id, term_id, doc_id): groups
-  are contiguous; a carry buffer stitches groups split across Arrow batches.
-  No collect_list ever materializes a full posting list as one JVM object.
+- Two drivers feed one kernel (_encode_arrays). encode_postings takes
+  exploded (key, doc_id, tf, doc_len) rows, hash-partitioned on
+  (shard_id, key) and sorted on (shard_id, key, doc_id), where the key is
+  whichever of `term` (string-keyed output) or `term_id` the input
+  carries. encode_postings_docwise_str takes the compact per-doc token
+  rows, shard-placed, and explodes and sorts each doc-shard inside the
+  kernel. Both run their mapInArrow batches through one carry loop
+  (_whole_groups), which re-cuts them so no (shard_id[, key]) group is
+  split across Arrow batches. No collect_list ever materializes a full
+  posting list as one JVM object.
 - Per row: docIDs as one codec chunk per block (cfg.block_size postings,
   the layout codecs.encode_blocks owns) with per-block byte offsets,
   last-docIDs and block-max scores
@@ -43,6 +49,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pisa_spark.config import IndexConfig
 from pisa_spark.functions.scoring import make_scorer
@@ -82,19 +89,6 @@ ENCODED_STR_SCHEMA = ENCODED_SCHEMA.replace("term_id long", "term string")
 ENCODED_STR_PA_SCHEMA = pa.schema(
     [pa.field("term", pa.string()) if f.name == "term_id" else f
      for f in ENCODED_PA_SCHEMA])
-
-
-def _empty_encoded() -> pd.DataFrame:
-    """Zero-row frame matching ENCODED_SCHEMA."""
-    return pd.DataFrame({
-        c: pd.Series(dtype="int64" if c in (
-            "shard_id", "term_id", "n", "sum_tf", "base_doc", "last_doc")
-            else object)
-        for c in _ENCODED_COLUMNS})
-
-
-def _empty_encoded_batch() -> pa.RecordBatch:
-    return pa.RecordBatch.from_pylist([], schema=ENCODED_PA_SCHEMA)
 
 
 def _variable_boundaries(part: np.ndarray, bsz: int, quantum: int = 16,
@@ -180,10 +174,8 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
     instead of term_id — the lexicon-last build flow."""
     n_rows = docs.size
     if n_rows == 0:
-        if term_dict is not None:
-            return pa.RecordBatch.from_pylist([],
-                                              schema=ENCODED_STR_PA_SCHEMA)
-        return _empty_encoded_batch()
+        return pa.RecordBatch.from_pylist([], schema=(
+            ENCODED_PA_SCHEMA if term_dict is None else ENCODED_STR_PA_SCHEMA))
     span = cfg.shard_span
     bsz = cfg.block_size
 
@@ -293,8 +285,6 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
              pa.py_buffer(stream)])
 
     if term_dict is not None:
-        import pyarrow.compute as pc
-
         term_col = pc.take(term_dict, pa.array(term[starts]))
         out_schema = ENCODED_STR_PA_SCHEMA
     else:
@@ -318,271 +308,141 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
     return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
 
-def _encode_batch(pdf: pd.DataFrame, cfg: IndexConfig, stats: dict,
-                  scorer) -> pd.DataFrame:
-    """pandas shim over _encode_arrays (tests + small callers)."""
-    if not len(pdf):
-        return _empty_encoded()
-    rb = _encode_arrays(
-        pdf["shard_id"].to_numpy(), pdf["term_id"].to_numpy(),
-        pdf["doc_id"].to_numpy(), pdf["tf"].to_numpy(),
-        pdf["doc_len"].to_numpy(), cfg, stats, scorer,
-        df=pdf["df"].to_numpy() if "df" in pdf else None,
-        cf=pdf["cf"].to_numpy() if "cf" in pdf else None)
-    return rb.to_pandas()
-
-
-def _group_carry(batches: Iterator[pd.DataFrame], encode) -> Iterator[pd.DataFrame]:
-    """Yield encoded frames, carrying the (possibly incomplete) trailing
-    group of each Arrow batch into the next so no group is split."""
-    carry = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if not len(pdf):
-            continue
-        # rows are sorted, so the trailing group is the contiguous run of
-        # rows equal to the last (shard_id, term_id) key
-        last_shard = pdf["shard_id"].iat[-1]
-        last_term = pdf["term_id"].iat[-1]
-        tail = (pdf["shard_id"].to_numpy() == last_shard) & \
-               (pdf["term_id"].to_numpy() == last_term)
-        if tail.all():
-            carry = pdf
-            continue
-        first_tail = int(np.flatnonzero(tail).min())
-        complete, carry = pdf.iloc[:first_tail], pdf.iloc[first_tail:]
-        if len(complete):
-            yield encode(complete)
-    if carry is not None and len(carry):
-        yield encode(carry)
-
-
-def _arrow_cols(rb: pa.RecordBatch, names: list[str]) -> dict:
-    return {c: rb.column(c).to_numpy(zero_copy_only=False) for c in names}
-
-
-def _encode_col_stream(batches: Iterator[pa.RecordBatch], names: list[str],
-                       encode) -> Iterator[pa.RecordBatch]:
-    """Stream Arrow batches of sorted (shard_id, term_id, ...) rows into
-    `encode`, carrying the (possibly incomplete) trailing group of each
-    batch into the next so no group is split. Columns travel as numpy
-    arrays end-to-end — no pandas materialization."""
-    carry: dict | None = None
+def _whole_groups(batches: Iterator[pa.RecordBatch],
+                  keys: list[str]) -> Iterator[pa.RecordBatch]:
+    """Re-cut Arrow batches of rows sorted on `keys` so that no run of
+    equal keys is split: the trailing run of each batch (possibly
+    incomplete) is carried into the next, and the last one is flushed at
+    the end. Every driver's mapInArrow body runs through this one loop."""
+    carry: pa.RecordBatch | None = None
     for rb in batches:
-        cols = _arrow_cols(rb, names)
-        if carry is not None and carry["shard_id"].size:
-            cols = {c: np.concatenate([carry[c], cols[c]]) for c in names}
-        n = cols["shard_id"].size
-        if n == 0:
+        if carry is not None:
+            rb = (pa.Table.from_batches([carry, rb])
+                  .combine_chunks().to_batches()[0])
+            carry = None
+        if not rb.num_rows:
             continue
-        # rows are sorted, so the trailing group is the contiguous run of
-        # rows equal to the last (shard_id, term_id) key
-        tail = ((cols["shard_id"] == cols["shard_id"][-1])
-                & (cols["term_id"] == cols["term_id"][-1]))
-        if tail.all():
-            carry = cols
-            continue
-        first_tail = int(np.flatnonzero(tail).min())
-        carry = {c: cols[c][first_tail:] for c in names}
-        yield encode({c: cols[c][:first_tail] for c in names})
-    if carry is not None and carry["shard_id"].size:
-        yield encode(carry)
+        # rows are sorted, so the rows equal to the last key are a suffix
+        tail = np.ones(rb.num_rows, dtype=bool)
+        for k in keys:
+            col = rb.column(k)
+            tail &= pc.equal(col, col[rb.num_rows - 1]).to_numpy(
+                zero_copy_only=False)
+        first_tail = int(np.argmax(tail))
+        carry = rb.slice(first_tail)
+        if first_tail:
+            yield rb.slice(0, first_tail)
+    if carry is not None:
+        yield carry
 
 
-def encode_postings(tf_df, cfg: IndexConfig, stats: dict,
-                    num_partitions: int | None = None):
-    """tf_df: (term_id, doc_id, tf, doc_len[, df, cf]) -> encoded posting rows.
+def _np(rb: pa.RecordBatch, name: str) -> np.ndarray:
+    return rb.column(name).to_numpy(zero_copy_only=False)
 
-    One shuffle, hash-partitioned on (shard_id, term_id) — the salted
+
+def encode_postings(flat_df, cfg: IndexConfig, stats: dict):
+    """Exploded encode: flat_df (term | term_id, doc_id, tf, doc_len
+    [, df, cf]) -> encoded posting rows, string-keyed (ENCODED_STR_SCHEMA)
+    for a `term` key and id-keyed (ENCODED_SCHEMA) for a `term_id` key.
+
+    One shuffle, hash-partitioned on (shard_id, key) — the salted
     repartition-by-term-hash of the north rule with shard_id as the
-    deterministic salt — then partition-local sort + streaming encode
-    (mapInArrow: numpy in, zero-copy Arrow out; no pandas boundary).
+    deterministic salt, each group bounded by shard_span postings — then
+    partition-local sort + streaming encode (mapInArrow: numpy in,
+    zero-copy Arrow out). A `term` key is group-detected on batch-local
+    dictionary codes (monotone over the sorted input). df/cf pass through
+    to the scorer when present; non-separable scorers require them.
     """
     from pyspark.sql import functions as F
 
     scorer = make_scorer(cfg.scorer, cfg.scorer_params())
     need_stats = (not scorer.separable
                   and not getattr(scorer, "stats_free", False))
-    if need_stats and ("df" not in tf_df.columns or "cf" not in tf_df.columns):
-        raise ValueError("non-separable scorer requires df/cf columns in tf_df")
-
-    with_shard = tf_df.withColumn(
+    has_stats = "df" in flat_df.columns and "cf" in flat_df.columns
+    if need_stats and not has_stats:
+        raise ValueError("non-separable scorer requires df/cf columns in "
+                         "the flat postings")
+    key = "term" if "term" in flat_df.columns else "term_id"
+    names = ["shard_id", key, "doc_id", "tf", "doc_len"]
+    if has_stats:
+        names += ["df", "cf"]
+    with_shard = flat_df.withColumn(
         "shard_id", (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long"))
-    parts = num_partitions or with_shard.sparkSession.sparkContext.defaultParallelism * 2
+    parts = with_shard.sparkSession.sparkContext.defaultParallelism * 2
     arranged = (
         with_shard
-        .repartition(parts, "shard_id", "term_id")
-        .sortWithinPartitions("shard_id", "term_id", "doc_id")
+        .repartition(parts, "shard_id", key)
+        .sortWithinPartitions("shard_id", key, "doc_id")
+        .select(*names)
     )
-    names = ["shard_id", "term_id", "doc_id", "tf", "doc_len"]
-    if "df" in tf_df.columns and "cf" in tf_df.columns:
-        names += ["df", "cf"]
 
-    def encode(cols: dict) -> pa.RecordBatch:
+    def encode(rb: pa.RecordBatch) -> pa.RecordBatch:
+        term_dict = None
+        if key == "term":
+            dict_enc = rb.column("term").dictionary_encode()
+            term = dict_enc.indices.to_numpy(zero_copy_only=False)
+            term_dict = dict_enc.dictionary
+        else:
+            term = _np(rb, "term_id")
         return _encode_arrays(
-            cols["shard_id"], cols["term_id"], cols["doc_id"],
-            cols["tf"], cols["doc_len"], cfg, stats, scorer,
-            df=cols.get("df"), cf=cols.get("cf"))
+            _np(rb, "shard_id"), term, _np(rb, "doc_id"), _np(rb, "tf"),
+            _np(rb, "doc_len"), cfg, stats, scorer,
+            df=_np(rb, "df") if has_stats else None,
+            cf=_np(rb, "cf") if has_stats else None, term_dict=term_dict)
 
     def run(batches):
-        yield from _encode_col_stream(batches, names, encode)
+        for rb in _whole_groups(batches, ["shard_id", key]):
+            yield encode(rb)
 
-    return arranged.select(*names).mapInArrow(run, schema=ENCODED_SCHEMA)
-
-
-def encode_postings_docwise(doc_terms, vocab: dict, cfg: IndexConfig,
-                            stats: dict, num_partitions: int | None = None):
-    """Doc-wise encode path for broadcastable vocabularies: shuffle the
-    COMPACT per-doc token rows by shard (~100x less data than the exploded
-    (term, doc, tf) rows) and do explode + term-id remap + (term, doc) sort
-    in numpy inside the kernel. Output rows are identical to
-    encode_postings'. This mirrors the reference's invert batch path even
-    more closely: build a per-batch inverted index straight from the
-    forward index (src/invert.cpp:135-161), with doc-shards as batches.
-
-    Requires a separable or stats-free scorer (bm25/quantized): df/cf are
-    not known doc-wise. Web-scale vocabularies use encode_postings.
-    """
-    from pyspark.sql import functions as F
-
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    if not scorer.separable and not getattr(scorer, "stats_free", False):
-        raise ValueError("docwise encode requires separable/stats-free scorer")
-    spark = doc_terms.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism * 2
-    bc = spark.sparkContext.broadcast(vocab)
-    span = cfg.shard_span
-
-    # shards are dense sequential ints and equal-sized by construction:
-    # round-robin placement (shard s -> partition s % parts) beats raw hash,
-    # which strands ~1/e of the partitions empty when n_shards ~ parts
-    from pisa_spark.operators.partitioning import (partition_values,
-                                                   round_robin_expr)
-
-    vals = partition_values(spark, parts)
-    arranged = (
-        doc_terms.select(
-            (F.col("doc_id") / F.lit(span)).cast("long").alias("shard_id"),
-            "doc_id", "doc_len", "terms", "tfs")
-        .repartition(parts, round_robin_expr(F.col("shard_id"), parts, vals))
-        .sortWithinPartitions("shard_id", "doc_id")
-    )
-
-    vocab_holder: list = []  # per-executor lazily-built Arrow value set
-
-    def encode_shards(rb: pa.RecordBatch) -> pa.RecordBatch:
-        import pyarrow.compute as pc
-
-        if not vocab_holder:
-            v = bc.value
-            # value set ordered by term_id, so index_in IS the id lookup
-            vocab_holder.append(pa.array(sorted(v, key=v.get)))
-        doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
-        dls = rb.column("doc_len").to_numpy(zero_copy_only=False)
-        terms_list = rb.column("terms")
-        n_tok = pc.list_value_length(terms_list).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        doc = np.repeat(doc_ids, n_tok)
-        if doc.size == 0:
-            return _empty_encoded_batch()
-        dl = np.repeat(dls, n_tok)
-        tid = pc.index_in(terms_list.flatten(), vocab_holder[0]).to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        tfs_flat = rb.column("tfs").flatten().to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        sh = doc // span
-        # docs arrive sorted within each shard, so ONE stable sort on the
-        # combined (shard, term) key yields contiguous groups with
-        # ascending docs — numpy's stable int sort is radix (O(n)), ~3x
-        # cheaper than the 3-key lexsort it replaces on this hot path
-        key = sh * np.int64(len(vocab_holder[0])) + tid
-        order = np.argsort(key, kind="stable")
-        return _encode_arrays(sh[order], tid[order], doc[order],
-                              tfs_flat[order], dl[order], cfg, stats, scorer)
-
-    def run(batches):
-        # carry whole shards across Arrow batches (same trick as the
-        # exploded path's carry but keyed on shard_id only: a shard's docs
-        # are contiguous after the sort)
-        carry: pa.RecordBatch | None = None
-        for rb in batches:
-            if carry is not None and carry.num_rows:
-                rb = (pa.Table.from_batches([carry, rb])
-                      .combine_chunks().to_batches()[0])
-            if not rb.num_rows:
-                continue
-            shard_np = rb.column("shard_id").to_numpy(zero_copy_only=False)
-            tail = shard_np == shard_np[-1]
-            if tail.all():
-                carry = rb
-                continue
-            first_tail = int(np.flatnonzero(tail).min())
-            carry = rb.slice(first_tail)
-            yield encode_shards(rb.slice(0, first_tail))
-        if carry is not None and carry.num_rows:
-            yield encode_shards(carry)
-
-    return arranged.mapInArrow(run, schema=ENCODED_SCHEMA)
+    schema = ENCODED_STR_SCHEMA if key == "term" else ENCODED_SCHEMA
+    return arranged.mapInArrow(run, schema=schema)
 
 
 def encode_postings_docwise_str(doc_terms, cfg: IndexConfig, stats: dict,
-                                num_partitions: int | None = None,
-                                shard_stride: int = 1,
-                                bucket_starts: list[int] | None = None):
-    """Doc-wise encode WITHOUT a vocabulary: emits string-keyed encoded
-    rows (ENCODED_STR_SCHEMA). Terms are dictionary-encoded batch-locally
-    (Arrow C kernel), groups keyed on the local codes, and the term string
-    re-attached per encoded row — so no vocab broadcast, no term-id
-    assignment, and no flat (term, doc, tf) shuffle anywhere before the
-    encode. The lexicon is derived AFTERWARD from these rows (~avg_len x
-    fewer than flat postings) and term_ids joined back (plans/build.py).
+                                shard_stride: int = 1, shuffle: bool = True):
+    """Doc-wise encode: compact per-doc (doc_id, doc_len, terms, tfs) rows
+    -> string-keyed encoded rows (ENCODED_STR_SCHEMA). Each doc-shard is
+    exploded, dictionary-encoded batch-locally (Arrow C kernel) and sorted
+    in numpy inside the kernel, so no vocabulary broadcast, no term-id
+    assignment and no flat (term, doc, tf) shuffle happen before the
+    encode — the reference's invert batch path, a per-batch inverted index
+    built straight from the forward index (src/invert.cpp:135-161), with
+    doc-shards as batches. Output rows equal encode_postings' on the
+    exploded rows. The lexicon is derived AFTERWARD from these rows
+    (~avg_len x fewer than flat postings) and term_ids joined back
+    (plans/build.py).
 
     Works for ANY vocabulary size; the binding constraint is the per-task
     working set of one doc-shard's exploded tokens (cfg.shard_span x
     avg_len) — plans/build.py gates on that and falls back to
-    encode_postings_str above the bound.
+    encode_postings above the bound. Requires a separable or stats-free
+    scorer: df/cf are not known doc-wise.
+
+    shuffle=False: the input already holds every shard whole on one
+    partition with doc_ids ascending in partition order (the build's
+    span-aligned rank layout), so the encode is a narrow mapInArrow over
+    doc_terms as-is. shuffle=True: shards are round-robin placed on
+    partitions and sorted by doc_id first.
 
     shard_stride: when the caller pre-filtered the input to every
     shard_stride-th shard (the manifest build's bucket resume), shard ids
     share a common stride and the round-robin placement key must be the
     shard's RANK within the bucket (shard_id // stride) — keying on the
-    raw id would land all work on parts/gcd(stride, parts) partitions.
-
-    bucket_starts: the global doc_id at which each docID-assignment
-    bucket begins (plans/build.py assign_rank_ids meta). When given, the
-    encode runs SHUFFLE-FREE: the rank shuffle already left every bucket
-    whole on one partition with doc_ids ascending in partition order, so
-    every shard that does not straddle a bucket boundary is encoded by a
-    narrow mapInArrow over doc_terms as-is — the (shard)-keyed
-    repartition of the full token mass (the build's second-largest
-    shuffle) disappears. Only the <= n_buckets shards that straddle a
-    non-span-aligned bucket boundary are routed through the exploded
-    (shard, term)-shuffled path, then repartitioned by shard so the
-    colocation invariant (one shard -> one partition) still holds for
-    the union. At cluster scale the straddle mass is n_buckets x span
-    docs — vanishing against the corpus."""
+    raw id would land all work on parts/gcd(stride, parts) partitions."""
     from pyspark.sql import functions as F
 
     scorer = make_scorer(cfg.scorer, cfg.scorer_params())
     if not scorer.separable and not getattr(scorer, "stats_free", False):
         raise ValueError("docwise encode requires separable/stats-free scorer")
-    spark = doc_terms.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism * 2
     span = cfg.shard_span
-
-    from pisa_spark.operators.partitioning import (partition_values,
-                                                   round_robin_expr)
 
     base_cols = doc_terms.select(
         (F.col("doc_id") / F.lit(span)).cast("long").alias("shard_id"),
         "doc_id", "doc_len", "terms", "tfs")
 
     def encode_shards(rb: pa.RecordBatch) -> pa.RecordBatch:
-        import pyarrow.compute as pc
-
-        doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
-        dls = rb.column("doc_len").to_numpy(zero_copy_only=False)
+        doc_ids = _np(rb, "doc_id")
+        dls = _np(rb, "doc_len")
         terms_list = rb.column("terms")
         n_tok = pc.list_value_length(terms_list).to_numpy(
             zero_copy_only=False).astype(np.int64)
@@ -628,56 +488,20 @@ def encode_postings_docwise_str(doc_terms, cfg: IndexConfig, stats: dict,
                               scorer, term_dict=dict_enc.dictionary)
 
     def run(batches):
-        carry: pa.RecordBatch | None = None
-        for rb in batches:
-            if carry is not None and carry.num_rows:
-                rb = (pa.Table.from_batches([carry, rb])
-                      .combine_chunks().to_batches()[0])
-            if not rb.num_rows:
-                continue
-            shard_np = rb.column("shard_id").to_numpy(zero_copy_only=False)
-            tail = shard_np == shard_np[-1]
-            if tail.all():
-                carry = rb
-                continue
-            first_tail = int(np.flatnonzero(tail).min())
-            carry = rb.slice(first_tail)
-            yield encode_shards(rb.slice(0, first_tail))
-        if carry is not None and carry.num_rows:
-            yield encode_shards(carry)
+        for rb in _whole_groups(batches, ["shard_id"]):
+            yield encode_shards(rb)
 
-    if bucket_starts is not None and shard_stride == 1:
-        straddle = sorted({s // span for s in bucket_starts if s % span})
-        # straddle shards shuffle as COMPACT doc rows (token arrays intact,
-        # same narrow kernel) — only if most of the corpus straddles is the
-        # one classic full repartition cheaper than the two-branch plan
-        if len(straddle) * span * 2 > max(1, stats.get("num_docs", 0)):
-            bucket_starts = None
-    if bucket_starts is not None and shard_stride == 1:
-        # ---- shuffle-free plan (see docstring)
-        interior = (base_cols.filter(~F.col("shard_id").isin(straddle))
-                    if straddle else base_cols)
-        encoded = interior.mapInArrow(run, schema=ENCODED_STR_SCHEMA)
-        if straddle:
-            # compact-row shuffle of ONLY the straddling shards through the
-            # same docwise kernel (no token explode, no (shard, term)
-            # grouping pass). Placement is exact — straddle-list rank i
-            # lands on partition i % bparts — because a hash repartition
-            # over O(parts) distinct shard ids strands ~1/e of the
-            # partitions (operators/partitioning.py).
-            bparts = max(1, min(parts, len(straddle)))
-            vals_b = partition_values(spark, bparts)
-            rank_of = (F.array_position(
-                F.lit(np.array(straddle, dtype=np.int64)),
-                F.col("shard_id")) - 1).cast("long")
-            boundary = (
-                base_cols.filter(F.col("shard_id").isin(straddle))
-                .repartition(bparts, round_robin_expr(rank_of, bparts, vals_b))
-                .sortWithinPartitions("shard_id", "doc_id")
-                .mapInArrow(run, schema=ENCODED_STR_SCHEMA))
-            encoded = encoded.unionByName(boundary)
-        return encoded
+    if not shuffle:
+        return base_cols.mapInArrow(run, schema=ENCODED_STR_SCHEMA)
 
+    # shards are dense sequential ints and equal-sized by construction:
+    # round-robin placement (shard s -> partition s % parts) beats raw hash,
+    # which strands ~1/e of the partitions empty when n_shards ~ parts
+    from pisa_spark.operators.partitioning import (partition_values,
+                                                   round_robin_expr)
+
+    spark = doc_terms.sparkSession
+    parts = spark.sparkContext.defaultParallelism * 2
     vals = partition_values(spark, parts)
     place_key = (F.col("shard_id") / F.lit(shard_stride)).cast("long") \
         if shard_stride > 1 else F.col("shard_id")
@@ -686,69 +510,6 @@ def encode_postings_docwise_str(doc_terms, cfg: IndexConfig, stats: dict,
         .repartition(parts, round_robin_expr(place_key, parts, vals))
         .sortWithinPartitions("shard_id", "doc_id")
     )
-    return arranged.mapInArrow(run, schema=ENCODED_STR_SCHEMA)
-
-
-def encode_postings_str(flat_df, cfg: IndexConfig, stats: dict,
-                        num_partitions: int | None = None):
-    """String-keyed exploded encode: flat_df (term string, doc_id, tf,
-    doc_len) -> ENCODED_STR_SCHEMA rows. The web-scale fallback when one
-    doc-shard's token mass exceeds the docwise working-set bound: shuffles
-    the flat rows on (shard_id, term) — each group still bounded by
-    shard_span postings — and group-detects on batch-local dictionary
-    codes (monotone over the sorted input)."""
-    from pyspark.sql import functions as F
-
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    if not scorer.separable and not getattr(scorer, "stats_free", False):
-        raise ValueError("string-keyed encode requires separable/stats-free "
-                         "scorer (df/cf flows use the term_id path)")
-    with_shard = flat_df.withColumn(
-        "shard_id", (F.col("doc_id") / F.lit(cfg.shard_span)).cast("long"))
-    parts = (num_partitions
-             or with_shard.sparkSession.sparkContext.defaultParallelism * 2)
-    arranged = (
-        with_shard
-        .repartition(parts, "shard_id", "term")
-        .sortWithinPartitions("shard_id", "term", "doc_id")
-        .select("shard_id", "term", "doc_id", "tf", "doc_len")
-    )
-
-    def encode(rb: pa.RecordBatch) -> pa.RecordBatch:
-        dict_enc = rb.column("term").dictionary_encode()
-        tid = dict_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        return _encode_arrays(
-            rb.column("shard_id").to_numpy(zero_copy_only=False),
-            tid,
-            rb.column("doc_id").to_numpy(zero_copy_only=False),
-            rb.column("tf").to_numpy(zero_copy_only=False).astype(np.int64),
-            rb.column("doc_len").to_numpy(zero_copy_only=False),
-            cfg, stats, scorer, term_dict=dict_enc.dictionary)
-
-    def run(batches):
-        carry: pa.RecordBatch | None = None
-        for rb in batches:
-            if carry is not None and carry.num_rows:
-                rb = (pa.Table.from_batches([carry, rb])
-                      .combine_chunks().to_batches()[0])
-            if not rb.num_rows:
-                continue
-            shard_np = rb.column("shard_id").to_numpy(zero_copy_only=False)
-            last_term = rb.column("term")[rb.num_rows - 1]
-            import pyarrow.compute as pc
-
-            term_tail = pc.equal(rb.column("term"), last_term).to_numpy(
-                zero_copy_only=False)
-            tail = (shard_np == shard_np[-1]) & term_tail
-            if tail.all():
-                carry = rb
-                continue
-            first_tail = int(np.flatnonzero(tail).min())
-            carry = rb.slice(first_tail)
-            yield encode(rb.slice(0, first_tail))
-        if carry is not None and carry.num_rows:
-            yield encode(carry)
-
     return arranged.mapInArrow(run, schema=ENCODED_STR_SCHEMA)
 
 

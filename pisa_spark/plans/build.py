@@ -24,7 +24,10 @@ then one of two flows:
 
 - lexicon-LAST (no quantize_bits, scorer bm25 or quantized — the default):
   4. postings = string-keyed encoded rows (doc-sharded, block-encoded,
-     block-max'd), docwise or exploded (_encode_str),
+     block-max'd) from _encode_str: the doc-wise encoder while one shard's
+     token mass fits cfg.docwise_max_tokens, straight over the rank
+     layout in memory (each span-aligned bucket holds whole shards), else
+     the exploded encoder keyed on `term`,
   5. lexicon = ONE per-term aggregation of the ENCODED rows (one row per
      shard x term, ~100x fewer than the flat postings) giving both the
      vocabulary (dense term_ids in sorted order, like fwd.terms) and the
@@ -443,9 +446,9 @@ def assign_rank_ids(df, order_col: str, id_col: str, cuts: list, parts: int,
     # ids stay contiguous WITHIN a bucket with holes only at bucket seams.
     # Passing align=shard_span makes every bucket start span-aligned, so
     # NO doc shard ever straddles a bucket boundary and the docwise encode
-    # is fully shuffle-free with zero boundary work (the straddle mass
-    # otherwise grows with the bucket count, i.e. with the cluster size —
-    # the higher-parallelism build paid strictly more encode work). Holes
+    # runs over the rank layout with no shuffle of its own at any bucket
+    # count (without the pad, a seam shard would be split across two
+    # partitions and encode as two rows per term). Holes
     # are tails of a bucket's last shard: present docs still occupy the
     # first (doc_id - shard_base) positions, so doc_lens indexing and
     # every downstream consumer are unaffected; gap cost in the docID
@@ -527,22 +530,22 @@ def shards_of(docs, shard_span: int):
 
 
 def _encode_str(doc_terms, cfg: IndexConfig, stats: dict, stride: int = 1,
-                bucket_starts: list[int] | None = None):
-    """String-keyed encoded posting rows of the lexicon-last flows; returns
-    (rows, docwise). Doc-wise encode while a shard's token mass fits the
-    docwise working-set bound (bucket_starts, from the rank-assignment
-    meta, makes it SHUFFLE-FREE — the rank shuffle's bucket partitioning
-    is reused); above it the exploded (shard, term)-shuffled encode, whose
-    groups are bounded by shard_span postings regardless of document
-    length. The encoders are looked up on their module per call, so a
-    patched module attribute takes effect."""
+                shuffle: bool = True):
+    """String-keyed encoded posting rows of the lexicon-last flows and of
+    streaming ingest; returns (rows, docwise). Doc-wise encode while a
+    shard's token mass fits the docwise working-set bound (shuffle=False
+    when doc_terms is the build's span-aligned rank layout, which already
+    holds each shard whole on one partition); above it the exploded
+    (shard, term)-shuffled encode, whose groups are bounded by shard_span
+    postings regardless of document length. The encoders are looked up on
+    their module per call, so a patched module attribute takes effect."""
     from pisa_spark.operators import postings as P
 
     if cfg.shard_span * max(stats["avg_len"], 1.0) <= cfg.docwise_max_tokens:
         return P.encode_postings_docwise_str(
             doc_terms, cfg, stats, shard_stride=stride,
-            bucket_starts=bucket_starts), True
-    return P.encode_postings_str(_explode_terms(doc_terms), cfg, stats), False
+            shuffle=shuffle), True
+    return P.encode_postings(_explode_terms(doc_terms), cfg, stats), False
 
 
 def _run_buckets(spark, manifest: BuildManifest, n_buckets: int, build_one):
@@ -808,9 +811,6 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     join_root = None  # waits for the root doc_terms write (manifest)
     join_writes = None  # waits for the doc_terms and docs writes (manifest)
     tok_cache = None
-    bucket_starts = None  # per-bucket doc_id starts; enables the
-    # shuffle-free docwise encode (lost on parquet resume, where
-    # doc_terms' physical partitioning is file splits, not buckets)
     if manifest and manifest.done("doc_terms"):
         doc_terms = manifest.read_df(spark, "doc_terms")
         stats = manifest.state["stats"]
@@ -842,11 +842,6 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
         _phase("tokenize_rank")
         num_docs = sum(int(r["_n"]) for r in meta)
         collection_len = sum(int(r["_dl"] or 0) for r in meta)
-        bucket_starts, _acc = [], 0
-        for r in meta:  # sorted by _pid == doc_id order; mirrors the
-            _acc = -(-_acc // cfg.shard_span) * cfg.shard_span  # align pad
-            bucket_starts.append(_acc)
-            _acc += int(r["_n"])
         stats = {
             "num_docs": num_docs,
             "collection_len": collection_len,
@@ -1013,8 +1008,10 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
             join_writes()
         _phase("encode_postings")
     elif lexicon_last:
+        # the rank layout holds every shard whole on one partition, doc_ids
+        # ascending: the docwise encode needs no shuffle of its own
         enc_str, colocated = _encode_str(doc_terms, cfg, stats,
-                                         bucket_starts=bucket_starts)
+                                         shuffle=False)
         enc_str = enc_str.persist(deser)
     elif manifest:
         if join_writes is not None:

@@ -61,9 +61,9 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
     of being appended again with fresh docIDs (duplicate docs)."""
     from pyspark.sql import functions as F
 
-    from pisa_spark.operators.postings import encode_postings_docwise
-    from pisa_spark.plans.build import (_explode_terms, _sample_cuts,
-                                        assign_rank_ids, doc_term_counts)
+    from pisa_spark.plans.build import (_encode_str, _sample_cuts,
+                                        assign_rank_ids, doc_term_counts,
+                                        join_term_ids)
 
     spark = batch_df.sparkSession
     state = _load_segments(out_dir)
@@ -140,20 +140,12 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
     seg_avg = dlen / n_docs if n_docs else 1.0
     stats = {"num_docs": n_docs, "collection_len": dlen,
              "avg_len": float(seg_avg)}
-    n_vocab = nxt
-    if n_vocab <= cfg.lexicon_broadcast_max:
-        # broadcastable vocabulary: doc-wise encode (one slim shuffle)
-        vocab = {r["term"]: int(r["term_id"]) for r in lex_df.collect()}
-        enc = encode_postings_docwise(doc_terms, vocab, cfg, stats,
-                                      num_partitions=parts)
-    else:
-        # web-scale vocabulary: exploded path with a distributed term-id
-        # join (same shape as the batch build's non-broadcast path)
-        from pisa_spark.operators.postings import encode_postings
-
-        tf_full = (_explode_terms(doc_terms).join(lex_df, "term")
-                   .select("term_id", "doc_id", "tf", "doc_len"))
-        enc = encode_postings(tf_full, cfg, stats, num_partitions=parts)
+    # the build's own encode (doc-wise while one shard's token mass fits
+    # cfg.docwise_max_tokens, else exploded on `term`), then the build's
+    # term-id join: a broadcast hash probe while the vocabulary fits the
+    # broadcast bound, else a sort-merge join — nothing is collected
+    enc_str, _ = _encode_str(doc_terms, cfg, stats)
+    enc = join_term_ids(enc_str, lex_df, nxt <= cfg.lexicon_broadcast_max)
     enc.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"postings/segment={seg_id}"))
     (doc_terms.select("doc_id", "url", "doc_len")

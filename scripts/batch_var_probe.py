@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -41,7 +42,7 @@ def main() -> None:
                f"-XX:ActiveProcessorCount={cores}"})
     corpus = f"/dev/shm/pisa-bench/bench_corpus_{n_docs}"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-        corpus = f"/root/repo/.cache/bench_corpus_{n_docs}"
+        corpus = f"{REPO}/.cache/bench_corpus_{n_docs}"
     pages = spark.read.parquet(corpus)
     cfg = IndexConfig(shard_span=1 << 11)
 

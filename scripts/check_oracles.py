@@ -8,9 +8,11 @@ Usage: python scripts/check_oracles.py [sf_dir] [entry ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()

@@ -16,7 +16,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def decode_throughput(n: int = 1_000_000, repeats: int = 3) -> dict:
@@ -104,7 +105,7 @@ def main() -> None:
     from pisa_spark.sources import webtext
 
     spark = get_spark(app_name="layout-bench", cores=cores)
-    path = f"/root/repo/.cache/bench_corpus_{n_docs}"
+    path = f"{REPO}/.cache/bench_corpus_{n_docs}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         webtext.generate(spark, n_docs, seed=13).write.mode(
             "overwrite").parquet(path)

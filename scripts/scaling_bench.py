@@ -35,7 +35,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_QUERIES = 400  # long enough that the 32-core batch is a >5 s timed region
 
@@ -47,7 +48,7 @@ def ensure_corpus(n_docs: int) -> str:
     otherwise impose a serial floor on the higher-parallelism run."""
     import shutil
 
-    path = f"/root/repo/.cache/bench_corpus_{n_docs}"
+    path = f"{REPO}/.cache/bench_corpus_{n_docs}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from pisa_spark.session import get_spark
         from pisa_spark.sources import webtext
@@ -99,7 +100,7 @@ def worker(cores: int, n_docs: int) -> None:
                 f"-Xms18g -XX:+AlwaysPreTouch -XX:ActiveProcessorCount={cores}"})
     corpus = f"/dev/shm/pisa-bench/bench_corpus_{n_docs}"
     if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-        corpus = f"/root/repo/.cache/bench_corpus_{n_docs}"
+        corpus = f"{REPO}/.cache/bench_corpus_{n_docs}"
     pages = spark.read.parquet(corpus)
     # span sized so n_shards (~147 at 300k docs) stays WELL above every
     # measured level's encode/query partition count (16 at local[8]) — with
@@ -306,10 +307,11 @@ Per-round headline numbers are in BENCH_r{{N}}.json (bench.py).
     # BENCH.md is hand-curated (layout ladder, noise methodology) — only
     # replace it when explicitly asked
     if os.environ.get("SCALING_WRITE_BENCH") == "1":
-        with open("/root/repo/BENCH.md", "w") as f:
+        with open(os.path.join(REPO, "BENCH.md"), "w") as f:
             f.write(md)
     else:
-        with open("/root/repo/.cache/scaling_bench_last.md", "w") as f:
+        with open(os.path.join(REPO, ".cache", "scaling_bench_last.md"),
+                  "w") as f:
             f.write(md)
 
 

@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 150_000
 BATCH = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000

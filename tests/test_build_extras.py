@@ -4,12 +4,11 @@ import json
 import shutil
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pisa_spark.config import IndexConfig
 from pisa_spark.operators import codecs
-from pisa_spark.operators.postings import _encode_batch, _group_carry
+from pisa_spark.operators.postings import _encode_arrays, _whole_groups
 from pisa_spark.operators.reorder import (
     compressed_size,
     random_mapping,
@@ -144,25 +143,47 @@ def test_checkpoint_single_job_mode_matches_inmem(spark):
     assert got_l == want
 
 
-def test_group_carry_never_splits_groups():
-    """Groups spanning Arrow batch boundaries must encode once."""
-    rows = []
-    for term in range(5):
-        for doc in range(0, 40, 2):
-            rows.append((0, term, doc, 1, 10))
-    pdf = pd.DataFrame(rows, columns=["shard_id", "term_id", "doc_id", "tf",
-                                      "doc_len"])
-    batches = [pdf.iloc[:17], pdf.iloc[17:48], pdf.iloc[48:]]
-    seen = []
+@pytest.mark.parametrize("keys", [
+    ["shard_id"], ["shard_id", "term"], ["shard_id", "term_id"],
+], ids=["shard", "shard_term", "shard_term_id"])
+def test_whole_groups_never_splits_groups(keys):
+    """The one carry loop re-cuts sorted Arrow batches so that every group
+    of equal `keys` is yielded exactly once, in one batch: a group spanning
+    three batches, a batch that is one group, an empty batch, and the
+    group left for the final flush."""
+    import pyarrow as pa
 
-    def fake_encode(p):
-        groups = p.groupby(["shard_id", "term_id"]).size()
-        seen.extend(groups.index.tolist())
-        return p.iloc[:0]
+    # (shard, term) runs sorted on (shard_id, term); batch cut points below
+    runs = [(0, 0, 3), (0, 1, 30), (0, 2, 4), (1, 0, 8), (1, 3, 5),
+            (2, 1, 6)]
+    shard, term = [], []
+    for s_, t_, n in runs:
+        shard += [s_] * n
+        term += [t_] * n
+    n_rows = len(shard)
+    table = pa.RecordBatch.from_pydict({
+        "shard_id": pa.array(shard, pa.int64()),
+        "term": pa.array([f"t{t}" for t in term]),
+        "term_id": pa.array(term, pa.int64()),
+        "doc_id": pa.array(range(n_rows), pa.int64())})
+    # rows 3..33 (term 1 of shard 0) span three batches; batch 37..45 is
+    # one group ((1, 0)); an empty batch sits mid-stream; (2, 1) is only
+    # complete at the final flush
+    cuts = [0, 10, 20, 37, 37, 45, 50, n_rows]
+    batches = [table.slice(a, b - a) for a, b in zip(cuts[:-1], cuts[1:])]
 
-    list(_group_carry(iter(batches), fake_encode))
-    assert sorted(seen) == [(0, t) for t in range(5)]
-    assert len(seen) == len(set(seen))  # each group exactly once
+    def key_of(rb, i):
+        return tuple(rb.column(k)[i].as_py() for k in keys)
+
+    seen, out_rows = [], []
+    for rb in _whole_groups(iter(batches), keys):
+        assert rb.num_rows
+        groups = [key_of(rb, i) for i in range(rb.num_rows)]
+        seen += list(dict.fromkeys(groups))
+        out_rows += rb.column("doc_id").to_pylist()
+    want = list(dict.fromkeys(key_of(table, i) for i in range(n_rows)))
+    assert seen == want  # every group once, none split across batches
+    assert out_rows == list(range(n_rows))
 
 
 def test_encode_batch_block_layout():
@@ -171,11 +192,10 @@ def test_encode_batch_block_layout():
 
     stats = {"num_docs": 100, "avg_len": 50.0, "collection_len": 5000}
     docs = np.array([3, 10, 11, 40, 77, 200, 340, 341, 342], dtype=np.int64)
-    pdf = pd.DataFrame({
-        "shard_id": 0, "term_id": 9, "doc_id": docs,
-        "tf": np.arange(1, 10), "doc_len": 50,
-    })
-    out = _encode_batch(pdf, cfg, stats, make_scorer("bm25"))
+    out = _encode_arrays(
+        np.zeros(9, dtype=np.int64), np.full(9, 9, dtype=np.int64), docs,
+        np.arange(1, 10), np.full(9, 50), cfg, stats,
+        make_scorer("bm25")).to_pandas()
     row = out.iloc[0]
     assert row.n == 9
     assert row.base_doc == -1
@@ -265,23 +285,22 @@ def test_bp_checkpoint_resume_and_clustered_win(spark, tmp_path):
 
 
 def test_shuffle_free_encode_identical_to_shuffled(spark):
-    """The bucket-aligned (shuffle-free) docwise encode must produce
-    byte-identical encoded rows to the (shard)-repartitioned plan. The
-    build path now aligns bucket offsets to the shard span, so NO shard
-    ever straddles a bucket seam — asserted here — and the straddle
-    branch is exercised separately below with a hand-built layout."""
+    """The in-memory build runs the docwise encode shuffle-free over the
+    rank layout; its encoded rows must be byte-identical to the
+    (shard)-repartitioned plan. Bucket offsets are span-aligned, so no
+    shard straddles a bucket seam: no (shard_id, term) key may appear
+    twice in the shuffle-free rows."""
     import pisa_spark.operators.postings as P
     import pisa_spark.plans.build as B
     from pisa_spark.sources import webtext
 
     docs = webtext.generate(spark, 4000, seed=11)
-    span = 16
-    cfg = IndexConfig(shard_span=span)
-    seen = {}
+    cfg = IndexConfig(shard_span=16)
+    seen = []
     orig = P.encode_postings_docwise_str
 
     def spy(*a, **kw):
-        seen["starts"] = kw.get("bucket_starts")
+        seen.append(kw.get("shuffle", True))
         return orig(*a, **kw)
 
     P.encode_postings_docwise_str = spy
@@ -289,20 +308,17 @@ def test_shuffle_free_encode_identical_to_shuffled(spark):
         idx_new = B.build_index(docs, cfg, html_col="html")
         rows_new = sorted(map(tuple,
                               idx_new.postings.drop("term_id").collect()))
+        keys = idx_new.postings_str.select("shard_id", "term").collect()
     finally:
         P.encode_postings_docwise_str = orig
-    starts = seen["starts"]
-    assert starts is not None and len(starts) > 1
-    # span-aligned bucket offsets: the shuffle-free plan has no boundary
-    # branch at any parallelism (the straddle mass used to grow with the
-    # bucket count, taxing exactly the higher-parallelism build)
-    assert all(s % span == 0 for s in starts)
+    assert seen == [False]
+    assert len(keys) == len(set(keys)) and keys
 
-    def legacy(*a, **kw):
-        kw["bucket_starts"] = None
+    def shuffled(*a, **kw):
+        kw["shuffle"] = True
         return orig(*a, **kw)
 
-    P.encode_postings_docwise_str = legacy
+    P.encode_postings_docwise_str = shuffled
     try:
         idx_old = B.build_index(docs, cfg, html_col="html")
         rows_old = sorted(map(tuple,
@@ -310,51 +326,6 @@ def test_shuffle_free_encode_identical_to_shuffled(spark):
     finally:
         P.encode_postings_docwise_str = orig
     assert rows_new == rows_old and rows_new
-
-
-def test_straddle_branch_identical_to_shuffled(spark):
-    """Unaligned bucket_starts (callers outside the aligned build path):
-    bucket-straddling shards route through the compact-row boundary
-    branch and must still be byte-identical to the classic plan."""
-    from pyspark.sql import functions as F
-
-    import pisa_spark.operators.postings as P
-    from pisa_spark.functions.scoring import make_scorer  # noqa: F401
-    from pisa_spark.sources import webtext
-
-    from pisa_spark.config import IndexConfig
-    from pisa_spark.plans.build import doc_term_counts
-
-    span = 16
-    cfg = IndexConfig(shard_span=span)
-    pages = webtext.generate(spark, 600, seed=23)
-    toks = doc_term_counts(pages.select("url", "html"), cfg,
-                           html_col="html")
-    # hand-built rank layout: 2 partitions, each one contiguous doc_id
-    # bucket with an UNALIGNED seam at 250 (shard 15 straddles)
-    from pyspark.sql import Window as W
-
-    ranked = toks.withColumn(
-        "doc_id", F.row_number().over(W.orderBy("url")) - 1)
-    n = ranked.count()
-    seam = 250
-    assert seam % span != 0
-    layout = (ranked.repartition(2, (F.col("doc_id") >= seam).cast("int"))
-              .sortWithinPartitions("doc_id"))
-    # repartition(2, bool) may hash both buckets anywhere; rebuild with
-    # range partitioning so each partition IS one contiguous bucket
-    layout = ranked.repartitionByRange(2, (F.col("doc_id") >= seam))\
-        .sortWithinPartitions("doc_id")
-    stats = {"num_docs": n, "collection_len": 0, "avg_len": 1.0}
-    free = P.encode_postings_docwise_str(
-        layout, cfg, dict(stats), bucket_starts=[0, seam])
-    classic = P.encode_postings_docwise_str(layout, cfg, dict(stats),
-                                            bucket_starts=None)
-    a = sorted(map(tuple, free.collect()))
-    b = sorted(map(tuple, classic.collect()))
-    assert a == b and a
-    straddle_shard = seam // span
-    assert any(r[0] == straddle_shard for r in a)
 
 
 def test_lexicon_driver_ids_identical_to_small_path(spark):

@@ -471,7 +471,7 @@ def test_encoded_rows_roundtrip_every_codec(partition):
     from pisa_spark.config import IndexConfig
     from pisa_spark.functions.scoring import make_scorer
     from pisa_spark.operators.codecs import CODECS
-    from pisa_spark.operators.postings import _encode_batch, decode_rows
+    from pisa_spark.operators.postings import _encode_arrays, decode_rows
     from pisa_spark.operators.topk import _group_runs, _QueryPlan
 
     rng = np.random.default_rng(5)
@@ -495,7 +495,9 @@ def test_encoded_rows_roundtrip_every_codec(partition):
     for codec in CODECS:
         cfg = IndexConfig(shard_span=span, block_size=32, codec=codec,
                           block_partition=partition)
-        enc = _encode_batch(pdf, cfg, stats, scorer)
+        enc = _encode_arrays(*(pdf[c].to_numpy() for c in (
+            "shard_id", "term_id", "doc_id", "tf", "doc_len")),
+            cfg, stats, scorer).to_pandas()
         assert len(enc) == 18
         assert max(len(offs) for offs in enc["block_doc_offs"]) > 2
         flat = decode_rows(enc, cfg)

@@ -88,13 +88,31 @@ def test_stream_index_readstream(spark, corpus, tmp_path):
     assert res.count() > 0
 
 
-def test_incremental_large_vocab_path(spark, corpus):
+@pytest.mark.parametrize("docwise_max_tokens",
+                         [IndexConfig().docwise_max_tokens, 0],
+                         ids=["default", "0"])
+def test_incremental_large_vocab_path(spark, corpus, monkeypatch,
+                                      docwise_max_tokens):
     """With lexicon_broadcast_max shrunk below the vocab size, ingest takes
-    the distributed lexicon-delta + exploded-encode path (no driver-side
-    vocab dict); results must stay rank-identical to the broadcast path."""
+    the distributed lexicon delta and joins term_ids onto the encoded rows
+    with join_term_ids' sort-merge join (no broadcast hint, no driver-side
+    vocabulary), after the doc-wise encode or, with docwise_max_tokens=0,
+    the exploded one; results must stay rank-identical to a batch build."""
     import tempfile
 
-    small = IndexConfig(shard_span=64, lexicon_broadcast_max=5)
+    import pisa_spark.operators.postings as P
+    import pisa_spark.plans.build as B
+
+    small = IndexConfig(shard_span=64, lexicon_broadcast_max=5,
+                        docwise_max_tokens=docwise_max_tokens)
+    calls = []
+    for mod, name in ((P, "encode_postings"),
+                      (P, "encode_postings_docwise_str"),
+                      (B, "join_term_ids")):
+        def spy(*a, _orig=getattr(mod, name), _name=name, **kw):
+            calls.append((_name, a[-1] if _name == "join_term_ids" else None))
+            return _orig(*a, **kw)
+        monkeypatch.setattr(mod, name, spy)
     with tempfile.TemporaryDirectory() as out:
         pages = extract_pages(corpus, small).orderBy("url").limit(120).collect()
         half = len(pages) // 2
@@ -102,6 +120,10 @@ def test_incremental_large_vocab_path(spark, corpus):
             bdf = spark.createDataFrame(rows, "url string, text string")
             seg = ingest_batch(bdf, out, small, html_col=None)
             assert seg["n_docs"] == len(rows)
+        encoder = ("encode_postings" if docwise_max_tokens == 0
+                   else "encode_postings_docwise_str")
+        assert calls == [(encoder, None), ("join_term_ids", False)] * 2
+        monkeypatch.undo()
         sidx = load_stream_index(spark, out, small)
         # term_ids must be dense and unique across the two deltas
         lex = sidx.lexicon.select("term", "term_id").collect()
