@@ -67,23 +67,22 @@ class IndexConfig:
     # ~1-4M; small for local tests.
     shard_span: int = 1 << 20
 
-    # Terms with df above this fraction of num_docs get flagged heavy
-    # (metrics + optional stopword-drop, reference wand_data.hpp:44).
-    heavy_df_ratio: float = 0.25
-
-    # Vocabularies at or below this size take a driver-side sort for dense
-    # term-id assignment (one collect vs 4 distributed jobs); above it the
-    # distributed rank-assignment path runs (web-scale vocabularies).
+    # Vocabulary bounds of the lexicon stage (plans/build.py _lexicon_of).
+    # Up to lexicon_driver_max terms the whole per-term aggregation
+    # round-trips through pandas on the driver (collect, assemble, ship
+    # back); up to lexicon_broadcast_max _lexicon_driver_ids ships only the
+    # term column to the driver and back as a broadcast Arrow vocabulary,
+    # the stats staying distributed; above both, a distributed rank
+    # assignment over the aggregation gives the ids. lexicon_broadcast_max
+    # also decides the term-id join: a broadcast of the lexicon (postings
+    # stay a lazy hash-probe view) or a sort-merge shuffle.
     lexicon_broadcast_max: int = 1 << 20
 
-    # Below this vocabulary size the lexicon round-trips through the
-    # driver (collect + pandas assemble + ship back — fastest for small
-    # vocabularies); between this and lexicon_broadcast_max it is
-    # assembled DISTRIBUTED (sample-cut rank ids over the term-agg rows):
-    # the driver path's cost is linear in vocabulary size and serial —
-    # a fixed tax both cluster sizes pay equally, measured 4 s of a 31 s
-    # 8-core build at a 596k-term vocabulary — while the distributed
-    # path is a ~1.2 s parallel floor.
+    # Both driver paths stay because each wins on its side of the bound:
+    # at 7,004 terms the lexicon phase took 0.36 s on the pandas path and
+    # 1.02 s on Arrow ids (Arrow ids slower in 6/6 pairs), at 600,000
+    # terms 7.73 s against 5.59 s (eager builds on a shared 4-vCPU host,
+    # only this value changed).
     lexicon_driver_max: int = 1 << 17
 
     # Doc-wise encode working-set bound: the docwise kernel holds one full

@@ -83,7 +83,7 @@ ENCODED_PA_SCHEMA = pa.schema([
 ])
 
 # string-keyed encode output: `term` (string) instead of `term_id` — used
-# by the lexicon-last build flow, where dense term_ids are assigned FROM
+# by every index build, where dense term_ids are assigned FROM
 # the encoded rows (~100x smaller than the flat postings) and joined back
 ENCODED_STR_SCHEMA = ENCODED_SCHEMA.replace("term_id long", "term string")
 ENCODED_STR_PA_SCHEMA = pa.schema(
@@ -171,7 +171,7 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
 
     With term_dict set, `term` holds batch-local dictionary codes and the
     output carries the term STRING column (take from the dictionary)
-    instead of term_id — the lexicon-last build flow."""
+    instead of term_id — what every index build encodes."""
     n_rows = docs.size
     if n_rows == 0:
         return pa.RecordBatch.from_pylist([], schema=(

@@ -3,9 +3,9 @@
 DocID assignment order controls gap sizes and therefore compressed index
 size. Methods (reorder_docids.hpp:130-292, docs/src/guide/reordering.md):
 
-- by URL: the default in plans/build.py (dense_ids over url) — the cheap,
-  large win for webtext; recursive graph bisection's own paper notes URL
-  ordering captures most of the benefit.
+- by URL: the default in plans/build.py (assign_rank_ids over url) — the
+  cheap, large win for webtext; recursive graph bisection's own paper notes
+  URL ordering captures most of the benefit.
 - random (seeded): orderBy a seeded hash — the control/baseline.
 - custom mapping: join a (doc_id -> new_doc_id) table.
 
@@ -20,31 +20,45 @@ from pisa_spark.config import IndexConfig
 from pisa_spark.operators.postings import decode_postings, encode_postings
 
 
+def _rank_mapping(keyed, order_col: str, id_col: str = "doc_id"):
+    """(id_col, new_doc_id): dense new ids in `order_col` order through the
+    build's rank assignment. The slim mapping is persisted and
+    materialized, then the rank cache (which carries the order keys) is
+    released: a recompute could break ties in `order_col` differently."""
+    from pisa_spark.plans.build import _sample_cuts, assign_rank_ids
+
+    parts = keyed.sparkSession.sparkContext.defaultParallelism
+    cuts = _sample_cuts(keyed, order_col, parts * 4)
+    out, cache, _ = assign_rank_ids(keyed, order_col, "new_doc_id", cuts,
+                                    parts)
+    mapping = out.select(id_col, "new_doc_id").persist()
+    mapping.count()
+    cache.unpersist()
+    return mapping
+
+
 def random_mapping(docs, seed: int = 42):
     """(doc_id, new_doc_id): a seeded random permutation of the docID space
     (reorder_docids.hpp random strategy)."""
-    from pisa_spark.plans.build import dense_ids
     from pyspark.sql import functions as F
 
     keyed = docs.select(
         "doc_id",
         F.xxhash64(F.concat_ws(":", F.lit(str(seed)),
                                F.col("doc_id").cast("string"))).alias("_rk"))
-    out, cache = dense_ids(keyed, "_rk", "new_doc_id")
-    return out.select("doc_id", "new_doc_id")
+    return _rank_mapping(keyed, "_rk")
 
 
 def url_mapping(docs):
     """(doc_id, new_doc_id) ordered by url (reordering.md:46-66)."""
-    from pisa_spark.plans.build import dense_ids
-
-    out, cache = dense_ids(docs.select("doc_id", "url"), "url", "new_doc_id")
-    return out.select("doc_id", "new_doc_id")
+    return _rank_mapping(docs.select("doc_id", "url"), "url")
 
 
 def reorder_index(index, mapping, cfg: IndexConfig | None = None):
     """Rebuild index tables under a (doc_id -> new_doc_id) permutation."""
     from pyspark.sql import functions as F
+
+    from pisa_spark.plans.build import InvertedIndex, shards_of
 
     cfg = cfg or index.cfg
     flat = decode_postings(index.postings, cfg)
@@ -60,18 +74,9 @@ def reorder_index(index, mapping, cfg: IndexConfig | None = None):
         .join(docs2.select("doc_id", "doc_len"), "doc_id")
     )
     postings2 = encode_postings(tf2, cfg, index.stats)
-    shards2 = (
-        docs2.groupBy("shard_id")
-        .agg(F.array_sort(
-            F.collect_list(F.struct("doc_id", "doc_len"))).alias("dl"))
-        .select("shard_id",
-                (F.col("shard_id") * cfg.shard_span).alias("base_doc"),
-                F.transform("dl", lambda x: x["doc_len"]).alias("doc_lens"))
-    )
-    from pisa_spark.plans.build import InvertedIndex
-
     return InvertedIndex(docs=docs2, lexicon=index.lexicon,
-                         postings=postings2.persist(), shards=shards2.persist(),
+                         postings=postings2.persist(),
+                         shards=shards_of(docs2, cfg.shard_span).persist(),
                          stats=index.stats, cfg=cfg)
 
 
@@ -196,13 +201,10 @@ def recursive_graph_bisection(docs_terms, depth: int | None = None,
                        assign_sides, log2p, id_col, terms_col)
 
     # tree order (node path, then url inside leaves) IS the permutation
-    from pisa_spark.plans.build import dense_ids
-
     keyed = state.select(
         id_col, F.format_string("%012d|%s", F.col("node"),
                                 F.col(url_col)).alias("_k"))
-    out, _cache = dense_ids(keyed, "_k", "new_doc_id")
-    return out.select(id_col, "new_doc_id")
+    return _rank_mapping(keyed, "_k", id_col)
 
 
 def _bp_levels(state, depth, iterations, manifest, spark, ckpt,

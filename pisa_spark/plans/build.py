@@ -19,30 +19,29 @@ parse_collection -> invert -> create_wand_data -> compress_inverted_index
    doc_id = bucket offset + (monotonic id - bucket's min monotonic id).
    No global window, no wide-payload range shuffle,
 3. collection stats fused into the same per-bucket aggregation job,
+4. postings = string-keyed encoded rows (doc-sharded, block-encoded,
+   block-max'd) from _encode_str, the one place the scorer matters: the
+   doc-wise encoder while one shard's token mass fits
+   cfg.docwise_max_tokens and the scorer needs no per-term stats (straight
+   over the rank layout in memory — each span-aligned bucket holds whole
+   shards), else the exploded encoder keyed on `term`. Scorers that need
+   df/cf at encode time (qld/pl2/dph, and every quantize_bits build) get
+   them from ONE groupBy("term") aggregation of the exploded forward index,
+   joined on `term` in front of the exploded encode; a quantize_bits build
+   first scores every posting and quantizes it into the tf slot against
+   one global max score (the reference's compress --quantize),
+5. lexicon = ONE per-term aggregation of the ENCODED rows (one row per
+   shard x term, ~100x fewer than the flat postings) giving both the
+   vocabulary (dense term_ids in sorted order, like fwd.terms) and the
+   WAND term stats (_lexicon_of; wand_data.hpp:36-115); a quantized build
+   takes df/cf from the term-stats table instead,
+6. term_ids joined back onto the encoded rows (join_term_ids).
 
-then one of two flows:
-
-- lexicon-LAST (no quantize_bits, scorer bm25 or quantized — the default):
-  4. postings = string-keyed encoded rows (doc-sharded, block-encoded,
-     block-max'd) from _encode_str: the doc-wise encoder while one shard's
-     token mass fits cfg.docwise_max_tokens, straight over the rank
-     layout in memory (each span-aligned bucket holds whole shards), else
-     the exploded encoder keyed on `term`,
-  5. lexicon = ONE per-term aggregation of the ENCODED rows (one row per
-     shard x term, ~100x fewer than the flat postings) giving both the
-     vocabulary (dense term_ids in sorted order, like fwd.terms) and the
-     WAND term stats (_lexicon_of; wand_data.hpp:36-115),
-  6. term_ids joined back onto the encoded rows (join_term_ids);
-- lexicon-FIRST (quantize_bits set, or a non-separable scorer — both need
-  per-term stats BEFORE encoding):
-  4. lexicon = distinct terms of the flat postings, dense term_ids,
-  5. postings = encode_postings over the term_id-keyed flat postings
-     (scored and quantized first under quantize_bits),
-  6. per-term stats (df, cf, max score) aggregated from the encoded rows.
-
-In-memory and checkpointed builds run the same flow and differ only in
-where a stage's output goes: a persisted cache, or a BuildManifest
-artifact that a rerun resumes from.
+Like the reference, whose scorer only enters at create_wand_data and
+compress --quantize over one inverted index, every scorer runs the same
+stages. In-memory and checkpointed builds differ only in where a stage's
+output goes: a persisted cache, or a BuildManifest artifact that a rerun
+resumes from.
 """
 
 from __future__ import annotations
@@ -60,7 +59,6 @@ from pisa_spark.functions.scoring import make_scorer
 from pisa_spark.functions.text import extract_text_batch
 from pisa_spark.functions.tokenize import make_analyzer
 from pisa_spark.operators import codecs
-from pisa_spark.operators.postings import encode_postings
 from pisa_spark.plans.checkpoint import BuildManifest
 
 
@@ -87,52 +85,13 @@ class InvertedIndex:
     # serve path (operators/topk.py) can then kernel straight over the
     # cached partitions without a co-locating shuffle.
     postings_colocated: bool = False
-    # lexicon-last indexes: the underlying string-keyed encoded rows. The
-    # serve path filters these by term STRING directly — the id-keyed
-    # `postings` view is a lazy broadcast join whose lexicon broadcast
-    # would otherwise be rebuilt on every single-query job (~350 ms/query
-    # measured at 60k docs).
+    # The underlying string-keyed encoded rows (None when the id-keyed rows
+    # are their own cache: an in-memory build over a non-broadcast
+    # vocabulary). The serve path filters these by term STRING directly —
+    # the id-keyed `postings` view is a lazy broadcast join whose lexicon
+    # broadcast would otherwise be rebuilt on every single-query job
+    # (~350 ms/query measured at 60k docs).
     postings_str: object = None
-
-
-def dense_ids(df, order_col: str, id_col: str, num_partitions: int | None = None):
-    """Assign dense 0..N-1 IDs in global `order_col` order, scalably: one
-    range-partitioning shuffle + partition-local sort, then arithmetic on
-    monotonically_increasing_id (pid in the upper bits, per-partition row
-    number in the lower 33) offset by collected per-partition counts.
-
-    No global window, and — unlike a window over spark_partition_id — no
-    second shuffle of the (potentially wide) payload columns."""
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    mask = (1 << 33) - 1
-    arranged = (
-        df.repartitionByRange(parts, order_col)
-        .sortWithinPartitions(order_col)
-        .withColumn("_mono", F.monotonically_increasing_id())
-        .persist()
-    )
-    counts = (
-        arranged.select(F.shiftright("_mono", 33).alias("_pid"))
-        .groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = [], 0
-    for row in counts:  # range partitions are key-ordered, so pid order
-        offsets.append((int(row["_pid"]), acc))  # == global key order
-        acc += row["count"]
-    offsets_df = spark.createDataFrame(offsets or [(0, 0)],
-                                       "_pid long, _offset long")
-    out = (
-        arranged
-        .withColumn("_pid", F.shiftright("_mono", 33))
-        .join(F.broadcast(offsets_df), "_pid")
-        .withColumn(id_col,
-                    F.col("_offset") + (F.col("_mono").bitwiseAND(F.lit(mask))))
-        .drop("_pid", "_mono", "_offset")
-    )
-    return out, arranged
 
 
 def extract_pages(pages_df, cfg: IndexConfig = DEFAULT_CONFIG,
@@ -201,24 +160,25 @@ def doc_term_counts(pages_df, cfg: IndexConfig,
     return pages_df.select("url", src_col).mapInPandas(run, TOKENS_SCHEMA)
 
 
-def _quantize_postings(tf_full, cfg: IndexConfig, scorer, stats: dict):
-    """(term_id, doc_id, tf, doc_len) -> tf replaced by the linearly
-    quantized float32 score; returns (df, new cfg with scorer='quantized',
-    pass-through scorer, true per-term (df, cf)). Costs one extra scoring
-    pass to find the global max score, like the reference's wand-data
-    pre-pass. The returned term stats are the PRE-quantization df/cf — the
-    reference's wand_data keeps term collection frequency, not a sum of
-    quantized scores, so the lexicon must carry these instead of sum_tf."""
-    import dataclasses
+def _quantizes(cfg: IndexConfig) -> bool:
+    return cfg.quantize_bits is not None and cfg.scorer != "quantized"
 
+
+def _term_stats_needed(cfg: IndexConfig) -> bool:
+    """True when the encode needs per-term (df, cf): a non-separable
+    scorer's full-score block maxima, or the score pass a quantize_bits
+    build quantizes. Only the exploded encode takes them."""
+    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
+    return _quantizes(cfg) or not (scorer.separable
+                                   or getattr(scorer, "stats_free", False))
+
+
+def _posting_scores(cfg: IndexConfig, stats: dict):
+    """float32 score of every row of a flat (tf, doc_len, df, cf) stream,
+    as one pandas-UDF column."""
     from pyspark.sql import functions as F
 
-    from pisa_spark.functions.scoring import LinearQuantizer, make_scorer
-
-    term_stats_pre = (
-        tf_full.groupBy("term_id")
-        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
-    joined = tf_full.join(term_stats_pre, "term_id")
+    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
     num_docs, avg_len = stats["num_docs"], stats["avg_len"]
     collection_len = stats["collection_len"]
 
@@ -237,18 +197,38 @@ def _quantize_postings(tf_full, cfg: IndexConfig, scorer, stats: dict):
             num_docs=num_docs, avg_len=avg_len,
             collection_len=collection_len).astype(np.float32))
 
-    scored = joined.withColumn("_score", _score("tf", "doc_len", "df", "cf"))
-    max_score = scored.agg(F.max("_score")).collect()[0][0] or 1.0
-    quant = LinearQuantizer(float(max_score), cfg.quantize_bits)
+    return _score("tf", "doc_len", "df", "cf")
+
+
+def _quantize_postings(flat, cfg: IndexConfig, stats: dict,
+                       max_score: float):
+    """flat (term, doc_id, tf, doc_len, df, cf) -> (term, doc_id, tf,
+    doc_len) with tf replaced by the linearly quantized float32 score
+    (block_inverted_index.hpp:446-468, linear_quantizer.cpp). Every part
+    of a build quantizes against the same global max_score. The lexicon
+    keeps the PRE-quantization df/cf of the term-stats table: the
+    reference's wand_data keeps term collection frequency, not a sum of
+    quantized scores."""
+    from pyspark.sql import functions as F
+
+    from pisa_spark.functions.scoring import LinearQuantizer
+
+    quant = LinearQuantizer(max_score, cfg.quantize_bits)
 
     @F.pandas_udf("long")
     def _q(s: pd.Series) -> pd.Series:
         return pd.Series(quant(s.to_numpy()).astype(np.int64))
 
-    out = scored.select("term_id", "doc_id", _q("_score").alias("tf"),
-                        "doc_len")
-    new_cfg = dataclasses.replace(cfg, scorer="quantized", quantize_bits=None)
-    return out, new_cfg, make_scorer("quantized"), term_stats_pre
+    return flat.select("term", "doc_id",
+                       _q(_posting_scores(cfg, stats)).alias("tf"),
+                       "doc_len")
+
+
+def _pass_through(cfg: IndexConfig) -> IndexConfig:
+    """The config of a quantized index: its tf slot holds the scores."""
+    import dataclasses
+
+    return dataclasses.replace(cfg, scorer="quantized", quantize_bits=None)
 
 
 # --------------------------------------------------- global rank assignment
@@ -530,22 +510,34 @@ def shards_of(docs, shard_span: int):
 
 
 def _encode_str(doc_terms, cfg: IndexConfig, stats: dict, stride: int = 1,
-                shuffle: bool = True):
-    """String-keyed encoded posting rows of the lexicon-last flows and of
-    streaming ingest; returns (rows, docwise). Doc-wise encode while a
-    shard's token mass fits the docwise working-set bound (shuffle=False
-    when doc_terms is the build's span-aligned rank layout, which already
-    holds each shard whole on one partition); above it the exploded
-    (shard, term)-shuffled encode, whose groups are bounded by shard_span
-    postings regardless of document length. The encoders are looked up on
-    their module per call, so a patched module attribute takes effect."""
+                shuffle: bool = True, term_stats=None,
+                max_score: float | None = None):
+    """String-keyed encoded posting rows of every build and of streaming
+    ingest; returns (rows, docwise). The encoder choice is the build's only
+    scorer-dependent step. Without term_stats (a separable or stats-free
+    scorer): the doc-wise encode while a shard's token mass fits the
+    docwise working-set bound (shuffle=False when doc_terms is the build's
+    span-aligned rank layout, which already holds each shard whole on one
+    partition), above it the exploded (shard, term)-shuffled encode, whose
+    groups are bounded by shard_span postings regardless of document
+    length. With term_stats (term, df, cf): the exploded encode over the
+    flat stream joined on `term`, quantized against max_score first when
+    cfg.quantize_bits is set. The encoders are looked up on their module
+    per call, so a patched module attribute takes effect."""
     from pisa_spark.operators import postings as P
 
-    if cfg.shard_span * max(stats["avg_len"], 1.0) <= cfg.docwise_max_tokens:
+    if term_stats is None and (cfg.shard_span * max(stats["avg_len"], 1.0)
+                               <= cfg.docwise_max_tokens):
         return P.encode_postings_docwise_str(
             doc_terms, cfg, stats, shard_stride=stride,
             shuffle=shuffle), True
-    return P.encode_postings(_explode_terms(doc_terms), cfg, stats), False
+    flat = _explode_terms(doc_terms)
+    if term_stats is not None:
+        flat = flat.join(term_stats, "term")
+    if _quantizes(cfg):
+        flat = _quantize_postings(flat, cfg, stats, max_score)
+        cfg = _pass_through(cfg)
+    return P.encode_postings(flat, cfg, stats), False
 
 
 def _run_buckets(spark, manifest: BuildManifest, n_buckets: int, build_one):
@@ -573,26 +565,6 @@ def _run_buckets(spark, manifest: BuildManifest, n_buckets: int, build_one):
     return spark.read.parquet(*paths)
 
 
-def _vocab_probe(terms_distinct, cap: int):
-    """One job that BOTH decides small-vs-web-scale vocabulary and fetches
-    it when small. Arrow toPandas instead of collect(): Row-object
-    materialization of a 100k+ string vocabulary costs seconds of DRIVER
-    time — a fixed cost that bills straight against build scaling."""
-    pdf = terms_distinct.limit(cap + 1).toPandas()
-    if len(pdf) > cap:
-        return None
-    return sorted(pdf["term"].tolist())
-
-
-def _lexicon_from_vocab(spark, vocab: list):
-    """Dense term_ids for a sorted vocabulary, shipped via Arrow (a plain
-    createDataFrame over 100k+ Python tuples serializes row-by-row —
-    seconds of fixed driver time)."""
-    lex_pdf = pd.DataFrame(
-        {"term": vocab, "term_id": np.arange(len(vocab), dtype=np.int64)})
-    return spark.createDataFrame(lex_pdf, "term string, term_id long")
-
-
 _LEXICON_SCHEMA = ("term string, term_id long, df long, cf long, "
                    "max_part float, max_score float")
 
@@ -617,7 +589,7 @@ def _lexicon_from_term_agg(spark, agg_pdf: pd.DataFrame, cfg: IndexConfig,
     DRIVER-side from the one-scan per-term aggregation of the encoded
     rows (broadcastable vocabularies only), shipped via Arrow. Fusing the
     vocabulary probe and the WAND term-stats scan into one job removes a
-    whole pass over the encoded cache from every lexicon-last build."""
+    whole pass over the encoded cache from every build."""
     agg_pdf = agg_pdf.sort_values("term", kind="mergesort").reset_index(
         drop=True)
     agg_pdf["term_id"] = np.arange(len(agg_pdf), dtype=np.int64)
@@ -687,9 +659,9 @@ def _term_agg_of(rows, key: str = "term"):
 
 def _lexicon_of(spark, aggd, n_vocab: int, cfg: IndexConfig, stats: dict,
                 parts: int):
-    """Full lexicon of the lexicon-last flows from the cached per-term
-    aggregation `aggd` (n_vocab rows, sorted distinct terms -> dense
-    term_ids, fwd.terms semantics). Returns (lexicon, caches): the lexicon
+    """Full lexicon of a build from the cached per-term aggregation `aggd`
+    (n_vocab rows, sorted distinct terms -> dense term_ids, fwd.terms
+    semantics). Returns (lexicon, caches): the lexicon
     is NOT materialized — the caller stores it (persist + count, or a
     manifest write + read) and only then unpersists `caches`, which its
     lineage still reads."""
@@ -728,7 +700,7 @@ def _fits_broadcast(lexicon, cfg: IndexConfig) -> bool:
 
 def join_term_ids(enc_str_df, lexicon_df, broadcast: bool):
     """Attach dense term_ids to string-keyed encoded posting rows (the
-    lexicon-last join-back, shared by both build flows and load_index).
+    join-back shared by the build, streaming ingest and load_index).
 
     broadcast=True (the lexicon fits the broadcast bound): a hash probe
     per encoded row on the scan, the index itself never shuffles — and
@@ -783,6 +755,13 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     codecs.codec_entry(cfg.codec)  # unknown codec: fail before any Spark job
     spark = docs_df.sparkSession
     manifest = BuildManifest(out_dir) if out_dir else None
+    if manifest and manifest.done("lexicon_base"):
+        # the lexicon-first layout of earlier builds: its postings buckets
+        # are keyed on term_id hashes and cannot mix with doc-shard buckets
+        raise ValueError(
+            f"{out_dir} holds a lexicon-first build (its manifest marks "
+            "'lexicon_base'); rebuild into an empty directory "
+            "(load_index still reads a finished index of that layout)")
     deser = StorageLevel.MEMORY_AND_DISK_DESER
     t_start = time.time()
     phase_t = [time.time()]
@@ -874,73 +853,43 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
                 join_root()
                 join_docs()
 
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    # Two flows. lexicon-LAST (the default/bm25 path, and the stats-free
-    # quantized scorer): encode string-keyed posting rows first, then
-    # derive the lexicon from the ENCODED rows (~avg_len x fewer than flat
-    # postings) and join term_ids back. This removes the vocabulary
-    # probe/distinct job over the flat token stream, the vocab broadcast,
-    # and the flat-postings/lexicon join — the three pieces that do not
-    # shrink with executors. Quantizing and non-separable-scorer builds
-    # need per-term stats BEFORE encoding, so they run lexicon-FIRST.
-    # Manifest (resumable) builds run the same two flows; their
-    # lexicon-last postings buckets are keyed on DOC SHARDS (shard_id mod
-    # n_buckets — stable across resumes because doc_ids come from the
-    # checkpointed docs artifact), not on term_ids.
-    lexicon_last = (cfg.quantize_bits is None
-                    and (scorer.separable
-                         or getattr(scorer, "stats_free", False)))
-    colocated = False  # set by the in-memory docwise encode
-    enc_str = None  # lexicon-last string-keyed rows (serve path)
-    release: list = []  # lexicon-first intermediate caches
-    true_term_stats = None
-    if not lexicon_last:
-        flat_terms = _explode_terms(doc_terms)
-        # ---- stage: lexicon (sorted distinct terms -> dense term_ids, like
-        # fwd.terms; reference src/forward_index_builder.cpp:168-177)
-        if manifest and manifest.done("lexicon_base"):
-            lexicon_base = manifest.read_df(spark, "lexicon_base")
+    # ---- stage: per-term (df, cf) for scorers that need them at encode
+    # time (the encoder choice is the only scorer-dependent step; see
+    # _encode_str). A manifest build writes the table once, before any
+    # postings job, so every bucket and every resume reads the same stats;
+    # term stats and posting scores do not depend on doc ids, so their
+    # marks need not wait for the root artifact.
+    term_stats = max_score = None
+    quantized = _quantizes(cfg)
+    if _term_stats_needed(cfg):
+        if manifest and manifest.done("term_stats"):
+            term_stats = manifest.read_df(spark, "term_stats")
         else:
-            terms_distinct = flat_terms.select("term").distinct()
-            vocab = _vocab_probe(terms_distinct, cfg.lexicon_broadcast_max)
-            if vocab is not None:
-                lexicon_base = _lexicon_from_vocab(spark, vocab)
-            else:
-                terms_distinct = terms_distinct.persist(deser)
-                term_cuts = _sample_cuts(terms_distinct, "term", parts * 4)
-                lexicon_base, rank_cache, _ = assign_rank_ids(
-                    terms_distinct, "term", "term_id", term_cuts, parts)
-                release = [rank_cache, terms_distinct]
+            term_stats = _explode_terms(doc_terms).groupBy("term").agg(
+                F.count("*").alias("df"), F.sum("tf").alias("cf"))
             if manifest:
-                manifest.write_df("lexicon_base", lexicon_base)
-                lexicon_base = manifest.read_df(spark, "lexicon_base")
-                for c in release:
-                    c.unpersist()
-                release = []
-        _phase("lexicon_base")
-
-        # ---- stage: tf table (term remap, reference :176-194)
-        tf_full = (
-            flat_terms
-            .join(lexicon_base.select("term", "term_id"), "term")
-            .select("term_id", "doc_id", "tf", "doc_len")
-        )
-        if cfg.quantize_bits and cfg.scorer != "quantized":
-            # score every posting (float32), quantize into the tf slot, and
-            # flip the index to the pass-through scorer — the reference's
-            # compress --quantize flow (block_inverted_index.hpp:446-468,
-            # linear_quantizer.cpp; its wand-data pass likewise re-streams
-            # the index to find the global max score first).
-            tf_full, cfg, scorer, true_term_stats = _quantize_postings(
-                tf_full, cfg, scorer, stats)
-        elif not scorer.separable:
-            # non-separable scorers need df/cf at encode time (full-score
-            # block maxima); separable ones derive term stats from the
-            # encoded rows
-            term_stats_pre = (
-                tf_full.groupBy("term_id")
-                .agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
-            tf_full = tf_full.join(term_stats_pre, "term_id")
+                manifest.write_df("term_stats", term_stats)
+                term_stats = manifest.read_df(spark, "term_stats")
+            else:
+                term_stats = term_stats.persist(deser)
+        if quantized:
+            # one global max score for the whole index (one scoring pass,
+            # like the reference's wand-data pre-pass before compress
+            # --quantize), recorded so every bucket and every resume
+            # quantizes against the same one
+            max_score = (manifest.state["metrics"].get("quantize_max_score")
+                         if manifest else None)
+            if max_score is None:
+                max_score = float(
+                    _explode_terms(doc_terms).join(term_stats, "term")
+                    .agg(F.max(_posting_scores(cfg, stats)))
+                    .collect()[0][0] or 1.0)
+                if manifest:
+                    manifest.record_metric("quantize_max_score", max_score)
+    encode = partial(_encode_str, cfg=cfg, stats=stats,
+                     term_stats=term_stats, max_score=max_score)
+    if quantized:
+        cfg = _pass_through(cfg)
 
     # ---- stage: per-shard doc length arrays (wand_data doc_lens), started
     # here so it runs CONCURRENTLY with the posting encode (independent DAG
@@ -960,15 +909,14 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
         if eager:
             join_shards = _in_background(shards.count)
 
-    # ---- stage: encoded postings
-    if lexicon_last and manifest:
-        # RESUMABLE flow: string-keyed encode in n_buckets independent
-        # jobs keyed on doc shards (bucket b = shards with shard_id %
-        # n_buckets == b) — each bucket writes its own artifact and a
-        # killed build resumes at the first unfinished bucket. Doc shards
-        # are the stable resume key the term_id bucketing could not
-        # provide here (term_ids do not exist until the lexicon is derived
-        # from these very rows).
+    # ---- stage: string-keyed encoded postings
+    colocated = False  # set by the in-memory docwise encode
+    if manifest:
+        # RESUMABLE: encode in n_buckets independent jobs keyed on doc
+        # shards (bucket b = shards with shard_id % n_buckets == b — stable
+        # across resumes because doc_ids come from the checkpointed docs
+        # artifact) — each bucket writes its own artifact and a killed
+        # build resumes at the first unfinished bucket.
         # Resume granularity adapts to the work size (a pure function of
         # the manifest-recorded corpus stats, so resumes always agree with
         # the original run's choice): below bucket_min_tokens per bucket,
@@ -980,8 +928,7 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
         # corpus is still read only once across all jobs).
         if stats["collection_len"] / max(1, n_buckets) < bucket_min_tokens:
             if not manifest.done("postings"):
-                manifest.write_df("postings",
-                                  _encode_str(doc_terms, cfg, stats)[0],
+                manifest.write_df("postings", encode(doc_terms)[0],
                                   pre_mark=join_root)
             enc_str = manifest.read_df(spark, "postings")
         else:
@@ -998,122 +945,83 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
                 else:
                     part_docs = doc_terms.filter(
                         F.pmod(shard_of, F.lit(n_buckets)) == b)
-                manifest.write_df(
-                    f"postings/bucket={b}",
-                    _encode_str(part_docs, cfg, stats, stride=n_buckets)[0],
-                    pre_mark=join_root)
+                manifest.write_df(f"postings/bucket={b}",
+                                  encode(part_docs, stride=n_buckets)[0],
+                                  pre_mark=join_root)
 
             enc_str = _run_buckets(spark, manifest, n_buckets, build_bucket)
         if join_writes is not None:
             join_writes()
         _phase("encode_postings")
-    elif lexicon_last:
+    else:
         # the rank layout holds every shard whole on one partition, doc_ids
         # ascending: the docwise encode needs no shuffle of its own
-        enc_str, colocated = _encode_str(doc_terms, cfg, stats,
-                                         shuffle=False)
+        enc_str, colocated = encode(doc_terms, shuffle=False)
         enc_str = enc_str.persist(deser)
-    elif manifest:
-        if join_writes is not None:
-            join_writes()  # lexicon-first flow: serialize after the root writes
-        tf_bucketed = tf_full.withColumn(
-            "_bucket", F.pmod(F.xxhash64("term_id"), F.lit(n_buckets)))
 
-        def build_bucket(b: int) -> None:
-            enc = encode_postings(
-                tf_bucketed.filter(F.col("_bucket") == b).drop("_bucket"),
-                cfg, stats)
-            manifest.write_df(f"postings/bucket={b}", enc)
-
-        postings = _run_buckets(spark, manifest, n_buckets, build_bucket)
-        _phase("encode_postings")
+    # ---- stage: lexicon from the ENCODED rows, then term_ids joined back
+    # onto the string-keyed rows (the postings artifact keeps TERM STRINGS
+    # so a bucket never has to be rewritten when the vocabulary changes
+    # resume-to-resume — load_index re-joins ids the same way). Vocabulary
+    # probe and WAND term stats are ONE fused aggregation job, which in
+    # memory also materializes the encode cache (cache-on-first-scan) and
+    # returns only a count — no driver data transfer at any vocabulary
+    # size; for small vocabularies the whole lexicon is then assembled
+    # driver-side (Arrow).
+    if manifest and manifest.done("lexicon"):
+        lexicon = manifest.read_df(spark, "lexicon")
     else:
-        postings = encode_postings(tf_full, cfg, stats).persist()
-        if eager:
-            postings.count()
-        _phase("encode_postings")
-
-    if lexicon_last:
-        # ---- stage: lexicon from the ENCODED rows, then term_ids joined
-        # back onto the string-keyed rows (the postings artifact keeps TERM
-        # STRINGS so a bucket never has to be rewritten when the
-        # vocabulary changes resume-to-resume — load_index re-joins ids
-        # the same way). Vocabulary probe and WAND term stats are ONE
-        # fused aggregation job, which in memory also materializes the
-        # encode cache (cache-on-first-scan) and returns only a count — no
-        # driver data transfer at any vocabulary size; for small
-        # vocabularies the whole lexicon is then assembled driver-side
-        # (Arrow).
-        if manifest and manifest.done("lexicon"):
+        aggd = _term_agg_of(enc_str)
+        if quantized:
+            # sum_tf adds quantized scores: carry the true df/cf instead
+            aggd = aggd.drop("df", "cf").join(term_stats, "term")
+        aggd = aggd.persist(deser)
+        n_vocab = aggd.count()
+        if manifest is None:
+            _phase("encode_postings")
+        lexicon, caches = _lexicon_of(spark, aggd, n_vocab, cfg, stats,
+                                      parts)
+        if manifest:
+            manifest.write_df("lexicon", lexicon)
             lexicon = manifest.read_df(spark, "lexicon")
         else:
-            aggd = _term_agg_of(enc_str).persist(deser)
-            n_vocab = aggd.count()
-            if manifest is None:
-                _phase("encode_postings")
-            lexicon, caches = _lexicon_of(spark, aggd, n_vocab, cfg, stats,
-                                          parts)
-            if manifest:
-                manifest.write_df("lexicon", lexicon)
-                lexicon = manifest.read_df(spark, "lexicon")
-            else:
-                # persist + materialize: left as a LocalRelation, every
-                # downstream job re-materializes the local rows into its
-                # plan — measured ~1-2 s per 200-query batch at 300k docs
-                lexicon = lexicon.persist()
-                lexicon.count()
-            for c in caches:
+            # persist + materialize: left as a LocalRelation, every
+            # downstream job re-materializes the local rows into its
+            # plan — measured ~1-2 s per 200-query batch at 300k docs
+            lexicon = lexicon.persist()
+            lexicon.count()
+        for c in [*caches, term_stats]:
+            if c is not None:
                 c.unpersist()
-        if manifest:
-            postings = join_term_ids(enc_str, lexicon,
-                                     _fits_broadcast(lexicon, cfg))
-        elif n_vocab <= cfg.lexicon_broadcast_max:
-            # broadcast vocabulary: postings stays a LAZY broadcast-join
-            # view over the cached encoded rows — materializing it into a
-            # second cache would re-copy the whole index through memory
-            # (measured 3-15 s per build, pure bandwidth) for a join that
-            # costs microseconds per probe at query time. enc_str (already
-            # materialized by the vocab probe) is the single backing cache.
-            postings = join_term_ids(enc_str, lexicon, True)
-        else:
-            # non-broadcast vocabulary: the id join is a sort-merge SHUFFLE
-            # of the whole index — unlike the broadcast case, every
-            # downstream action would re-pay it, so persist the join result
-            # (the one extra cache copy is cheaper than re-shuffling the
-            # index per query batch)
-            postings = join_term_ids(enc_str, lexicon, False).persist(deser)
-        _phase("lexicon_base")
+    if manifest:
+        postings = join_term_ids(enc_str, lexicon,
+                                 _fits_broadcast(lexicon, cfg))
+    elif n_vocab <= cfg.lexicon_broadcast_max:
+        # broadcast vocabulary: postings stays a LAZY broadcast-join view
+        # over the cached encoded rows — materializing it into a second
+        # cache would re-copy the whole index through memory (measured
+        # 3-15 s per build, pure bandwidth) for a join that costs
+        # microseconds per probe at query time. enc_str (already
+        # materialized by the vocab probe) is the single backing cache.
+        postings = join_term_ids(enc_str, lexicon, True)
+    else:
+        # non-broadcast vocabulary: the id join is a sort-merge SHUFFLE of
+        # the whole index that every downstream action would re-pay, so
+        # the join result becomes the index's one postings cache. The
+        # string-keyed rows are released once it is materialized (the
+        # serve path reads the id view, which is no lazy broadcast here),
+        # and the join's term-hash layout no longer keeps shards whole.
+        postings = join_term_ids(enc_str, lexicon, False).persist(deser)
+        postings.count()
+        enc_str.unpersist()
+        enc_str, colocated = None, False
+    _phase("lexicon_base")
 
     if join_shards is not None:
         join_shards()
     if shards is None:
         shards = manifest.read_df(spark, "shards")
     _phase("shards")
-
-    # ---- stage (lexicon-first): lexicon with term stats + max scores (WAND
-    # term metadata), aggregated from the encoded rows.
-    if lexicon_last:
-        pass  # built above, in the same scan as the vocabulary probe
-    elif manifest and manifest.done("lexicon"):
-        lexicon = manifest.read_df(spark, "lexicon")
-    else:
-        term_meta = _term_agg_of(postings, "term_id")
-        if true_term_stats is not None:
-            # quantized path: sum_tf aggregates quantized scores, not term
-            # collection frequency — carry the pre-quantization df/cf
-            # (reference wand_data term stats semantics)
-            term_meta = (term_meta.drop("df", "cf")
-                         .join(true_term_stats, "term_id"))
-        lex = _with_max_score(lexicon_base.join(term_meta, "term_id"),
-                              cfg, stats)
-        if manifest:
-            manifest.write_df("lexicon", lex)
-            lexicon = manifest.read_df(spark, "lexicon")
-        else:
-            lexicon = lex.persist()
-            if eager:
-                lexicon.count()
-    _phase("lexicon_meta")
     stats["phase_seconds"] = phases
     stats["build_seconds"] = round(time.time() - t_start, 3)
 
@@ -1135,9 +1043,6 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     # slim docs projection is re-persisted first. A query service keeps
     # the inverted index hot, not the forward index (the reference serves
     # from the inv/wand mmaps alone; fwd is a build-time artifact).
-    if eager and manifest is None:
-        for c in release:
-            c.unpersist()
     if tok_cache is not None and (eager or manifest):
         if manifest:
             docs = manifest.read_df(spark, "docs")
@@ -1169,8 +1074,9 @@ def load_index(spark, out_dir: str,
     lexicon = manifest.read_df(spark, "lexicon")
     enc_str_handle = None
     if "term" in postings.columns:
-        # lexicon-last artifacts keep term STRINGS: re-attach dense ids
-        # from the lexicon the same way the build did
+        # string-keyed artifacts (every build but the retired lexicon-first
+        # layout, which stored term_ids): re-attach dense ids from the
+        # lexicon the same way the build did
         enc_str_handle = postings
         postings = join_term_ids(postings, lexicon,
                                  _fits_broadcast(lexicon, cfg))

@@ -3,11 +3,12 @@
 The reference resumes a killed parse via its `merge` subcommand over
 surviving batch files (tools/parse_collection.cpp:43-52; invert keeps batch
 files until merged, src/invert.cpp:250-257). The Spark-native equivalent:
-every build stage writes a parquet artifact; the expensive postings stage is
-split into `n_buckets` independent jobs keyed on pmod(term_id-hash + shard),
-each writing its own directory. A JSON manifest records completed artifacts;
-a restarted build skips anything already recorded, so a killed build never
-recomputes finished term-shard buckets (north-rule requirement).
+every build stage writes a parquet artifact; above a work-size bound the
+expensive postings stage is split into `n_buckets` independent jobs keyed on
+doc shards (shard_id mod n_buckets), each writing its own directory of
+string-keyed rows. A JSON manifest records completed artifacts; a restarted
+build skips anything already recorded, so a killed build never recomputes
+finished shard buckets (north-rule requirement).
 """
 
 from __future__ import annotations

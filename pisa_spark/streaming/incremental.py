@@ -58,13 +58,25 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
     Idempotent per batch_id: foreachBatch replays a micro-batch when the
     engine crashes between our segment commit and the streaming checkpoint
     commit; a batch_id already recorded in segments.json is skipped instead
-    of being appended again with fresh docIDs (duplicate docs)."""
+    of being appended again with fresh docIDs (duplicate docs).
+
+    Segments encode with the separable bm25 or the stats-free quantized
+    scorer only: a scorer that needs per-term df/cf at encode time, or a
+    quantize_bits pass, would need collection-wide stats and one global
+    max score that no single segment has. Such a config is rejected
+    before any Spark job."""
     from pyspark.sql import functions as F
 
     from pisa_spark.plans.build import (_encode_str, _sample_cuts,
-                                        assign_rank_ids, doc_term_counts,
-                                        join_term_ids)
+                                        _term_stats_needed, assign_rank_ids,
+                                        doc_term_counts, join_term_ids)
 
+    if _term_stats_needed(cfg):
+        raise ValueError(
+            f"ingest_batch cannot encode scorer={cfg.scorer!r} with "
+            f"quantize_bits={cfg.quantize_bits!r}: per-term stats and "
+            "quantization need the whole collection; build the index "
+            "with build_index instead")
     spark = batch_df.sparkSession
     state = _load_segments(out_dir)
     if batch_id is not None:

@@ -76,10 +76,35 @@ def test_url_order_compresses_better_than_random(spark, small_index):
     assert url_size <= rand_size
 
 
-def test_checkpoint_resume_skips_completed(spark):
+def test_reorder_leaves_only_its_own_caches(spark, small_index):
+    """A mapping keeps one slim (doc_id, new_doc_id) cache and releases
+    the rank cache it was assigned through; reorder_index adds only the
+    reordered index's own caches. Unpersisting those leaves the session's
+    persisted RDDs as they were."""
+    for table in (small_index.docs, small_index.shards, small_index.postings,
+                  small_index.lexicon):
+        table.count()  # the fixture's lazy caches exist before the snapshot
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    for make in (url_mapping, random_mapping):
+        mapping = make(small_index.docs)
+        re_idx = reorder_index(small_index, mapping)
+        assert re_idx.postings.count() > 0 and re_idx.shards.count() > 0
+        for table in (re_idx.postings, re_idx.shards, mapping):
+            table.unpersist()
+        assert set(jsc.getPersistentRDDs().keys()) == before, make
+
+
+@pytest.mark.parametrize("family", [{}, {"scorer": "qld"},
+                                    {"quantize_bits": 8}],
+                         ids=["bm25", "qld", "quantize8"])
+def test_checkpoint_resume_skips_completed(spark, family):
+    """Every scorer family resumes the same doc-shard postings buckets;
+    the stats families also keep their term-stats artifact (and the
+    quantized one its recorded max score) across resumes."""
     out = f"{CACHE}/resume_idx"
     shutil.rmtree(out, ignore_errors=True)
-    cfg = IndexConfig(shard_span=64)
+    cfg = IndexConfig(shard_span=64, **family)
     pdf = webtext.generate_pandas(120, seed=13)
     docs = extract_pages(spark.createDataFrame(pdf), cfg)
     # bucket_min_tokens=0 forces the per-bucket resume mode this test
@@ -108,6 +133,38 @@ def test_checkpoint_resume_skips_completed(spark):
         assert meta["bytes"] > 0, name
     assert m3["metrics"]["num_docs"] == idx.stats["num_docs"] > 0
     assert m3["metrics"]["build_seconds"] > 0
+    assert ("term_stats" in m3["completed"]) == bool(family)
+    assert (m3["metrics"].get("quantize_max_score")
+            == m1["metrics"].get("quantize_max_score"))
+    assert ("quantize_max_score" in m1["metrics"]) == ("quantize_bits"
+                                                       in family)
+
+
+def test_resume_of_lexicon_first_layout_raises_before_any_job(spark):
+    """A manifest that marks the `lexicon_base` artifact of the retired
+    lexicon-first flow holds term_id-keyed postings buckets that cannot
+    mix with doc-shard buckets: the resume is refused on the driver."""
+    out = f"{CACHE}/old_layout"
+    shutil.rmtree(out, ignore_errors=True)
+    import os
+
+    os.makedirs(out)
+    done = {"ts": 0.0, "seconds": 0.0, "bytes": 1, "files": 1}
+    json.dump({"completed": {"doc_terms": done, "docs": done,
+                             "lexicon_base": done},
+               "stats": {"num_docs": 1, "collection_len": 2,
+                         "avg_len": 2.0},
+               "metrics": {}}, open(f"{out}/manifest.json", "w"))
+    docs = spark.createDataFrame([("u1", "hello world")],
+                                 "url string, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("old-layout", "resume of a lexicon-first manifest")
+    try:
+        with pytest.raises(ValueError, match="lexicon_base"):
+            build_index(docs, IndexConfig(scorer="qld"), out_dir=out)
+        assert list(sc.statusTracker().getJobIdsForGroup("old-layout")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_checkpoint_single_job_mode_matches_inmem(spark):
@@ -431,7 +488,7 @@ def test_build_flows_build_the_same_index(spark):
     """In-memory and checkpointed builds, and every stage branch inside
     them (broadcast vs sort-merge term-id join, docwise vs exploded
     encode, single-job vs bucketed checkpoint, driver vs distributed
-    lexicon), build the same index for one scorer family."""
+    lexicon), build the same index for every scorer family."""
     docs = webtext.generate(spark, 300, seed=19)
 
     def build(out=None, bucketed=False, **cfg_kw):
@@ -462,19 +519,23 @@ def test_build_flows_build_the_same_index(spark):
         for table in want:
             assert got[table] == want[table], (name, table)
 
-    for family in ({"quantize_bits": 8}, {"scorer": "qld"}):
+    for family in ({"quantize_bits": 8}, {"scorer": "qld"},
+                   {"scorer": "dph"}):
         want = build(**family)
         assert all(want.values())
         for name, got in {
-                "manifest": build(out="first", **family),
-                "bcast0": build(lexicon_broadcast_max=0, **family)}.items():
+                "m_single": build(out="stats_single", **family),
+                "m_bucketed": build(out="stats_bucketed", bucketed=True,
+                                    **family),
+                "bcast0": build(lexicon_broadcast_max=0, **family),
+                "exploded": build(docwise_max_tokens=0, **family)}.items():
             for table in want:
                 assert got[table] == want[table], (family, name, table)
 
 
 def test_build_leaves_only_index_caches(spark):
-    """A build's intermediate caches (tokenize forward index, distinct
-    terms, term rank shuffle, per-term aggregation) are released once
+    """A build's intermediate caches (tokenize forward index, term stats,
+    term rank shuffle, per-term aggregation) are released once
     the index tables no longer read them: an eager in-memory build keeps
     at most the four index caches (docs, shards, postings, lexicon) and a
     checkpointed build, whose tables are read back from parquet, keeps
@@ -505,3 +566,4 @@ def test_build_leaves_only_index_caches(spark):
         assert new_caches(**cfg_kw) <= 4, cfg_kw
     assert new_caches(out="single") == 0
     assert new_caches(out="bucketed", bucketed=True) == 0
+    assert new_caches(out="q8_bucketed", bucketed=True, quantize_bits=8) == 0

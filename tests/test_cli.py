@@ -65,6 +65,18 @@ def test_saved_config_restored(spark, index_dir):
     assert idx.cfg.stemmer == "porter2"
 
 
+def test_saved_config_with_retired_field_loads():
+    """A config saved while it still had the retired heavy_df_ratio field
+    loads: from_json_dict drops keys the dataclass no longer has."""
+    from pisa_spark.config import IndexConfig
+
+    saved = IndexConfig(codec="ef").to_json_dict()
+    saved["heavy_df_ratio"] = 0.25
+    cfg = IndexConfig.from_json_dict(saved)
+    assert cfg == IndexConfig(codec="ef")
+    assert not hasattr(cfg, "heavy_df_ratio")
+
+
 def test_evaluate_queries_trec_lines(capsys, index_dir, queries_file):
     main(["evaluate_queries", "-i", index_dir, "-q", queries_file, "-k", "5"])
     lines = [ln for ln in capsys.readouterr().out.splitlines() if ln]

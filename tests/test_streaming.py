@@ -214,3 +214,26 @@ def test_ingest_load_interleaved_in_one_session(spark, corpus, tmp_path):
     assert rows and all(r.url for r in rows)
     second_base = -(-half // CFG.shard_span) * CFG.shard_span
     assert any(r.doc_id >= second_base for r in rows)
+
+
+@pytest.mark.parametrize("cfg_kw", [{"scorer": "qld"}, {"scorer": "dph"},
+                                    {"quantize_bits": 8}],
+                         ids=["qld", "dph", "quantize8"])
+def test_ingest_rejects_stats_configs_before_any_job(spark, corpus, cfg_kw,
+                                                     tmp_path):
+    """A segment cannot carry collection-wide term stats or one global
+    quantization max: such configs fail on the driver, before the
+    tokenize job runs or the lexicon delta is appended."""
+    import os
+
+    out = str(tmp_path / "rejected")
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-rejected", "ingest with a stats config")
+    try:
+        with pytest.raises(ValueError, match="ingest_batch"):
+            ingest_batch(corpus, out, IndexConfig(shard_span=64, **cfg_kw))
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "ingest-rejected")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not os.path.exists(os.path.join(out, "lexicon_terms"))
