@@ -9,64 +9,42 @@ already executes well (semi-joins, counts), so no custom kernels:
 - or_query<with_freqs> (or_query.hpp:12-48): union size / total postings.
 - Intersection::compute (include/pisa/intersection.hpp:13-97): posting count
   + max single-doc score sum of an arbitrary term subset.
-- count_postings / extract_maxscores / thresholds tools (tools/*.cpp):
-  one-line aggregations over the metadata tables.
+- index_posting_totals / extract_maxscores (tools/*.cpp): one-line
+  aggregations over the metadata tables.
+
+Query terms resolve through topk.resolve_query_terms, as for every other
+query consumer: list and DataFrame query sets give the same rows.
 """
 
 from __future__ import annotations
 
 from pisa_spark.operators.postings import decode_postings
-from pisa_spark.operators.topk import make_query_terms_df, topk_search
+from pisa_spark.operators.topk import (_in_values, resolve_query_terms,
+                                       topk_search)
 
 
 def _query_postings(index, queries):
     """Flat postings restricted to the query terms: (qid, term_id, doc_id,
     tf, n_query_terms). Join-before-decode so only needed runs decode.
 
-    List queries resolve term ids DRIVER-side through the index's serve
-    lexicon (the reference loads the lexicon into memory before query
-    eval, tools/queries.cpp:279-340): the distributed plan then needs no
+    Query terms resolve on the driver (resolve_query_terms; the reference
+    loads the lexicon into memory before query eval,
+    tools/queries.cpp:279-340): the distributed plan then needs no
     lexicon join, no per-qid window, and no distinct exchange — the
-    postings restriction is one IN filter pushed into the cached scan
-    and the tiny query table is broadcast. Falls back to the fully
-    distributed join plan for DataFrame query sets or indexes whose
-    lexicon exceeds the driver bound."""
-    from pyspark.sql import Window as W
+    postings restriction is one IN filter pushed into the cached scan and
+    the tiny query table is broadcast. A (qid, term) counts once."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
-    from pisa_spark.functions.tokenize import analyze_query_terms
-    from pisa_spark.operators.topk import _in_values, _serve_state
-
-    spark = index.lexicon.sparkSession
-    if isinstance(queries, list):
-        st = _serve_state(index, prefetch=False)
-        if st is not None:
-            per_q: dict[str, list[int]] = {}
-            for qid, term, _w in analyze_query_terms(queries, index.cfg):
-                meta = st.tmeta.get(term)
-                if meta is not None:
-                    per_q.setdefault(qid, []).append(meta[0])
-            rows = [(qid, tid, len(tids))
-                    for qid, tids in per_q.items() for tid in tids]
-            q = spark.createDataFrame(
-                rows, "qid string, term_id long, n_query_terms int")
-            tids = sorted({tid for _, tid, _ in rows})
-            flat = decode_postings(
-                index.postings.filter(_in_values("term_id", tids)),
-                index.cfg)
-            return F.broadcast(q).join(flat, "term_id")
-        qterms = make_query_terms_df(spark, queries, index.cfg)
-    else:
-        qterms = queries
-    q = (
-        qterms.join(index.lexicon.select("term", "term_id"), "term")
-        .withColumn("n_query_terms",
-                    F.count("*").over(W.partitionBy("qid")).cast("int"))
-        .select("qid", "term_id", "n_query_terms")
-    )
-    flat = decode_postings(index.postings.join(
-        q.select("term_id").distinct(), "term_id"), index.cfg)
-    return q.join(flat, "term_id")
+    _, rows = resolve_query_terms(index, queries)
+    n_terms = Counter(qid for qid, *_ in rows)
+    q = index.lexicon.sparkSession.createDataFrame(
+        [(qid, tid, n_terms[qid]) for qid, _, tid, *_ in rows],
+        "qid string, term_id long, n_query_terms int")
+    flat = decode_postings(index.postings.filter(
+        _in_values("term_id", sorted({row[2] for row in rows}))), index.cfg)
+    return F.broadcast(q).join(flat, "term_id")
 
 
 def and_query(index, queries):
@@ -132,14 +110,3 @@ def extract_maxscores(index):
     """(term, max_score) — tools/extract_maxscores.cpp."""
     return index.lexicon.select("term", "term_id", "max_score")
 
-
-def thresholds(index, queries, k: int = 10, algorithm: str = "maxscore"):
-    """True k-th score per query (tools/thresholds.cpp:24-51): run the
-    engine, take the k-th best score."""
-    from pyspark.sql import functions as F
-
-    res = topk_search(index, queries, k=k, algorithm=algorithm)
-    return (
-        res.filter(F.col("rank") == k)
-        .select("qid", F.col("score").alias("threshold"))
-    )

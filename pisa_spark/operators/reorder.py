@@ -55,7 +55,9 @@ def url_mapping(docs):
 
 
 def reorder_index(index, mapping, cfg: IndexConfig | None = None):
-    """Rebuild index tables under a (doc_id -> new_doc_id) permutation."""
+    """Rebuild index tables under a (doc_id -> new_doc_id) permutation.
+    The lexicon's df/cf ride along for scorers that score at encode time
+    (qld, pl2, dph)."""
     from pyspark.sql import functions as F
 
     from pisa_spark.plans.build import InvertedIndex, shards_of
@@ -72,6 +74,7 @@ def reorder_index(index, mapping, cfg: IndexConfig | None = None):
         flat.join(mapping, "doc_id")
         .select("term_id", F.col("new_doc_id").alias("doc_id"), "tf")
         .join(docs2.select("doc_id", "doc_len"), "doc_id")
+        .join(index.lexicon.select("term_id", "df", "cf"), "term_id")
     )
     postings2 = encode_postings(tf2, cfg, index.stats)
     return InvertedIndex(docs=docs2, lexicon=index.lexicon,

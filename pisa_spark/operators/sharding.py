@@ -70,12 +70,9 @@ def _taily_query_moments(index, queries: list[str], shard_stats):
     Σ ln(any_t/n_s) (log of the co-occurrence product), ΣE, ΣVar."""
     from pyspark.sql import functions as F
 
-    from pisa_spark.operators.topk import make_query_terms_df
+    from pisa_spark.operators.topk import query_terms_df
 
-    spark = index.lexicon.sparkSession
-    qt = (make_query_terms_df(spark, queries, index.cfg)
-          .join(index.lexicon.select("term", "term_id"), "term")
-          .select("qid", "term_id").distinct())
+    qt = query_terms_df(index, queries).select("qid", "term_id")
     n_terms = qt.groupBy("qid").agg(F.count("*").alias("n_terms"))
     shard_sizes = index.shards.select(
         "shard_id", F.size("doc_lens").cast("double").alias("n_s"))
@@ -106,7 +103,7 @@ def taily_thresholds(index, queries: list[str], n_c: int = 10,
 
     from pyspark.sql import functions as F2
 
-    from pisa_spark.operators.topk import make_query_terms_df
+    from pisa_spark.operators.topk import query_terms_df
 
     stats = shard_stats if shard_stats is not None else taily_shard_stats(index)
     spark = index.lexicon.sparkSession
@@ -120,9 +117,7 @@ def taily_thresholds(index, queries: list[str], n_c: int = 10,
                   (F2.sum(F2.col("any") * (F2.col("variance")
                    + F2.col("expected_value") ** 2))
                    / F2.sum("any")).alias("ex2")))
-    qt = (make_query_terms_df(spark, queries, index.cfg)
-          .join(index.lexicon.select("term", "term_id"), "term")
-          .select("qid", "term_id").distinct())
+    qt = query_terms_df(index, queries).select("qid", "term_id")
     rows = (qt.join(gterm, "term_id")
             .groupBy("qid")
             .agg(F2.sum(F2.log(F2.col("any") / F2.lit(n_docs)))
@@ -204,13 +199,10 @@ def taily_select(index, queries: list[str], n_shards_out: int = 2,
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from pisa_spark.operators.topk import make_query_terms_df
+    from pisa_spark.operators.topk import query_terms_df
 
     stats = shard_stats if shard_stats is not None else taily_shard_stats(index)
-    spark = index.lexicon.sparkSession
-    qt = (make_query_terms_df(spark, queries, index.cfg)
-          .join(index.lexicon.select("term", "term_id"), "term")
-          .select("qid", "term_id").distinct())
+    qt = query_terms_df(index, queries).select("qid", "term_id")
     mass = (qt.join(stats, "term_id")
             .groupBy("qid", "shard_id")
             .agg(F.sum(F.col("any") * F.col("expected_value")).alias("mass")))

@@ -2,10 +2,11 @@
 algorithm (ranked_or, wand, maxscore, block_max_wand, block_max_maxscore,
 ranked_and, block_max_ranked_and).
 
-Dataflow of the list-query executors (topk_search's serve path and
+Dataflow of the executors (topk_search's serve path and
 topk_search_batch):
 
-    queries --analyze on the driver, against the cached lexicon-->
+    queries --resolve_query_terms on the driver: one (qid, term) row per
+              known query term, repeats merged-->
             (term_id -> {qid: weight}, per-query term counts)
     postings --filter to the query vocabulary (one IN expression),
               co-locate by shard-->
@@ -18,15 +19,22 @@ topk_search_batch):
               once (_traverse)-->
             --k-merge (score desc, doc asc)-->  (qid, doc_id, score, rank)
 
+Query resolution is one function, resolve_query_terms: query lines or a
+(qid, term, weight) DataFrame (collected once) resolve against the serve
+state's driver lexicon when the index has one (no Spark job), else
+against one collect of the lexicon rows of the set's vocabulary. The
+boolean operators, the tools and shard selection read the same rows.
+
 The traversal runs in exactly two places: the serve path runs it on the
 driver over runs built from its resident Arrow posting cache, and
 topk_search_batch runs it executor-side in one mapInArrow pass. Both
 build runs with the same group builder (_group_runs). Every call the
 serve path declines (DataFrame query sets, indexes above the serve
-bounds, oversized fetches or merges) goes to topk_search_batch. Without
-the driver state posting rows carry their own shard's doc lengths and a
-group is one shard. profile_queries runs the same traversal with
-counters over the same shard-sorted rows, one shard at a time.
+bounds, oversized fetches or merges) goes to topk_search_batch. Where
+the index has no serve state, posting rows carry their own shard's doc
+lengths and a group is one shard. profile_queries runs the same
+traversal with counters over the same shard-sorted rows, one shard at a
+time.
 
 Per-group top-k + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
@@ -390,11 +398,6 @@ class _Traversal:
             (held & ~scattered).sum(axis=1))}
 
 
-def make_query_terms_df(spark, queries: list[str], cfg: IndexConfig):
-    rows = analyze_query_terms(queries, cfg)
-    return spark.createDataFrame(rows, "qid string, term string, weight double")
-
-
 def _rank_per_query(scored, k: int):
     """The k best (qid, doc_id, score) rows of each qid, ranked 1..k by
     (score desc, doc asc)."""
@@ -421,9 +424,56 @@ SERVE_CACHE_MAX_POSTINGS = 1 << 24    # resident posting-row cache budget
 TRAVERSE_BLOCK_CELLS = 1 << 21
 
 
+QUERY_TERMS_SCHEMA = ("qid string, term string, term_id long, weight double, "
+                      "df long, cf long")
+
+
+def resolve_query_terms(index, queries: list[str] | object
+                        ) -> tuple[list[str], list[tuple]]:
+    """Resolve a query set against the index's lexicon on the driver, as
+    the reference's query tools parse a query file once before evaluating
+    anything (query_parser.cpp:33-38, evaluate_queries.cpp:79-101). Every
+    query consumer reads its query terms from here.
+
+    queries: query lines (analyzed with the index's analyzer) or a (qid,
+    term, weight) DataFrame, collected once. Returns (qids, rows): every
+    qid of the set in first-seen order, and one (qid, term, term_id,
+    weight, df, cf) row per known (qid, term). A repeated (qid, term)
+    merges into one row with its weights summed, as analyze_query_terms
+    merges a term repeated in a query line (reference query.cpp:45-82);
+    unknown terms drop. The lookup reads the driver-resident lexicon of
+    the serve state when the index has one (no Spark job), else one
+    collect of the lexicon rows of the set's vocabulary."""
+    pairs = (analyze_query_terms(queries, index.cfg)
+             if isinstance(queries, list)
+             else queries.select("qid", "term", "weight").collect())
+    weights: dict[tuple[str, str], float] = {}
+    for qid, term, w in pairs:
+        weights[(qid, term)] = weights.get((qid, term), 0.0) + float(w)
+    st = _serve_state(index, prefetch=False)
+    if st is not None:
+        tmeta = st.tmeta
+    else:
+        vocab = sorted({term for _, term in weights})
+        tmeta = {r["term"]: (int(r["term_id"]), int(r["df"]), int(r["cf"]))
+                 for r in index.lexicon.filter(_in_values("term", vocab))
+                 .select("term", "term_id", "df", "cf").collect()}
+    rows = [(qid, term, tmeta[term][0], w, *tmeta[term][1:])
+            for (qid, term), w in weights.items() if term in tmeta]
+    return list(dict.fromkeys(qid for qid, _ in weights)), rows
+
+
+def query_terms_df(index, queries: list[str] | object):
+    """The resolve_query_terms rows of a query set as a DataFrame
+    (QUERY_TERMS_SCHEMA)."""
+    return index.lexicon.sparkSession.createDataFrame(
+        resolve_query_terms(index, queries)[1], QUERY_TERMS_SCHEMA)
+
+
 class _QueryPlan:
-    """A query set analyzed on the driver, plus the traversal settings:
-    all a traversal needs, shipped to the executors with it."""
+    """A query set resolved on the driver (resolve_query_terms), plus the
+    traversal settings: all a traversal needs, shipped to the executors
+    with it."""
 
     def __init__(self, index, algorithm: str, k: int, weighted: bool,
                  range_span: int, thresholds: dict[str, float] | None):
@@ -445,27 +495,19 @@ class _QueryPlan:
 
     def add(self, qid: str, term: str, tid: int, df: int, cf: int,
             weight: float) -> None:
-        """One (query, term) of the set. A repeated one merges into the
-        first and their weights sum, as analyze_query_terms merges
-        repeated query-line terms (reference query.cpp:45-82): a term
-        counts once per query, whatever route the query set took."""
+        """One resolved (query, term) of the set; each comes once."""
         self.tid_of_term[term] = tid
         self.term_stats[tid] = (df, cf)
-        weights = self.term_queries.setdefault(tid, {})
-        if qid not in weights:
-            self.n_terms[qid] = self.n_terms.get(qid, 0) + 1
-        weights[qid] = weights.get(qid, 0.0) + float(weight)
+        self.term_queries.setdefault(tid, {})[qid] = float(weight)
+        self.n_terms[qid] = self.n_terms.get(qid, 0) + 1
 
-    def analyze(self, queries: list[str], tmeta: dict,
-                cfg: IndexConfig) -> "_QueryPlan":
-        """Resolve query lines against the driver-cached lexicon, as the
-        reference's query tools do before evaluating anything
-        (evaluate_queries.cpp:79-101)."""
-        for qid, term, w in analyze_query_terms(queries, cfg):
-            self.n_terms.setdefault(qid, 0)
-            meta = tmeta.get(term)
-            if meta is not None:  # unknown terms drop (query_parser.cpp:33-38)
-                self.add(qid, term, *meta, w)
+    def resolve(self, index, queries: list[str] | object) -> "_QueryPlan":
+        """Fill the plan with the resolve_query_terms rows of `queries`;
+        a query without a known term keeps its qid."""
+        qids, rows = resolve_query_terms(index, queries)
+        self.n_terms.update(dict.fromkeys(qids, 0))
+        for qid, term, tid, w, df, cf in rows:
+            self.add(qid, term, tid, df, cf, w)
         return self
 
 
@@ -756,10 +798,10 @@ def _serve_state(index, prefetch: bool = True):
     traversal over shard-joined rows).
 
     prefetch=False builds/returns the METADATA-ONLY state (lexicon + doc
-    lengths — two bounded collects, no posting bytes): the batch
-    executor needs the lexicon for driver-side query analysis but runs
-    its traversal executor-side and never reads the driver row cache, so
-    it must not pay the whole-index posting fetch. The prefetch runs
+    lengths — two bounded collects, no posting bytes): query resolution
+    and the batch executor need the lexicon and doc lengths but never
+    read the driver row cache, so they must not pay the whole-index
+    posting fetch. The prefetch runs
     lazily on the first interactive-serve use instead."""
     with _SERVE_STATE_LOCK:
         st = getattr(index, "_serve_state", None)
@@ -904,7 +946,7 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
         return None
     spark = index.lexicon.sparkSession
     plan = _QueryPlan(index, algorithm, k, weighted, range_span,
-                      thresholds).analyze(queries, st.tmeta, index.cfg)
+                      thresholds).resolve(index, queries)
     if st.n_shards * max(1, len(plan.n_terms)) * k > SERVE_MAX_PARTIAL_ROWS:
         return None
 
@@ -975,40 +1017,20 @@ def topk_search(index, queries: list[str] | object, k: int = 10,
                              range_span, thresholds, with_urls)
 
 
-def _shard_postings(index, queries, plan: _QueryPlan,
-                    per_shard: bool = False):
-    """Analyze `queries` into `plan`; return the posting rows of its
-    vocabulary co-located and sorted by shard, plus the broadcast global
-    doc-length array the rows are scored against.
-
-    With the driver-resident serve state (list queries, index within the
-    serve bounds) the analysis runs against the cached lexicon — zero
-    Spark jobs before the main pass. Otherwise one lexicon-join collect
-    analyzes the queries. The broadcast is None, and each row carries its
-    own shard's doc_lens and shard_base, when there is no serve state or
-    when per_shard asks for per-shard rows."""
+def _shard_postings(index, plan: _QueryPlan, per_shard: bool = False):
+    """The posting rows of `plan`'s vocabulary co-located and sorted by
+    shard, plus the broadcast global doc-length array the rows are scored
+    against. The broadcast is None, and each row carries its own shard's
+    doc_lens and shard_base, when the index has no serve state (above
+    the serve bounds) or when per_shard asks for per-shard rows."""
     from pyspark.sql import functions as F
 
     from pisa_spark.operators.partitioning import (partition_values,
                                                    round_robin_expr)
 
     spark = index.lexicon.sparkSession
-    st = (_serve_state(index, prefetch=False)
-          if isinstance(queries, list) else None)
-    if st is not None:
-        plan.analyze(queries, st.tmeta, index.cfg)
-        posts = _term_postings(index, plan, list(plan.tid_of_term))
-    else:
-        qterms = (make_query_terms_df(spark, queries, index.cfg)
-                  if isinstance(queries, list) else queries)
-        for r in (qterms.join(
-                index.lexicon.select("term", "term_id", "df", "cf"), "term")
-                .select("qid", "term", "term_id", "weight", "df", "cf")
-                .collect()):
-            plan.add(r["qid"], r["term"], int(r["term_id"]), int(r["df"]),
-                     int(r["cf"]), r["weight"])
-        posts = index.postings.filter(
-            _in_values("term_id", list(plan.term_stats)))
+    st = _serve_state(index, prefetch=False)
+    posts = _term_postings(index, plan, list(plan.tid_of_term))
     doc_lens_bc = st.bc_doc_lens if st is not None and not per_shard else None
     if doc_lens_bc is None:
         posts = posts.join(index.shards.select(
@@ -1052,14 +1074,15 @@ def topk_search_batch(index, queries: list[str] | object, k: int = 10,
     group at once — the reference's evaluate_queries shape (every query
     over one shared mmap'd index, evaluate_queries.cpp:154-156) with the
     per-query loop turned into one scatter per (run, block). Without the
-    driver serve state (index above its bounds, DataFrame query sets) rows
-    carry their own shard's doc lengths and a group is one shard. Results
+    driver serve state (index above its bounds) rows carry their own
+    shard's doc lengths and a group is one shard. Results
     are identical to the serve path (same run builder, traversal and
     float32 scores).
     """
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    plan = _QueryPlan(index, algorithm, k, weighted, range_span, thresholds)
-    posts, doc_lens_bc = _shard_postings(index, queries, plan)
+    plan = _QueryPlan(index, algorithm, k, weighted, range_span,
+                      thresholds).resolve(index, queries)
+    posts, doc_lens_bc = _shard_postings(index, plan)
     ranked = _rank_per_query(
         posts.mapInArrow(_traverse_partitions(plan, doc_lens_bc),
                          schema=TOPK_PARTIAL_SCHEMA), k)
@@ -1112,15 +1135,17 @@ def profile_queries(index, queries: list[str] | object, k: int = 10,
     - postings_decoded / blocks_decoded: the postings and blocks of the
       query's runs with at least one scattered cell.
 
-    Shares the batch executor's query analysis and posting preparation,
-    always over shard-joined rows: the counters are per shard.
+    Shares the batch executor's query resolution and posting
+    preparation, always over shard-joined rows: the counters are per
+    shard.
 
     Returns (qid, shard_id, postings_decoded, blocks_decoded, docs_scored,
     ranges, ranges_skipped) — aggregate over shard_id for per-query totals.
     """
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
-    plan = _QueryPlan(index, algorithm, k, False, range_span, None)
-    posts, _ = _shard_postings(index, queries, plan, per_shard=True)
+    plan = _QueryPlan(index, algorithm, k, False, range_span,
+                      None).resolve(index, queries)
+    posts, _ = _shard_postings(index, plan, per_shard=True)
     return posts.mapInArrow(_profile_partitions(plan), schema=PROFILE_SCHEMA)
 
 
@@ -1183,172 +1208,152 @@ def _corpus_tf(docs_df, id_col: str, text_col: str):
     return tf, int(row["n"]), int(row["t"] or 0)
 
 
+def _dataframe_scores(docs_df, queries: list[str], id_col: str,
+                      text_col: str, cfg: IndexConfig, partial):
+    """(qid, doc_id, score) of an exhaustive DataFrame scorer — the
+    reference's ranked_or_taat (ranked_or_taat_query.hpp:9-37) as Spark's
+    groupBy(doc).sum shape, entirely in built-in functions (whole-stage
+    codegen, no UDF, no index needed). Every query term's (doc, tf, dl)
+    rows of the corpus (_corpus_tf), joined with the term's df and cf
+    from one aggregation, are scored by `partial(n_docs, avg_len,
+    collection_len)`, the scorer's Column expression, then summed per
+    (qid, doc) and rounded to 6 digits. Double precision throughout:
+    these are the cross-engine (DuckDB) oracles, and both engines agree
+    on round(score, 6) with doc-asc ties; the float32 reference-faithful
+    path is the index + the traversal. A term repeated in a query line
+    counts once; scorer parameters come from cfg."""
+    from pyspark.sql import functions as F
+
+    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
+    term_stats = tf.groupBy("term").agg(F.count("*").alias("df"),
+                                        F.sum("tf").alias("cf"))
+    avg_len = float(total) / n_docs if n_docs else 1.0
+    qrows = sorted({(qid, term) for qid, term, _ in
+                   analyze_query_terms(queries, cfg)})
+    qdf = docs_df.sparkSession.createDataFrame(qrows,
+                                                "qid string, term string")
+    return (qdf.join(tf, "term").join(term_stats, "term")
+            .select("qid", "doc_id",
+                    partial(n_docs, avg_len, total).alias("partial"))
+            .groupBy("qid", "doc_id")
+            .agg(F.round(F.sum("partial"), 6).alias("score")))
+
+
 def bm25_topk_dataframe(docs_df, queries: list[str], k: int = 10,
                         id_col: str = "doc_id", text_col: str = "text",
-                        k1: float = 0.9, b: float = 0.4,
                         cfg: IndexConfig | None = None):
-    """Pure-DataFrame exhaustive BM25 top-k over raw documents — the
-    reference's ranked_or_taat (ranked_or_taat_query.hpp:9-37) expressed as
-    Spark's natural groupBy(doc).sum -> window top-k shape, entirely in
-    built-in functions (whole-stage codegen, no UDF, no index needed).
-
-    Double precision throughout: this is the cross-engine (DuckDB) oracle
-    path; the float32 reference-faithful path is the index + kernel
-    executors. Ranking is on round(score, 6) with doc-asc ties so both
-    engines agree on near-equal sums."""
+    """Exhaustive DataFrame BM25 top-k over raw documents
+    (_dataframe_scores)."""
     from pyspark.sql import functions as F
 
     cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
-    df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
-    avg_len = float(total) / n_docs if n_docs else 1.0
+    k1, b = cfg.bm25_k1, cfg.bm25_b
 
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
+    def partial(n_docs, avg_len, _collection_len):
+        idf = (
+            F.greatest(F.lit(1e-6),
+                       F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
+                             / (F.col("df") + 0.5)))
+            * F.lit(1.0 + k1)
+        )
+        part = F.col("tf") / (
+            F.col("tf") + F.lit(k1) * (
+                F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avg_len)))
+        return idf * part
 
-    idf = (
-        F.greatest(F.lit(1e-6),
-                   F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                         / (F.col("df") + 0.5)))
-        * F.lit(1.0 + k1)
-    )
-    part = F.col("tf") / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b)
-                                   + F.lit(b) * F.col("dl") / F.lit(avg_len)))
-    scored = (
-        qdf.join(tf, "term").join(df_t, "term")
-        .select("qid", "doc_id", (idf * part).alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-    )
-    return _rank_per_query(scored, k)
+    return _rank_per_query(
+        _dataframe_scores(docs_df, queries, id_col, text_col, cfg, partial),
+        k)
 
 
 def qld_topk_dataframe(docs_df, queries: list[str], k: int = 10,
                        id_col: str = "doc_id", text_col: str = "text",
-                       mu: float = 1000.0, cfg: IndexConfig | None = None):
-    """Pure-DataFrame exhaustive QLD (Dirichlet LM) top-k — the reference
-    scorer/qld.hpp:25-38 formula max(0, ln(mu/(dl+mu)) + ln1p(f*C/(mu*cf)))
-    as built-in expressions. Double precision + round(6): the cross-engine
-    oracle path (the float32-faithful path is IndexConfig(scorer='qld') +
-    the kernel executors)."""
+                       cfg: IndexConfig | None = None):
+    """Exhaustive DataFrame QLD (Dirichlet LM) top-k (_dataframe_scores):
+    the reference scorer/qld.hpp:25-38 formula
+    max(0, ln(mu/(dl+mu)) + ln1p(f*C/(mu*cf)))."""
     from pyspark.sql import functions as F
 
     cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, _n_docs, collection_len = _corpus_tf(docs_df, id_col, text_col)
-    cf_t = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
+    mu = cfg.qld_mu
 
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
+    def partial(_n_docs, _avg_len, collection_len):
+        return F.greatest(F.lit(0.0), (
+            F.log(F.lit(mu) / (F.col("dl") + F.lit(mu)))
+            + F.log1p(F.col("tf") * (F.lit(float(collection_len))
+                                     / (F.lit(mu) * F.col("cf"))))))
 
-    part = (
-        F.log(F.lit(mu) / (F.col("dl") + F.lit(mu)))
-        + F.log1p(F.col("tf") * (F.lit(float(collection_len))
-                                 / (F.lit(mu) * F.col("cf"))))
-    )
-    scored = (
-        qdf.join(tf, "term").join(cf_t, "term")
-        .select("qid", "doc_id",
-                F.greatest(F.lit(0.0), part).alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-        .filter(F.col("score") > 0)
-    )
-    return _rank_per_query(scored, k)
+    scored = _dataframe_scores(docs_df, queries, id_col, text_col, cfg,
+                               partial)
+    return _rank_per_query(scored.filter(F.col("score") > 0), k)
 
 
 def pl2_topk_dataframe(docs_df, queries: list[str], k: int = 10,
                        id_col: str = "doc_id", text_col: str = "text",
-                       c: float = 1.0, cfg: IndexConfig | None = None):
-    """Pure-DataFrame exhaustive PL2 (DFR) top-k — the reference
+                       cfg: IndexConfig | None = None):
+    """Exhaustive DataFrame PL2 (DFR) top-k — the reference
     scorer/pl2.hpp:25-40 formula
         tfn  = tf * log2(1 + c*avgdl/dl)
         norm = 1/(tfn + 1)
         f    = cf / N
         norm * (tfn*log2(1/f) + f*ln(1/2) + 0.5*log2(2*pi*tfn)
                 + tfn*(log2(tfn) - ln(1/2)))
-    as built-in expressions. Double precision + round(6): the cross-engine
-    oracle path (the float32-faithful path is IndexConfig(scorer='pl2') +
-    the kernel executors)."""
+    (_dataframe_scores)."""
     import math
 
     from pyspark.sql import functions as F
 
     cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
-    cf_t = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
-    avg_len = float(total) / n_docs if n_docs else 1.0
+    c = cfg.pl2_c
 
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
+    def partial(n_docs, avg_len, _collection_len):
+        tfn = F.col("tf") * F.log2(F.lit(1.0)
+                                   + F.lit(c * avg_len) / F.col("dl"))
+        norm = F.lit(1.0) / (tfn + F.lit(1.0))
+        freq = F.col("cf") / F.lit(float(n_docs))
+        e = F.lit(math.log(0.5))
+        return norm * (
+            tfn * F.log2(F.lit(1.0) / freq)
+            + freq * e
+            + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tfn)
+            + tfn * (F.log2(tfn) - e)
+        )
 
-    tfn = F.col("tf") * F.log2(F.lit(1.0)
-                               + F.lit(c * avg_len) / F.col("dl"))
-    norm = F.lit(1.0) / (tfn + F.lit(1.0))
-    freq = F.col("cf") / F.lit(float(n_docs))
-    e = F.lit(math.log(0.5))
-    part = norm * (
-        tfn * F.log2(F.lit(1.0) / freq)
-        + freq * e
-        + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tfn)
-        + tfn * (F.log2(tfn) - e)
-    )
-    scored = (
-        qdf.join(tf, "term").join(cf_t, "term")
-        .select("qid", "doc_id", part.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-    )
-    return _rank_per_query(scored, k)
+    return _rank_per_query(
+        _dataframe_scores(docs_df, queries, id_col, text_col, cfg, partial),
+        k)
 
 
 def dph_topk_dataframe(docs_df, queries: list[str], k: int = 10,
                        id_col: str = "doc_id", text_col: str = "text",
                        cfg: IndexConfig | None = None):
-    """Pure-DataFrame exhaustive DPH (parameter-free DFR) top-k — the
+    """Exhaustive DataFrame DPH (parameter-free DFR) top-k — the
     reference scorer/dph.hpp:21-36 formula
         f    = tf/dl
         norm = (1-f)^2 / (tf+1)
         norm * (tf*log2((tf*avgdl/dl) * (N/cf)) + 0.5*log2(2*pi*tf*(1-f)))
-    as built-in expressions. Double precision + round(6): the cross-engine
-    oracle path (the float32-faithful path is IndexConfig(scorer='dph') +
-    the kernel executors)."""
+    (_dataframe_scores)."""
     import math
 
     from pyspark.sql import functions as F
 
     cfg = cfg or IndexConfig()
-    spark = docs_df.sparkSession
-    tf, n_docs, total = _corpus_tf(docs_df, id_col, text_col)
-    cf_t = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
-    avg_len = float(total) / n_docs if n_docs else 1.0
 
-    qrows = sorted({(qid, term) for qid, term, _ in
-                   analyze_query_terms(queries, cfg)})
-    qdf = spark.createDataFrame(qrows, "qid string, term string")
+    def partial(n_docs, avg_len, _collection_len):
+        f = F.col("tf") / F.col("dl")
+        norm = ((F.lit(1.0) - f) * (F.lit(1.0) - f)
+                / (F.col("tf") + F.lit(1.0)))
+        return norm * (
+            F.col("tf") * F.log2(
+                (F.col("tf") * F.lit(avg_len) / F.col("dl"))
+                * (F.lit(float(n_docs)) / F.col("cf")))
+            + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * F.col("tf")
+                                  * (F.lit(1.0) - f))
+        )
 
-    f = F.col("tf") / F.col("dl")
-    norm = (F.lit(1.0) - f) * (F.lit(1.0) - f) / (F.col("tf") + F.lit(1.0))
-    part = norm * (
-        F.col("tf") * F.log2(
-            (F.col("tf") * F.lit(avg_len) / F.col("dl"))
-            * (F.lit(float(n_docs)) / F.col("cf")))
-        + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * F.col("tf")
-                              * (F.lit(1.0) - f))
-    )
-    scored = (
-        qdf.join(tf, "term").join(cf_t, "term")
-        .select("qid", "doc_id", part.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-    )
-    return _rank_per_query(scored, k)
+    return _rank_per_query(
+        _dataframe_scores(docs_df, queries, id_col, text_col, cfg, partial),
+        k)
 
 
 def trec_output(results_df, run_id: str = "pisa_spark"):

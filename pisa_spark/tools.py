@@ -25,24 +25,16 @@ for topk_search(thresholds=...).
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 
 from pisa_spark.config import IndexConfig
 from pisa_spark.functions.scoring import make_scorer
-from pisa_spark.functions.tokenize import analyze_query_terms, make_analyzer
+from pisa_spark.functions.tokenize import make_analyzer
 from pisa_spark.operators.postings import decode_postings
-from pisa_spark.operators.topk import make_query_terms_df, topk_search
-
-
-def _qterms(index, queries):
-    spark = index.lexicon.sparkSession
-    if isinstance(queries, list):
-        qterms = make_query_terms_df(spark, queries, index.cfg)
-    else:
-        qterms = queries
-    return qterms.join(
-        index.lexicon.select("term", "term_id", "df", "cf"), "term")
+from pisa_spark.operators.topk import query_terms_df, topk_search
 
 
 def count_postings(index, queries: list[str]):
@@ -50,7 +42,7 @@ def count_postings(index, queries: list[str]):
     (reference tools/count_postings.cpp)."""
     from pyspark.sql import functions as F
 
-    return (_qterms(index, queries)
+    return (query_terms_df(index, queries)
             .groupBy("qid")
             .agg(F.sum("df").cast("long").alias("n_postings")))
 
@@ -114,6 +106,43 @@ def thresholds(index, queries: list[str], k: int = 10,
             .select("qid", F.col("score").alias("threshold")))
 
 
+def _subset_levels(qt, sp, max_terms: int):
+    """Per level m = 1..max_terms, the (qid, doc_id, terms, _maxt, _s)
+    rows of every size-m subset of a query's terms (qt: qid, term_id)
+    over the docs holding all of them, with the summed score _s of their
+    scored postings (sp). Level m joins one more term's postings per
+    (qid, doc) onto level m-1, terms ascending (reference
+    intersection.hpp Intersection::compute over bitmask subsets) — all
+    JVM-side joins; a level is built only when it is consumed."""
+    from pyspark.sql import functions as F
+
+    qsp = qt.join(sp, "term_id").select("qid", "term_id", "doc_id", "score")
+    if max_terms > 1:
+        # localCheckpoint, not persist: every level joins qsp again, but
+        # the result is lazy, so there is no safe unpersist point here
+        # and a persist() would leak executor cache across repeated
+        # calls. Checkpoint blocks are freed by the ContextCleaner once
+        # the result DataFrame is unreachable.
+        qsp = qsp.localCheckpoint(eager=False)
+    cur = qsp.select(
+        "qid", "doc_id",
+        F.array("term_id").alias("terms"),
+        F.col("term_id").alias("_maxt"),
+        F.col("score").cast("double").alias("_s"))
+    ext = qsp.select("qid", "doc_id",
+                     F.col("term_id").alias("_t"),
+                     F.col("score").cast("double").alias("_es"))
+    for m in range(1, max_terms + 1):
+        if m > 1:
+            cur = (cur.join(ext, ["qid", "doc_id"])
+                   .filter(F.col("_t") > F.col("_maxt"))
+                   .select("qid", "doc_id",
+                           F.array_append("terms", F.col("_t")).alias("terms"),
+                           F.col("_t").alias("_maxt"),
+                           (F.col("_s") + F.col("_es")).alias("_s")))
+        yield cur
+
+
 def kth_threshold(index, queries: list[str], k: int = 10,
                   pairs: bool = False, triples: bool = False):
     """Threshold lower bound per query (reference tools/kth_threshold.cpp):
@@ -133,7 +162,7 @@ def kth_threshold(index, queries: list[str], k: int = 10,
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    qt = _qterms(index, queries).select("qid", "term_id").distinct()
+    qt = query_terms_df(index, queries).select("qid", "term_id")
     # decode only the query vocabulary (filter pushed below the decode)
     sp = scored_postings(index, term_ids=qt)
     w = W.partitionBy("term_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -145,25 +174,8 @@ def kth_threshold(index, queries: list[str], k: int = 10,
     max_terms = 3 if triples else (2 if pairs else 1)
     if max_terms == 1:
         return est
-    qsp = (qt.join(sp, "term_id")
-           .select("qid", "term_id", "doc_id", "score")
-           .localCheckpoint(eager=False))
-    ext = qsp.select("qid", "doc_id",
-                     F.col("term_id").alias("_t"),
-                     F.col("score").cast("double").alias("_es"))
-    cur = qsp.select(
-        "qid", "doc_id",
-        F.array("term_id").alias("terms"),
-        F.col("term_id").alias("_maxt"),
-        F.col("score").cast("double").alias("_s"))
     seeds = []
-    for m in range(2, max_terms + 1):
-        cur = (cur.join(ext, ["qid", "doc_id"])
-               .filter(F.col("_t") > F.col("_maxt"))
-               .select("qid", "doc_id",
-                       F.array_append("terms", F.col("_t")).alias("terms"),
-                       F.col("_t").alias("_maxt"),
-                       (F.col("_s") + F.col("_es")).alias("_s")))
+    for cur in itertools.islice(_subset_levels(qt, sp, max_terms), 1, None):
         wm = W.partitionBy("qid", "terms").orderBy(
             F.desc("_s"), F.asc("doc_id"))
         seeds.append(
@@ -196,38 +208,12 @@ def intersection(index, queries: list[str], max_terms: int = 2):
 
     if max_terms < 1:
         raise ValueError("max_terms must be >= 1")
-    qt = _qterms(index, queries).select("qid", "term_id").distinct()
+    qt = query_terms_df(index, queries).select("qid", "term_id")
     sp = scored_postings(index, term_ids=qt)
-    qsp = (qt.join(sp, "term_id")
-           .select("qid", "term_id", "doc_id", "score"))
-    if max_terms > 1:
-        # localCheckpoint, not persist: the level-join reuses qsp per level,
-        # but a persist() here is never unpersisted (the result is lazy, so
-        # there is no safe unpersist point inside this function) and leaks
-        # executor cache across repeated calls. Checkpoint blocks are freed
-        # by the ContextCleaner once the result DataFrame is unreachable.
-        qsp = qsp.localCheckpoint(eager=False)
-    cur = qsp.select(
-        "qid", "doc_id",
-        F.array("term_id").alias("terms"),
-        F.col("term_id").alias("_maxt"),
-        F.col("score").cast("double").alias("_s"))
-    levels = []
-    ext = qsp.select("qid", "doc_id",
-                     F.col("term_id").alias("_t"),
-                     F.col("score").cast("double").alias("_es"))
-    for m in range(1, max_terms + 1):
-        levels.append(
-            cur.groupBy("qid", "terms").agg(
-                F.count("*").cast("long").alias("n_postings"),
-                F.max("_s").alias("max_score")))
-        if m < max_terms:
-            cur = (cur.join(ext, ["qid", "doc_id"])
-                   .filter(F.col("_t") > F.col("_maxt"))
-                   .select("qid", "doc_id",
-                           F.array_append("terms", F.col("_t")).alias("terms"),
-                           F.col("_t").alias("_maxt"),
-                           (F.col("_s") + F.col("_es")).alias("_s")))
+    levels = [cur.groupBy("qid", "terms").agg(
+                  F.count("*").cast("long").alias("n_postings"),
+                  F.max("_s").alias("max_score"))
+              for cur in _subset_levels(qt, sp, max_terms)]
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
@@ -274,7 +260,7 @@ def map_queries(index, queries: list[str]):
     terms dropped like the query parser."""
     from pyspark.sql import functions as F
 
-    return (_qterms(index, queries)
+    return (query_terms_df(index, queries)
             .groupBy("qid")
             .agg(F.sort_array(F.collect_list("term_id")).alias("term_ids")))
 

@@ -6,8 +6,9 @@ import pytest
 
 from pisa_spark.config import IndexConfig
 from pisa_spark.functions.tokenize import analyze_query_terms, make_analyzer
-from pisa_spark.operators.boolean import and_count, and_query, or_count, thresholds
+from pisa_spark.operators.boolean import and_count, and_query, or_count
 from pisa_spark.operators.topk import topk_search
+from pisa_spark.tools import thresholds
 from pisa_spark.plans.build import build_index, extract_pages
 from pisa_spark.sources import webtext
 

@@ -67,6 +67,32 @@ def test_reorder_random_preserves_results(spark, small_index):
     assert ka == kb
 
 
+def test_reorder_qld_index_keeps_ranking(spark):
+    """A qld index (its scorer needs df/cf at encode time) reordered by
+    url returns the same top-10 as before, docIDs mapped through the
+    permutation."""
+    cfg = IndexConfig(shard_span=32, scorer="qld")
+    pdf = webtext.generate_pandas(100, seed=17)
+    idx = build_index(extract_pages(spark.createDataFrame(pdf), cfg), cfg)
+    mapping = url_mapping(idx.docs)
+    new_id = {r.doc_id: r.new_doc_id for r in mapping.collect()}
+    re_idx = reorder_index(idx, mapping)
+    qs = webtext.synth_queries(10, seed=29)
+
+    def top(index, ids):
+        return sorted((r.qid, r.rank, ids(r.doc_id), float(r.score))
+                      for r in topk_search(index, qs, k=10,
+                                           algorithm="block_max_wand",
+                                           with_urls=False).collect())
+
+    before = top(idx, new_id.__getitem__)
+    assert before
+    assert top(re_idx, int) == before
+    mapping.unpersist()
+    re_idx.postings.unpersist()
+    re_idx.shards.unpersist()
+
+
 def test_url_order_compresses_better_than_random(spark, small_index):
     """URL-ordered docIDs give smaller gap encodings than a random
     permutation (the point of reorder-by-URL, reordering.md:46-66)."""

@@ -424,30 +424,6 @@ def test_multi_bucket_udf_matches_per_seed(embeddings):
             assert got[(vid, t)] == b
 
 
-def test_boolean_driver_path_matches_distributed(spark, documents):
-    """r6: list queries resolve term ids driver-side through the serve
-    lexicon; the result must equal the distributed lexicon-join plan
-    (exercised via the DataFrame-queries fallback)."""
-    from pisa_spark.config import IndexConfig
-    from pisa_spark.operators.boolean import and_count, or_count
-    from pisa_spark.operators.topk import make_query_terms_df
-    from pisa_spark.plans.build import build_index
-
-    from pyspark.sql import functions as F
-
-    docs = documents.select(
-        F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("url"), "text")
-    idx = build_index(docs, IndexConfig(shard_span=64))
-    queries = ["q1:join hash", "q2:data data table", "q3:zzznope scan"]
-    qdf = make_query_terms_df(spark, queries, idx.cfg)
-    fast = {(r.qid, r.n_docs) for r in and_count(idx, queries).collect()}
-    slow = {(r.qid, r.n_docs) for r in and_count(idx, qdf).collect()}
-    assert fast == slow
-    fast_or = {(r.qid, r.n_docs) for r in or_count(idx, queries).collect()}
-    slow_or = {(r.qid, r.n_docs) for r in or_count(idx, qdf).collect()}
-    assert fast_or == slow_or
-
-
 def test_dedup_clusters_driver_path_matches_distributed(spark, monkeypatch):
     """r6: bounded driver union-find must emit exactly the distributed
     min-label propagation's (doc_id, cluster_id) rows."""

@@ -11,6 +11,7 @@ order), plus threshold seeding, weighted queries, and unknown-term drops.
 """
 
 import collections
+import contextlib
 import math
 
 import numpy as np
@@ -106,13 +107,33 @@ def test_pruned_matches_exhaustive_exactly(index, queries, oracle_results,
         assert got[q] == oracle_results[q], f"query {q}"
 
 
+def _query_df(spark, index, queries):
+    """The (qid, term, weight) DataFrame query set of query lines."""
+    return spark.createDataFrame(analyze_query_terms(queries, index.cfg),
+                                 "qid string, term string, weight double")
+
+
+@contextlib.contextmanager
+def _shard_joined(index):
+    """Force the batch executor's shard-joined route (one shard per
+    group, query terms resolved by a lexicon collect): no serve state,
+    as for an index above the serve bounds."""
+    from pisa_spark.operators import topk as T
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(T, "SERVE_MAX_DOCS", 0)
+        _fresh(index)
+        try:
+            yield
+        finally:
+            _fresh(index)
+
+
 def test_oracle_matches_pure_python(spark, index, oracle_results, queries,
                                     pyref):
     """Both routes of topk_search — the driver serve path (list queries)
-    and the executor-side per-shard traversal (a DataFrame query set) —
-    equal an engine-independent pure-Python float32 BM25."""
-    from pisa_spark.operators.topk import make_query_terms_df
-
+    and the executor-side per-shard traversal (forced, with a DataFrame
+    query set) — equal an engine-independent pure-Python float32 BM25."""
     cfg = IndexConfig()
     qmap = collections.defaultdict(list)
     for qid, term, w in analyze_query_terms(queries, cfg):
@@ -122,9 +143,10 @@ def test_oracle_matches_pure_python(spark, index, oracle_results, queries,
     ids = sorted(int(r["doc_id"])
                  for r in index.docs.select("doc_id").collect())
     rank_of = {d: i for i, d in enumerate(ids)}
-    out = topk_search(index, make_query_terms_df(spark, queries, index.cfg),
-                      k=K, algorithm="ranked_or", range_span=128,
-                      with_urls=False).toPandas()
+    with _shard_joined(index):
+        out = topk_search(index, _query_df(spark, index, queries), k=K,
+                          algorithm="ranked_or", range_span=128,
+                          with_urls=False).toPandas()
     per_shard = {
         q: [(r.doc_id, r.score) for r in g.sort_values("rank").itertuples()]
         for q, g in out.groupby("qid")
@@ -415,20 +437,18 @@ def test_serve_global_run_identity(spark, index, queries):
     query over the global doc space) must rank identically to the
     exhaustive oracle: ranked_or for the pruned disjunctive algorithms,
     ranked_and for the conjunctive one, both from a DataFrame query set
-    (the batch executor's one kernel per (query, shard))."""
+    over the forced shard-joined route (one shard per group)."""
     from pisa_spark.operators import topk as T
-
-    if hasattr(index, "_serve_state"):
-        del index._serve_state
 
     def key(rows):
         return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6))
                       for r in rows)
 
-    qdf = T.make_query_terms_df(spark, queries, index.cfg)
-    oracle = {alg: key(T.topk_search(index, qdf, k=K, algorithm=alg,
-                                     with_urls=False).collect())
-              for alg in ("ranked_or", "ranked_and")}
+    qdf = _query_df(spark, index, queries)
+    with _shard_joined(index):
+        oracle = {alg: key(T.topk_search(index, qdf, k=K, algorithm=alg,
+                                         with_urls=False).collect())
+                  for alg in ("ranked_or", "ranked_and")}
     for alg in ("block_max_wand", "maxscore", "block_max_maxscore",
                 "ranked_and"):
         g = key(T.topk_search(index, queries, k=K, algorithm=alg,
@@ -480,15 +500,13 @@ def small_shard_index(spark, corpus):
 
 
 def _join_oracle(spark, index, queries, algorithm="ranked_or", **kw):
-    """Answers of topk_search for a DataFrame query set: the batch
-    executor over shard-joined rows, one kernel per (query, shard), no
-    shard grouping. Pinned to the pure-Python reference by
-    test_oracle_matches_pure_python."""
-    from pisa_spark.operators.topk import make_query_terms_df
-
-    qdf = make_query_terms_df(spark, queries, index.cfg)
-    return _exact(topk_search(index, qdf, k=K, algorithm=algorithm,
-                              with_urls=False, **kw).collect())
+    """Answers of topk_search for a DataFrame query set over the forced
+    shard-joined route: the batch executor, one shard per group. Pinned
+    to the pure-Python reference by test_oracle_matches_pure_python."""
+    qdf = _query_df(spark, index, queries)
+    with _shard_joined(index):
+        return _exact(topk_search(index, qdf, k=K, algorithm=algorithm,
+                                  with_urls=False, **kw).collect())
 
 
 @pytest.fixture(scope="module")
