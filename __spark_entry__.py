@@ -135,19 +135,22 @@ def _spread(df: DataFrame, path: str) -> DataFrame:
     MB of shuffle and restores full-cluster execution; it is deterministic
     (local sort before round-robin) and row-preserving, so every entry's
     result is unchanged. Scale-adaptive: sized from defaultParallelism,
-    and skipped when the file's row-group count already allows enough
+    and skipped when the path's row-group count already allows enough
     scan parallelism (a real multi-file table at 100 TB hits this branch
-    and stays shuffle-free). The parallelism check reads the parquet
-    FOOTER (0.1 ms, memoized — file metadata, not data) instead of
-    df.rdd.getNumPartitions(), whose RDD conversion costs ~120 ms per
-    call; unreadable/multi-file paths fall back to the RDD check."""
+    and stays shuffle-free). The parallelism check sums the parquet
+    FOOTERS of the path's data files (one file, or every part file of a
+    directory layout; ~0.1 ms a file, memoized — file metadata, not data)
+    instead of df.rdd.getNumPartitions(), whose RDD conversion costs
+    ~120 ms per call; paths pyarrow cannot read fall back to the RDD
+    check."""
     n = df.sparkSession.sparkContext.defaultParallelism
     rgs = _PARQUET_RG_CACHE.get(path)
     if rgs is None:
         try:
-            import pyarrow.parquet as pq
+            import pyarrow.dataset as ds
 
-            rgs = pq.read_metadata(path).num_row_groups
+            rgs = sum(f.num_row_groups for f in
+                      ds.dataset(path, format="parquet").get_fragments())
         except Exception:
             rgs = df.rdd.getNumPartitions()
         _PARQUET_RG_CACHE[path] = rgs

@@ -17,6 +17,13 @@ Layout:
     sources/     synthetic webtext corpus, record readers, query parsing
     operators/   postings, codecs, block-max, top-k executors, dedup, ANN
     plans/       end-to-end build pipeline + checkpoint/resume manifest
+
+Importing the package installs `worker_imports`' guard, so a PySpark worker
+that runs engine code stops re-reading unchanged zip archives every task.
 """
+
+from pisa_spark import worker_imports
+
+worker_imports.install()
 
 __version__ = "0.1.0"
