@@ -17,7 +17,8 @@ topk_search_batch):
               posting, slice one run per (query term, weight)-->
             --ONE dense traversal scores every query of the group at
               once (_traverse)-->
-            --k-merge (score desc, doc asc)-->  (qid, doc_id, score, rank)
+            --k-merge (score desc, doc asc), URLs from the docmap-->
+            (qid, doc_id, [url,] score, rank)
 
 Query resolution is one function, resolve_query_terms: query lines or a
 (qid, term, weight) DataFrame (collected once) resolve against the serve
@@ -38,8 +39,12 @@ time.
 
 Per-group top-k + global merge mirrors the reference's range_query
 (include/pisa/range_query.hpp:8-37): per-docID-range top-k, then a final
-k-merge — which is exactly Spark's partial/final TakeOrderedAndProject
-shape, here expressed as a row_number window per qid.
+k-merge. Where the index has a serve state and the partial rows fit
+SERVE_MAX_PARTIAL_ROWS, the merge runs on the driver (_ranked_frame) and
+URLs come from the serve state's driver docmap, as the reference names
+its hits through its memory-resident doclex: a batch call is one Spark
+job. Otherwise topk_search_batch keeps the distributed plan, a
+row_number window per qid and a join with index.docs.
 
 The traversal is the reference's term-at-a-time accumulator
 (ranked_or_taat_query.hpp:9-37 over accumulator/simple_accumulator.hpp:
@@ -413,7 +418,9 @@ def _rank_per_query(scored, k: int):
 # ------------------------------------------------------------ serving path
 
 # driver-memory bounds for the serve caches: above these the serve path
-# declines and topk_search runs the executor-side batch traversal instead
+# declines and topk_search runs the executor-side batch traversal instead.
+# SERVE_MAX_DOCS and SERVE_MAX_PARTIAL_ROWS also bound the batch's driver
+# merge: above them it ranks through its window plan
 SERVE_MAX_DOCS = 1 << 23            # global doc_lens array (~64 MB int64)
 SERVE_MAX_PARTIAL_ROWS = 1 << 21    # shards x queries x k merge bound
 # per-call driver fetch bound; also the postings one traversal group holds
@@ -760,11 +767,16 @@ class _ServeState:
 
     One lock guards the cache: the prefetch, every fetch, eviction and
     run building hold it, so concurrent callers share one state. Kernels
-    run outside it, over the runs a call took from term_runs."""
+    run outside it, over the runs a call took from term_runs.
+
+    The docmap (doc_ids, urls) names the hits of with_urls calls, as the
+    reference names them through its memory-resident doclex
+    (evaluate_queries.cpp:154-172): fetched once, on the first with_urls
+    call (_serve_docmap)."""
 
     __slots__ = ("tmeta", "global_doc_lens", "bc_doc_lens", "n_shards",
                  "rows_by_term", "cached_postings", "complete", "term_runs",
-                 "lock")
+                 "doc_ids", "urls", "lock")
 
     def __init__(self, tmeta, global_doc_lens, bc_doc_lens, n_shards):
         self.tmeta = tmeta
@@ -785,6 +797,9 @@ class _ServeState:
         # in-memory lists on every query. Evicted together with
         # rows_by_term.
         self.term_runs: dict[tuple[int, float], _TermRun] = {}
+        # docmap: ascending doc_ids and their URLs (None until fetched)
+        self.doc_ids: np.ndarray | None = None
+        self.urls: pa.Array | None = None
         self.lock = threading.Lock()
 
 
@@ -920,21 +935,74 @@ def _serve_runs(st, plan: _QueryPlan) -> dict[tuple[int, float], _TermRun]:
             if key in st.term_runs}
 
 
+def _serve_docmap(index, st) -> tuple[np.ndarray, pa.Array]:
+    """The serve state's docmap: every doc's doc_id in ascending order and
+    its URL, fetched in one job on the first call. Span-aligned buckets
+    leave docID gaps, so a doc is found by search, not by offset."""
+    with st.lock:
+        if st.doc_ids is None:
+            docs = index.docs.select("doc_id", "url").toArrow().sort_by(
+                "doc_id")
+            st.urls = docs["url"].combine_chunks()
+            st.doc_ids = docs["doc_id"].to_numpy()
+        return st.doc_ids, st.urls
+
+
+def _merge_fits(st, plan: _QueryPlan) -> bool:
+    """Whether a call's partial top-k rows (at most shards x queries x k)
+    fit the driver merge bound SERVE_MAX_PARTIAL_ROWS."""
+    return (st.n_shards * max(1, len(plan.n_terms)) * plan.k
+            <= SERVE_MAX_PARTIAL_ROWS)
+
+
+def _ranked_frame(index, st, partial: pa.Table, k: int, with_urls: bool):
+    """The final k-merge on the driver: the k best of each qid's partial
+    top-k rows (qid, doc_id, score), ranked 1..k by (score desc, doc asc)
+    (the reference's range_query merge), plus each hit's URL from the
+    docmap (_serve_docmap) when with_urls. Returns a driver-local
+    DataFrame (qid, doc_id, [url,] score, rank): collecting it runs no
+    Spark job."""
+    ranked = partial.sort_by([("qid", "ascending"), ("score", "descending"),
+                              ("doc_id", "ascending")])
+    qids = ranked["qid"].to_numpy(zero_copy_only=False)
+    starts = _firsts(qids)
+    rank = np.arange(qids.size) - np.repeat(
+        starts, np.diff(np.append(starts, qids.size)))
+    keep = rank < k
+    if with_urls:
+        # inner-join semantics: a hit without a docmap row drops
+        doc_ids, urls = _serve_docmap(index, st)
+        docs = ranked["doc_id"].to_numpy()
+        pos = np.searchsorted(doc_ids, docs)
+        found = pos < doc_ids.size
+        found[found] = doc_ids[pos[found]] == docs[found]
+        keep &= found
+    ranked = ranked.filter(pa.array(keep))
+    columns = {"qid": ranked["qid"], "doc_id": ranked["doc_id"]}
+    if with_urls:
+        columns["url"] = urls.take(pa.array(pos[keep]))
+    columns["score"] = ranked["score"]
+    columns["rank"] = pa.array(rank[keep] + 1, pa.int32())
+    return index.lexicon.sparkSession.createDataFrame(pa.table(columns))
+
+
 def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
                        weighted: bool, range_span: int,
                        thresholds: dict[str, float] | None, with_urls: bool):
     """Low-latency executor (the reference's interactive `queries` tool
     shape, tools/queries.cpp:279-462).
 
-    The batch executor pays a shuffle, a window stage and a result job per
-    call — seconds of scheduling floor for milliseconds of work. Here query
-    terms resolve against the driver-cached lexicon (no job), and the
-    posting rows for the query vocabulary are fetched in ONE column-pruned
-    job into the per-term serve cache (repeat terms: zero jobs) — then one
-    dense _traverse answers every query of the call driver-side over the
-    cached runs, the whole index as one group, as the reference runs its
-    queries over its mmap'd index. Same run builder, traversal and
-    float32 scores as topk_search_batch, so the ranking is identical.
+    The batch executor pays a traversal job per call, a scheduling floor
+    far above the milliseconds of work. Here query terms resolve against
+    the driver-cached lexicon (no job), and the posting rows for the
+    query vocabulary are fetched in ONE column-pruned job into the
+    per-term serve cache (repeat terms: zero jobs) — then one dense
+    _traverse answers every query of the call driver-side over the cached
+    runs, the whole index as one group, as the reference runs its queries
+    over its mmap'd index, and the batch executor's driver tail
+    (_ranked_frame: k-merge, docmap URLs) ranks the result. Same run
+    builder, traversal and float32 scores as topk_search_batch, so the
+    ranking is identical.
 
     Returns None when the index/meta exceeds the serve bounds, when the
     per-query merge would exceed SERVE_MAX_PARTIAL_ROWS, or when the
@@ -944,13 +1012,11 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
     st = _serve_state(index)
     if st is None:
         return None
-    spark = index.lexicon.sparkSession
     plan = _QueryPlan(index, algorithm, k, weighted, range_span,
                       thresholds).resolve(index, queries)
-    if st.n_shards * max(1, len(plan.n_terms)) * k > SERVE_MAX_PARTIAL_ROWS:
+    if not _merge_fits(st, plan):
         return None
 
-    out_schema = "qid string, doc_id long, score float, rank int"
     with st.lock:
         missing = ([] if st.complete else
                    [t for t in plan.tid_of_term if t not in st.rows_by_term])
@@ -959,25 +1025,11 @@ def _topk_search_serve(index, queries: list[str], k: int, algorithm: str,
         if missing:
             _serve_fetch(index, st, plan, missing)
         runs = _serve_runs(st, plan)
-    partial = pd.DataFrame(dict(zip(("qid", "doc_id", "score"),
-                                    _traverse(runs, plan))))
-
-    if len(partial):
-        # driver-side k-merge of the per-query partials — same
-        # (score desc, doc asc) total order as the batch executor's window
-        partial = partial.sort_values(["qid", "score", "doc_id"],
-                                      ascending=[True, False, True],
-                                      kind="mergesort")
-        partial["rank"] = (partial.groupby("qid", sort=False).cumcount() + 1
-                           ).astype("int32")
-        partial = partial[partial["rank"] <= k]
-    else:
-        partial = partial.assign(rank=pd.Series(dtype="int32"))
-    out = spark.createDataFrame(partial, out_schema)
-    if with_urls:
-        return (out.join(index.docs.select("doc_id", "url"), "doc_id")
-                .select("qid", "doc_id", "url", "score", "rank"))
-    return out
+    qids, docs, scores = _traverse(runs, plan)
+    return _ranked_frame(index, st, pa.table(
+        [pa.array(qids, pa.string()), pa.array(docs, pa.int64()),
+         pa.array(scores, pa.float32())], names=["qid", "doc_id", "score"]),
+        k, with_urls)
 
 
 def topk_search(index, queries: list[str] | object, k: int = 10,
@@ -989,7 +1041,7 @@ def topk_search(index, queries: list[str] | object, k: int = 10,
 
     queries: raw query lines or a (qid, term, weight) DataFrame.
     Returns DataFrame (qid, doc_id, url, score, rank); with_urls=False skips
-    the doclex join (one fewer join per query — latency path).
+    the URL lookup and the url column.
 
     List queries run driver-side through the serve path
     (_topk_search_serve) whenever it accepts the call; every other call
@@ -1073,19 +1125,35 @@ def topk_search_batch(index, queries: list[str] | object, k: int = 10,
     term, and ONE dense traversal (_traverse) scores every query of the
     group at once — the reference's evaluate_queries shape (every query
     over one shared mmap'd index, evaluate_queries.cpp:154-156) with the
-    per-query loop turned into one scatter per (run, block). Without the
-    driver serve state (index above its bounds) rows carry their own
-    shard's doc lengths and a group is one shard. Results
-    are identical to the serve path (same run builder, traversal and
-    float32 scores).
+    per-query loop turned into one scatter per (run, block).
+
+    Two routes take the partial top-k rows from there:
+
+    - driver merge, when the index has a serve state and the partial rows
+      fit SERVE_MAX_PARTIAL_ROWS: the traversal runs now, as ONE job,
+      and its rows are k-merged on the driver with URLs from the serve
+      state's docmap (_ranked_frame), as the reference ranks and names
+      its hits in process (evaluate_queries.cpp:154-172). The returned
+      DataFrame is driver-local: collecting it runs no further job.
+    - window plan, otherwise: a lazy DataFrame whose row_number window
+      per qid ranks the rows, joined with index.docs for URLs; the
+      distributed route for query sets too large to merge on the
+      driver. Without the serve state (index above its bounds) rows
+      carry their own shard's doc lengths and a group is one shard.
+
+    Both routes return the same rows and columns, identical to the serve
+    path (same run builder, traversal and float32 scores).
     """
     algorithm = _ALGORITHM_ALIASES.get(algorithm, algorithm)
     plan = _QueryPlan(index, algorithm, k, weighted, range_span,
                       thresholds).resolve(index, queries)
     posts, doc_lens_bc = _shard_postings(index, plan)
-    ranked = _rank_per_query(
-        posts.mapInArrow(_traverse_partitions(plan, doc_lens_bc),
-                         schema=TOPK_PARTIAL_SCHEMA), k)
+    partial = posts.mapInArrow(_traverse_partitions(plan, doc_lens_bc),
+                               schema=TOPK_PARTIAL_SCHEMA)
+    st = _serve_state(index, prefetch=False)
+    if st is not None and _merge_fits(st, plan):
+        return _ranked_frame(index, st, partial.toArrow(), k, with_urls)
+    ranked = _rank_per_query(partial, k)
     if not with_urls:
         return ranked
     return (ranked.join(index.docs.select("doc_id", "url"), "doc_id")

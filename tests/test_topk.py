@@ -459,27 +459,119 @@ def test_serve_global_run_identity(spark, index, queries):
     del index._serve_state
 
 
+def _ranked(df):
+    """(qid, rank, doc_id, float32 score, url) rows, plus the column
+    names and types."""
+    rows = sorted((r.qid, int(r.rank), int(r.doc_id), np.float32(r.score),
+                   r.url if "url" in df.columns else None)
+                  for r in df.collect())
+    return rows, [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def _jobs_of(spark, group, call):
+    """(call(), the number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_batch_executor_join_fallback_identity(index, queries, monkeypatch):
-    """topk_search_batch over shard-joined rows, one shard per group
-    (used for DataFrame query sets and indexes above the driver serve
-    bounds), returns exactly what the serve-state path returns."""
+    """topk_search_batch's two routes give identical rows, columns and
+    column types, with and without URLs: the driver merge (serve state
+    present, partial rows within SERVE_MAX_PARTIAL_ROWS) and the window
+    plan, reached both without a serve state (shard-joined rows, one
+    shard per group: the route of indexes above the serve bounds) and
+    above the merge bound."""
     from pisa_spark.operators import topk as T
 
-    def key(rows):
-        return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6))
-                      for r in rows)
+    def answer(with_urls):
+        return _ranked(T.topk_search_batch(
+            index, queries, k=K, algorithm="block_max_wand",
+            with_urls=with_urls))
 
-    fast = key(T.topk_search_batch(index, queries, k=K,
-                                   algorithm="block_max_wand").collect())
-    monkeypatch.setattr(T, "SERVE_MAX_DOCS", 0)
-    if hasattr(index, "_serve_state"):
-        del index._serve_state
-    fallback = key(T.topk_search_batch(index, queries, k=K,
-                                       algorithm="block_max_wand").collect())
-    assert fallback == fast
-    monkeypatch.undo()
-    if hasattr(index, "_serve_state"):
-        del index._serve_state
+    for with_urls in (False, True):
+        _fresh(index)
+        rows, columns = answer(with_urls)
+        assert [name for name, _ in columns] == (
+            ["qid", "doc_id", "url", "score", "rank"] if with_urls
+            else ["qid", "doc_id", "score", "rank"])
+        assert rows and all(r[4] for r in rows) == with_urls
+        for bound in ("SERVE_MAX_DOCS", "SERVE_MAX_PARTIAL_ROWS"):
+            monkeypatch.setattr(T, bound, 0)
+            _fresh(index)
+            try:
+                assert answer(with_urls) == (rows, columns), (bound,
+                                                              with_urls)
+                st = index._serve_state
+                assert (st is False) == (bound == "SERVE_MAX_DOCS")
+                assert not st or st.doc_ids is None  # the window joins docs
+            finally:
+                monkeypatch.undo()
+                _fresh(index)
+
+
+def test_docmap_urls_across_docid_gaps(spark, index, queries):
+    """The serve state's docmap names every hit of the serve path and of
+    the batch driver merge with the URL the index.docs join gives, on an
+    index whose span-aligned buckets leave docID gaps. It is fetched
+    once per serve state, on the first with_urls call: a repeat with_urls
+    call starts no job beyond the call's own."""
+    from pisa_spark.operators import topk as T
+
+    url_of = {int(r.doc_id): r.url
+              for r in index.docs.select("doc_id", "url").collect()}
+    assert max(url_of) + 1 > len(url_of)  # docID gaps
+    _fresh(index)
+    try:
+        serve = T.topk_search(index, queries, k=K, with_urls=True)
+        st = index._serve_state
+        doc_ids = st.doc_ids
+        assert doc_ids is not None
+        batch = T.topk_search_batch(index, queries, k=K, with_urls=True)
+        assert st.doc_ids is doc_ids  # not fetched again
+        for df in (serve, batch):
+            rows = df.collect()
+            assert rows and all(r.url == url_of[r.doc_id] for r in rows)
+        def call(search, with_urls=True):
+            return lambda: _ranked(search(index, queries, k=K,
+                                          with_urls=with_urls))
+
+        (serve_rows, _), serve_jobs = _jobs_of(
+            spark, "docmap-serve", call(T.topk_search))
+        assert serve_jobs == 0  # prefetched rows, docmap already resident
+        _, plain_jobs = _jobs_of(spark, "docmap-plain",
+                                 call(T.topk_search_batch, False))
+        (batch_rows, _), batch_jobs = _jobs_of(
+            spark, "docmap-batch", call(T.topk_search_batch))
+        assert batch_jobs == plain_jobs
+        assert batch_rows == serve_rows
+    finally:
+        _fresh(index)
+
+
+def test_batch_driver_merge_is_one_job(spark, index, queries):
+    """A warm topk_search_batch(..., with_urls=True) call collected on
+    the driver-merge route runs exactly one Spark job: the traversal.
+    The k-merge and the URL lookup run on the driver and the returned
+    DataFrame is driver-local."""
+    from pisa_spark.operators.topk import topk_search_batch
+
+    def call():
+        return topk_search_batch(index, queries, k=K,
+                                 algorithm="block_max_wand",
+                                 with_urls=True).collect()
+
+    _fresh(index)
+    try:
+        call()  # builds the serve state and fetches the docmap
+        rows, jobs = _jobs_of(spark, "batch-one-job", call)
+        assert rows and jobs == 1
+    finally:
+        _fresh(index)
 
 
 # ------------------------------------------- batch grouping rank identity
@@ -531,14 +623,16 @@ def _fresh(index):
 
 @pytest.mark.parametrize("setting", ["shards_per_task", "tiny_groups",
                                      "mid_groups", "join_fallback",
-                                     "small_arrow_batches"])
+                                     "window_merge", "small_arrow_batches"])
 def test_batch_grouping_identity(spark, small_shard_index, small_shard_oracle,
                                  queries, monkeypatch, setting):
     """Every algorithm through topk_search_batch equals the exhaustive
     oracle whether a task's shards traverse as one group, as several
     groups (a small SERVE_COLLECT_MAX_POSTINGS budget), one shard at a
     time (the join fallback above the serve bounds), or as groups whose
-    shards span many 3-row Arrow batches."""
+    shards span many 3-row Arrow batches, and whether the partial rows
+    are merged on the driver or by the window plan (above
+    SERVE_MAX_PARTIAL_ROWS)."""
     from pisa_spark.operators import topk as T
 
     batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -549,6 +643,8 @@ def test_batch_grouping_identity(spark, small_shard_index, small_shard_oracle,
         monkeypatch.setattr(T, "SERVE_COLLECT_MAX_POSTINGS", 300)
     elif setting == "join_fallback":
         monkeypatch.setattr(T, "SERVE_MAX_DOCS", 0)
+    elif setting == "window_merge":
+        monkeypatch.setattr(T, "SERVE_MAX_PARTIAL_ROWS", 0)
     elif setting == "small_arrow_batches":
         spark.conf.set(batch_conf, "3")
     _fresh(small_shard_index)
@@ -656,25 +752,25 @@ def test_vocabulary_filter_escapes_terms(spark, key):
 
 def test_serve_state_concurrent_callers(index, queries, monkeypatch):
     """8 threads issuing mixed queries against one index through the serve
-    path (fetches, FIFO eviction and run building under a cache budget
-    far below the index) rank exactly as a serial run, and the cache's
-    posting count matches the rows it holds."""
+    path (fetches, FIFO eviction, run building and the first docmap fetch
+    under a cache budget far below the index) rank exactly as a serial
+    run, and the cache's posting count matches the rows it holds."""
     import threading
 
     from pisa_spark.operators import topk as T
 
     def key(rows):
-        return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6))
-                      for r in rows)
+        return sorted((r.qid, r.rank, r.doc_id, round(float(r.score), 6),
+                       r.url if "url" in r else None) for r in rows)
 
     algs = ("block_max_wand", "maxscore", "ranked_or", "ranked_and")
     calls = [(queries[(7 * i) % len(queries):][:6], algs[i % len(algs)],
-              i % 3 == 0) for i in range(24)]
+              i % 3 == 0, i % 2 == 1) for i in range(24)]
 
     def answer(call):
-        qs, alg, weighted = call
+        qs, alg, weighted, with_urls = call
         return key(T.topk_search(index, qs, k=K, algorithm=alg,
-                                 weighted=weighted, with_urls=False)
+                                 weighted=weighted, with_urls=with_urls)
                    .collect())
 
     _fresh(index)
@@ -704,4 +800,5 @@ def test_serve_state_concurrent_callers(index, queries, monkeypatch):
                                      for rows in st.rows_by_term.values())
     cached_tids = {st.tmeta[t][0] for t in st.rows_by_term}
     assert {tid for tid, _ in st.term_runs} <= cached_tids
+    assert st.doc_ids.size == len(st.urls) == index.docs.count()
     _fresh(index)
