@@ -21,6 +21,7 @@ from __future__ import annotations
 from pisa_spark.operators.postings import decode_postings
 from pisa_spark.operators.topk import (_in_values, resolve_query_terms,
                                        topk_search)
+from pisa_spark.session import local_frame
 
 
 def _query_postings(index, queries):
@@ -39,7 +40,8 @@ def _query_postings(index, queries):
 
     _, rows = resolve_query_terms(index, queries)
     n_terms = Counter(qid for qid, *_ in rows)
-    q = index.lexicon.sparkSession.createDataFrame(
+    q = local_frame(
+        index.lexicon.sparkSession,
         [(qid, tid, n_terms[qid]) for qid, _, tid, *_ in rows],
         "qid string, term_id long, n_query_terms int")
     flat = decode_postings(index.postings.filter(

@@ -111,6 +111,7 @@ from pisa_spark.config import IndexConfig
 from pisa_spark.functions.scoring import make_scorer
 from pisa_spark.functions.tokenize import analyze_query_terms
 from pisa_spark.operators import codecs
+from pisa_spark.session import local_frame
 
 F32 = np.float32
 
@@ -473,8 +474,9 @@ def resolve_query_terms(index, queries: list[str] | object
 def query_terms_df(index, queries: list[str] | object):
     """The resolve_query_terms rows of a query set as a DataFrame
     (QUERY_TERMS_SCHEMA)."""
-    return index.lexicon.sparkSession.createDataFrame(
-        resolve_query_terms(index, queries)[1], QUERY_TERMS_SCHEMA)
+    return local_frame(index.lexicon.sparkSession,
+                       resolve_query_terms(index, queries)[1],
+                       QUERY_TERMS_SCHEMA)
 
 
 class _QueryPlan:
@@ -1298,8 +1300,7 @@ def _dataframe_scores(docs_df, queries: list[str], id_col: str,
     avg_len = float(total) / n_docs if n_docs else 1.0
     qrows = sorted({(qid, term) for qid, term, _ in
                    analyze_query_terms(queries, cfg)})
-    qdf = docs_df.sparkSession.createDataFrame(qrows,
-                                                "qid string, term string")
+    qdf = local_frame(docs_df.sparkSession, qrows, "qid string, term string")
     return (qdf.join(tf, "term").join(term_stats, "term")
             .select("qid", "doc_id",
                     partial(n_docs, avg_len, total).alias("partial"))

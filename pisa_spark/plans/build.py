@@ -433,18 +433,20 @@ def assign_rank_ids(df, order_col: str, id_col: str, cuts: list, parts: int,
     # first (doc_id - shard_base) positions, so doc_lens indexing and
     # every downstream consumer are unaffected; gap cost in the docID
     # codecs is a few extra bits per seam.
-    offsets, acc = [], 0
+    # The per-bucket shift (offset - min mono) rides in the plan as one
+    # typed map literal: a join to a driver-list DataFrame would rebuild
+    # its broadcast through a Python-worker job in every execution that
+    # reads the result. Every _pid of `arranged` has a meta row.
+    shift, acc = [], 0
     for r in meta:  # buckets are ordered by cut point, so pid order == key order
         acc = -(-acc // align) * align
-        offsets.append((int(r["_pid"]), acc, int(r["_m0"])))
+        shift += [F.lit(int(r["_pid"])).cast("long"),
+                  F.lit(acc - int(r["_m0"])).cast("long")]
         acc += int(r["_n"])
-    odf = spark.createDataFrame(offsets or [(0, 0, 0)],
-                                "_pid long, _off long, _m0 long")
-    out = (
-        arranged.join(F.broadcast(odf), "_pid")
-        .withColumn(id_col, F.col("_off") + F.col("_mono") - F.col("_m0"))
-        .drop("_pid", "_mono", "_off", "_m0")
-    )
+    ids = F.col("_mono")
+    if shift:  # an empty input has no buckets (and no rows)
+        ids = ids + F.create_map(*shift)[F.col("_pid")]
+    out = arranged.withColumn(id_col, ids).drop("_pid", "_mono")
     return out, arranged, meta
 
 
@@ -455,9 +457,11 @@ def _f32(x: float) -> float:
 def _in_background(fn):
     """Run fn() on a driver thread — Spark schedules jobs from separate
     driver threads side by side, so independent DAG branches overlap
-    instead of each adding a fixed job latency to the build. Returns
-    join(), which waits for fn and re-raises its error."""
-    import threading
+    instead of each adding a fixed job latency to the build. The thread
+    inherits the caller's local properties, so its jobs carry the
+    caller's job group and description. Returns join(), which waits for
+    fn and re-raises its error."""
+    from pyspark import InheritableThread
 
     errs: list = []
 
@@ -467,7 +471,7 @@ def _in_background(fn):
         except BaseException as ex:  # re-raised at join()
             errs.append(ex)
 
-    t = threading.Thread(target=run)
+    t = InheritableThread(target=run)
     t.start()
 
     def join() -> None:
@@ -549,12 +553,16 @@ def _run_buckets(spark, manifest: BuildManifest, n_buckets: int, build_one):
     serial execution is dominated by per-job scheduling overhead —
     concurrent jobs share the task slots and overlap that overhead (the
     manifest serializes its own updates; a crash still resumes at the
-    per-bucket granularity)."""
+    per-bucket granularity). Like _in_background's, the pool threads
+    carry the caller's job group and description."""
     import concurrent.futures as futures
+
+    from pyspark import inheritable_thread_target
 
     todo = [b for b in range(n_buckets)
             if not manifest.done(f"postings/bucket={b}")]
     if todo:
+        build_one = inheritable_thread_target(spark)(build_one)
         with futures.ThreadPoolExecutor(max_workers=len(todo)) as pool:
             for _ in pool.map(build_one, todo):  # re-raises worker errors
                 pass
@@ -852,6 +860,11 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
             def join_writes() -> None:
                 join_root()
                 join_docs()
+        else:
+            # cached before the shards pass reads it: that job fills the
+            # slim docmap as a side effect, so releasing the tokenize
+            # cache below needs no pass of its own
+            docs = docs.persist(deser)
 
     # ---- stage: per-term (df, cf) for scorers that need them at encode
     # time (the encoder choice is the only scorer-dependent step; see
@@ -1040,15 +1053,13 @@ def build_index(docs_df, cfg: IndexConfig = DEFAULT_CONFIG,
     # (terms, tfs) arrays are ~20x the slim docmap and would otherwise stay
     # resident in executor storage for the index's whole serving life
     # (measured 1.9 GB vs the 2.9 GB total at 1.2M docs). In memory the
-    # slim docs projection is re-persisted first. A query service keeps
-    # the inverted index hot, not the forward index (the reference serves
-    # from the inv/wand mmaps alone; fwd is a build-time artifact).
+    # slim docs cache was filled by the shards pass, which has joined. A
+    # query service keeps the inverted index hot, not the forward index
+    # (the reference serves from the inv/wand mmaps alone; fwd is a
+    # build-time artifact).
     if tok_cache is not None and (eager or manifest):
         if manifest:
             docs = manifest.read_df(spark, "docs")
-        else:
-            docs = docs.persist(deser)
-            docs.count()
         tok_cache.unpersist()
 
     return InvertedIndex(docs=docs, lexicon=lexicon, postings=postings,

@@ -64,3 +64,21 @@ def get_spark(app_name: str = "pisa-spark", cores: int | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark, rows: list, schema: str):
+    """A DataFrame of driver-side rows (tuples in `schema`'s DDL column
+    order), shipped as one Arrow table: a LocalRelation in the plan.
+    createDataFrame(list) gives a pickled-row RDD scan instead, and every
+    execution that broadcasts it rebuilds the broadcast through a
+    Python-worker job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                     schema=arrow)
+    return spark.createDataFrame(table, struct)

@@ -27,6 +27,7 @@ import json
 import os
 
 from pisa_spark.config import DEFAULT_CONFIG, IndexConfig
+from pisa_spark.session import local_frame
 
 
 def _seg_meta_path(out_dir: str) -> str:
@@ -129,8 +130,8 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
         new_ids = None
     elif n_new <= cfg.lexicon_broadcast_max:
         terms = sorted(r[0] for r in new_terms_df.collect())
-        new_ids = spark.createDataFrame(
-            [(t, nxt + i) for i, t in enumerate(terms)],
+        new_ids = local_frame(
+            spark, [(t, nxt + i) for i, t in enumerate(terms)],
             "term string, term_id long")
     else:
         cuts = _sample_cuts(new_terms_df, "term", parts * 4)

@@ -593,3 +593,112 @@ def test_build_leaves_only_index_caches(spark):
     assert new_caches(out="single") == 0
     assert new_caches(out="bucketed", bucketed=True) == 0
     assert new_caches(out="q8_bucketed", bucketed=True, quantize_bits=8) == 0
+
+
+def test_assign_rank_ids_dense_padded_in_order(spark):
+    """Several buckets (more than partitions) with align > 1: ids are
+    dense within each bucket, padded up to a multiple of `align` at each
+    bucket seam, and follow `order_col`; the per-bucket shift rides in
+    the plan (no driver-list scan, no join), and an empty input gives
+    zero rows."""
+    from pyspark.sql import functions as F
+
+    from pisa_spark.plans.build import assign_rank_ids
+
+    n, align = 300, 32
+    keyed = spark.range(0, n, numPartitions=3).select(
+        F.format_string("k%04d", (F.col("id") * 37) % n).alias("key"),
+        F.col("id").alias("payload"))
+    cuts = ["k0050", "k0120", "k0200"]  # buckets of 50, 70, 80, 100 keys
+    out, cache, meta = assign_rank_ids(keyed, "key", "rank", cuts, parts=2,
+                                       align=align)
+    assert out.columns == ["key", "payload", "rank"]
+    assert [int(r["_n"]) for r in meta] == [50, 70, 80, 100]
+    want, off, lo = {}, 0, 0
+    for hi in (50, 120, 200, 300):
+        off = -(-off // align) * align
+        for k in range(lo, hi):
+            want[f"k{k:04d}"] = off + k - lo
+        off, lo = off + hi - lo, hi
+    got = {r["key"]: r["rank"] for r in out.collect()}
+    assert got == want
+    assert sorted(want.values())[-1] == 256 + 99  # seams at 64, 160, 256
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan and "Join" not in plan, plan
+    cache.unpersist()
+
+    empty_out, empty_cache, empty_meta = assign_rank_ids(
+        keyed.limit(0), "key", "rank", cuts, parts=2, align=align)
+    assert empty_meta == [] and empty_out.count() == 0
+    assert empty_out.columns == ["key", "payload", "rank"]
+    empty_cache.unpersist()
+
+
+def test_background_jobs_carry_the_callers_job_group(spark):
+    """A job started through _in_background belongs to the job group
+    its caller set, so job counts per group see the build's background
+    branches."""
+    from pisa_spark.plans.build import _in_background
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bg_group", "background jobs")
+    try:
+        _in_background(spark.range(100).count)()
+        jobs = sc.statusTracker().getJobIdsForGroup("bg_group")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) >= 1
+
+
+def test_empty_corpus_eager_build(spark):
+    """An eager build of an empty corpus gives empty tables."""
+    empty = spark.createDataFrame([], "url string, text string")
+    idx = build_index(empty, IndexConfig(shard_span=64), eager=True)
+    assert idx.stats["num_docs"] == 0
+    assert idx.docs.count() == 0
+    assert idx.postings.count() == 0
+    assert idx.lexicon.count() == 0
+
+
+def test_eager_build_caches_docmap_and_releases_tokenize_cache(
+        spark, monkeypatch):
+    """An eager in-memory build returns its docmap already materialized
+    (filled by the shards pass) and the tokenize cache released, and the
+    docmap equals a checkpointed build's on the same corpus."""
+    from pyspark import StorageLevel
+
+    from pisa_spark.plans import build as B
+
+    rank_caches = []
+    assign = B.assign_rank_ids
+
+    def spy(*args, **kwargs):
+        out = assign(*args, **kwargs)
+        rank_caches.append(out[1])
+        return out
+
+    monkeypatch.setattr(B, "assign_rank_ids", spy)
+    docs = webtext.generate(spark, 200, seed=23)
+    cfg = IndexConfig(shard_span=64)
+    idx = build_index(docs, cfg, html_col="html", eager=True)
+    (tok_cache,) = rank_caches
+    assert tok_cache.storageLevel == StorageLevel(False, False, False,
+                                                  False, 1)
+    cached = (spark._jsparkSession.sharedState().cacheManager()
+              .lookupCachedData(idx.docs._jdf))
+    assert cached.isDefined()
+    assert (cached.get().cachedRepresentation().cacheBuilder()
+            .isCachedColumnBuffersLoaded())
+
+    out = f"{CACHE}/docmap_ckpt"
+    shutil.rmtree(out, ignore_errors=True)
+    ckpt = build_index(docs, cfg, html_col="html", eager=True,
+                       out_dir=out, n_buckets=4)
+    assert (sorted(map(tuple, idx.docs.collect()))
+            == sorted(map(tuple, ckpt.docs.select(
+                "doc_id", "url", "doc_len", "shard_id").collect())))
+    for table in (idx.docs, idx.shards, idx.postings, idx.lexicon,
+                  idx.postings_str):
+        if table is not None:
+            table.unpersist()

@@ -76,6 +76,25 @@ def test_resolution_routes_agree(index, monkeypatch):
     _fresh(index)
 
 
+def test_query_terms_df_is_a_local_relation(index):
+    """The resolved rows ship as one Arrow table (a LocalRelation, not a
+    pickled-row RDD scan) with QUERY_TERMS_SCHEMA, the empty set
+    included."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    _fresh(index)
+    schema = _parse_datatype_string(T.QUERY_TERMS_SCHEMA)
+    for queries, n in ((QUERIES, len(T.resolve_query_terms(index,
+                                                             QUERIES)[1])),
+                       (["QN:zzznope"], 0)):
+        df = T.query_terms_df(index, queries)
+        assert df.schema == schema
+        assert df.count() == n
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+    _fresh(index)
+
+
 @pytest.mark.parametrize("name", sorted(CONSUMERS))
 def test_driver_lexicon_equals_fallback(index, monkeypatch, name):
     """The driver-lexicon route and the forced lexicon-collect route
