@@ -39,9 +39,9 @@ def _spark(args):
                      cores=getattr(args, "cores", None))
 
 
-def _cfg(args):
-    from pisa_spark.config import IndexConfig
-
+def _analyzer_fields(args) -> dict:
+    """The IndexConfig fields the analyzer flags (_add_analyzer_flags)
+    set explicitly; a subcommand may define only some of the flags."""
     kw = {}
     if getattr(args, "stemmer", None):
         kw["stemmer"] = None if args.stemmer == "none" else args.stemmer
@@ -51,10 +51,17 @@ def _cfg(args):
         kw["tokenizer"] = args.tokenizer
     if getattr(args, "encoding", None):
         kw["codec"] = args.encoding
-    if getattr(args, "block_size", None):
-        kw["block_size"] = args.block_size
     if getattr(args, "scorer", None):
         kw["scorer"] = args.scorer
+    return kw
+
+
+def _cfg(args):
+    from pisa_spark.config import IndexConfig
+
+    kw = _analyzer_fields(args)
+    if getattr(args, "block_size", None):
+        kw["block_size"] = args.block_size
     if getattr(args, "quantize", None):
         kw["quantize_bits"] = args.quantize
     if getattr(args, "variable_block", False):
@@ -110,17 +117,7 @@ def _load_index(spark, args):
     saved = BuildManifest(args.index).state.get(
         "metrics", {}).get("index_config")
     cfg = IndexConfig.from_json_dict(saved) if saved else None
-    over = {}
-    if getattr(args, "stemmer", None):
-        over["stemmer"] = None if args.stemmer == "none" else args.stemmer
-    if getattr(args, "kstem_lexicon", None):
-        over["kstem_lexicon"] = _read_kstem_lexicon(args.kstem_lexicon)
-    if getattr(args, "tokenizer", None):
-        over["tokenizer"] = args.tokenizer
-    if getattr(args, "encoding", None):
-        over["codec"] = args.encoding
-    if getattr(args, "scorer", None):
-        over["scorer"] = args.scorer
+    over = _analyzer_fields(args)
     if over:
         cfg = dataclasses.replace(cfg or IndexConfig(), **over)
     return load_index(spark, args.index, cfg)
@@ -480,6 +477,13 @@ def _add_index_flags(p, queries: bool = True, index_required: bool = True):
     if queries:
         p.add_argument("-q", "--queries", required=True,
                        help="query file, one query per line (qid: prefix ok)")
+    _add_analyzer_flags(p)
+
+
+def _add_analyzer_flags(p, *encoding_flags: str):
+    """--cores plus the analyzer, codec and scorer flags that _cfg and
+    _load_index map onto the config (_analyzer_fields);
+    `encoding_flags` are extra spellings of --encoding."""
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--stemmer", default=None,
                    choices=["none", "porter2", "krovetz"])
@@ -488,7 +492,8 @@ def _add_index_flags(p, queries: bool = True, index_required: bool = True):
                         "with the embedded base lexicon")
     p.add_argument("--tokenizer", default=None,
                    choices=["english", "whitespace"])
-    p.add_argument("--encoding", default=None, choices=CODECS)
+    p.add_argument(*encoding_flags, "--encoding", default=None,
+                   choices=CODECS, help="posting codec")
     p.add_argument("--scorer", default=None)
 
 
@@ -499,22 +504,12 @@ def _add_build_flags(p):
                             "warc", "wapo", "parquet"])
     p.add_argument("-o", "--output", required=True,
                    help="index directory (stages checkpoint here)")
-    p.add_argument("--cores", type=int, default=None)
-    p.add_argument("--stemmer", default=None,
-                   choices=["none", "porter2", "krovetz"])
-    p.add_argument("--kstem-lexicon", default=None, metavar="FILE",
-                   help="KStem headword file (one word per line), unioned "
-                        "with the embedded base lexicon")
-    p.add_argument("--tokenizer", default=None,
-                   choices=["english", "whitespace"])
-    p.add_argument("-e", "--encoding", default=None, choices=CODECS,
-                   help="posting codec")
+    _add_analyzer_flags(p, "-e")
     p.add_argument("-b", "--block-size", type=int, default=None)
     p.add_argument("--variable-block", action="store_true",
                    help="VBMW score-optimal block partition")
     p.add_argument("--quantize", type=int, default=None,
                    help="linear score quantization bits")
-    p.add_argument("--scorer", default=None)
 
 
 def main(argv: list[str] | None = None) -> None:

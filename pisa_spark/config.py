@@ -16,7 +16,6 @@ from dataclasses import dataclass, field
 class IndexConfig:
     # --- text analysis (reference: TextAnalyzer = filters -> tokenizer -> token filters)
     tokenizer: str = "english"  # "english" | "whitespace"
-    strip_html: bool = True
     lowercase: bool = True
     stopwords: frozenset[str] = field(default_factory=frozenset)
     stemmer: str | None = None  # None | "porter2" | "krovetz"

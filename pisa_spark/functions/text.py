@@ -309,16 +309,19 @@ def strip_http_headers(content: str) -> str:
 
 # ---------------------------------------------------------------- Spark layer
 
+def extract_text(payload) -> str:
+    """One page's text: None -> "", bytes decoded as UTF-8 (undecodable
+    bytes replaced), then HTTP headers and markup stripped."""
+    if payload is None:
+        return ""
+    if isinstance(payload, (bytes, bytearray)):
+        payload = bytes(payload).decode("utf-8", errors="replace")
+    return strip_html(strip_http_headers(payload))
+
+
 def extract_text_batch(html: pd.Series) -> pd.Series:
     """Arrow-batched extraction: binary/str HTML series -> text series."""
-    def one(h) -> str:
-        if h is None:
-            return ""
-        if isinstance(h, (bytes, bytearray)):
-            h = bytes(h).decode("utf-8", errors="replace")
-        return strip_html(strip_http_headers(h))
-
-    return html.map(one)
+    return html.map(extract_text)
 
 
 def extract_text_udf():

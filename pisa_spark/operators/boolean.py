@@ -7,10 +7,11 @@ already executes well (semi-joins, counts), so no custom kernels:
   every query term == groupBy(doc).count == n_terms over the postings of the
   query's terms (sort-merge/hash join ≡ the skipping loop).
 - or_query<with_freqs> (or_query.hpp:12-48): union size / total postings.
-- Intersection::compute (include/pisa/intersection.hpp:13-97): posting count
-  + max single-doc score sum of an arbitrary term subset.
 - index_posting_totals / extract_maxscores (tools/*.cpp): one-line
   aggregations over the metadata tables.
+
+Intersection::compute (include/pisa/intersection.hpp) is
+tools.intersection.
 
 Query terms resolve through topk.resolve_query_terms, as for every other
 query consumer: list and DataFrame query sets give the same rows.
@@ -19,8 +20,7 @@ query consumer: list and DataFrame query sets give the same rows.
 from __future__ import annotations
 
 from pisa_spark.operators.postings import decode_postings
-from pisa_spark.operators.topk import (_in_values, resolve_query_terms,
-                                       topk_search)
+from pisa_spark.operators.topk import _in_values, resolve_query_terms
 from pisa_spark.session import local_frame
 
 
@@ -79,21 +79,6 @@ def or_count(index, queries, with_freqs: bool = False):
         return qp.groupBy("qid").agg(F.count("*").alias("n_postings"))
     return qp.select("qid", "doc_id").distinct().groupBy("qid").agg(
         F.count("*").alias("n_docs"))
-
-
-def intersection_compute(index, queries, k_for_scores: int = 1_000_000):
-    """Per query: intersection posting count + max summed score over the
-    intersection (reference Intersection::compute, intersection.hpp:41-74).
-    Returns (qid, size, max_score)."""
-    from pyspark.sql import functions as F
-
-    inter = and_query(index, queries)
-    sizes = inter.groupBy("qid").agg(F.count("*").alias("size"))
-    # scores of intersection docs: conjunction executor at large k
-    scored = topk_search(index, queries, k=k_for_scores,
-                         algorithm="ranked_and")
-    maxes = scored.groupBy("qid").agg(F.max("score").alias("max_score"))
-    return sizes.join(maxes, "qid", "left")
 
 
 def index_posting_totals(index):

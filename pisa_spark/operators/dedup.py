@@ -43,11 +43,6 @@ def _minhash_mix(n: int, seed: int = 0x9150A) -> list[tuple[int, int, int]]:
              rng.randrange(0, 1 << 60)) for _ in range(n)]
 
 
-def _hash60(col):
-    """First 15 hex chars of md5 as a non-negative int64 (engine-portable)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def shingles_col(tokens, n: int = 3):
     """Distinct n-token shingles; docs shorter than n yield none."""
     if n == 1:

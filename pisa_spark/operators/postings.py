@@ -27,10 +27,10 @@ Scale design (the part the reference, a single-node engine, never needed):
   last-docIDs and block-max scores
   — the WAND data of reference include/pisa/wand_data.hpp:86-112 and block
   layout of src/block_inverted_index.cpp:88-130 re-expressed columnar.
-- For bm25 the stored block max is the doc-dependent factor
-  f/(f+k1(1-b+b·dl/avg)) (max_part); the executor multiplies by the term's
-  idf — identical bounds, no df join needed at encode time. Non-separable
-  scorers (qld/pl2/dph) get full-score block maxima via a term-stats join.
+- The stored block max is max(doc_term_weight) over the block
+  (max_part, functions/scoring.py); the executor multiplies it by the
+  term's query_term_weight. A scorer whose doc_term_weight reads df/cf
+  (needs_term_stats: qld/pl2/dph) gets them via a term-stats join.
 
 Encoded schema (one row per shard × term):
     shard_id long, term_id long, n long, sum_tf long, base_doc long,
@@ -203,14 +203,7 @@ def _encode_arrays(shard: np.ndarray, term: np.ndarray, docs: np.ndarray,
             "posting docs not strictly increasing within a (shard, term) "
             "run — mis-sorted input or shard split across partitions")
 
-    if scorer.separable:
-        part = scorer.doc_part(tfs, doc_len, stats["avg_len"])
-    else:
-        part = scorer.score(
-            tfs, doc_len, df=df, cf=cf,
-            num_docs=stats["num_docs"], avg_len=stats["avg_len"],
-            collection_len=stats["collection_len"],
-        )
+    part = scorer.doc_term_weight(tfs, doc_len, df, cf, stats)
 
     tf_bytes, tf_lens_b = codecs.varint_encode_with_lengths(tfs - 1)
     tf_byte_off = np.concatenate(([0], np.cumsum(tf_lens_b)))
@@ -351,16 +344,15 @@ def encode_postings(flat_df, cfg: IndexConfig, stats: dict):
     partition-local sort + streaming encode (mapInArrow: numpy in,
     zero-copy Arrow out). A `term` key is group-detected on batch-local
     dictionary codes (monotone over the sorted input). df/cf pass through
-    to the scorer when present; non-separable scorers require them.
+    to the scorer when present; a scorer that needs_term_stats requires
+    them.
     """
     from pyspark.sql import functions as F
 
     scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    need_stats = (not scorer.separable
-                  and not getattr(scorer, "stats_free", False))
     has_stats = "df" in flat_df.columns and "cf" in flat_df.columns
-    if need_stats and not has_stats:
-        raise ValueError("non-separable scorer requires df/cf columns in "
+    if scorer.needs_term_stats and not has_stats:
+        raise ValueError(f"scorer {cfg.scorer!r} requires df/cf columns in "
                          "the flat postings")
     key = "term" if "term" in flat_df.columns else "term_id"
     names = ["shard_id", key, "doc_id", "tf", "doc_len"]
@@ -415,8 +407,8 @@ def encode_postings_docwise_str(doc_terms, cfg: IndexConfig, stats: dict,
     Works for ANY vocabulary size; the binding constraint is the per-task
     working set of one doc-shard's exploded tokens (cfg.shard_span x
     avg_len) — plans/build.py gates on that and falls back to
-    encode_postings above the bound. Requires a separable or stats-free
-    scorer: df/cf are not known doc-wise.
+    encode_postings above the bound. Requires a scorer without
+    needs_term_stats: df/cf are not known doc-wise.
 
     shuffle=False: the input already holds every shard whole on one
     partition with doc_ids ascending in partition order (the build's
@@ -432,8 +424,9 @@ def encode_postings_docwise_str(doc_terms, cfg: IndexConfig, stats: dict,
     from pyspark.sql import functions as F
 
     scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    if not scorer.separable and not getattr(scorer, "stats_free", False):
-        raise ValueError("docwise encode requires separable/stats-free scorer")
+    if scorer.needs_term_stats:
+        raise ValueError(f"docwise encode cannot take scorer {cfg.scorer!r}:"
+                         " it needs per-term df/cf")
     span = cfg.shard_span
 
     base_cols = doc_terms.select(

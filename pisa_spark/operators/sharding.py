@@ -42,13 +42,6 @@ def partition_collection(docs_df, n_shards: int, method: str = "random",
     raise ValueError(f"unknown method {method!r}")
 
 
-def write_sharded(docs_df, path: str, n_shards: int, **kw) -> None:
-    """Materialize the sharded collection as one directory per shard
-    (basename.000, .001, ... in the reference; partition dirs here)."""
-    sharded = partition_collection(docs_df, n_shards, **kw)
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(path)
-
-
 def taily_shard_stats(index):
     """Per (shard_id, term_id): posting count + score expectation/variance
     (taily_stats.hpp feature set, at shard granularity)."""
@@ -97,13 +90,13 @@ def taily_thresholds(index, queries: list[str], n_c: int = 10,
     any(Q) * Q_gamma(k, s/theta) = n_c. Estimates are UNSAFE seeds (the
     reference ships them for its unsafe pruning mode) — rank safety is the
     caller's trade-off."""
+    import math
+
     from pyspark.sql import functions as F
 
     from pisa_spark.functions.gamma import gamma_tail_inverse
-
-    from pyspark.sql import functions as F2
-
     from pisa_spark.operators.topk import query_terms_df
+    from pisa_spark.session import local_frame
 
     stats = shard_stats if shard_stats is not None else taily_shard_stats(index)
     spark = index.lexicon.sparkSession
@@ -111,22 +104,20 @@ def taily_thresholds(index, queries: list[str], n_c: int = 10,
     # global per-term moments = any-weighted merge of the shard moments
     # (E[X] and E[X^2] are additive under the weights)
     gterm = (stats.groupBy("term_id")
-             .agg(F2.sum("any").alias("any"),
-                  (F2.sum(F2.col("any") * F2.col("expected_value"))
-                   / F2.sum("any")).alias("e"),
-                  (F2.sum(F2.col("any") * (F2.col("variance")
-                   + F2.col("expected_value") ** 2))
-                   / F2.sum("any")).alias("ex2")))
+             .agg(F.sum("any").alias("any"),
+                  (F.sum(F.col("any") * F.col("expected_value"))
+                   / F.sum("any")).alias("e"),
+                  (F.sum(F.col("any") * (F.col("variance")
+                   + F.col("expected_value") ** 2))
+                   / F.sum("any")).alias("ex2")))
     qt = query_terms_df(index, queries).select("qid", "term_id")
     rows = (qt.join(gterm, "term_id")
             .groupBy("qid")
-            .agg(F2.sum(F2.log(F2.col("any") / F2.lit(n_docs)))
+            .agg(F.sum(F.log(F.col("any") / F.lit(n_docs)))
                  .alias("log_frac"),
-                 F2.sum("e").alias("e_q"),
-                 F2.sum(F2.col("ex2") - F2.col("e") ** 2).alias("v_q"))
+                 F.sum("e").alias("e_q"),
+                 F.sum(F.col("ex2") - F.col("e") ** 2).alias("v_q"))
             .collect())
-    import math
-
     out = []
     for r in rows:
         any_q = n_docs * math.exp(float(r["log_frac"]))
@@ -137,7 +128,7 @@ def taily_thresholds(index, queries: list[str], n_c: int = 10,
         k, theta = e * e / v, v / e
         out.append((r["qid"], float(gamma_tail_inverse(
             any_q, k, theta, float(n_c)))))
-    return spark.createDataFrame(out, "qid string, threshold double")
+    return local_frame(spark, out, "qid string, threshold double")
 
 
 def taily_select_gamma(index, queries: list[str], n_shards_out: int = 2,

@@ -135,16 +135,14 @@ class _TermRun:
     float32 score contribution of every posting, the block bounds and the
     term bound ub."""
 
-    __slots__ = ("term_id", "n", "docs", "tfs", "contribs", "blk_last",
-                 "blk_ub", "ub")
+    __slots__ = ("term_id", "n", "docs", "contribs", "blk_last", "blk_ub",
+                 "ub")
 
-    def __init__(self, term_id: int, docs: np.ndarray, tfs: np.ndarray,
-                 contribs: np.ndarray, blk_last: np.ndarray,
-                 blk_ub: np.ndarray):
+    def __init__(self, term_id: int, docs: np.ndarray, contribs: np.ndarray,
+                 blk_last: np.ndarray, blk_ub: np.ndarray):
         self.term_id = term_id
         self.n = int(docs.size)
         self.docs = docs
-        self.tfs = tfs
         self.contribs = contribs
         self.blk_last = blk_last
         self.blk_ub = blk_ub
@@ -546,13 +544,15 @@ def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
     term's rows over the group's shards, in ascending shard order.
 
     docs_bin and tfs_bin are read as one contiguous buffer each
-    (codecs.decode_many), and every posting's bm25 doc part is ONE scorer
-    call over the group. A key's contributions are its float32
-    idf * weight, computed per term, times that doc part: the grouping
-    the traversal has always scored with, so the scores are bit-identical
-    to scoring each row alone. Non-separable scorers make one
-    scorer.score call per key. doc_lens is indexed from docID `base`.
-    Keys come in the order their terms first appear in `table`."""
+    (codecs.decode_many), every posting's doc_term_weight is ONE scorer
+    call over the group (with each posting's df/cf from plan.term_stats
+    when the scorer needs_term_stats), and every term's
+    query_term_weight one call over the group's terms. A key's
+    contributions are its float32 query_term_weight * weight times
+    those doc term weights (functions/scoring.py): elementwise float32
+    arithmetic, so the scores are bit-identical to scoring each row
+    alone. doc_lens is indexed from docID `base`. Keys come in the order
+    their terms first appear in `table`."""
     if not table.num_rows:
         return {}
     if "term" in table.column_names:
@@ -574,34 +574,28 @@ def _group_runs(table: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
     blk_last, b_off = _list_rows(table["block_last_docs"])
     blk_part, _ = _list_rows(table["block_max_part"])
     p_off = np.concatenate(([0], np.cumsum(n)))
-    dl = doc_lens[docs - base]
-    scorer, stats = plan.scorer, plan.stats
-    if scorer.separable:
-        part = scorer.doc_part(tfs, dl, stats["avg_len"])
     row_lo = np.searchsorted(tids, uniq)  # each term's rows: [lo, hi)
     row_hi = np.append(row_lo[1:], tids.size)
+    df, cf = np.array([plan.term_stats[t] for t in uniq.tolist()],
+                      dtype=np.int64).reshape(-1, 2).T
+    scorer, stats = plan.scorer, plan.stats
+    qtw = scorer.query_term_weight(df, stats["num_docs"])
+    df_at = cf_at = None
+    if scorer.needs_term_stats:  # each posting's term df/cf
+        n_term = p_off[row_hi] - p_off[row_lo]
+        df_at, cf_at = np.repeat(df, n_term), np.repeat(cf, n_term)
+    part = scorer.doc_term_weight(tfs, doc_lens[docs - base], df_at, cf_at,
+                                  stats)
     runs: dict[tuple[int, float], _TermRun] = {}
     for i in np.argsort(first).tolist():
         tid, r0, r1 = int(uniq[i]), row_lo[i], row_hi[i]
         p0, p1, b0, b1 = p_off[r0], p_off[r1], b_off[r0], b_off[r1]
-        df, cf = plan.term_stats[tid]
-        if scorer.separable:
-            idf = F32(scorer.idf(np.array([df]), stats["num_docs"])[0])
         for w in plan.term_queries.get(tid, {}).values():
             key = (tid, w if plan.weighted else 1.0)
             if key in runs:
                 continue
-            wf = F32(key[1])
-            if scorer.separable:
-                scale = idf * wf
-                contribs = scale * part[p0:p1]
-            else:
-                scale = wf
-                contribs = wf * scorer.score(
-                    tfs[p0:p1], dl[p0:p1], df=df, cf=cf,
-                    num_docs=stats["num_docs"], avg_len=stats["avg_len"],
-                    collection_len=stats["collection_len"])
-            runs[key] = _TermRun(tid, docs[p0:p1], tfs[p0:p1], contribs,
+            scale = qtw[i] * F32(key[1])
+            runs[key] = _TermRun(tid, docs[p0:p1], scale * part[p0:p1],
                                  blk_last[b0:b1], blk_part[b0:b1] * scale)
     return runs
 

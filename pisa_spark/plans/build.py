@@ -56,7 +56,7 @@ import pandas as pd
 
 from pisa_spark.config import DEFAULT_CONFIG, IndexConfig
 from pisa_spark.functions.scoring import make_scorer
-from pisa_spark.functions.text import extract_text_batch
+from pisa_spark.functions.text import extract_text, extract_text_batch
 from pisa_spark.functions.tokenize import make_analyzer
 from pisa_spark.operators import codecs
 from pisa_spark.plans.checkpoint import BuildManifest
@@ -132,21 +132,10 @@ def doc_term_counts(pages_df, cfg: IndexConfig,
     src_col = html_col if use_html else "text"
 
     def run(batches):
-        from pisa_spark.functions.text import strip_html, strip_http_headers
-
         for pdf in batches:
             rows = []
             for url, payload in zip(pdf["url"], pdf[src_col]):
-                if use_html:
-                    if payload is None:
-                        text = ""
-                    else:
-                        if isinstance(payload, (bytes, bytearray)):
-                            payload = bytes(payload).decode(
-                                "utf-8", errors="replace")
-                        text = strip_html(strip_http_headers(payload))
-                else:
-                    text = payload
+                text = extract_text(payload) if use_html else payload
                 toks = analyze(text) if text else []
                 counts = Counter(toks)
                 rows.append((url, len(toks),
@@ -165,12 +154,11 @@ def _quantizes(cfg: IndexConfig) -> bool:
 
 
 def _term_stats_needed(cfg: IndexConfig) -> bool:
-    """True when the encode needs per-term (df, cf): a non-separable
-    scorer's full-score block maxima, or the score pass a quantize_bits
-    build quantizes. Only the exploded encode takes them."""
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    return _quantizes(cfg) or not (scorer.separable
-                                   or getattr(scorer, "stats_free", False))
+    """True when the encode needs per-term (df, cf): the scorer's
+    doc_term_weight reads them, or a quantize_bits build scores every
+    posting. Only the exploded encode takes them."""
+    return (_quantizes(cfg)
+            or make_scorer(cfg.scorer, cfg.scorer_params()).needs_term_stats)
 
 
 def _posting_scores(cfg: IndexConfig, stats: dict):
@@ -185,17 +173,10 @@ def _posting_scores(cfg: IndexConfig, stats: dict):
     @F.pandas_udf("float")
     def _score(tf: pd.Series, dl: pd.Series, df: pd.Series,
                cf: pd.Series) -> pd.Series:
-        if scorer.separable:
-            idf = scorer.idf(df.to_numpy(), num_docs)
-            return pd.Series(
-                idf.astype(np.float32)
-                * scorer.doc_part(tf.to_numpy(), dl.to_numpy(), avg_len))
-        # non-separable scorers take per-row df/cf arrays (one numpy pass)
         return pd.Series(scorer.score(
-            tf.to_numpy(), dl.to_numpy(),
-            df=df.to_numpy(), cf=cf.to_numpy(),
+            tf.to_numpy(), dl.to_numpy(), df=df.to_numpy(), cf=cf.to_numpy(),
             num_docs=num_docs, avg_len=avg_len,
-            collection_len=collection_len).astype(np.float32))
+            collection_len=collection_len))
 
     return _score("tf", "doc_len", "df", "cf")
 
@@ -518,9 +499,9 @@ def _encode_str(doc_terms, cfg: IndexConfig, stats: dict, stride: int = 1,
                 max_score: float | None = None):
     """String-keyed encoded posting rows of every build and of streaming
     ingest; returns (rows, docwise). The encoder choice is the build's only
-    scorer-dependent step. Without term_stats (a separable or stats-free
-    scorer): the doc-wise encode while a shard's token mass fits the
-    docwise working-set bound (shuffle=False when doc_terms is the build's
+    scorer-dependent step. Without term_stats (the scorer has no
+    needs_term_stats and the build does not quantize): the doc-wise
+    encode while a shard's token mass fits the docwise working-set bound (shuffle=False when doc_terms is the build's
     span-aligned rank layout, which already holds each shard whole on one
     partition), above it the exploded (shard, term)-shuffled encode, whose
     groups are bounded by shard_span postings regardless of document
@@ -727,7 +708,7 @@ def _with_max_score(lex, cfg: IndexConfig, stats: dict):
     """Append the max_score column to a (.., df, cf, max_part) lexicon DF —
     the WAND term upper bound (wand_data.hpp:64-115); SQL doubles for bm25
     (kernels recompute idf in float32 themselves), pass-through for every
-    other scorer (bm25 is the only separable one)."""
+    other scorer (bm25 is the only one whose query_term_weight is not 1)."""
     from pyspark.sql import functions as F
 
     if cfg.scorer != "bm25":

@@ -61,8 +61,8 @@ def ingest_batch(batch_df, out_dir: str, cfg: IndexConfig = DEFAULT_CONFIG,
     commit; a batch_id already recorded in segments.json is skipped instead
     of being appended again with fresh docIDs (duplicate docs).
 
-    Segments encode with the separable bm25 or the stats-free quantized
-    scorer only: a scorer that needs per-term df/cf at encode time, or a
+    Segments encode only with a scorer without needs_term_stats (bm25,
+    quantized): a scorer that needs per-term df/cf at encode time, or a
     quantize_bits pass, would need collection-wide stats and one global
     max score that no single segment has. Such a config is rejected
     before any Spark job."""

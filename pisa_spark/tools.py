@@ -27,14 +27,11 @@ from __future__ import annotations
 
 import itertools
 
-import numpy as np
-import pandas as pd
-
 from pisa_spark.config import IndexConfig
-from pisa_spark.functions.scoring import make_scorer
 from pisa_spark.functions.tokenize import make_analyzer
 from pisa_spark.operators.postings import decode_postings
-from pisa_spark.operators.topk import query_terms_df, topk_search
+from pisa_spark.operators.topk import (_in_values, query_terms_df,
+                                       topk_search)
 
 
 def count_postings(index, queries: list[str]):
@@ -49,8 +46,9 @@ def count_postings(index, queries: list[str]):
 
 def scored_postings(index, term_ids=None):
     """Flat (term_id, doc_id, tf, score float32) — every posting scored with
-    the engine's exact float32 kernel. The doc_len comes from the docs
-    table; the scorer's per-term stats from the lexicon.
+    the engine's exact float32 kernel (plans.build._posting_scores). The
+    doc_len comes from the docs table; the scorer's per-term stats from
+    the lexicon.
 
     term_ids (list | DataFrame | None): restrict to these terms. The filter
     is applied to the ENCODED rows, before decode — mapInPandas is a
@@ -58,40 +56,22 @@ def scored_postings(index, term_ids=None):
     (intersection, kth_threshold) must not pay a whole-index decode."""
     from pyspark.sql import functions as F
 
-    cfg = index.cfg
-    scorer = make_scorer(cfg.scorer, cfg.scorer_params())
-    stats = dict(index.stats)
+    from pisa_spark.plans.build import _posting_scores
+
     enc = index.postings
     if term_ids is not None:
         if isinstance(term_ids, (list, tuple, set)):
-            enc = enc.filter(F.col("term_id").isin(list(term_ids)))
+            enc = enc.filter(_in_values("term_id", list(term_ids)))
         else:  # DataFrame of term_id: broadcast semi-join below the decode
             enc = enc.join(
                 F.broadcast(term_ids.select("term_id").distinct()),
                 "term_id", "left_semi")
-    flat = decode_postings(enc, cfg)
-    joined = (flat
+    joined = (decode_postings(enc, index.cfg)
               .join(index.docs.select("doc_id", "doc_len"), "doc_id")
               .join(index.lexicon.select("term_id", "df", "cf"), "term_id"))
-
-    @F.pandas_udf("float")
-    def _score(tf: pd.Series, doc_len: pd.Series, df: pd.Series,
-               cf: pd.Series) -> pd.Series:
-        if scorer.separable:
-            idf = scorer.idf(df.to_numpy(), stats["num_docs"])
-            part = scorer.doc_part(tf.to_numpy(), doc_len.to_numpy(),
-                                   stats["avg_len"])
-            return pd.Series(idf.astype(np.float32) * part)
-        # non-separable scorers accept per-row df/cf arrays
-        return pd.Series(scorer.score(
-            tf.to_numpy(), doc_len.to_numpy(),
-            df=df.to_numpy(), cf=cf.to_numpy(),
-            num_docs=stats["num_docs"], avg_len=stats["avg_len"],
-            collection_len=stats["collection_len"]).astype(np.float32))
-
-    return joined.select(
-        "term_id", "doc_id", "tf",
-        _score("tf", "doc_len", "df", "cf").alias("score"))
+    return joined.select("term_id", "doc_id", "tf",
+                         _posting_scores(index.cfg, index.stats)
+                         .alias("score"))
 
 
 def thresholds(index, queries: list[str], k: int = 10,

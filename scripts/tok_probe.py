@@ -40,7 +40,7 @@ def worker(args):
     import pandas as pd
 
     from pisa_spark.config import IndexConfig
-    from pisa_spark.functions.text import strip_html, strip_http_headers
+    from pisa_spark.functions.text import extract_text
     from pisa_spark.functions.tokenize import make_analyzer
 
     analyze = make_analyzer(IndexConfig())
@@ -56,12 +56,7 @@ def worker(args):
         t0 = time.time()
         rows = []
         for url, payload in zip(pdf["url"], pdf["html"]):
-            if payload is None:
-                text = ""
-            else:
-                if isinstance(payload, (bytes, bytearray)):
-                    payload = bytes(payload).decode("utf-8", errors="replace")
-                text = strip_html(strip_http_headers(payload))
+            text = extract_text(payload)
             toks = analyze(text) if text else []
             counts = Counter(toks)
             rows.append((url, len(toks), list(counts.keys()),

@@ -18,7 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pisa_spark.config import IndexConfig
-from pisa_spark.functions.scoring import make_scorer
+from pisa_spark.functions.scoring import Bm25, make_scorer
 from pisa_spark.operators import codecs
 from pisa_spark.operators import topk as T
 from pisa_spark.operators.postings import _encode_arrays
@@ -53,8 +53,7 @@ def _make_run(rng: np.random.Generator, tid: int, docs: np.ndarray,
                            docs.size])
     ends = ends[ends <= docs.size]
     blk_ub = np.maximum.reduceat(contribs, np.r_[0, ends[:-1]])
-    return _TermRun(tid, docs, np.ones(docs.size, np.int64), contribs,
-                    docs[ends - 1], blk_ub.astype(F32))
+    return _TermRun(tid, docs, contribs, docs[ends - 1], blk_ub.astype(F32))
 
 
 def _random_group(rng: np.random.Generator, n_queries: int,
@@ -302,8 +301,9 @@ def _row_runs(rows: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
         for w in qs.values():
             key = (tid, w if plan.weighted else 1.0)
             wf = F32(key[1])
+            bm25 = isinstance(scorer, Bm25)
             scale = (F32(scorer.idf(np.array([df]), stats["num_docs"])[0]) * wf
-                     if scorer.separable else wf)
+                     if bm25 else wf)
             parts = []
             for r in mine:
                 docs = codecs.decode_blocks(codec, r["docs_bin"],
@@ -312,7 +312,7 @@ def _row_runs(rows: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
                 tfs = codecs.decode_tfs(r["tfs_bin"], r["n"])
                 dl = doc_lens[docs]
                 contribs = (scale * scorer.doc_part(tfs, dl, stats["avg_len"])
-                            if scorer.separable else wf * scorer.score(
+                            if bm25 else wf * scorer.score(
                                 tfs, dl, df=df, cf=cf,
                                 num_docs=stats["num_docs"],
                                 avg_len=stats["avg_len"],
@@ -328,7 +328,7 @@ def _row_runs(rows: pa.Table, plan: _QueryPlan, doc_lens: np.ndarray,
 @settings(max_examples=60, deadline=None)
 @given(seed=st.integers(0, 2**31 - 1),
        codec=st.sampled_from(codecs.CODECS),
-       scorer_name=st.sampled_from(["bm25", "qld", "dph"]),
+       scorer_name=st.sampled_from(["bm25", "qld", "pl2", "dph"]),
        weighted=st.booleans(), string_keys=st.booleans(),
        budget=st.sampled_from([0, 150, 1 << 22]))
 def test_group_runs_match_per_row_decode(seed, codec, scorer_name, weighted,
@@ -356,7 +356,8 @@ def test_group_runs_match_per_row_decode(seed, codec, scorer_name, weighted,
             assert (run.term_id, run.n) == (key[0], docs.size)
             assert run.docs[0] > base and run.docs[-1] == last
             np.testing.assert_array_equal(run.docs, docs)
-            np.testing.assert_array_equal(run.tfs, tfs)
+            # the contributions check the tf decode: `want` scores the tfs
+            # of each row's own decode_tfs
             assert run.contribs.dtype == np.dtype(F32)
             assert (bits(run.contribs) == bits(contribs)).all()
             np.testing.assert_array_equal(run.blk_last, blk_last)
@@ -371,7 +372,7 @@ def test_group_runs_match_per_row_decode(seed, codec, scorer_name, weighted,
 
 @settings(max_examples=30, deadline=None)
 @given(seed=st.integers(0, 2**31 - 1),
-       scorer_name=st.sampled_from(["bm25", "qld", "dph"]))
+       scorer_name=st.sampled_from(["bm25", "qld", "pl2", "dph"]))
 def test_contrib_scored_once_bit_identical(seed, scorer_name):
     """The traversal reads contributions computed once over the whole
     group; gathered for any docs, each must equal scoring just those
@@ -381,19 +382,21 @@ def test_contrib_scored_once_bit_identical(seed, scorer_name):
         rng, "varint", scorer_name, False)
     plan, rb = _plan(rb, cfg, stats, meta, rng, True)
     scorer = plan.scorer
-    runs = _group_runs(pa.Table.from_batches([rb]), plan, doc_lens, 0)
+    table = pa.Table.from_batches([rb])
+    runs = _group_runs(table, plan, doc_lens, 0)
+    rows = _row_runs(table, plan, doc_lens, "varint")
     assert runs
     for (tid, w), run in runs.items():
         df, cf = plan.term_stats[tid]
+        docs, tfs = rows[(tid, w)][2:4]  # each row's own decode
         for _ in range(3):  # repeat calls gather from the same scores
             ask = np.unique(rng.integers(0, doc_lens.size, size=200))
             got = _gather(run, ask)
-            docs, tfs = run.docs, run.tfs
             idx = np.searchsorted(docs, ask)
             hit = (idx < docs.size) & (docs[np.minimum(idx, docs.size - 1)]
                                        == ask)
             tf, dl = tfs[idx[hit]], doc_lens[ask[hit]]
-            if scorer.separable:
+            if isinstance(scorer, Bm25):
                 idf = F32(scorer.idf(np.array([df]), stats["num_docs"])[0])
                 want = (idf * F32(w)) * scorer.doc_part(tf, dl,
                                                         stats["avg_len"])

@@ -102,3 +102,35 @@ def test_quantized_lexicon_keeps_true_term_stats(spark, pages):
     got = {r["term"]: (r["df"], r["cf"])
            for r in q.lexicon.select("term", "df", "cf").collect()}
     assert got == want
+
+
+def test_scored_postings_score_through_the_scorer(spark, pages):
+    """tools.scored_postings on a qld index: every posting's float32 score
+    is the scorer's score of its (tf, doc_len, df, cf), bit for bit, and
+    a term-id list keeps exactly those terms' rows."""
+    import numpy as np
+
+    from pisa_spark.functions.scoring import make_scorer
+    from pisa_spark.tools import scored_postings
+
+    cfg = IndexConfig(scorer="qld", shard_span=64)
+    idx = build_index(extract_pages(pages, cfg), cfg)
+    sp = scored_postings(idx)
+    rows = (sp.join(idx.docs.select("doc_id", "doc_len"), "doc_id")
+            .join(idx.lexicon.select("term_id", "df", "cf"), "term_id")
+            .toPandas())
+    assert len(rows) == idx.lexicon.agg({"df": "sum"}).collect()[0][0]
+    want = make_scorer("qld", cfg.scorer_params()).score(
+        rows["tf"].to_numpy(), rows["doc_len"].to_numpy(),
+        df=rows["df"].to_numpy(), cf=rows["cf"].to_numpy(),
+        num_docs=idx.stats["num_docs"], avg_len=idx.stats["avg_len"],
+        collection_len=idx.stats["collection_len"])
+    got = rows["score"].to_numpy(dtype=np.float32)
+    assert (got.view(np.int32) == want.view(np.int32)).all()
+
+    ids = sorted(rows["term_id"].unique().tolist())[::7]
+    key = ["term_id", "doc_id", "tf", "score"]
+    picked = scored_postings(idx, term_ids=ids).toPandas()
+    mine = rows[rows["term_id"].isin(ids)][key]
+    assert (sorted(map(tuple, picked[key].to_numpy()))
+            == sorted(map(tuple, mine.to_numpy())))

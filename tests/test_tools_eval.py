@@ -400,6 +400,18 @@ def test_kstem_lexicon_config_roundtrip():
     assert IndexConfig.from_json_dict(IndexConfig().to_json_dict()).kstem_lexicon is None
 
 
+def test_saved_config_with_strip_html_loads():
+    """A config saved while it still had the strip_html field (which
+    nothing read: extraction follows html_col) loads without it."""
+    from pisa_spark.config import IndexConfig
+
+    saved = IndexConfig(stemmer="porter2").to_json_dict()
+    saved["strip_html"] = False
+    cfg = IndexConfig.from_json_dict(saved)
+    assert cfg == IndexConfig(stemmer="porter2")
+    assert not hasattr(cfg, "strip_html")
+
+
 def test_kstem_lexicon_from_index(spark, tmp_path):
     from pisa_spark.config import IndexConfig
     from pisa_spark.functions.kstem import kstem_lexicon_from_index
